@@ -206,9 +206,7 @@ object SparkEntry {
     import s.implicits._
     r.blocks(terms)
       .flatMap { b =>
-        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
         docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
       }.toDF("docId", "tf")
       .groupBy("docId").agg(sum("tf").as("tf"))
@@ -447,9 +445,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
           docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId").select("doc_id", "tf").orderBy("doc_id")
@@ -462,9 +458,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("window"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b).iterator
             .map(p => (p.docId, p.positions.mkString(",")))
         }.toDF("docId", "pos_list")
         .join(idMap(r), "docId").select("doc_id", "pos_list")
@@ -735,9 +729,7 @@ object SparkEntry {
       val r = reader(s, dir)
       val terms = Seq("merge", "stream", "vector")
       val postings = r.blocks(terms).flatMap { b =>
-        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+        val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
         docs.indices.iterator.map(i => (b.term, docs(i), tfs(i)))
       }.toDF("query_id", "docId", "tf")
       val named = postings.join(idMap(r), "docId")
@@ -776,9 +768,7 @@ object SparkEntry {
       val r = stemmedReader(s, dir)
       r.blocks(Seq("custom"))
         .flatMap { b =>
-          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+          val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
           docs.indices.iterator.map(i => (docs(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId").select("doc_id", "tf").orderBy("doc_id")
@@ -3865,10 +3855,7 @@ object SparkEntry {
         val wvB = s.sparkContext.broadcast(variantScores.toMap)
         r.blocks(variantScores.map(_._1))
           .flatMap { b =>
-            val (docs, _, _) = graft.codec.PostingsCodec.decodeDocs(
-              graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-                b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-                b.posBytes))
+            val (docs, _, _) = graft.codec.PostingsCodec.decodeDocs(b)
             docs.iterator.map(d => (d, wvB.value(b.term)))
           }.toDF("docId", "s")
           .groupBy("docId").agg(sum("s").as("score"))
@@ -4126,10 +4113,7 @@ object SparkEntry {
       val idf = math.log(n.toDouble / (st.df + 1.0)) + 1.0
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          val (ids, tfs, _) = graft.codec.PostingsCodec.decodeDocs(
-            graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-              b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-              b.posBytes))
+          val (ids, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
           ids.indices.iterator.map(i => (ids(i), tfs(i).toLong))
         }.toDF("docId", "tf")
         .join(idMap(r), "docId")
@@ -4171,7 +4155,7 @@ object SparkEntry {
       * DIFFERENT lengths — "stream table hash" | "stream hash" — which
       * MultiPhraseQuery cannot express. Blended idf over the alphabet,
       * freq = accepting state entries (TermAutomatonScorer.countMatches);
-      * one bucket-pruned postings pass + per-doc DFA walk. */
+      * one key-pruned postings pass + per-doc DFA walk. */
     "ft_term_automaton" -> ((s, dir) => {
       val q = BoolQ(Seq((Occur.Must,
         TermAutomatonQ(4, Set(3),
@@ -4313,9 +4297,7 @@ object SparkEntry {
         !$"term".startsWith("path:") && !$"term".startsWith("rev:"))
         .map(_.term)
       val rows = r.blocks((ctx +: cands).distinct).flatMap { b =>
-        graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(b.term,
-          b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial,
-          b.docBytes, b.nrmBytes, b.posBytes)).iterator
+        graft.codec.PostingsCodec.decode(b).iterator
           .map(p => (p.docId, b.term, p.positions))
       }
       rows.groupByKey(_._1).flatMapGroups { (_, it) =>
@@ -4447,9 +4429,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b).iterator
             .map { p =>
               var sum = 0.0
               var j = 0
@@ -4619,9 +4599,7 @@ object SparkEntry {
       val r = reader(s, dir)
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b).iterator
             .map { p =>
               var mn = Float.MaxValue
               var mx = Float.MinValue
@@ -5004,9 +4982,7 @@ object SparkEntry {
       val idf = 1.0 + math.log(cs.maxDoc / (st.df + 1.0))
       r.blocks(Seq("spark"))
         .flatMap { b =>
-          graft.codec.PostingsCodec.decode(graft.codec.PostingBlock(
-            b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
-            b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).iterator
+          graft.codec.PostingsCodec.decode(b).iterator
             .map(p => (p.docId, p.tf,
               SmallFloat.byte315ToFloat(p.norm).toDouble))
         }.toDF("docId", "termfreq", "nrm")
@@ -5768,7 +5744,7 @@ object SparkEntry {
       r.liveOnly(r.docmeta.toDF())
         .select(col("path").as("user_key"),
           col("commit").cast("long").as("event_id"),
-          when(shiftright(col("docId"), 40) >= baseParts, "delta")
+          when(shiftright(col("docId"), Ids.DocIdShift) >= baseParts, "delta")
             .otherwise("full").as("src"))
         .orderBy("user_key")
     })),

@@ -95,13 +95,6 @@ object IndexBuilder {
     else sorted.toArray.flatMap(dec).sortBy(_.docId).iterator
   }
 
-  /** Analyze one document into a SegmentDoc (terms grouped in-memory per
-    * row — within-doc grouping needs no shuffle). `analyzer` selects the
-    * chain: "standard" = per-row-lang StandardAnalyzer; "english" = the
-    * EnglishAnalyzer chain (possessive strip + English stop set + Porter
-    * stem, reference en/EnglishAnalyzer.java:101-116); "german" /
-    * "spanish" / "italian" / "french" = that language's stop set + light
-    * stemmer (reference de/GermanAnalyzer.java etc.). */
   /** The configured chain as a flat (terms, positions) function.
     * `noStops` drops stopword filtering — synonym rule compilation runs
     * the chain WITHOUT stops (the reference's SynonymMap.Builder analyzes
@@ -161,6 +154,13 @@ object IndexBuilder {
     }
   }
 
+  /** Analyze one document into a SegmentDoc (terms grouped in-memory per
+    * row — within-doc grouping needs no shuffle). `analyzer` selects the
+    * chain: "standard" = per-row-lang StandardAnalyzer; "english" = the
+    * EnglishAnalyzer chain (possessive strip + English stop set + Porter
+    * stem, reference en/EnglishAnalyzer.java:101-116); "german" /
+    * "spanish" / "italian" / "french" = that language's stop set + light
+    * stemmer (reference de/GermanAnalyzer.java etc.). */
   def invertDoc(docId: Long, docPart: Int, repo: String, path: String,
                 commit: String, lang: String, content: String,
                 maxTokenLength: Int, analyzer: String = "standard",
@@ -990,19 +990,20 @@ object IndexBuilder {
     // COMMITTED (its "done" marker exists) hides the source deltas it
     // replaced (replaces.txt, one dir name per line). The done marker is
     // the single atomic switch: before it the sources serve and the
-    // half-built merge is invisible; after it the merge serves and the
+    // half-built merge is skipped here (so compact/splitShard never union
+    // it with its sources); after it the merge serves and the
     // sources are dead files awaiting cleanup — no crash point shows
     // duplicate or missing docs. Hidden dirs still contribute their OWN
     // replaces lists (a crash may leave a replaced-but-not-yet-deleted
     // dir that itself replaced others).
-    val replaced: Set[String] = all.flatMap { f =>
-      val rj = f.toPath.resolve("replaces.txt")
-      if (Files.exists(rj) && stageDone(f.getAbsolutePath, "done"))
-        Files.readAllLines(rj).toArray(Array.empty[String]).toSeq
-          .map(_.trim).filter(_.nonEmpty)
-      else Nil
-    }.toSet
-    val deltas = all.filterNot(f => replaced.contains(f.getName))
+    def isMerge(f: java.io.File) = Files.exists(f.toPath.resolve("replaces.txt"))
+    def committed(f: java.io.File) = stageDone(f.getAbsolutePath, "done")
+    val replaced: Set[String] = all.filter(f => isMerge(f) && committed(f))
+      .flatMap(f => Files.readAllLines(f.toPath.resolve("replaces.txt"))
+        .toArray(Array.empty[String]).toSeq.map(_.trim).filter(_.nonEmpty))
+      .toSet
+    val deltas = all.filterNot(f =>
+        replaced.contains(f.getName) || (isMerge(f) && !committed(f)))
       .map(_.getAbsolutePath)
     baseDir +: deltas
   }

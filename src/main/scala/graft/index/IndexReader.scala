@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.codec.PostingBlock
 import graft.search.BM25
 
 /** Point-in-time view over a built index directory (DirectoryReader analog,
@@ -120,14 +121,14 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     }
   }
 
-  /** Compressed block rows for the given terms. The on-disk rows are
-    * keyed by the 63-bit term key (no term strings in the postings
-    * files); query terms resolve to keys driver-side and the string is
-    * reattached from the query's own (tiny) key->term map, so every
-    * scorer keeps consuming BlockRow.term unchanged. Uncached: parquet
-    * row-group pruning via the files' (key, docId) sort order; cached:
-    * in-memory columnar batch filter. */
-  def blocks(terms: Seq[String]): Dataset[BlockRow] = {
+  /** Compressed blocks of the given terms, ready for
+    * [[graft.codec.PostingsCodec.decode]]. The on-disk rows are keyed by
+    * the 63-bit term key (no term strings in the postings files); query
+    * terms resolve to keys driver-side and the string is reattached from
+    * the query's own (tiny) key->term map. Uncached: parquet row-group
+    * pruning via the files' (key, docId) sort order; cached: in-memory
+    * columnar batch filter. */
+  def blocks(terms: Seq[String]): Dataset[PostingBlock] = {
     val k2t: Map[Long, String] =
       terms.distinct.map(t => TermKeys.of(t) -> t).toMap
     val keys = k2t.keys.toSeq
@@ -138,11 +139,10 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     postingsDf
       .where($"key".isin(keys: _*))
       .select(
-        lit(0).as("bucket") /* bucket: dictionary-only concept now */,
         element_at(typedLit(k2t), $"key").as("term"),
         $"firstDoc", $"lastDoc", $"count", $"maxTf", $"sumTf", $"maxPartial",
         $"docBytes", $"nrmBytes", $"posBytes")
-      .as[BlockRow]
+      .as[PostingBlock]
   }
 }
 

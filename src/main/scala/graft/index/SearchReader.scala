@@ -2,6 +2,8 @@ package graft.index
 
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 
+import graft.codec.PostingBlock
+
 /** Reader abstraction the scorers run against (IndexReader for one built
   * index; MultiIndexReader for a base index + appended delta sub-indexes —
   * the composite DirectoryReader-over-segments analog,
@@ -34,7 +36,7 @@ trait SearchReader {
   def termStats(terms: Seq[String]): Map[String, TermStats]
   def termStatsDf: Dataset[TermStats]
   def expandTerms(pred: Column, limit: Int = SearchReader.MaxClauseCount): Seq[TermStats]
-  def blocks(terms: Seq[String]): Dataset[BlockRow]
+  def blocks(terms: Seq[String]): Dataset[PostingBlock]
   def docmeta: Dataset[DocMeta]
 
   /** Tombstoned docIds (one `docId` column), or None when nothing was
@@ -220,7 +222,7 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
       f(r.normCacheFor("path"), normCacheFor("path")))
   }
 
-  def blocks(terms: Seq[String]): Dataset[BlockRow] = {
+  def blocks(terms: Seq[String]): Dataset[PostingBlock] = {
     import org.apache.spark.sql.functions.{col, least, lit, when}
     import spark.implicits._
     readers.zip(boundScale).map { case (r, (fc, fp)) =>
@@ -229,7 +231,7 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
       else b.withColumn("maxPartial", least(lit(1f),
           col("maxPartial") *
             when(col("term").startsWith("path:"), lit(fp)).otherwise(lit(fc))))
-        .as[BlockRow]
+        .as[PostingBlock]
     }.reduce(_ union _)
   }
 

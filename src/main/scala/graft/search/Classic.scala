@@ -50,9 +50,7 @@ final class ClassicScorer(reader: SearchReader,
     reader.blocks(present).flatMap { b =>
       val i = tIdxB.value(b.term)
       val value = valuesB.value(i)
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       (0 until docs.length).iterator.map { j =>
         val raw = tfF(tfs(j).toFloat) * value
         (docs(j), i, raw * normF(nrms(j)))

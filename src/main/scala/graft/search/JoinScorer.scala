@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.index.{BlockRow, IndexBuilder, SearchReader, TermStats}
+import graft.index.{IndexBuilder, SearchReader, TermStats}
 
 /** A clause match for one doc: `score` is the clause's float BM25
   * contribution (NaN for non-scoring Filter/MustNot presence rows). */
@@ -17,7 +17,7 @@ object ClauseKind {
 
 /** The Dataset "join path" scorer — the semantic spec the WAND path must
   * equal (SURVEY.md §7.1 step 7). Each clause produces a (docId, score)
-  * frame from bucket-pruned block scans; boolean combination is ONE
+  * frame from key-pruned block scans; boolean combination is ONE
   * hash-aggregate shuffle (groupByKey(docId)); top-k is Catalyst's
   * TakeOrderedAndProject, whose bounded per-partition heap + driver merge
   * reproduces the reference collector exactly, ties to lower docId
@@ -54,11 +54,17 @@ final class JoinScorer(reader: SearchReader) {
       case (_, SpanNearPayloadCheckQ(ts, _, _), _) => ts
       case (_, SpanPositionRangeQ(t, _, _), _) => Seq(t) }.flatten
     val stats = reader.termStats(termQs.distinct)
+    // exact phrases and plain span-nears score as their multi-term forms
+    // over single-term slots
+    def singleSlots[A](xs: Seq[A]): Seq[Seq[A]] = xs.map(Seq(_))
+    def exactPhrase(ts: Seq[String], rel: Seq[Int], b: Float) =
+      ScoredMultiPhrase(singleSlots(ts), rel, singleSlots(ts.map(stats.get)), b)
     flat.map {
       case (o, tq @ TermQ(t), b) =>
         (o, tq, ScoredTerm(t, stats.get(t), b))
       case (o, sq @ SpanNearQ(ts, slop, inOrder), b) =>
-        (o, sq, ScoredSpan(ts, slop, ts.map(stats.get), b, inOrder))
+        (o, sq, ScoredSpanMulti(singleSlots(ts), slop, inOrder,
+          singleSlots(ts.map(stats.get)), b))
       case (o, sq @ SpanNearMultiQ(legs, slop, inOrder), b) =>
         // SpanMultiTermQueryWrapper: expand each pattern leg against the
         // dictionary (TooManyClauses-guarded), then span-near over the
@@ -90,10 +96,12 @@ final class JoinScorer(reader: SearchReader) {
       case (o, sq @ SpanContainingQ(l, bg, slop), b) =>
         (o, sq, ScoredSpanContain(l, bg, slop, within = false,
           stats.get(l), bg.map(stats.get), b))
+      case (o, pq @ SloppyPhraseQ(ts, rel, slop), b) if slop > 0 =>
+        (o, pq, ScoredSloppyPhrase(ts, rel, ts.map(stats.get), slop, b))
+      case (o, pq @ SloppyPhraseQ(ts, rel, _), b) =>
+        (o, pq, exactPhrase(ts, rel, b))
       case (o, pq @ PhraseQ(ts, rel), b) =>
-        (o, pq, ScoredPhrase(ts, rel, ts.map(stats.get), 0, b))
-      case (o, pq @ SloppyPhraseQ(ts, rel, slop), b) =>
-        (o, pq, ScoredPhrase(ts, rel, ts.map(stats.get), slop, b))
+        (o, pq, exactPhrase(ts, rel, b))
       case (o, mq @ MultiPhraseQ(ss, rel), b) =>
         (o, mq, ScoredMultiPhrase(ss, rel, ss.map(_.map(stats.get)), b))
       case (o, tq: TermAutomatonQ, b) =>
@@ -168,17 +176,13 @@ final class JoinScorer(reader: SearchReader) {
   sealed trait RewrittenClause
   final case class ScoredTerm(term: String, stats: Option[TermStats],
                               boost: Float = 1f) extends RewrittenClause
-  final case class ScoredPhrase(terms: Seq[String], rel: Seq[Int],
-                                stats: Seq[Option[TermStats]],
-                                slop: Int = 0,
-                                boost: Float = 1f) extends RewrittenClause
+  final case class ScoredSloppyPhrase(terms: Seq[String], rel: Seq[Int],
+                                      stats: Seq[Option[TermStats]],
+                                      slop: Int,
+                                      boost: Float = 1f) extends RewrittenClause
   final case class ScoredMultiPhrase(slots: Seq[Seq[String]], rel: Seq[Int],
                                      stats: Seq[Seq[Option[TermStats]]],
                                      boost: Float = 1f) extends RewrittenClause
-  final case class ScoredSpan(terms: Seq[String], slop: Int,
-                              stats: Seq[Option[TermStats]],
-                              boost: Float = 1f,
-                              inOrder: Boolean = true) extends RewrittenClause
   final case class ScoredSpanOr(terms: Seq[String],
                                 stats: Seq[Option[TermStats]],
                                 boost: Float = 1f) extends RewrittenClause
@@ -221,20 +225,25 @@ final class JoinScorer(reader: SearchReader) {
     case Occur.MustNot => ClauseKind.MustNot
   }
 
+  /** Clause weight from the summed idf of `stats`, added left to right in
+    * the given order (a single term's weight is the one-element sum). */
+  private def summedWv(stats: Iterable[TermStats], boost: Float): Float = {
+    var idfSum = 0f
+    stats.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
+    BM25.weightValue(idfSum, boost)
+  }
+
   /** Per-term scored hits: decode blocks, score with exact float ops. */
   private def termHits(term: String, clause: Int, kind: Int,
                        stats: Option[TermStats],
                        boost: Float = 1f): Dataset[ClauseHit] = {
     if (stats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = BM25.weightValue(
-      BM25.idf(stats.get.df, reader.collStats.maxDoc), boost)
+    val wv = summedWv(stats, boost)
     // norm cache of the TERM's field (per-field avgdl; fielded search)
     val cacheB = spark.sparkContext.broadcast(
       reader.normCacheFor(IndexBuilder.fieldOfTerm(term)))
     reader.blocks(Seq(term)).flatMap { b =>
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       val cache = cacheB.value
       (0 until docs.length).iterator.map { i =>
         ClauseHit(docs(i), clause, kind,
@@ -264,10 +273,7 @@ final class JoinScorer(reader: SearchReader) {
     reader.blocks(present)
       .where($"firstDoc" <= target && $"lastDoc" >= target)
       .flatMap { b =>
-        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-          graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-            b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-            b.posBytes))
+        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
         val i = java.util.Arrays.binarySearch(docs, target)
         if (i >= 0)
           Iterator.single((b.term,
@@ -282,84 +288,61 @@ final class JoinScorer(reader: SearchReader) {
                         boost: Float = 1f): Dataset[ClauseHit] = {
     if (terms.isEmpty) return spark.emptyDataset[ClauseHit]
     reader.blocks(terms).flatMap { b =>
-      val (docs, _, _) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
-      docs.iterator.map(d => ClauseHit(d, clause, kind, boost))
+      PostingsCodec.decodeDocs(b)._1.iterator
+        .map(d => ClauseHit(d, clause, kind, boost))
     }.dropDuplicates("docId").as[ClauseHit]
   }
 
-  /** Exact-phrase hits: two-phase — conjunction on docIds, then position
-    * alignment (reference search/ExactPhraseScorer.java:27-84; the
-    * approximate-then-verify split of TwoPhaseIterator.java:24-35).
-    * Score = (sum of term idfs) * (k1+1) * pf/(pf+norm). */
-  private def phraseHits(terms: Seq[String], rel: Seq[Int],
-                         stats: Seq[Option[TermStats]], clause: Int,
-                         kind: Int, slop: Int = 0,
-                         boost: Float = 1f): Dataset[ClauseHit] = {
-    if (stats.exists(_.isEmpty) || terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val relArr = rel.toArray
-    val nTerms = terms.length
-    // a term can occur at several phrase slots ("a b a")
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val rptSlots: Array[Array[Int]] =
-      termIdx.valuesIterator.filter(_.length > 1).map(_.toArray).toArray
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    val rows: Dataset[(Long, Int, Array[Int], Byte)] =
-      reader.blocks(terms.distinct).flatMap { b =>
-        val idxs = tIdxB.value(b.term)
-        PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-          b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-          b.posBytes)).iterator.flatMap(p =>
-          idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-      }
-    rows.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
+  /** The one postings pass behind every positional clause (phrases,
+    * spans, term automata): the approximate-then-verify split of the
+    * reference (search/TwoPhaseIterator.java:24-35), with the per-doc
+    * position gather done by a groupByKey(docId). Per doc, slot i holds
+    * the ascending positions of the terms feeding it — the posting's own
+    * array for one term, a [[JoinScorer.mergeSorted]] union when several
+    * terms feed the slot (a term listed twice in a slot feeds it twice),
+    * and null when none occurs in the doc. `freq` turns the slot array
+    * into the clause frequency; a doc with freq > 0 scores
+    * BM25(wv, freq, norm) under the norm cache of the first slot's field.
+    * A term may feed several slots ("a b a"); its postings are fetched
+    * and decoded once. */
+  private def positionalHits(slots: Seq[Seq[String]], wv: Float,
+                             clause: Int, kind: Int)
+                            (freq: Array[Array[Int]] => Float)
+      : Dataset[ClauseHit] = {
+    val terms = slots.flatten.distinct
+    val termId = terms.zipWithIndex.toMap
+    val slotsOf: Array[Array[Int]] = terms.map(t =>
+      slots.indices.flatMap(i => slots(i).filter(_ == t).map(_ => i))
+        .toArray).toArray
+    val nSlots = slots.length
+    val cache = reader.normCacheFor(IndexBuilder.fieldOfTerm(slots.head.head))
+    reader.blocks(terms).flatMap { b =>
+      val t = termId(b.term)
+      PostingsCodec.decode(b).iterator
+        .map(p => (p.docId, t, p.positions, p.norm))
+    }.groupByKey(_._1).flatMapGroups { (docId, rows) =>
+      val pos = new Array[Array[Int]](nSlots)
       var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else if (slop > 0) {
-        // sloppy: the reference pq-walk over adjusted cursors — freq is
-        // the sum of 1/(1+matchLength) over encountered matches
-        // (search/SloppyPhraseScorer.java:96-135 via SloppyMatch)
-        val f = SloppyMatch.freq(byTerm, relArr, slop, rptSlots)
-        if (f == 0f) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, f, cacheB.value, norm))
-      } else {
-        // count first-term positions where every term aligns at rel offset
-        var pf = 0
-        val base = byTerm(0)
-        var i = 0
-        while (i < base.length) {
-          val p0 = base(i) - relArr(0)
-          var ok = true
-          var j = 1
-          while (ok && j < nTerms) {
-            ok = java.util.Arrays.binarySearch(byTerm(j), p0 + relArr(j)) >= 0
-            j += 1
-          }
-          if (ok) pf += 1
-          i += 1
-        }
-        if (pf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, pf.toFloat, cacheB.value, norm))
+      rows.foreach { case (_, t, ps, n) =>
+        norm = n
+        slotsOf(t).foreach(i => pos(i) =
+          if (pos(i) == null) ps else JoinScorer.mergeSorted(pos(i), ps))
       }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      val f = freq(pos)
+      if (f > 0f)
+        Iterator.single(ClauseHit(docId, clause, kind,
+          BM25.score(wv, f, cache, norm)))
+      else Iterator.empty
+    }
   }
 
   /** Multi-phrase hits (reference search/MultiPhraseQuery.java +
-    * UnionPostingsEnum): each slot's alternatives' position lists are
-    * unioned into one sorted list per slot, then the exact-phrase
-    * alignment count runs over the merged lists. Weight blends ALL member
-    * terms' statistics (idf sum), as the reference's union enum does. */
+    * UnionPostingsEnum; exact phrases are multi-phrases over single-term
+    * slots, search/ExactPhraseScorer.java:27-84): each slot's
+    * alternatives are unioned into one sorted position list, then pf =
+    * slot-0 positions where every slot aligns at its rel offset. Weight
+    * blends ALL member terms' statistics (idf sum), as the reference's
+    * union enum does. Score = wv * (k1+1) * pf/(pf+norm). */
   private def multiPhraseHits(slots: Seq[Seq[String]], rel: Seq[Int],
                               stats: Seq[Seq[Option[TermStats]]],
                               clause: Int, kind: Int,
@@ -367,64 +350,54 @@ final class JoinScorer(reader: SearchReader) {
     // a slot with no indexed alternative can never align -> no matches
     if (slots.isEmpty || stats.exists(_.forall(_.isEmpty)))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
     val relArr = rel.toArray
-    val nSlots = slots.length
-    // a term may serve several slots ("(a b) (b c)")
-    val termSlots: Map[String, Seq[Int]] =
-      slots.zipWithIndex.flatMap { case (sl, i) => sl.map(_ -> i) }
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(slots.head.head)))
-    val tIdxB = spark.sparkContext.broadcast(termSlots)
-    reader.blocks(slots.flatten.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val bySlot = Array.fill(nSlots)(List.empty[Array[Int]])
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => bySlot(i) ::= pos; norm = n }
-      if (bySlot.exists(_.isEmpty)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        // union alternatives per slot (positions are disjoint across
-        // alternatives: one token per position)
-        val merged = bySlot.map { ls =>
-          val a = ls.toArray.flatten
-          java.util.Arrays.sort(a); a
-        }
-        var pf = 0
-        val base = merged(0)
+    positionalHits(slots, summedWv(stats.flatten.flatten, boost), clause,
+        kind) { s =>
+      var pf = 0
+      if (!s.contains(null)) {
+        val base = s(0)
         var i = 0
         while (i < base.length) {
           val p0 = base(i) - relArr(0)
           var ok = true
           var j = 1
-          while (ok && j < nSlots) {
-            ok = java.util.Arrays.binarySearch(merged(j), p0 + relArr(j)) >= 0
+          while (ok && j < s.length) {
+            ok = java.util.Arrays.binarySearch(s(j), p0 + relArr(j)) >= 0
             j += 1
           }
           if (ok) pf += 1
           i += 1
         }
-        if (pf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, pf.toFloat, cacheB.value, norm))
       }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      pf.toFloat
+    }
+  }
+
+  /** Sloppy-phrase hits: the reference pq-walk over adjusted cursors —
+    * freq is the sum of 1/(1+matchLength) over encountered matches
+    * (search/SloppyPhraseScorer.java:96-135 via SloppyMatch). Slots that
+    * share a term form the walk's repeat groups. */
+  private def sloppyPhraseHits(terms: Seq[String], rel: Seq[Int],
+                               stats: Seq[Option[TermStats]], slop: Int,
+                               clause: Int, kind: Int,
+                               boost: Float): Dataset[ClauseHit] = {
+    if (stats.exists(_.isEmpty) || terms.isEmpty)
+      return spark.emptyDataset[ClauseHit]
+    val relArr = rel.toArray
+    val rptSlots: Array[Array[Int]] = terms.indices.groupBy(terms(_))
+      .valuesIterator.filter(_.length > 1).map(_.toArray).toArray
+    positionalHits(terms.map(Seq(_)), summedWv(stats.flatten, boost),
+        clause, kind) { s =>
+      if (s.contains(null)) 0f else SloppyMatch.freq(s, relArr, slop, rptSlots)
+    }
   }
 
   /** Term-automaton hits (reference sandbox TermAutomatonQuery/Scorer):
-    * one bucket-pruned postings pass over the automaton's alphabet, then
-    * a per-doc DFA walk (see [[TermAutomatonDfa.countMatches]]).
-    * Statistics blend every distinct alphabet term's idf
-    * (TermAutomatonWeight computeWeight over allTermStats); tf = counted
-    * accepting state entries. */
+    * one postings pass over the automaton's alphabet (one slot per
+    * symbol), then a per-doc DFA walk (see
+    * [[TermAutomatonDfa.countMatches]]). Statistics blend every distinct
+    * alphabet term's idf (TermAutomatonWeight computeWeight over
+    * allTermStats); tf = counted accepting state entries. */
   private def termAutomatonHits(taq: TermAutomatonQ,
                                 stats: Seq[Option[TermStats]],
                                 clause: Int, kind: Int,
@@ -432,76 +405,21 @@ final class JoinScorer(reader: SearchReader) {
     val dfa = TermAutomatonDfa.compile(taq)
     if (dfa.terms.isEmpty || stats.forall(_.isEmpty))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(dfa.terms.head)))
-    val dfaB = spark.sparkContext.broadcast(dfa)
-    val tIdxB = spark.sparkContext.broadcast(dfa.terms.zipWithIndex.toMap)
-    reader.blocks(dfa.terms.toSeq).flatMap { b =>
-      val tid = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator
-        .map(p => (p.docId, tid, p.positions, p.norm))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
+    positionalHits(dfa.terms.toSeq.map(Seq(_)), summedWv(stats.flatten, boost),
+        clause, kind) { s =>
       val pairs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      var norm: Byte = 0
-      it.foreach { case (_, tid, pos, n) =>
-        pos.foreach(p => pairs += ((p, tid))); norm = n }
-      val freq = TermAutomatonDfa.countMatches(dfaB.value,
-        pairs.sortInPlaceBy(x => (x._1, x._2)).toSeq)
-      if (freq == 0) ClauseHit(docId, clause, kind, Float.NaN)
-      else ClauseHit(docId, clause, kind,
-        BM25.score(wv, freq.toFloat, cacheB.value, norm))
-    }.filter(h => !java.lang.Float.isNaN(h.score))
-  }
-
-  /** Ordered span-near hits (reference spans/SpanNearQuery.java,
-    * inOrder=true): for each start occurrence of the first term, greedily
-    * chain each next term to its smallest position after the previous;
-    * match when spanWidth - nTerms <= slop (greedy minimizes the end, so
-    * membership is exact). freq = number of matching start positions. */
-  private def spanHits(terms: Seq[String], slop: Int,
-                       stats: Seq[Option[TermStats]], clause: Int,
-                       kind: Int, boost: Float,
-                       inOrder: Boolean = true): Dataset[ClauseHit] = {
-    if (stats.exists(_.isEmpty) || terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nTerms = terms.length
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-        b.posBytes)).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        val sf =
-          if (inOrder) JoinScorer.orderedSpanFreq(byTerm, nTerms, slop)
-          else JoinScorer.unorderedSpanFreq(byTerm, nTerms, slop)
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
+      var tid = 0
+      while (tid < s.length) {
+        if (s(tid) != null) s(tid).foreach(p => pairs += ((p, tid)))
+        tid += 1
       }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      TermAutomatonDfa.countMatches(dfa,
+        pairs.sortInPlaceBy(x => (x._1, x._2)).toSeq).toFloat
+    }
   }
 
   /** Payload-check spans (SpanPayloadCheckQuery / SpanNearPayloadCheckQuery):
-    * ordered greedy span walk as in spanHits, but each match's leg
+    * ordered greedy span walk as in span-near, but each match's leg
     * positions are surfaced and its payloads (the position-derived channel
     * shared with ft_payload: 2.0 inside the 20-token lead window, 1.0
     * after) are compared against `expected` — in order for the single-span
@@ -515,97 +433,45 @@ final class JoinScorer(reader: SearchReader) {
                                    boost: Float): Dataset[ClauseHit] = {
     if (stats.exists(_.isEmpty) || terms.isEmpty)
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nTerms = terms.length
     val exp = expected.toArray
-    val termIdx: Map[String, Seq[Int]] =
-      terms.zipWithIndex.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(terms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termIdx)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byTerm = new Array[Array[Int]](nTerms)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byTerm(i) = pos; norm = n }
-      if (byTerm.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        var sf = 0
-        JoinScorer.orderedSpanMatches(byTerm, nTerms, slop).foreach { legs =>
-          val cand = legs.map(JoinScorer.leadPayload)
-          val ok =
-            if (cand.length != exp.length) false
-            else if (!nearRule) cand.indices.forall(i => cand(i) == exp(i))
-            else cand.count(c => exp.contains(c)) == exp.length
-          if (ok) sf += 1
-        }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    positionalHits(terms.map(Seq(_)), summedWv(stats.flatten, boost),
+        clause, kind) { s =>
+      if (s.contains(null)) 0f
+      else JoinScorer.orderedSpanMatches(s, s.length, slop).count { legs =>
+        val cand = legs.map(JoinScorer.leadPayload)
+        if (cand.length != exp.length) false
+        else if (!nearRule) cand.indices.forall(i => cand(i) == exp(i))
+        else cand.count(c => exp.contains(c)) == exp.length
+      }.toFloat
+    }
   }
 
-  /** Span-near over multi-term slots (SpanMultiTermQueryWrapper inside
-    * SpanNearQuery): a slot's occurrence set is the sorted UNION of its
-    * expanded terms' positions; the near algorithm then runs exactly as
-    * for plain term legs. Blended statistics: idf sums over every matched
-    * term of every slot (SpanOrQuery's UnionPostings posture). */
+  /** Span-near hits (reference spans/SpanNearQuery.java, with
+    * SpanMultiTermQueryWrapper legs; a plain span-near is this over
+    * single-term slots): a slot's occurrence set is the sorted UNION of
+    * its expanded terms' positions. inOrder: for each start occurrence of
+    * the first slot, greedily chain each next slot to its smallest
+    * position after the previous; match when spanWidth - nSlots <= slop
+    * (greedy minimizes the end, so membership is exact). freq = number of
+    * matches. Blended statistics: idf sums over every matched term of
+    * every slot (SpanOrQuery's UnionPostings posture). */
   private def spanNearMultiHits(slots: Seq[Seq[String]], slop: Int,
                                 inOrder: Boolean,
                                 stats: Seq[Seq[Option[TermStats]]],
                                 clause: Int, kind: Int,
                                 boost: Float): Dataset[ClauseHit] = {
     val presentSlots: Seq[Seq[String]] = slots.zip(stats).map { case (ts, st) =>
-      ts.zip(st).collect { case (t, Some(_)) => t }
+      ts.zip(st).collect { case (t, Some(_)) => t }.distinct
     }
     // a slot with no dictionary match can never occur -> no clause hits
     if (slots.isEmpty || presentSlots.exists(_.isEmpty))
       return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.flatten.foreach(ts =>
-      idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
-    val nSlots = presentSlots.length
-    val termSlots: Map[String, Seq[Int]] = presentSlots.zipWithIndex
-      .flatMap { case (ts, i) => ts.map(_ -> i) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct }
-    val allTerms = termSlots.keys.toSeq
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(allTerms.head)))
-    val tIdxB = spark.sparkContext.broadcast(termSlots)
-    reader.blocks(allTerms).flatMap { b =>
-      val idxs = tIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
-        idxs.map(i => (p.docId, i, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val bySlot = new Array[Array[Int]](nSlots)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) =>
-        norm = n
-        bySlot(i) =
-          if (bySlot(i) == null) pos
-          else JoinScorer.mergeSorted(bySlot(i), pos)
-      }
-      if (bySlot.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        val sf =
-          if (inOrder) JoinScorer.orderedSpanFreq(bySlot, nSlots, slop)
-          else JoinScorer.unorderedSpanFreq(bySlot, nSlots, slop)
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
-      }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    positionalHits(presentSlots, summedWv(stats.flatten.flatten, boost),
+        clause, kind) { s =>
+      if (s.contains(null)) 0f
+      else if (inOrder) JoinScorer.orderedSpanFreq(s, s.length, slop).toFloat
+      else JoinScorer.unorderedSpanFreq(s, s.length, slop).toFloat
+    }
   }
 
   /** Span disjunction over terms (SpanOrQuery analog): freq = total
@@ -615,15 +481,11 @@ final class JoinScorer(reader: SearchReader) {
                          boost: Float): Dataset[ClauseHit] = {
     val present = terms.zip(stats).collect { case (t, Some(_)) => t }
     if (present.isEmpty) return spark.emptyDataset[ClauseHit]
-    var idfSum = 0f
-    stats.flatten.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idfSum, boost)
+    val wv = summedWv(stats.flatten, boost)
     val cacheB = spark.sparkContext.broadcast(
       reader.normCacheFor(IndexBuilder.fieldOfTerm(present.head)))
     reader.blocks(present.distinct).flatMap { b =>
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       docs.indices.iterator.map(i => (docs(i), tfs(i), nrms(i)))
     }.groupByKey(_._1).mapGroups { (docId, it) =>
       var freq = 0
@@ -636,34 +498,21 @@ final class JoinScorer(reader: SearchReader) {
 
   /** Span difference (SpanNotQuery analog): include occurrences survive
     * unless an exclude occurrence lies within [p-pre, p+post]; freq =
-    * surviving count, weight from the include term only. */
+    * surviving count, weight from the include term only. An exclude equal
+    * to the include blocks nothing. */
   private def spanNotHits(include: String, exclude: String, pre: Int,
                           post: Int, incStats: Option[TermStats],
                           excPresent: Boolean, clause: Int, kind: Int,
                           boost: Float): Dataset[ClauseHit] = {
     if (incStats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = BM25.weightValue(
-      BM25.idf(incStats.get.df, reader.collStats.maxDoc), boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(include)))
-    val inc = include
-    val terms = if (excPresent) Seq(include, exclude) else Seq(include)
-    reader.blocks(terms.distinct).flatMap { b =>
-      val isInc = b.term == inc
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator
-        .map(p => (p.docId, isInc, p.positions, p.norm))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      var incPos: Array[Int] = null
-      var excPos: Array[Int] = null
-      var norm: Byte = 0
-      it.foreach { case (_, isInc, pos, n) =>
-        if (isInc) { incPos = pos; norm = n } else excPos = pos
-      }
-      if (incPos == null) ClauseHit(docId, clause, kind, Float.NaN)
-      else {
-        var sf = 0
+    val slots =
+      if (excPresent && exclude != include) Seq(Seq(include), Seq(exclude))
+      else Seq(Seq(include))
+    positionalHits(slots, summedWv(incStats, boost), clause, kind) { s =>
+      val incPos = s(0)
+      val excPos = if (s.length > 1) s(1) else null
+      var sf = 0
+      if (incPos != null) {
         var i = 0
         while (i < incPos.length) {
           val p = incPos(i)
@@ -677,11 +526,9 @@ final class JoinScorer(reader: SearchReader) {
           if (!blocked) sf += 1
           i += 1
         }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
       }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+      sf.toFloat
+    }
   }
 
   /** Span-within / span-containing (reference search/spans/
@@ -699,75 +546,25 @@ final class JoinScorer(reader: SearchReader) {
                               boost: Float): Dataset[ClauseHit] = {
     if (littleStats.isEmpty || bigStats.exists(_.isEmpty) || big.isEmpty)
       return spark.emptyDataset[ClauseHit]
-    var idf = 0f
-    if (within) idf = BM25.idf(littleStats.get.df, reader.collStats.maxDoc)
-    else bigStats.flatten.foreach(ts =>
-      idf += BM25.idf(ts.df, reader.collStats.maxDoc))
-    val wv = BM25.weightValue(idf, boost)
+    val wv = summedWv(if (within) littleStats else bigStats.flatten, boost)
     val nBig = big.length
-    val isWithin = within
-    val slp = slop
-    // roles: 0..nBig-1 = big slots, nBig = little (a term may fill both)
-    val roleIdx: Map[String, Seq[Int]] =
-      (big.zipWithIndex ++ Seq(little -> nBig))
-        .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) }
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(little)))
-    val rIdxB = spark.sparkContext.broadcast(roleIdx)
-    reader.blocks((big :+ little).distinct).flatMap { b =>
-      val idxs = rIdxB.value(b.term)
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap(p =>
-        idxs.map(idx => (p.docId, idx, p.positions, p.norm)))
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byRole = new Array[Array[Int]](nBig + 1)
-      var norm: Byte = 0
-      it.foreach { case (_, i, pos, n) => byRole(i) = pos; norm = n }
-      if (byRole.exists(_ == null)) ClauseHit(docId, clause, kind, Float.NaN)
+    // slot 0 = little, slots 1..nBig = the big legs (a term may fill both)
+    positionalHits(Seq(little) +: big.map(Seq(_)), wv, clause, kind) { s =>
+      if (s.contains(null)) 0f
       else {
-        // greedy ordered big spans: minimal end per start position
-        val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-        val starts = byRole(0)
-        var i = 0
-        while (i < starts.length) {
-          var prev = starts(i)
-          var ok = true
-          var j = 1
-          while (ok && j < nBig) {
-            val arr = byRole(j)
-            val at = java.util.Arrays.binarySearch(arr, prev + 1)
+        val lp = s(0)
+        val spans = JoinScorer.orderedSpanMatches(s.tail, nBig, slop)
+          .map(legs => (legs(0), legs(nBig - 1))).toArray
+        if (within) // little occurrences inside ANY big span (each once)
+          lp.count(p => spans.exists(se => se._1 <= p && p <= se._2)).toFloat
+        else // big spans containing at least one little occurrence
+          spans.count { case (st, e) =>
+            val at = java.util.Arrays.binarySearch(lp, st)
             val ins = if (at >= 0) at else -at - 1
-            if (ins >= arr.length) ok = false else prev = arr(ins)
-            j += 1
-          }
-          if (ok && (prev - starts(i) + 1) - nBig <= slp)
-            spans += ((starts(i), prev))
-          i += 1
-        }
-        val lp = byRole(nBig)
-        var sf = 0
-        if (isWithin) {
-          // little occurrences inside ANY big span (each counted once)
-          var k = 0
-          while (k < lp.length) {
-            val p = lp(k)
-            if (spans.exists(se => se._1 <= p && p <= se._2)) sf += 1
-            k += 1
-          }
-        } else {
-          // big spans containing at least one little occurrence
-          spans.foreach { case (s, e) =>
-            val at = java.util.Arrays.binarySearch(lp, s)
-            val ins = if (at >= 0) at else -at - 1
-            if (ins < lp.length && lp(ins) <= e) sf += 1
-          }
-        }
-        if (sf == 0) ClauseHit(docId, clause, kind, Float.NaN)
-        else ClauseHit(docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, norm))
+            ins < lp.length && lp(ins) <= e
+          }.toFloat
       }
-    }.filter(h => !java.lang.Float.isNaN(h.score))
+    }
   }
 
   /** Span position range (SpanPositionRangeQuery; SpanFirstQuery is
@@ -778,16 +575,13 @@ final class JoinScorer(reader: SearchReader) {
                             stats: Option[TermStats], clause: Int,
                             kind: Int, boost: Float): Dataset[ClauseHit] = {
     if (stats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = BM25.weightValue(
-      BM25.idf(stats.get.df, reader.collStats.maxDoc), boost)
+    val wv = summedWv(stats, boost)
     val cacheB = spark.sparkContext.broadcast(
       reader.normCacheFor(IndexBuilder.fieldOfTerm(term)))
     val startPos = start
     val endPos = end
     reader.blocks(Seq(term)).flatMap { b =>
-      PostingsCodec.decode(graft.codec.PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes)).iterator.flatMap { p =>
+      PostingsCodec.decode(b).iterator.flatMap { p =>
         // positions are ascending: skip past < startPos, count < endPos
         var j = 0
         while (j < p.positions.length && p.positions(j) < startPos) j += 1
@@ -834,14 +628,12 @@ final class JoinScorer(reader: SearchReader) {
       val kind = kindOf(o)
       rc match {
         case ScoredTerm(t, st, b) => termHits(t, i, kind, st, b)
-        case ScoredPhrase(ts, rel, st, slop, b) =>
-          phraseHits(ts, rel, st, i, kind, slop, b)
+        case ScoredSloppyPhrase(ts, rel, st, slop, b) =>
+          sloppyPhraseHits(ts, rel, st, slop, i, kind, b)
         case ScoredMultiPhrase(ss, rel, st, b) =>
           multiPhraseHits(ss, rel, st, i, kind, b)
         case ScoredAutomaton(tq, st, b) =>
           termAutomatonHits(tq, st, i, kind, b)
-        case ScoredSpan(ts, slop, st, b, ord) =>
-          spanHits(ts, slop, st, i, kind, b, ord)
         case ScoredSpanMulti(ss, slop, ord, st, b) =>
           spanNearMultiHits(ss, slop, ord, st, i, kind, b)
         case ScoredSpanOr(ts, st, b) => spanOrHits(ts, st, i, kind, b)

@@ -37,9 +37,7 @@ final class LMDirichletScorer(reader: SearchReader, mu: Float = 2000f) {
     reader.blocks(present).flatMap { b =>
       val i = tIdxB.value(b.term)
       val mp = muPB.value(i)
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       (0 until docs.length).iterator.map { j =>
         val dl = SmallFloat.Bm25NormTable(nrms(j) & 0xFF)
         val s = (math.log(1.0 + tfs(j) / mp.toDouble) +

@@ -135,9 +135,7 @@ final class SimilarityScorer(reader: SearchReader,
     reader.blocks(present).flatMap { b =>
       val i = tIdxB.value(b.term)
       val fn = fnsB.value(i)
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       (0 until docs.length).iterator.map { j =>
         val dl = SmallFloat.Bm25NormTable(nrms(j) & 0xFF)
         (docs(j), i, fn(tfs(j), dl))

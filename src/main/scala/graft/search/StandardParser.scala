@@ -201,6 +201,12 @@ object StandardParser {
         case _ =>
           while (!eof && !s(pos).isWhitespace && s(pos) != '(' &&
             s(pos) != ')') pos += 1
+          // field:[lo TO hi] would split into the garbage terms
+          // "field:[lo", "TO", "hi]" — ranges are field-less only
+          val colon = s.indexOf(':', start)
+          if (colon > start && colon + 1 < pos && "[{".contains(s(colon + 1)))
+            throw new IllegalArgumentException("fielded range queries " +
+              s"are not supported: ${s.substring(start, pos)}")
       }
       lowerLeaf(s.substring(start, pos))
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.codec.{PostingBlock, PostingsCodec}
-import graft.index.{BlockRow, Ids, SearchReader}
+import graft.index.{Ids, SearchReader}
 
 /** Block-max WAND top-k over the compressed term-partitioned postings
   * (SURVEY.md §4.3; Ding & Suel 2011 — the reference 5.2 tree has only the
@@ -80,7 +80,7 @@ final class WandScorer(reader: SearchReader) {
         if (!it.hasNext) Iterator.empty
         else {
           val byTerm = Array.fill(wvs.length)(
-            scala.collection.mutable.ArrayBuffer[BlockRow]())
+            scala.collection.mutable.ArrayBuffer[PostingBlock]())
           var chunk = -1
           it.foreach { case (c, b) =>
             chunk = c; termIdx(b.term).foreach(byTerm(_) += b)
@@ -110,11 +110,6 @@ final class WandScorer(reader: SearchReader) {
 }
 
 object WandScorer {
-  /** Tombstone broadcast bound — see SearchReader.MaxBroadcastDeletes
-    * (the cached per-reader broadcast now lives there). */
-  final val MaxBroadcastDeletes: Int =
-    graft.index.SearchReader.MaxBroadcastDeletes
-
   /** Chunk grid: contiguous docPart ranges of this width. The chunk COUNT
     * is capped at ~2x parallelism so block fan-out never scales with
     * numDocParts (the round-1 scale-killer: (lo to hi) per docPart). */
@@ -141,8 +136,8 @@ object WandScorer {
     * that actually overlap (the common all-disjoint case returns the
     * input array untouched). Bounds are recomputed with the QUERY-side
     * cache, so they dominate the scores this query computes. */
-  private[graft] def disjointBlocks(sorted: Array[BlockRow],
-                                     cache: Array[Float]): Array[BlockRow] = {
+  private[graft] def disjointBlocks(sorted: Array[PostingBlock],
+                                     cache: Array[Float]): Array[PostingBlock] = {
     if (sorted.length < 2) return sorted
     var overlap = false
     var i = 1
@@ -151,21 +146,15 @@ object WandScorer {
       i += 1
     }
     if (!overlap) return sorted
-    val out = scala.collection.mutable.ArrayBuffer[BlockRow]()
-    val cluster = scala.collection.mutable.ArrayBuffer[BlockRow]()
+    val out = scala.collection.mutable.ArrayBuffer[PostingBlock]()
+    val cluster = scala.collection.mutable.ArrayBuffer[PostingBlock]()
     var clusterEnd = Long.MinValue
     def flush(): Unit = {
       if (cluster.length == 1) out += cluster.head
       else if (cluster.nonEmpty) {
-        val b0 = cluster.head
-        val merged = cluster.toArray.flatMap(b =>
-          PostingsCodec.decode(PostingBlock(b.term, b.firstDoc, b.lastDoc,
-            b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-            b.posBytes))).sortBy(_.docId)
-        out ++= PostingsCodec.encode(b0.term, merged.iterator, cache)
-          .map(b => BlockRow(b0.bucket, b.term, b.firstDoc, b.lastDoc,
-            b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-            b.posBytes))
+        val merged = cluster.toArray.flatMap(PostingsCodec.decode)
+          .sortBy(_.docId)
+        out ++= PostingsCodec.encode(cluster.head.term, merged.iterator, cache)
       }
       cluster.clear()
     }
@@ -181,7 +170,7 @@ object WandScorer {
   /** One term's postings iterator over (chunk-restricted) blocks with
     * metadata-level skipping. */
   private[search] final class Cursor(val clause: Int, val wv: Float,
-                             blocks: Array[BlockRow], loDoc: Long,
+                             blocks: Array[PostingBlock], loDoc: Long,
                              hiDoc: Long, cache: Array[Float]) {
     private var bi = -1 // current block index
     private var docs: Array[Long] = _
@@ -201,10 +190,7 @@ object WandScorer {
     advanceTo(loDoc)
 
     private def decodeBlock(i: Int): Unit = {
-      val b = blocks(i)
-      val t = PostingsCodec.decodeDocs(PostingBlock(b.term, b.firstDoc,
-        b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-        b.nrmBytes, b.posBytes))
+      val t = PostingsCodec.decodeDocs(blocks(i))
       docs = t._1; tfs = t._2; nrms = t._3
     }
 

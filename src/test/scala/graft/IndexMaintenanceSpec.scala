@@ -360,6 +360,54 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(IndexBuilder.nextDeltaId(dir) == 13L)
   }
 
+  test("half-merge: a tiered merge that crashed before its done marker " +
+    "stays invisible to compact, splitShard and compactTiered") {
+    import org.apache.spark.sql.functions.lit
+    val dir = SparkSuite.tmpDir("graft-half")
+    build(dir)
+    val cfgT = cfg.copy(numDocParts = cfg.numDocParts + 2)
+    (0 until 2).foreach { k =>
+      val in = CorpusGen.generate(spark, 40, seed = 200L + k).toDF()
+        .withColumn("docPart", lit(cfg.numDocParts + k))
+      IndexBuilder.append(spark, in, dir, IndexBuilder.nextDeltaId(dir), cfgT)
+    }
+    val live = MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).docmeta.count()
+    assert(live == 880L)
+    // crash after compactTiered wrote the merged segments and
+    // replaces.txt, before build() committed the done marker
+    val half = Paths.get(dir, s"delta_${IndexBuilder.nextDeltaId(dir)}")
+    def copyTree(src: Path, dst: Path): Unit =
+      Files.walk(src).sorted().forEach { p =>
+        val q = dst.resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q)
+      }
+    copyTree(Paths.get(dir, "delta_0", "segments"), half.resolve("segments"))
+    Files.writeString(half.resolve("replaces.txt"), "delta_0")
+    assert(!IndexBuilder.subIndexDirs(dir).contains(half.toString))
+
+    val out = SparkSuite.tmpDir("graft-half-compact")
+    IndexBuilder.compact(spark, dir, out, cfgT)
+    assert(new IndexReader(spark, out, cfg.numBuckets, cacheData = false)
+      .collStats.maxDoc == live)
+
+    val loDir = SparkSuite.tmpDir("graft-half-lo")
+    val hiDir = SparkSuite.tmpDir("graft-half-hi")
+    IndexBuilder.splitShard(spark, dir, loDir, hiDir, 4L << 40, cfgT)
+    val children = Seq(loDir, hiDir).map(d =>
+      new IndexReader(spark, d, cfg.numBuckets, cacheData = false)
+        .docmeta.count())
+    assert(children.sum == live, children.mkString(","))
+
+    // both visible deltas fit one tier of size 1: the merge runs over
+    // them only and never reads the half-merge's (absent) markers
+    assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
+      .isDefined)
+    assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).docmeta.count() == live)
+  }
+
   test("optimistic concurrency: matching expectCommit applies, stale or " +
     "unknown keys are rejected as conflicts") {
     import org.apache.spark.sql.functions.{col, hash, lit, md5, pmod, regexp_replace}

@@ -352,6 +352,49 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(checked == 60)
   }
 
+  test("randomized positional sweep == oracle (repeated-term phrases, " +
+    "sloppy phrases, multi-phrases, span within/containing)") {
+    // its own seed: the boolean sweep above keeps its draws
+    val rng = new scala.util.Random(20261017L)
+    // the two hot terms twice: random 3-term phrases still align in docs
+    val pool = Vector("import", "import", "return", "return", "spark",
+      "println", "merge", "dataset", "val", "def", "absentzzz")
+    def term(): String = pool(rng.nextInt(pool.length))
+    def terms(k: Int): Seq[String] = Seq.fill(k)(term())
+    def positional(): Query = rng.nextInt(6) match {
+      case 0 => // a term repeated across slots ("a b a")
+        val a = term()
+        PhraseQ(Seq(a, term(), a), Seq(0, 1, 2))
+      case 1 =>
+        val k = 2 + rng.nextInt(2)
+        PhraseQ(terms(k), 0 until k)
+      case 2 =>
+        val k = 2 + rng.nextInt(3)
+        SloppyPhraseQ(terms(k), 0 until k, 1 + rng.nextInt(4))
+      case 3 => // single- and multi-term slots (distinct alternatives)
+        val k = 2 + rng.nextInt(2)
+        MultiPhraseQ(Seq.fill(k)(terms(1 + rng.nextInt(3)).distinct), 0 until k)
+      case 4 => SpanWithinQ(term(), terms(2), 2 + rng.nextInt(7))
+      case _ => SpanContainingQ(term(), terms(2), 2 + rng.nextInt(7))
+    }
+    def occur(): Occur = rng.nextInt(8) match {
+      case n if n < 4 => Occur.Should
+      case n if n < 7 => Occur.Must
+      case _ => Occur.MustNot
+    }
+    var matched = 0
+    for (_ <- 1 to 40) {
+      val pos = positional()
+      if (oracle.scores(BoolQ(Seq(Occur.Should -> pos))).nonEmpty) matched += 1
+      val others = Seq.fill(rng.nextInt(3))((occur(), TermQ(term()): Query))
+      var clauses = rng.shuffle((occur(), pos) +: others)
+      if (clauses.forall(_._1 == Occur.MustNot))
+        clauses = (Occur.Should: Occur, pos) +: clauses
+      checkQuery(BoolQ(clauses), 15)
+    }
+    assert(matched >= 20, s"only $matched/40 positional clauses match")
+  }
+
   test("query parser: classic subset") {
     val q = QueryParser.parse("+import -void \"data set\" spark print*")
     val occurs = q.clauses.map(_._1)

@@ -137,6 +137,15 @@ class StandardParserSpec extends AnyFunSuite {
     assert(openHi.lo == "alpha" && openHi.hi > "zzzz")
   }
 
+  test("fielded ranges are rejected, never split into garbage terms") {
+    for (q <- Seq("date:[alpha TO beta]", "date:{alpha TO beta}",
+      "spark AND path:[a TO m]", "+date:[* TO omega}")) {
+      val e = intercept[IllegalArgumentException](p(q))
+      assert(e.getMessage.contains(":[") || e.getMessage.contains(":{"),
+        e.getMessage)
+    }
+  }
+
   test("relational open-range syntax (OpenRangeQueryNodeProcessor)") {
     assert(p("content=spark").clauses == Seq((S, TermQ("spark"))))
     assert(p("content<spark").clauses ==

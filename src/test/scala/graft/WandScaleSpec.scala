@@ -16,14 +16,11 @@ class WandScaleSpec extends AnyFunSuite {
 
   test("disjointBlocks: random overlapping clusters decode to the same " +
     "ascending posting stream (tiered-merge overlap repair)") {
-    import graft.codec.{Posting, PostingsCodec}
-    import graft.index.BlockRow
+    import graft.codec.{Posting, PostingBlock, PostingsCodec}
     val rnd = new scala.util.Random(7)
     val cache = graft.search.BM25.cache(50f)
-    def mk(postings: Seq[Posting]): Seq[BlockRow] =
-      PostingsCodec.encode("t", postings.iterator, cache).map(b =>
-        BlockRow(0, b.term, b.firstDoc, b.lastDoc, b.count, b.maxTf,
-          b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)).toSeq
+    def mk(postings: Seq[Posting]): Seq[PostingBlock] =
+      PostingsCodec.encode("t", postings.iterator, cache).toSeq
     for (_ <- 1 to 50) {
       // 2-4 "sub-indexes" over interleaved docId ranges — exactly the
       // shape a tiered merge produces
@@ -46,18 +43,13 @@ class WandScaleSpec extends AnyFunSuite {
         case _ =>
       }
       // decoded stream = the exact original doc set, ascending
-      val dec = fixed.flatMap(b => PostingsCodec.decodeDocs(
-        graft.codec.PostingBlock(b.term, b.firstDoc, b.lastDoc, b.count,
-          b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-          b.posBytes))._1)
+      val dec = fixed.flatMap(b => PostingsCodec.decodeDocs(b)._1)
       assert(dec.toSeq == dec.toSeq.sorted)
       assert(dec.toSet == all, "doc set must survive the repair")
       // bounds stay sound: every block's maxPartial dominates the max
       // partial of its own postings under the SAME cache
       fixed.foreach { b =>
-        val ps = PostingsCodec.decode(graft.codec.PostingBlock(b.term,
-          b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf, b.maxPartial,
-          b.docBytes, b.nrmBytes, b.posBytes))
+        val ps = PostingsCodec.decode(b)
         ps.foreach { p =>
           val partial = p.tf.toFloat / (p.tf.toFloat + cache(p.norm & 0xFF))
           assert(partial <= b.maxPartial)

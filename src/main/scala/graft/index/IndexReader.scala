@@ -1,5 +1,7 @@
 package graft.index
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -11,13 +13,17 @@ import graft.search.BM25
   * lucene/core/src/java/org/apache/lucene/index/DirectoryReader.java:62).
   *
   * Caching mirrors the reference's serving posture: Lucene keeps the term
-  * dictionary hot (FST in heap) and postings in the OS page cache. Here:
-  * term-stats lookups are memoized driver-side (the TermsEnum.seekExact
-  * cache), and the postings / docmeta Datasets are Spark-cached
-  * (MEMORY_AND_DISK) so repeated queries hit executor-resident columnar
-  * batches instead of re-reading parquet. `cacheData = false` restores
-  * scan-per-query (the posture for a 100TB index where only the hot
-  * working set should live in executor storage — Spark evicts LRU).
+  * dictionary hot (FST in heap) and answers a warm query with a dictionary
+  * seek plus a postings read, compiling nothing. Here: term-stats lookups
+  * are memoized driver-side (the TermsEnum.seekExact cache), docmeta is a
+  * Spark-cached Dataset, and the postings are ONE persisted RDD
+  * (MEMORY_AND_DISK), hash-partitioned on the term key, whose partitions
+  * each hold a key -> blocks map; readers of the same postings files share
+  * it. A warm query reads only the partitions holding its keys, with no
+  * Spark SQL planning or codegen on the way.
+  * `cacheData = false` restores scan-per-query (the posture for a 100TB
+  * index where only the hot working set should live in executor storage —
+  * Spark evicts LRU).
   */
 final class IndexReader(val spark: SparkSession, val dir: String,
                         val numBuckets: Int, val cacheData: Boolean = true,
@@ -98,10 +104,12 @@ final class IndexReader(val spark: SparkSession, val dir: String,
       termStatsCached.where(pred).orderBy($"term").limit(limit + 1)
         .collect().toSeq, limit)
 
-  private lazy val postingsDf: DataFrame = {
-    val p = spark.read.parquet(s"$dir/postings").drop("wave")
-    if (cacheData) p.persist(StorageLevel.MEMORY_AND_DISK) else p
-  }
+  private lazy val postingsFiles: Dataset[BlockRowK] =
+    spark.read.parquet(s"$dir/postings").drop("wave").as[BlockRowK]
+
+  /** The postings cache of a cached reader, shared by every reader of the
+    * same postings files (see [[IndexReader.postingsCache]]). */
+  private lazy val cache = IndexReader.postingsCache(spark, dir, postingsFiles)
 
   /** Tombstones. Live readers scan the whole `deletes/` dir; a reader
     * opened at a snapshot (SnapshotDeletionPolicy analog, see
@@ -125,29 +133,95 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     * [[graft.codec.PostingsCodec.decode]]. The on-disk rows are keyed by
     * the 63-bit term key (no term strings in the postings files); query
     * terms resolve to keys driver-side and the string is reattached from
-    * the query's own (tiny) key->term map. Uncached: parquet row-group
-    * pruning via the files' (key, docId) sort order; cached: in-memory
-    * columnar batch filter. */
-  def blocks(terms: Seq[String]): Dataset[PostingBlock] = {
+    * the query's own (tiny) key->term map. Cached: only the cache
+    * partitions that hold the query's keys are read. Uncached: a parquet
+    * scan that reads only the row groups whose (key, docId) range can hold
+    * the keys. */
+  def blockRdd(terms: Seq[String],
+               postingsPerTask: Long = Long.MaxValue): RDD[PostingBlock] = {
     val k2t: Map[Long, String] =
       terms.distinct.map(t => TermKeys.of(t) -> t).toMap
-    val keys = k2t.keys.toSeq
+    if (!cacheData) return scanBlocks(k2t).rdd
+    val wanted = k2t.keySet.map(cache.part.getPartition)
+    val pruned = PartitionPruningRDD.create(cache.byKey, wanted.contains)
+    // slice s of n: every n-th block of each key, from the s-th
+    def slice(s: Int, n: Int): RDD[PostingBlock] =
+      pruned.flatMap(byKey => k2t.iterator.flatMap { case (key, term) =>
+        val bs = byKey.getOrElse(key, Array.empty[BlockRowK])
+        (s until bs.length by n).iterator.map(bs(_).withTerm(term))
+      })
+    // at most defaultParallelism tasks in all (term stats are memoized:
+    // the scorer has already looked them up)
+    val n =
+      if (postingsPerTask == Long.MaxValue) 1
+      else math.min(spark.sparkContext.defaultParallelism / math.max(1, wanted.size),
+        1 + termStats(terms).values.map(_.df).sum / postingsPerTask).toInt.max(1)
+    if (n == 1) slice(0, 1) else spark.sparkContext.union((0 until n).map(slice(_, n)))
+  }
+
+  private def scanBlocks(k2t: Map[Long, String]): Dataset[PostingBlock] =
     // Column-level term reattachment (element_at over a literal map) keeps
-    // the scan -> filter -> project inside whole-stage codegen; the previous
-    // typed .as[BlockRowK].map{..} deserialized every block row and broke
-    // the columnar-batch filter path (round-3 verdict, query-p50 doubling).
-    postingsDf
-      .where($"key".isin(keys: _*))
+    // the scan -> filter -> project inside whole-stage codegen.
+    postingsFiles
+      .where($"key".isin(k2t.keys.toSeq: _*))
       .select(
         element_at(typedLit(k2t), $"key").as("term"),
         $"firstDoc", $"lastDoc", $"count", $"maxTf", $"sumTf", $"maxPartial",
         $"docBytes", $"nrmBytes", $"posBytes")
       .as[PostingBlock]
-  }
 }
 
 object IndexReader {
   def apply(spark: SparkSession, dir: String,
             cfg: IndexConfig = IndexConfig()): IndexReader =
     new IndexReader(spark, dir, cfg.numBuckets)
+
+  /** A filled postings cache: one map per partition from term key to that
+    * key's blocks; a key lives in partition `part.getPartition(key)`. */
+  private final class PostingsCache(val dir: String,
+                                    val byKey: RDD[Map[Long, Array[BlockRowK]]],
+                                    val part: HashPartitioner)
+
+  /** Postings caches by postings file listing. Spark names every written
+    * part file uniquely, so a sub-index that did not change keeps its
+    * listing: the readers a MultiIndexReader refresh reopens over it reuse
+    * its cache instead of filling another. Held weakly, as Spark holds its
+    * persisted RDDs: a cache no reader holds is unpersisted by Spark's
+    * ContextCleaner. A directory that was rewritten or deleted has its
+    * cache unpersisted at the next fill, since no new reader can use it. */
+  private val postingsCaches = scala.collection.mutable
+    .HashMap[Seq[String], java.lang.ref.WeakReference[PostingsCache]]()
+
+  private def postingsCache(spark: SparkSession, dir: String,
+                            rows: Dataset[BlockRowK]): PostingsCache =
+    postingsCaches.synchronized {
+      val files = rows.inputFiles.toSeq.sorted
+      postingsCaches.filterInPlace { (fs, ref) =>
+        val c = ref.get
+        c != null && !c.byKey.context.isStopped && {
+          val stale = (c.dir == dir && fs != files) ||
+            !java.nio.file.Files.exists(java.nio.file.Paths.get(c.dir, "postings"))
+          if (stale) c.byKey.unpersist(blocking = false)
+          !stale
+        }
+      }
+      postingsCaches.get(files).map(_.get)
+        .filter(c => c != null && (c.byKey.context eq spark.sparkContext))
+        .getOrElse {
+          // one partition per scan partition (at least defaultParallelism),
+          // so a query with few terms touches few partitions
+          val scan = rows.rdd
+          val part = new HashPartitioner(
+            math.max(scan.getNumPartitions, spark.sparkContext.defaultParallelism))
+          val byKey = scan.map(b => (b.key, b)).partitionBy(part)
+            .mapPartitions(it => Iterator.single(it.map(_._2).toArray.groupBy(_.key)))
+            .setName(s"postings $dir")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          byKey.count()
+          val c = new PostingsCache(dir, byKey, part)
+          postingsCaches(files) = new java.lang.ref.WeakReference(c)
+          c
+        }
+    }
 }
+

@@ -76,7 +76,11 @@ final case class BlockRowK(key: Long, firstDoc: Long,
                            lastDoc: Long, count: Int, maxTf: Int,
                            sumTf: Long, maxPartial: Float,
                            docBytes: Array[Byte], nrmBytes: Array[Byte],
-                           posBytes: Array[Byte])
+                           posBytes: Array[Byte]) {
+  def withTerm(term: String): graft.codec.PostingBlock =
+    graft.codec.PostingBlock(term, firstDoc, lastDoc, count, maxTf, sumTf,
+      maxPartial, docBytes, nrmBytes, posBytes)
+}
 
 object Ids {
   /** docId = (docPart << DocIdShift) | indexWithinPartition — deterministic

@@ -1,6 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, Dataset, Encoders, SparkSession}
 
 import graft.codec.PostingBlock
 
@@ -36,7 +37,21 @@ trait SearchReader {
   def termStats(terms: Seq[String]): Map[String, TermStats]
   def termStatsDf: Dataset[TermStats]
   def expandTerms(pred: Column, limit: Int = SearchReader.MaxClauseCount): Seq[TermStats]
-  def blocks(terms: Seq[String]): Dataset[PostingBlock]
+  /** The compressed blocks of `terms` (each distinct term once), as the
+    * RDD the WAND scorer consumes; over a cached reader no Spark SQL plan
+    * is built for it. A cached reader keeps all blocks of a term in one
+    * partition; for consumers that decode in the first stage it can split
+    * them, adding a task per `postingsPerTask` postings of the query's
+    * terms, up to defaultParallelism tasks in all. */
+  def blockRdd(terms: Seq[String],
+               postingsPerTask: Long = Long.MaxValue): RDD[PostingBlock]
+
+  /** The same blocks as a Dataset, for the scorers that continue in
+    * Spark SQL (JoinScorer, the similarity variants, SparkEntry). They
+    * decode in the first stage, so a hot term's blocks are spread. */
+  def blocks(terms: Seq[String]): Dataset[PostingBlock] =
+    spark.createDataset(blockRdd(terms, SearchReader.SpreadPostings))(
+      Encoders.product[PostingBlock])
   def docmeta: Dataset[DocMeta]
 
   /** Tombstoned docIds (one `docId` column), or None when nothing was
@@ -130,6 +145,12 @@ object SearchReader {
     * (search/BooleanQuery.java:47-66). */
   final val MaxClauseCount = 1024
 
+  /** Postings that pay for one more block-fetch task in [[SearchReader.blocks]]:
+    * spreading every term over all cores made JoinScorer queries about 30%
+    * slower at 5k docs, where no term reaches this; at 2M docs a hot term's
+    * million postings would otherwise decode in one task. */
+  final val SpreadPostings: Long = 1L << 18
+
   /** Upper bound on tombstones ridden as the cached WAND broadcast
     * (see [[SearchReader.deletedSortedBroadcast]]). */
   final val MaxBroadcastDeletes: Int = 8 * 1024 * 1024
@@ -207,7 +228,7 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
     * (tf+a)/(tf+b) <= max(1, a/b), scaling by
     * f = max_n max(1, cacheSub[n]/cacheGlobal[n]) restores a sound bound:
     * tf/(tf+cg[n]) <= [tf/(tf+cs[n])] * f. nextUp guards float rounding. */
-  private lazy val boundScale: Seq[(Float, Float)] = readers.map { r =>
+  private[graft] lazy val boundScale: Seq[(Float, Float)] = readers.map { r =>
     def f(sub: Array[Float], glob: Array[Float]): Float = {
       var m = 1.0
       var i = 0
@@ -222,18 +243,14 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
       f(r.normCacheFor("path"), normCacheFor("path")))
   }
 
-  def blocks(terms: Seq[String]): Dataset[PostingBlock] = {
-    import org.apache.spark.sql.functions.{col, least, lit, when}
-    import spark.implicits._
-    readers.zip(boundScale).map { case (r, (fc, fp)) =>
-      val b = r.blocks(terms)
+  def blockRdd(terms: Seq[String],
+               postingsPerTask: Long = Long.MaxValue): RDD[PostingBlock] =
+    spark.sparkContext.union(readers.zip(boundScale).map { case (r, (fc, fp)) =>
+      val b = r.blockRdd(terms, postingsPerTask)
       if (fc == 1f && fp == 1f) b
-      else b.withColumn("maxPartial", least(lit(1f),
-          col("maxPartial") *
-            when(col("term").startsWith("path:"), lit(fp)).otherwise(lit(fc))))
-        .as[PostingBlock]
-    }.reduce(_ union _)
-  }
+      else b.map(x => x.copy(maxPartial = math.min(1f,
+        x.maxPartial * (if (x.term.startsWith("path:")) fp else fc))))
+    })
 
   def docmeta: Dataset[DocMeta] =
     readers.map(_.docmeta).reduce(_ union _)

@@ -499,7 +499,8 @@ final class JoinScorer(reader: SearchReader) {
   /** Span difference (SpanNotQuery analog): include occurrences survive
     * unless an exclude occurrence lies within [p-pre, p+post]; freq =
     * surviving count, weight from the include term only. An exclude equal
-    * to the include blocks nothing. */
+    * to the include blocks every occurrence (its own position lies in the
+    * window), so it matches nothing, as the reference's SpanNotQuery. */
   private def spanNotHits(include: String, exclude: String, pre: Int,
                           post: Int, incStats: Option[TermStats],
                           excPresent: Boolean, clause: Int, kind: Int,
@@ -510,7 +511,8 @@ final class JoinScorer(reader: SearchReader) {
       else Seq(Seq(include))
     positionalHits(slots, summedWv(incStats, boost), clause, kind) { s =>
       val incPos = s(0)
-      val excPos = if (s.length > 1) s(1) else null
+      val excPos =
+        if (s.length > 1) s(1) else if (exclude == include) incPos else null
       var sf = 0
       if (incPos != null) {
         var i = 0

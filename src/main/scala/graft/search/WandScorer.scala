@@ -1,7 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 
 import graft.codec.{PostingBlock, PostingsCodec}
 import graft.index.{Ids, SearchReader}
@@ -25,11 +27,13 @@ import graft.index.{Ids, SearchReader}
   * summed upper bounds cannot beat the local threshold. Upper bounds are
   * wv * maxPartial where maxPartial was computed at build time with the
   * exact query-time float ops, so pruning is rank-safe (see PostingsCodec).
-  * Per-chunk top-k then a TakeOrderedAndProject merge == global top-k.
+  * The chunk heaps (at most k x numChunks hits) are collected and merged
+  * on the driver by (score desc, docId asc) == global top-k; the answer
+  * is a local DataFrame, so a warm query plans no Spark SQL and compiles
+  * no code.
   */
 final class WandScorer(reader: SearchReader) {
   private val sparkS = reader.spark
-  import sparkS.implicits._
 
   /** Disjunctive (OR) or conjunctive (AND) term query. Scores and ranks
     * are float-identical to JoinScorer (tested property). */
@@ -38,7 +42,7 @@ final class WandScorer(reader: SearchReader) {
     val stats = reader.termStats(terms.distinct)
     val present = terms.filter(stats.contains)
     if (present.isEmpty || (conjunctive && present.length < terms.length))
-      return reader.spark.emptyDataset[(Long, Float)].toDF("docId", "score")
+      return WandScorer.frame(sparkS, Seq.empty)
     val maxDoc = reader.collStats.maxDoc
     // weights in clause order (clause order = position in `terms`)
     val wvs: Array[Float] = present.map(t =>
@@ -71,7 +75,7 @@ final class WandScorer(reader: SearchReader) {
     // partitions (or, with AQE coalescing, ONE serial task) the Dataset
     // path produced. The shuffle payload is unchanged: O(#blocks of the
     // query's terms + #terms x #chunks) block rows.
-    val scored = reader.blocks(present).rdd
+    val chunkHeaps = reader.blockRdd(present)
       .flatMap { b =>
         WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).map(c => (c, b))
       }
@@ -104,12 +108,21 @@ final class WandScorer(reader: SearchReader) {
           }
         }
       }
-    sparkS.createDataset(scored).toDF("docId", "score")
-      .orderBy($"score".desc, $"docId".asc).limit(k)
+      .collect()
+    WandScorer.frame(sparkS, chunkHeaps.sortWith((a, b) =>
+      a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k).toSeq)
   }
 }
 
 object WandScorer {
+  private val HitSchema = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", FloatType, nullable = false)))
+
+  /** Ranked hits as a local (docId, score) DataFrame. */
+  private def frame(spark: SparkSession, hits: Seq[(Long, Float)]): DataFrame =
+    spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, HitSchema)
+
   /** Chunk grid: contiguous docPart ranges of this width. The chunk COUNT
     * is capped at ~2x parallelism so block fan-out never scales with
     * numDocParts (the round-1 scale-killer: (lo to hi) per docPart). */

@@ -1,7 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.index._
@@ -156,30 +160,48 @@ object ScalingBench {
     System.err.println("[scaling] builds: " +
       runs.map(r => f"${r._1}%.1f").mkString(" ") + f" -> min $buildSec%.1f s")
     val js = new JoinScorer(reader)
+    // Spark jobs (counted by job group) and generated classes compiled per
+    // warm query, averaged over every rep but the first, beside the latencies
+    val jobs = new ConcurrentHashMap[String, LongAdder]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.computeIfAbsent(g, _ => new LongAdder).increment())
+    })
+    def timed(name: String)(query: => Unit): (String, (Double, Double, Double)) = {
+      var compiles0 = 0L
+      val times = (0 until reps).map { i =>
+        if (i == 1) {
+          spark.sparkContext.setJobGroup(name, name)
+          compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        }
+        val s = System.nanoTime()
+        query
+        (System.nanoTime() - s) / 1e6
+      }
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      spark.sparkContext.clearJobGroup()
+      name -> (pct(times, 0.5), pct(times, 0.95), compiles.toDouble / (reps - 1))
+    }
     val lat = queries.map { case (name, q) =>
       val parsed = QueryParser.parse(q)
-      val times = (0 until reps).map { _ =>
-        val s = System.nanoTime()
-        js.topK(parsed, 10).collect()
-        (System.nanoTime() - s) / 1e6
-      }
-      name -> (pct(times, 0.5), pct(times, 0.95))
-    } :+ {
-      val times = (0 until reps).map { _ =>
-        val s = System.nanoTime()
-        new WandScorer(reader).topK(wandTerms, 10).collect()
-        (System.nanoTime() - s) / 1e6
-      }
-      "q_wand3" -> (pct(times, 0.5), pct(times, 0.95))
-    }
-    val latJson = lat.map { case (q, (p50, p95)) =>
-      f""""$q":{"p50":$p50%.1f,"p95":$p95%.1f}""" }.mkString(",")
+      timed(name)(js.topK(parsed, 10).collect())
+    } :+ timed("q_wand3")(new WandScorer(reader).topK(wandTerms, 10).collect())
+    Thread.sleep(2000) // listener bus drains asynchronously
+    // the reader's caches after the queries; disk > 0 means partitions spilled
+    val storage = spark.sparkContext.getRDDStorageInfo
+    val cacheMb = storage.map(_.memSize).sum / 1e6
+    val cacheDiskMb = storage.map(_.diskSize).sum / 1e6
+    val latJson = lat.map { case (q, (p50, p95, compiles)) =>
+      val perQuery = Option(jobs.get(q)).map(_.sum).getOrElse(0L).toDouble / (reps - 1)
+      f""""$q":{"p50":$p50%.1f,"p95":$p95%.1f,"jobs":$perQuery%.2f,"compiles":$compiles%.2f}"""
+    }.mkString(",")
     val stageJson = stages.toSeq.sortBy(_._1)
       .map { case (s, t) => f""""$s":$t%.2f""" }.mkString(",")
     val membw = memBandwidth(cores)
     System.err.println(f"[scaling] DRAM read bandwidth @$cores threads: $membw%.1f GB/s")
     val json =
-      f"""{"cores":$cores,"n_docs":$nDocs,"build_sec":$buildSec%.2f,"docs_per_sec":${nDocs / buildSec}%.0f,"membw_gbs":$membw%.2f,"shuffle_write_mb":$shufWriteMb%.1f,"shuffle_read_mb":$shufReadMb%.1f,"input_mb":$inputMb%.1f,"stages":{$stageJson},"latency_ms":{$latJson}}"""
+      f"""{"cores":$cores,"n_docs":$nDocs,"build_sec":$buildSec%.2f,"docs_per_sec":${nDocs / buildSec}%.0f,"membw_gbs":$membw%.2f,"shuffle_write_mb":$shufWriteMb%.1f,"shuffle_read_mb":$shufReadMb%.1f,"input_mb":$inputMb%.1f,"cache_mb":$cacheMb%.1f,"cache_disk_mb":$cacheDiskMb%.1f,"stages":{$stageJson},"latency_ms":{$latJson}}"""
     Files.createDirectories(Paths.get(outJson).toAbsolutePath.getParent)
     Files.writeString(Paths.get(outJson), json)
     println(json)

@@ -25,6 +25,14 @@ class RankIdentitySpec extends AnyFunSuite {
   private lazy val reader = IndexReader(spark, dir, cfg)
   private lazy val joiner = new JoinScorer(reader)
   private lazy val wand = new WandScorer(reader)
+  // the same index read without the postings cache: every answer must be
+  // float-bit-identical to the cached reader's
+  private lazy val uncached =
+    new IndexReader(spark, dir, cfg.numBuckets, cacheData = false)
+
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+    df.as[(Long, Float)].collect().toSeq
+      .map { case (d, s) => (d, java.lang.Float.floatToIntBits(s)) }
 
   /** Oracle over the same docs with the engine's docIds. */
   private lazy val oracle: NaiveOracle.Index = {
@@ -256,6 +264,8 @@ class RankIdentitySpec extends AnyFunSuite {
       val exp = oracle.topK(BoolQ(terms.map(t => (Occur.Should, TermQ(t)))), 10)
       val got = wand.topK(terms, 10).as[(Long, Float)].collect().toSeq
       assert(got == exp, s"\nWAND OR $terms\nexpected: $exp\ngot: $got")
+      assert(bits(new WandScorer(uncached).topK(terms, 10)) ==
+        bits(wand.topK(terms, 10)), s"uncached WAND OR $terms")
     }
   }
 
@@ -303,6 +313,8 @@ class RankIdentitySpec extends AnyFunSuite {
       val got = wand.topK(terms, 10, conjunctive = true)
         .as[(Long, Float)].collect().toSeq
       assert(got == exp, s"\nWAND AND $terms\nexpected: $exp\ngot: $got")
+      assert(bits(new WandScorer(uncached).topK(terms, 10, conjunctive = true)) ==
+        bits(wand.topK(terms, 10, conjunctive = true)), s"uncached WAND AND $terms")
     }
   }
 
@@ -339,6 +351,8 @@ class RankIdentitySpec extends AnyFunSuite {
           rng.nextInt(4) == 0) 1 + rng.nextInt(nShould) else 0
       val q = BoolQ(clauses, msm)
       checkQuery(q, 15)
+      assert(bits(new JoinScorer(uncached).topK(q, 15)) == bits(joiner.topK(q, 15)),
+        s"cached and uncached readers disagree on $q")
       checked += 1
       // WAND must agree with the spec path on pure term disjunctions
       if (msm == 0 && clauses.forall { case (o, l) =>
@@ -347,6 +361,8 @@ class RankIdentitySpec extends AnyFunSuite {
         val exp = oracle.topK(q, 15)
         val got = wand.topK(ts, 15).as[(Long, Float)].collect().toSeq
         assert(got == exp, s"WAND mismatch on $ts")
+        assert(bits(new WandScorer(uncached).topK(ts, 15)) == bits(wand.topK(ts, 15)),
+          s"cached and uncached WAND disagree on $ts")
       }
     }
     assert(checked == 60)
@@ -393,6 +409,74 @@ class RankIdentitySpec extends AnyFunSuite {
       checkQuery(BoolQ(clauses), 15)
     }
     assert(matched >= 20, s"only $matched/40 positional clauses match")
+  }
+
+  test("SpanNot with exclude == include matches nothing (SpanNotQuery)") {
+    for ((pre, post) <- Seq((0, 0), (2, 3))) {
+      val q = BoolQ(Seq(Occur.Must -> SpanNotQ("spark", "spark", pre, post)))
+      assert(joiner.scores(q).count() == 0, s"SpanNot(spark, spark, $pre, $post)")
+    }
+    assert(joiner.scores(BoolQ(Seq(Occur.Must -> SpanNotQ("spark", "import"))))
+      .count() > 0)
+    // a SHOULD SpanNot(a, a) adds nothing to the rest of the query
+    assert(engineTopK(BoolQ(Seq(Occur.Should -> TermQ("merge"),
+      Occur.Should -> SpanNotQ("spark", "spark")))) ==
+      oracle.topK(BoolQ(Seq(Occur.Should -> TermQ("merge"))), 10))
+  }
+
+  test("warm cached WAND query on new terms: no codegen, one job, " +
+    "first stage only over the key partitions it needs") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    // warm-up: fills the postings cache and compiles the result decoder
+    wand.topK(Seq("import", "spark"), 10).as[(Long, Float)].collect()
+    val used = Set("import", "spark", "return", "println", "merge", "dataset",
+      "data", "set", "void", "val", "def", "id001", "id007")
+    val fresh = oracle.allTerms
+      .filter(t => !used(t) && oracle.df(t) >= 5 && t.matches("[a-z]+")).take(3)
+    assert(fresh.size == 3)
+    reader.termStats(fresh) // the dictionary memo is not under test
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.stageId, e.stageInfo.numTasks))
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = try wand.topK(fresh, 10).as[(Long, Float)].collect().toSeq
+    finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    assert(got == oracle.topK(BoolQ(fresh.map(t => (Occur.Should, TermQ(t): Query))), 10))
+    assert(compiles == 0, s"$compiles classes compiled")
+    assert(jobs.size == 1, s"${jobs.size} Spark jobs")
+    val keyParts = reader.blockRdd(fresh).getNumPartitions
+    assert(keyParts <= fresh.size)
+    val firstTasks = stages.toArray(Array.empty[(Int, Int)]).minBy(_._1)._2
+    assert(firstTasks <= keyParts,
+      s"first stage ran $firstTasks tasks for $keyParts key partitions")
+  }
+
+  test("a spread block fetch returns the same blocks over " +
+    "defaultParallelism tasks") {
+    def ids(r: org.apache.spark.rdd.RDD[graft.codec.PostingBlock]) =
+      r.map(b => (b.term, b.firstDoc, b.lastDoc)).collect().toSeq.sorted
+    val one = reader.blockRdd(Seq("import"))
+    val spread = reader.blockRdd(Seq("import"), postingsPerTask = 1L)
+    assert(one.getNumPartitions == 1)
+    assert(spread.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(ids(one).size > spread.getNumPartitions)
+    assert(ids(spread) == ids(one))
+    assert(spread.mapPartitions(it => Iterator(it.size)).collect().forall(_ > 0))
+    // an 800-doc index has no term with enough postings to spread
+    assert(reader.blockRdd(Seq("import"), SearchReader.SpreadPostings)
+      .getNumPartitions == 1)
   }
 
   test("query parser: classic subset") {

@@ -110,4 +110,73 @@ class WandScaleSpec extends AnyFunSuite {
       .as[(Long, Float)].collect().toSeq
     assert(gotA == expA)
   }
+
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+    df.as[(Long, Float)].collect().toSeq
+      .map { case (d, sc) => (d, java.lang.Float.floatToIntBits(sc)) }
+
+  test("cached and uncached multi-readers agree after tiered compaction " +
+    "with tombstones (bound rescale != 1)") {
+    import org.apache.spark.sql.functions.lit
+    val cfg = IndexConfig(numDocParts = 8, numBuckets = 8, waves = 2,
+      hotDfThreshold = 400L, saltShift = 6, shufflePartitions = 8)
+    val dir = SparkSuite.tmpDir("graft-wand-tier")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 800).toDF(), dir, cfg)
+    val cfgT = cfg.copy(numDocParts = cfg.numDocParts + 12)
+    (0 until 12).foreach { k =>
+      val in = CorpusGen.generate(spark, 40, seed = 100L + k).toDF()
+        .withColumn("docPart", lit(cfg.numDocParts + k))
+      IndexBuilder.append(spark, in, dir, IndexBuilder.nextDeltaId(dir), cfgT)
+    }
+    // postings caches of this index, by RDD name ("postings <sub-index dir>")
+    def cachedPostings: Map[String, Int] = spark.sparkContext.getPersistentRDDs
+      .values.map(r => Option(r.name).getOrElse("") -> r.id)
+      .filter { case (n, _) => n == s"postings $dir" || n.startsWith(s"postings $dir/") }
+      .toMap
+    val beforeMerge = MultiIndexReader.open(spark, dir, cfg.numBuckets)
+    new WandScorer(beforeMerge).topK(Seq("import"), 5).collect()
+    val cachedBefore = cachedPostings
+    assert(cachedBefore.size == 13, cachedBefore.keys.toSeq.sorted.mkString(","))
+    assert(IndexBuilder.compactTiered(spark, dir, cfgT).isDefined)
+    def open(cached: Boolean) =
+      MultiIndexReader.open(spark, dir, cfg.numBuckets, cacheData = cached)
+    // tombstone the current top hits of the hot terms, base and delta docs
+    val top = new JoinScorer(open(false)).topK(BoolQ(Seq(
+      (Occur.Should, TermQ("import")), (Occur.Should, TermQ("spark")))), 12)
+      .select("docId").as[Long].collect()
+    val deleted = top.filter(_ % 2 == 0) ++
+      top.filter(d => Ids.docPart(d) >= cfg.numDocParts).take(2)
+    assert(deleted.nonEmpty)
+    IndexBuilder.deleteDocs(spark, dir, deleted.toSeq.toDF("docId"))
+    val (rc, ru) = (open(true), open(false))
+    assert(rc.readers.size == 4)
+    // the refresh reuses the caches of the 3 sub-indexes the merge kept
+    // (tombstones do not touch postings) and releases the 10 it deleted
+    new WandScorer(rc).topK(Seq("import"), 5).collect()
+    val cachedAfter = cachedPostings
+    assert(cachedAfter.size == 4, cachedAfter.keys.toSeq.sorted.mkString(","))
+    val kept = cachedBefore.keySet.intersect(cachedAfter.keySet)
+    assert(kept.size == 3)
+    kept.foreach(n => assert(cachedAfter(n) == cachedBefore(n), s"$n refilled"))
+    assert(rc.boundScale.exists { case (c, p) => c != 1f || p != 1f },
+      s"no sub-index needs a bound rescale: ${rc.boundScale}")
+
+    val rng = new scala.util.Random(20261018L)
+    val pool = Vector("import", "return", "spark", "println", "merge",
+      "dataset", "val", "def", "id001", "absentzzz")
+    for (_ <- 1 to 12) {
+      val ts = Seq.fill(1 + rng.nextInt(3))(pool(rng.nextInt(pool.length)))
+      val conj = rng.nextBoolean()
+      val w = bits(new WandScorer(rc).topK(ts, 15, conj))
+      assert(w == bits(new WandScorer(ru).topK(ts, 15, conj)), s"WAND $ts $conj")
+      assert(!w.exists(h => deleted.contains(h._1)), s"deleted doc in $ts")
+      val occ = if (conj) Occur.Must else Occur.Should
+      val q = BoolQ(ts.map(t => (occ, TermQ(t): Query)) :+
+        ((Occur.MustNot, TermQ(pool(rng.nextInt(pool.length))))))
+      val j = bits(new JoinScorer(rc).topK(q, 15))
+      assert(j == bits(new JoinScorer(ru).topK(q, 15)), s"join $q")
+      if (!conj) assert(w == bits(new JoinScorer(rc).topK(
+        BoolQ(ts.map(t => (Occur.Should, TermQ(t): Query))), 15)), s"WAND != join $ts")
+    }
+  }
 }

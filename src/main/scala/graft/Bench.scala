@@ -30,7 +30,7 @@ object Bench {
       "ft_nrt_build" -> timed("ft_nrt_build")(
         SparkEntry.nrtReader(spark, sfDir)),
       "ft_stemmed_build" -> timed("ft_stemmed_build")(
-        SparkEntry.stemmedReader(spark, sfDir)),
+        SparkEntry.reader(spark, sfDir, SparkEntry.Variant.analyzer("english"))),
       "ft_lang_builds" -> timed("ft_lang_builds")(
         SparkEntry.langReaders(spark, sfDir,
           Seq("german", "french", "spanish", "portuguese", "russian",
@@ -39,11 +39,11 @@ object Bench {
             "portuguese_rslp", "catalan", "basque", "brazilian", "polish",
             "irish", "german2"))),
       "ft_syn_build" -> timed("ft_syn_build")(
-        SparkEntry.synReader(spark, sfDir)),
+        SparkEntry.reader(spark, sfDir, SparkEntry.Variant.Synonyms)),
       "ft_compound_build" -> timed("ft_compound_build")(
-        SparkEntry.compoundReader(spark, sfDir)),
+        SparkEntry.reader(spark, sfDir, SparkEntry.Variant.Compound)),
       "ft_rev_build" -> timed("ft_rev_build")(
-        SparkEntry.revReader(spark, sfDir)),
+        SparkEntry.reader(spark, sfDir, SparkEntry.Variant.Reversed)),
       "ft_delete_build" -> timed("ft_delete_build")(
         SparkEntry.deletedReaders(spark, sfDir)),
       "ft_update_build" -> timed("ft_update_build")(

@@ -30,7 +30,34 @@ object SparkEntry {
     * scale; at cluster scale this would be sized to ~segment RAM. */
   final val DocsPerPart = 64
 
-  private val readers = new scala.collection.concurrent.TrieMap[String, IndexReader]
+  /** One IndexConfig change to the corpus index: a fixture variant that
+    * [[reader]] builds once per sfDir, memoized by `name`. */
+  final case class Variant(name: String, change: IndexConfig => IndexConfig)
+
+  object Variant {
+    val Default = Variant("ft", identity)
+    /** A language analysis chain: "english" is the EnglishAnalyzer chain
+      * (possessive strip, English stop set, Porter stem — the ft_stemmed
+      * surface); the others are per-language light-stem chains (reference
+      * de/GermanAnalyzer.java etc.: lang stop set + UniNE light stemmer). */
+    def analyzer(name: String): Variant = Variant(name, _.copy(analyzer = name))
+    /** Index-time synonym rules (reference synonym/SynonymFilter.java,
+      * keepOrig): "fast"->"quick" (single) and "hash agg"->"hashagg"
+      * (multi-token LHS collapse). Injected tokens sit at the match-start
+      * position, so phrases match through them. */
+    val Synonyms = Variant("syn", _.copy(synonyms = Seq(
+      "fast" -> Seq("quick"), "hash agg" -> Seq("hashagg"))))
+    /** Compound decomposition (reference compound/
+      * DictionaryCompoundWordTokenFilter.java): dictionary {"wind"}, so
+      * "window" also indexes the subword "wind" at its position. */
+    val Compound = Variant("comp", _.copy(compoundDict = Seq("wind")))
+    /** The reversed-token "rev:" field indexed — the leading-wildcard
+      * surface (ReversedWildcardFilterFactory analog). */
+    val Reversed = Variant("rev", _.copy(reverseTokens = true))
+  }
+
+  private val readers =
+    new scala.collection.concurrent.TrieMap[(String, String), IndexReader]
 
   def ftConfig(nParts: Int): IndexConfig = IndexConfig(
     numDocParts = nParts, numBuckets = 16, waves = 1,
@@ -60,12 +87,15 @@ object SparkEntry {
       col("lang"),
       col("text").as("content"))
 
-  def reader(spark: SparkSession, sfDir: String): IndexReader =
-    readers.getOrElseUpdate(sfDir, {
+  /** The corpus index under `variant`, built once per (sfDir, variant). */
+  def reader(spark: SparkSession, sfDir: String,
+             variant: Variant = Variant.Default): IndexReader =
+    readers.getOrElseUpdate((sfDir, variant.name), {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ft").toString
+      val cfg = variant.change(ftConfig((maxId / DocsPerPart + 1).toInt))
+      val dir = java.nio.file.Files.createTempDirectory(
+        s"graft-${variant.name}").toString
       IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
       IndexReader(spark, dir, cfg)
     })
@@ -151,36 +181,6 @@ object SparkEntry {
       .withColumn("lat", (col("c_custkey") * 7919 % 18000) / lit(100.0) - 90.0)
       .withColumn("lon", (col("c_custkey") * 104729 % 36000) / lit(100.0) - 180.0)
 
-  private val stemmedReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
-  /** Same corpus indexed with the EnglishAnalyzer chain (possessive strip,
-    * English stop set, Porter stem) — the ft_stemmed surface. */
-  def stemmedReader(spark: SparkSession, sfDir: String): IndexReader =
-    stemmedReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(analyzer = "english")
-      val dir = java.nio.file.Files.createTempDirectory("graft-stem").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val langStemReaders = new scala.collection.concurrent.TrieMap[(String, String), IndexReader]
-
-  /** Same corpus indexed with a per-language light-stem chain (reference
-    * de/GermanAnalyzer.java etc.): lang stop set + UniNE light stemmer. */
-  def langReader(spark: SparkSession, sfDir: String, analyzer: String): IndexReader =
-    langStemReaders.getOrElseUpdate((sfDir, analyzer), {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(analyzer = analyzer)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-$analyzer").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
   /** Build several language indexes CONCURRENTLY: the builds are
     * independent jobs, so they are submitted from parallel driver threads
     * and Spark's scheduler overlaps their stages — exactly how a cluster
@@ -194,7 +194,7 @@ object SparkEntry {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(analyzers.map(a =>
-        scala.concurrent.Future(langReader(spark, sfDir, a)))),
+        scala.concurrent.Future(reader(spark, sfDir, Variant.analyzer(a))))),
       scala.concurrent.duration.Duration.Inf)
     finally pool.shutdown()
   }
@@ -215,40 +215,6 @@ object SparkEntry {
 
   private def stemTf(s: SparkSession, r: IndexReader, stem: String): DataFrame =
     termsTf(s, r, Seq(stem))
-
-  private val synReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
-  /** Same corpus indexed WITH index-time synonym rules (reference
-    * synonym/SynonymFilter.java, keepOrig): "fast"->"quick" (single) and
-    * "hash agg"->"hashagg" (multi-token LHS collapse). Injected tokens
-    * sit at the match-start position, so phrases match through them. */
-  def synReader(spark: SparkSession, sfDir: String): IndexReader =
-    synReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(synonyms = Seq(
-          "fast" -> Seq("quick"), "hash agg" -> Seq("hashagg")))
-      val dir = java.nio.file.Files.createTempDirectory("graft-syn").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
-
-  private val compoundReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
-  /** Same corpus indexed with compound decomposition (reference compound/
-    * DictionaryCompoundWordTokenFilter.java): dictionary {"wind"}, so
-    * "window" also indexes the subword "wind" at its position. */
-  def compoundReader(spark: SparkSession, sfDir: String): IndexReader =
-    compoundReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(compoundDict = Seq("wind"))
-      val dir = java.nio.file.Files.createTempDirectory("graft-comp").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
-    })
 
   private val delReaders =
     new scala.collection.concurrent.TrieMap[String, (IndexReader, IndexReader)]
@@ -350,21 +316,6 @@ object SparkEntry {
       val cdir = java.nio.file.Files.createTempDirectory("graft-tierc").toString
       val tFull = sec(IndexBuilder.compact(spark, dir, cdir, cfg))
       (tPartial, tFull)
-    })
-
-  private val revReaders = new scala.collection.concurrent.TrieMap[String, IndexReader]
-
-  /** Same corpus with the reversed-token "rev:" field indexed — the
-    * leading-wildcard surface (ReversedWildcardFilterFactory analog). */
-  def revReader(spark: SparkSession, sfDir: String): IndexReader =
-    revReaders.getOrElseUpdate(sfDir, {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val maxId = maxDocId(spark, sfDir)
-      val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-        .copy(reverseTokens = true)
-      val dir = java.nio.file.Files.createTempDirectory("graft-rev").toString
-      IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
-      IndexReader(spark, dir, cfg)
     })
 
   private val nrtReaders = new scala.collection.concurrent.TrieMap[String, MultiIndexReader]
@@ -561,7 +512,7 @@ object SparkEntry {
       * engine's per-field term spaces make the mask a free composition
       * (no field-equality check to defeat). */
     "ft_span_fieldmask" -> ((s, dir) => {
-      val r = revReader(s, dir)
+      val r = reader(s, dir, Variant.Reversed)
       new JoinScorer(r).scores(BoolQ(Seq(
         (Occur.Must, SpanNearMultiQ(
           Seq(TermQ("batch"), TermQ("rev:" + "merge".reverse)),
@@ -616,7 +567,7 @@ object SparkEntry {
       * (ReversedWildcardFilterFactory): *er rewrites to a PREFIX scan of
       * the rev dictionary ("rev:re…"), never a full-vocabulary regex. */
     "ft_leading_wildcard" -> ((s, dir) => {
-      val r = revReader(s, dir)
+      val r = reader(s, dir, Variant.Reversed)
       new JoinScorer(r)
         .scores(BoolQ(Seq((Occur.Should, WildcardQ("*er")))))
         .toDF("docId", "score")
@@ -765,7 +716,7 @@ object SparkEntry {
       * drops). tf flows through the stemmed chain. */
     "ft_stemmed" -> ((s, dir) => {
       import s.implicits._
-      val r = stemmedReader(s, dir)
+      val r = reader(s, dir, Variant.analyzer("english"))
       r.blocks(Seq("custom"))
         .flatMap { b =>
           val (docs, tfs, _) = graft.codec.PostingsCodec.decodeDocs(b)
@@ -938,7 +889,7 @@ object SparkEntry {
       * match at score 0 and tie-break by doc_id. */
     "ft_lmdirichlet" -> ((s, dir) => {
       val r = reader(s, dir)
-      new LMDirichletScorer(r).topK(Seq("dup", "customer"), 15)
+      new JoinScorer(r, Similarities.lmDirichlet()).topK(should("dup", "customer"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -948,109 +899,109 @@ object SparkEntry {
     /** German-light-stemmed search (UniNE; reference de/GermanAnalyzer):
       * postings of stem "ord" carry every "order" occurrence. */
     "ft_stemmed_de" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "german"), "ord")),
+      stemTf(s, reader(s, dir, Variant.analyzer("german")), "ord")),
 
     /** French-minimal-stemmed search: stem "vecto" <- "vector". */
     "ft_stemmed_fr" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "french"), "vecto")),
+      stemTf(s, reader(s, dir, Variant.analyzer("french")), "vecto")),
 
     /** Spanish-light-stemmed search: stem "tabl" <- "table". */
     "ft_stemmed_es" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "spanish"), "tabl")),
+      stemTf(s, reader(s, dir, Variant.analyzer("spanish")), "tabl")),
 
     /** Portuguese-light-stemmed search: stem "merg" <- "merge" (the only
       * corpus surface form in that family). */
     "ft_stemmed_pt" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "portuguese"), "merg")),
+      stemTf(s, reader(s, dir, Variant.analyzer("portuguese")), "merg")),
 
     /** Norwegian-light-stemmed search (no/NorwegianLightStemmer.java,
       * Bokmål): "merge" -> final-e strip -> "merg". */
     "ft_stemmed_no" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "norwegian"), "merg")),
+      stemTf(s, reader(s, dir, Variant.analyzer("norwegian")), "merg")),
 
     /** Czech-stemmed search (cz/CzechStemmer.java): "value" -> final
       * vowel strip -> "valu". */
     "ft_stemmed_cz" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "czech"), "valu")),
+      stemTf(s, reader(s, dir, Variant.analyzer("czech")), "valu")),
 
     /** Dutch-Snowball-stemmed search (nl/DutchAnalyzer.java ->
       * ext/DutchStemmer.java): e-ending in R1 after a consonant drops,
       * "table" -> "tabl". */
     "ft_stemmed_nl" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "dutch"), "tabl")),
+      stemTf(s, reader(s, dir, Variant.analyzer("dutch")), "tabl")),
 
     /** Danish-Snowball-stemmed search (da -> ext/DanishStemmer.java):
       * main-suffix "er" in R1 drops, "customer" -> "custom". */
     "ft_stemmed_da" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "danish"), "custom")),
+      stemTf(s, reader(s, dir, Variant.analyzer("danish")), "custom")),
 
     /** Romanian-Snowball-stemmed search (ro -> ext/RomanianStemmer.java):
       * final vowel "a" in RV drops, "data" -> "dat". */
     "ft_stemmed_ro" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "romanian"), "dat")),
+      stemTf(s, reader(s, dir, Variant.analyzer("romanian")), "dat")),
 
     /** German2-Snowball-stemmed search (ext/German2Stemmer.java — the
       * umlaut-spelling variant, vs the light stemmer's ft_stemmed_de):
       * step-1 "er" drops in R1, "customer" -> "custom". */
     "ft_stemmed_de2" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "german2"), "custom")),
+      stemTf(s, reader(s, dir, Variant.analyzer("german2")), "custom")),
 
     /** Galician RSLP-stemmed search (gl/GalicianStemmer.java:50, rule
       * file galician.rslp): noun-suffix chain, "vector" -> "vec". */
     "ft_stemmed_gl" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "galician"), "vec")),
+      stemTf(s, reader(s, dir, Variant.analyzer("galician")), "vec")),
 
     /** Portuguese RSLP-stemmed search (pt/PortugueseStemmer.java:48 —
       * the full Orengo flow, vs the light stemmer's ft_stemmed_pt):
       * "stream" -> "stre". */
     "ft_stemmed_ptrslp" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "portuguese_rslp"), "stre")),
+      stemTf(s, reader(s, dir, Variant.analyzer("portuguese_rslp")), "stre")),
 
     /** Turkish-Snowball-stemmed search (tr -> ext/TurkishStemmer.java):
       * the locative -DA drops after back-vowel harmony,
       * "data" -> "da". */
     "ft_stemmed_tr" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "turkish"), "da")),
+      stemTf(s, reader(s, dir, Variant.analyzer("turkish")), "da")),
 
     /** Catalan-Snowball-stemmed search (ca/CatalanAnalyzer.java ->
       * ext/CatalanStemmer.java): standard-suffix "or" in R1 drops,
       * "vector" -> "vect" (unique preimage in the corpus vocab). */
     "ft_stemmed_ca" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "catalan"), "vect")),
+      stemTf(s, reader(s, dir, Variant.analyzer("catalan")), "vect")),
 
     /** Basque-Snowball-stemmed search (eu/BasqueAnalyzer.java ->
       * ext/BasqueStemmer.java): izenak noun suffix "ge" in RV drops,
       * "merge" -> "mer" (unique preimage). */
     "ft_stemmed_eu" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "basque"), "mer")),
+      stemTf(s, reader(s, dir, Variant.analyzer("basque")), "mer")),
 
     /** Brazilian-Portuguese-stemmed search (br/BrazilianAnalyzer.java:123
       * -> br/BrazilianStemmer.java, the deaccent-first non-Snowball pt
       * stemmer): step2 verb suffix "er" in RV drops, "filter" -> "filt"
       * (unique preimage in the corpus vocabulary). */
     "ft_stemmed_br" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "brazilian"), "filt")),
+      stemTf(s, reader(s, dir, Variant.analyzer("brazilian")), "filt")),
 
     /** Polish Stempel-stemmed search (stempel/.../PolishAnalyzer.java:139
       * -> the Egothor patch-command trie over stemmer_20000.tbl): the
       * table's statistical patch maps "column" -> "columna" (unique
       * preimage in the corpus vocabulary). */
     "ft_stemmed_pl" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "polish"), "columna")),
+      stemTf(s, reader(s, dir, Variant.analyzer("polish")), "columna")),
 
     /** Irish-Snowball-stemmed search (ga/IrishAnalyzer.java:150 ->
       * ext/IrishStemmer.java): initial_morph treats "th" as a lenition
       * prefix, "the" -> "te" (unique preimage in the corpus vocabulary;
       * "the" is not in the ga stop set). */
     "ft_stemmed_ga" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "irish"), "te")),
+      stemTf(s, reader(s, dir, Variant.analyzer("irish")), "te")),
 
     /** Compound-word recall (compound/DictionaryCompoundWordTokenFilter
       * .java): with dictionary {"wind"}, the subword "wind" indexes at
       * every "window" occurrence, so the single-constituent query
       * recalls the compounds. */
     "ft_compound_de" -> ((s, dir) =>
-      termsTf(s, compoundReader(s, dir), Seq("wind"))),
+      termsTf(s, reader(s, dir, Variant.Compound), Seq("wind"))),
 
     /** Russian-light-stemmed search: the Dolamic-Savoy rules touch only
       * Cyrillic suffixes, so Latin corpus terms index unchanged — the
@@ -1058,26 +1009,26 @@ object SparkEntry {
       * surface term's); Cyrillic behavior is pinned by the 49k-pair
       * golden suite (LightStemSpec). */
     "ft_stemmed_ru" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "russian"), "query")),
+      stemTf(s, reader(s, dir, Variant.analyzer("russian")), "query")),
 
     /** Swedish-light-stemmed search: stem "vect" <- "vector". */
     "ft_stemmed_sv" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "swedish"), "vect")),
+      stemTf(s, reader(s, dir, Variant.analyzer("swedish")), "vect")),
 
     /** Finnish-light-stemmed search: stem "sor" <- "sort". */
     "ft_stemmed_fi" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "finnish"), "sor")),
+      stemTf(s, reader(s, dir, Variant.analyzer("finnish")), "sor")),
 
     /** Hungarian-light-stemmed search: stem "stre" <- "stream". */
     "ft_stemmed_hu" -> ((s, dir) =>
-      stemTf(s, langReader(s, dir, "hungarian"), "stre")),
+      stemTf(s, reader(s, dir, Variant.analyzer("hungarian")), "stre")),
 
     /** Index-time synonym: phrase "quick hash" matches THROUGH the
       * injected synonym (rule fast->quick; "quick" sits at "fast"'s
       * position, posInc=0) — the capability query-time expansion lacks. */
     "ft_synonym_index" -> ((s, dir) => {
       import s.implicits._
-      val r = synReader(s, dir)
+      val r = reader(s, dir, Variant.Synonyms)
       new JoinScorer(r)
         .scores(BoolQ(Seq((Occur.Must,
           PhraseQ(Seq("quick", "hash"), Seq(0, 1))))))
@@ -1089,7 +1040,7 @@ object SparkEntry {
       * tf of the injected collapsed term == count of consecutive
       * (hash, agg) occurrences per doc. */
     "ft_synonym_multitok" -> ((s, dir) =>
-      stemTf(s, synReader(s, dir), "hashagg")),
+      stemTf(s, reader(s, dir, Variant.Synonyms), "hashagg")),
 
     /** eDisMax qf (ExtendedDismaxQParser queryFields): the user string
       * "spark 000000123" scored across {content^1, path^2} — each term
@@ -1530,9 +1481,7 @@ object SparkEntry {
       * normalization. */
     "ft_dfr_gl2" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
-        Similarities.dfrGL2(df, ttf, maxDoc, avgdl))
-        .topK(Seq("dup", "spark"), 15)
+      new JoinScorer(r, Similarities.dfrGL2).topK(should("dup", "spark"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -1542,9 +1491,7 @@ object SparkEntry {
     /** IB similarity (DistributionSPL + LambdaDF + NormalizationH2). */
     "ft_ib_spl" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (df, ttf, maxDoc, _, avgdl) =>
-        Similarities.ibSplDf(df, ttf, maxDoc, avgdl))
-        .topK(Seq("vector", "scan"), 15)
+      new JoinScorer(r, Similarities.ibSplDf).topK(should("vector", "scan"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -1554,9 +1501,8 @@ object SparkEntry {
     /** LM with Jelinek-Mercer smoothing (lambda=0.7). */
     "ft_lmjm" -> ((s, dir) => {
       val r = reader(s, dir)
-      new SimilarityScorer(r, (_, ttf, _, collTokens, _) =>
-        Similarities.lmJelinekMercer(ttf, collTokens))
-        .topK(Seq("dup", "window"), 15)
+      new JoinScorer(r, Similarities.lmJelinekMercer())
+        .topK(should("dup", "window"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -1582,7 +1528,8 @@ object SparkEntry {
       * 5.2 DEFAULT similarity) ranking. */
     "ft_tfidf" -> ((s, dir) => {
       val r = reader(s, dir)
-      new ClassicScorer(r).topK(Seq("spark", "merge", "window"), 15)
+      new JoinScorer(r, Similarities.classic)
+        .topK(should("spark", "merge", "window"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -2835,11 +2782,9 @@ object SparkEntry {
       * query time to the quantized dl from the stored norm byte. */
     "ft_sweetspot" -> ((s, dir) => {
       val r = reader(s, dir)
-      new ClassicScorer(r,
-        tfFn = f => graft.search.SweetSpot.baselineTf(f, base = 1.0f, min = 2.0f),
-        normFn = b => graft.search.SweetSpot.computeLengthNorm(
-          graft.codec.SmallFloat.Bm25NormTable(b & 0xFF), min = 60, max = 100))
-        .topK(Seq("spark", "merge", "window"), 15)
+      new JoinScorer(r, Similarities.sweetSpot(baseTf = 1.0f, minTf = 2.0f,
+          plateauMin = 60, plateauMax = 100))
+        .topK(should("spark", "merge", "window"), 15)
         .join(idMap(r), "docId")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
@@ -4845,10 +4790,10 @@ object SparkEntry {
       * reversed-field twin match the same docs, so the composition is an
       * inner frame join on the 1:1 doc set. */
     "ft_perfield_sim" -> ((s, dir) => {
-      val r = revReader(s, dir)
+      val r = reader(s, dir, Variant.Reversed)
       val bm = new JoinScorer(r).scores(should("spark")).toDF("docId", "s1")
-      val cl = new ClassicScorer(r).scores(Seq("rev:" + "spark".reverse))
-        .withColumnRenamed("score", "s2")
+      val cl = new JoinScorer(r, Similarities.classic)
+        .scores(should("rev:" + "spark".reverse)).toDF("docId", "s2")
       bm.join(cl, "docId")
         .withColumn("score", col("s1") + col("s2"))
         .join(idMap(r), "docId")

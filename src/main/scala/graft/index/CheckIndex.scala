@@ -124,7 +124,6 @@ object CheckIndex {
     // is flagged corrupt)
     val delBad = reader.deletedDocs.map { del =>
       val collectionDocs = IndexBuilder.subIndexDirs(reader.dir)
-        .filter(d => IndexBuilder.stageDone(d, "done"))
         .map(d => spark.read.parquet(s"$d/segments").select($"docId"))
         .reduceOption(_ union _)
         .getOrElse(dm.select($"docId"))

@@ -3,6 +3,7 @@ package graft.index
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,6 +70,30 @@ object IndexBuilder {
 
   def fieldOfTerm(term: String): String =
     if (term.startsWith("path:")) "path" else "content"
+
+  /** Consecutive runs of a (key, docId)-sorted stream that share a key
+    * and, for a hot key, a salt chunk (docId >> shift), as (key, run). A
+    * run must break at salt boundaries: salt chunks of a hot term land in
+    * different shuffle partitions, and a block's docId span must stay
+    * inside ONE salt chunk so the exchange (hashed on the salt of
+    * firstDoc) routes the whole block correctly. salt is monotone in docId
+    * for one key, so the (key, docId) sort already groups it. */
+  private def saltRuns[A](it: Iterator[A], hot: Set[Long], shift: Int)
+                         (key: A => Long, doc: A => Long)
+      : Iterator[(Long, ArrayBuffer[A])] = new Iterator[(Long, ArrayBuffer[A])] {
+    private val buf = it.buffered
+    def hasNext: Boolean = buf.hasNext
+    def next(): (Long, ArrayBuffer[A]) = {
+      val k = key(buf.head)
+      val isHot = hot.contains(k)
+      val salt = if (isHot) doc(buf.head) >> shift else 0L
+      val run = ArrayBuffer.empty[A]
+      while (buf.hasNext && key(buf.head) == k &&
+          (!isHot || (doc(buf.head) >> shift) == salt))
+        run += buf.next()
+      (k, run)
+    }
+  }
 
   /** Merge one reduce-side run of same-(key, salt) pre-blocks into a
     * docId-ascending posting stream for the canonical re-encode. Map
@@ -527,40 +552,17 @@ object IndexBuilder {
           .sortWithinPartitions($"key", $"docId")
           .as[(Long, Long, Array[Byte], Byte)]
           .mapPartitions { it0 =>
-            // Group consecutive same-(key, salt) runs. A run must break at
-            // salt boundaries: salt chunks of a hot term land in different
-            // shuffle partitions, and pre-block docId-spans must stay
-            // inside ONE salt chunk so the exchange (hashed on the salt of
-            // firstDoc) routes the whole block correctly. salt is monotone
-            // in docId for one key, so the (key, docId) sort already
-            // groups it; the encoder recomputes it per row.
-            val hot = hotB.value
-            new Iterator[BlockRowK] {
-              private val buf = it0.buffered
-              private var pending: Iterator[BlockRowK] = Iterator.empty
-              private def refill(): Unit = {
-                while (!pending.hasNext && buf.hasNext) {
-                  val key = buf.head._1
-                  val isHot = hot.contains(key)
-                  val salt = if (isHot) buf.head._2 >> shift else 0L
-                  val run =
-                    new scala.collection.mutable.ArrayBuffer[PrePosting]()
-                  while (buf.hasNext && buf.head._1 == key &&
-                      (!isHot || (buf.head._2 >> shift) == salt)) {
-                    val (_, docId, pb, norm) = buf.next()
-                    run += PrePosting(docId, norm, pb)
-                  }
-                  postAcc.add(run.length)
-                  pending = PostingsCodec
-                    .encodePre("", run.iterator, null)
-                    .map(b => BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
-                      b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-                      b.posBytes))
-                }
+            IndexBuilder.saltRuns(it0, hotB.value, shift)(_._1, _._2)
+              .flatMap { case (key, run) =>
+                postAcc.add(run.length)
+                PostingsCodec
+                  .encodePre("", run.iterator.map { case (_, docId, pb, norm) =>
+                    PrePosting(docId, norm, pb)
+                  }, null)
+                  .map(b => BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
+                    b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
+                    b.posBytes))
               }
-              def hasNext: Boolean = { refill(); pending.hasNext }
-              def next(): BlockRowK = { refill(); pending.next() }
-            }
           }
         // ---- ONE exchange, now carrying compressed pre-blocks ----
         // Hot keys hash on the salt of firstDoc (valid: a pre-block never
@@ -580,38 +582,20 @@ object IndexBuilder {
           .repartition(cfg.shufflePartitions, $"key", preSaltCol)
           .sortWithinPartitions($"key", $"firstDoc")
           .mapPartitions { it0 =>
-            val hot = hotB.value
             val cache = cacheB.value
             val pathCache = pathCacheB.value
-            new Iterator[BlockRowK] {
-              private val buf = it0.buffered
-              private var pending: Iterator[BlockRowK] = Iterator.empty
-              private def refill(): Unit = {
-                while (!pending.hasNext && buf.hasNext) {
-                  val key = buf.head.key
-                  val isHot = hot.contains(key)
-                  val salt = if (isHot) buf.head.firstDoc >> shift else 0L
-                  val fieldCache =
-                    if (TermKeys.isPath(key)) pathCache else cache
-                  val run =
-                    new scala.collection.mutable.ArrayBuffer[BlockRowK]()
-                  while (buf.hasNext && buf.head.key == key &&
-                      (!isHot || (buf.head.firstDoc >> shift) == salt)) {
-                    run += buf.next()
+            IndexBuilder.saltRuns(it0, hotB.value, shift)(_.key, _.firstDoc)
+              .flatMap { case (key, run) =>
+                val fieldCache = if (TermKeys.isPath(key)) pathCache else cache
+                PostingsCodec
+                  .encode("", IndexBuilder.mergeRuns(run), fieldCache)
+                  .map { b =>
+                    blockAcc.add(1)
+                    BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
+                      b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
+                      b.nrmBytes, b.posBytes)
                   }
-                  pending = PostingsCodec
-                    .encode("", IndexBuilder.mergeRuns(run), fieldCache)
-                    .map { b =>
-                      blockAcc.add(1)
-                      BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
-                        b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-                        b.nrmBytes, b.posBytes)
-                    }
-                }
               }
-              def hasNext: Boolean = { refill(); pending.hasNext }
-              def next(): BlockRowK = { refill(); pending.next() }
-            }
           }
         // zstd over snappy: ~20% fewer bytes through the (bandwidth-
         // bound) storage/shuffle path for a CPU cost that the scaling
@@ -981,31 +965,32 @@ object IndexBuilder {
     outDirs
   }
 
-  /** Sub-index directories of `baseDir` in append order. */
+  /** The committed sub-index directories of `baseDir`: the base, then
+    * the deltas in append order. Every reader and maintenance call sees
+    * exactly these. */
   def subIndexDirs(baseDir: String): Seq[String] = {
-    val all = Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("delta_"))
+    // A sub-index is committed once its "done" marker exists: a build,
+    // append or merge that crashed before it is skipped here, so
+    // compact/splitShard never fold in docs no reader ever saw.
+    // Tiered-compaction visibility pivot: a committed merged delta hides
+    // the source deltas it replaced (replaces.txt, one dir name per
+    // line). The done marker is the single atomic switch: before it the
+    // sources serve and the half-built merge is skipped; after it the
+    // merge serves and the sources are dead files awaiting cleanup — no
+    // crash point shows duplicate or missing docs. Hidden dirs still
+    // contribute their OWN replaces lists (a crash may leave a
+    // replaced-but-not-yet-deleted dir that itself replaced others).
+    val deltas = Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("delta_") &&
+        stageDone(f.getAbsolutePath, "done"))
       .sortBy(f => f.getName.stripPrefix("delta_").toLong)
-    // Tiered-compaction visibility pivot: a merged delta that has
-    // COMMITTED (its "done" marker exists) hides the source deltas it
-    // replaced (replaces.txt, one dir name per line). The done marker is
-    // the single atomic switch: before it the sources serve and the
-    // half-built merge is skipped here (so compact/splitShard never union
-    // it with its sources); after it the merge serves and the
-    // sources are dead files awaiting cleanup — no crash point shows
-    // duplicate or missing docs. Hidden dirs still contribute their OWN
-    // replaces lists (a crash may leave a replaced-but-not-yet-deleted
-    // dir that itself replaced others).
-    def isMerge(f: java.io.File) = Files.exists(f.toPath.resolve("replaces.txt"))
-    def committed(f: java.io.File) = stageDone(f.getAbsolutePath, "done")
-    val replaced: Set[String] = all.filter(f => isMerge(f) && committed(f))
-      .flatMap(f => Files.readAllLines(f.toPath.resolve("replaces.txt"))
-        .toArray(Array.empty[String]).toSeq.map(_.trim).filter(_.nonEmpty))
+    val replaced: Set[String] = deltas
+      .map(_.toPath.resolve("replaces.txt")).filter(Files.exists(_))
+      .flatMap(p => Files.readAllLines(p).toArray(Array.empty[String]).toSeq
+        .map(_.trim).filter(_.nonEmpty))
       .toSet
-    val deltas = all.filterNot(f =>
-        replaced.contains(f.getName) || (isMerge(f) && !committed(f)))
-      .map(_.getAbsolutePath)
-    baseDir +: deltas
+    Seq(baseDir).filter(stageDone(_, "done")) ++
+      deltas.filterNot(f => replaced.contains(f.getName)).map(_.getAbsolutePath)
   }
 
   /** Next free delta id: max over ALL delta_* names on disk (including
@@ -1036,7 +1021,7 @@ object IndexBuilder {
                     floorDocs: Long = 4096L): Option[String] =
     withWriteLock(baseDir) {
       import spark.implicits._
-      val deltas = subIndexDirs(baseDir).drop(1) // base is always cold
+      val deltas = subIndexDirs(baseDir).filterNot(_ == baseDir) // base is always cold
       val group: Option[Seq[String]] =
         if (deltas.size <= segsPerTier) None
         else {

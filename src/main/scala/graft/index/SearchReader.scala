@@ -267,6 +267,5 @@ object MultiIndexReader {
   def open(spark: SparkSession, baseDir: String, numBuckets: Int,
            cacheData: Boolean = true): MultiIndexReader =
     new MultiIndexReader(IndexBuilder.subIndexDirs(baseDir)
-      .filter(d => IndexBuilder.stageDone(d, "done"))
       .map(d => new IndexReader(spark, d, numBuckets, cacheData)))
 }

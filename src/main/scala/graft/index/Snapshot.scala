@@ -50,7 +50,6 @@ object Snapshot {
     IndexBuilder.withWriteLock(baseDir) {
       val base = Paths.get(baseDir).toAbsolutePath
       val subs = IndexBuilder.subIndexDirs(baseDir)
-        .filter(d => IndexBuilder.stageDone(d, "done"))
         .map { d =>
           val rel = base.relativize(Paths.get(d).toAbsolutePath).toString
           SubState(rel, deletePartFiles(d))

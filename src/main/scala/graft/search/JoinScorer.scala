@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.codec.PostingsCodec
 import graft.index.{IndexBuilder, SearchReader, TermStats}
 
-/** A clause match for one doc: `score` is the clause's float BM25
+/** A clause match for one doc: `score` is the clause's float
   * contribution (NaN for non-scoring Filter/MustNot presence rows). */
 final case class ClauseHit(docId: Long, clause: Int, kind: Int, score: Float)
 
@@ -22,8 +22,11 @@ object ClauseKind {
   * TakeOrderedAndProject, whose bounded per-partition heap + driver merge
   * reproduces the reference collector exactly, ties to lower docId
   * (search/TopScoreDocCollector.java:63-79, HitQueue.java:68-81).
+  * Every clause scores through `sim` (see [[Similarity]]); BM25 is the
+  * default and the only similarity [[WandScorer]] implements.
   */
-final class JoinScorer(reader: SearchReader) {
+final class JoinScorer(reader: SearchReader,
+                       sim: Similarity = Similarities.bm25) {
   private val spark = reader.spark
   import spark.implicits._
 
@@ -174,43 +177,76 @@ final class JoinScorer(reader: SearchReader) {
   }
 
   sealed trait RewrittenClause
+  /** A clause scored by the similarity. */
+  sealed trait Scored extends RewrittenClause {
+    def boost: Float
+    /** Dictionary stats of the terms behind the clause's weight (their
+      * idfs sum, in this order); empty when none is in the dictionary. */
+    def weightStats: Seq[TermStats]
+  }
   final case class ScoredTerm(term: String, stats: Option[TermStats],
-                              boost: Float = 1f) extends RewrittenClause
+                              boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.toSeq
+  }
   final case class ScoredSloppyPhrase(terms: Seq[String], rel: Seq[Int],
                                       stats: Seq[Option[TermStats]],
                                       slop: Int,
-                                      boost: Float = 1f) extends RewrittenClause
+                                      boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten
+  }
   final case class ScoredMultiPhrase(slots: Seq[Seq[String]], rel: Seq[Int],
                                      stats: Seq[Seq[Option[TermStats]]],
-                                     boost: Float = 1f) extends RewrittenClause
+                                     boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten.flatten
+  }
   final case class ScoredSpanOr(terms: Seq[String],
                                 stats: Seq[Option[TermStats]],
-                                boost: Float = 1f) extends RewrittenClause
+                                boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten
+  }
   final case class ScoredSpanMulti(slots: Seq[Seq[String]], slop: Int,
                                    inOrder: Boolean,
                                    stats: Seq[Seq[Option[TermStats]]],
-                                   boost: Float = 1f) extends RewrittenClause
+                                   boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten.flatten
+  }
+  /** Weight from the include term only. */
   final case class ScoredSpanNot(include: String, exclude: String,
                                  pre: Int, post: Int,
                                  incStats: Option[TermStats],
                                  excPresent: Boolean,
-                                 boost: Float = 1f) extends RewrittenClause
+                                 boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = incStats.toSeq
+  }
   final case class ScoredSpanRange(term: String, start: Int, end: Int,
                                    stats: Option[TermStats],
-                                   boost: Float = 1f) extends RewrittenClause
+                                   boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.toSeq
+  }
   final case class ScoredSpanPayCheck(terms: Seq[String], slop: Int,
                                       nearRule: Boolean,
                                       payloads: Seq[Float],
                                       stats: Seq[Option[TermStats]],
-                                      boost: Float = 1f) extends RewrittenClause
+                                      boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten
+  }
+  /** Weight from little's idf (within) or the big terms' summed idf
+    * (containing). */
   final case class ScoredSpanContain(little: String, big: Seq[String],
                                      slop: Int, within: Boolean,
                                      littleStats: Option[TermStats],
                                      bigStats: Seq[Option[TermStats]],
-                                     boost: Float = 1f) extends RewrittenClause
+                                     boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] =
+      if (within) littleStats.toSeq else bigStats.flatten
+  }
+  /** Weight blends every distinct alphabet term's idf (TermAutomatonWeight
+    * computeWeight over allTermStats). */
   final case class ScoredAutomaton(q: TermAutomatonQ,
                                    stats: Seq[Option[TermStats]],
-                                   boost: Float = 1f) extends RewrittenClause
+                                   boost: Float = 1f) extends Scored {
+    def weightStats: Seq[TermStats] = stats.flatten
+  }
   /** Constant-score set: every matching doc scores `boost` (reference
     * ConstantScoreQuery multiplies 1.0 by the query boost,
     * search/ConstantScoreQuery.java). */
@@ -225,32 +261,37 @@ final class JoinScorer(reader: SearchReader) {
     case Occur.MustNot => ClauseKind.MustNot
   }
 
-  /** Clause weight from the summed idf of `stats`, added left to right in
-    * the given order (a single term's weight is the one-element sum). */
-  private def summedWv(stats: Iterable[TermStats], boost: Float): Float = {
-    var idfSum = 0f
-    stats.foreach(ts => idfSum += BM25.idf(ts.df, reader.collStats.maxDoc))
-    BM25.weightValue(idfSum, boost)
+  /** Clause weights (Weight.getValueForNormalization -> queryNorm ->
+    * Weight.normalize) from each clause's (weight stats, boost): None for a
+    * clause none of whose terms is in the dictionary. A clause's field —
+    * its norms — is its first weight term's. */
+  private def clauseWeights(clauses: Seq[(Seq[TermStats], Float)])
+      : Seq[Option[SimWeight]] = {
+    val ws = clauses.map { case (stats, boost) =>
+      stats.headOption.map(first => sim.weight(stats, boost, reader.collStats,
+        reader.normCacheFor(IndexBuilder.fieldOfTerm(first.term))))
+    }
+    var sumSq = 0f
+    ws.flatten.foreach(w => sumSq += w.valueForNormalization)
+    val queryNorm = sim.queryNorm(sumSq)
+    ws.map(_.map(_.normalize(queryNorm)))
   }
 
-  /** Per-term scored hits: decode blocks, score with exact float ops. */
+  /** Weights of single-term (term, boost) clauses, normalized together. */
+  private def termWeights(terms: Seq[(String, Float)]): Seq[Option[SimWeight]] = {
+    val stats = reader.termStats(terms.map(_._1).distinct)
+    clauseWeights(terms.map { case (t, b) => (stats.get(t).toSeq, b) })
+  }
+
+  /** Per-term scored hits: decode blocks, score each posting. */
   private def termHits(term: String, clause: Int, kind: Int,
-                       stats: Option[TermStats],
-                       boost: Float = 1f): Dataset[ClauseHit] = {
-    if (stats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = summedWv(stats, boost)
-    // norm cache of the TERM's field (per-field avgdl; fielded search)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(term)))
+                       w: SimWeight): Dataset[ClauseHit] =
     reader.blocks(Seq(term)).flatMap { b =>
       val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
-      val cache = cacheB.value
       (0 until docs.length).iterator.map { i =>
-        ClauseHit(docs(i), clause, kind,
-          BM25.score(wv, tfs(i).toFloat, cache, nrms(i)))
+        ClauseHit(docs(i), clause, kind, w.score(tfs(i).toFloat, nrms(i)))
       }
     }
-  }
 
   /** Per-term score contributions of ONE document (reference
     * search/Explanation.java, Weight.explain): a single job that prunes
@@ -259,26 +300,19 @@ final class JoinScorer(reader: SearchReader) {
     * every term's entire postings to keep one row. Returns (term, score)
     * for each term present in the doc. */
   def explainDoc(terms: Seq[String], docId: Long): Seq[(String, Float)] = {
-    val stats = reader.termStats(terms)
-    val present = terms.distinct.filter(stats.contains)
-    if (present.isEmpty) return Nil
-    val maxDoc = reader.collStats.maxDoc
-    val wv: Map[String, Float] = present.map(t =>
-      t -> BM25.weightValue(BM25.idf(stats(t).df, maxDoc), 1f)).toMap
-    val caches: Map[String, Array[Float]] = present.map(t =>
-      t -> reader.normCacheFor(IndexBuilder.fieldOfTerm(t))).toMap
+    val distinct = terms.distinct
+    val ws: Map[String, SimWeight] =
+      distinct.zip(termWeights(distinct.map(_ -> 1f)))
+        .collect { case (t, Some(w)) => t -> w }.toMap
+    if (ws.isEmpty) return Nil
     val target = docId
-    val wvB = spark.sparkContext.broadcast(wv)
-    val cachesB = spark.sparkContext.broadcast(caches)
-    reader.blocks(present)
+    reader.blocks(distinct.filter(ws.contains))
       .where($"firstDoc" <= target && $"lastDoc" >= target)
       .flatMap { b =>
         val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
         val i = java.util.Arrays.binarySearch(docs, target)
         if (i >= 0)
-          Iterator.single((b.term,
-            BM25.score(wvB.value(b.term), tfs(i).toFloat,
-              cachesB.value(b.term), nrms(i))))
+          Iterator.single((b.term, ws(b.term).score(tfs(i).toFloat, nrms(i))))
         else Iterator.empty
       }.collect().toSeq
   }
@@ -302,10 +336,9 @@ final class JoinScorer(reader: SearchReader) {
     * terms feed the slot (a term listed twice in a slot feeds it twice),
     * and null when none occurs in the doc. `freq` turns the slot array
     * into the clause frequency; a doc with freq > 0 scores
-    * BM25(wv, freq, norm) under the norm cache of the first slot's field.
-    * A term may feed several slots ("a b a"); its postings are fetched
-    * and decoded once. */
-  private def positionalHits(slots: Seq[Seq[String]], wv: Float,
+    * `w.score(freq, norm)`. A term may feed several slots ("a b a"); its
+    * postings are fetched and decoded once. */
+  private def positionalHits(slots: Seq[Seq[String]], w: SimWeight,
                              clause: Int, kind: Int)
                             (freq: Array[Array[Int]] => Float)
       : Dataset[ClauseHit] = {
@@ -315,7 +348,6 @@ final class JoinScorer(reader: SearchReader) {
       slots.indices.flatMap(i => slots(i).filter(_ == t).map(_ => i))
         .toArray).toArray
     val nSlots = slots.length
-    val cache = reader.normCacheFor(IndexBuilder.fieldOfTerm(slots.head.head))
     reader.blocks(terms).flatMap { b =>
       val t = termId(b.term)
       PostingsCodec.decode(b).iterator
@@ -329,9 +361,7 @@ final class JoinScorer(reader: SearchReader) {
           if (pos(i) == null) ps else JoinScorer.mergeSorted(pos(i), ps))
       }
       val f = freq(pos)
-      if (f > 0f)
-        Iterator.single(ClauseHit(docId, clause, kind,
-          BM25.score(wv, f, cache, norm)))
+      if (f > 0f) Iterator.single(ClauseHit(docId, clause, kind, w.score(f, norm)))
       else Iterator.empty
     }
   }
@@ -342,17 +372,16 @@ final class JoinScorer(reader: SearchReader) {
     * alternatives are unioned into one sorted position list, then pf =
     * slot-0 positions where every slot aligns at its rel offset. Weight
     * blends ALL member terms' statistics (idf sum), as the reference's
-    * union enum does. Score = wv * (k1+1) * pf/(pf+norm). */
+    * union enum does; the clause scores its weight at freq = pf. */
   private def multiPhraseHits(slots: Seq[Seq[String]], rel: Seq[Int],
                               stats: Seq[Seq[Option[TermStats]]],
                               clause: Int, kind: Int,
-                              boost: Float = 1f): Dataset[ClauseHit] = {
+                              w: SimWeight): Dataset[ClauseHit] = {
     // a slot with no indexed alternative can never align -> no matches
     if (slots.isEmpty || stats.exists(_.forall(_.isEmpty)))
       return spark.emptyDataset[ClauseHit]
     val relArr = rel.toArray
-    positionalHits(slots, summedWv(stats.flatten.flatten, boost), clause,
-        kind) { s =>
+    positionalHits(slots, w, clause, kind) { s =>
       var pf = 0
       if (!s.contains(null)) {
         val base = s(0)
@@ -380,14 +409,13 @@ final class JoinScorer(reader: SearchReader) {
   private def sloppyPhraseHits(terms: Seq[String], rel: Seq[Int],
                                stats: Seq[Option[TermStats]], slop: Int,
                                clause: Int, kind: Int,
-                               boost: Float): Dataset[ClauseHit] = {
+                               w: SimWeight): Dataset[ClauseHit] = {
     if (stats.exists(_.isEmpty) || terms.isEmpty)
       return spark.emptyDataset[ClauseHit]
     val relArr = rel.toArray
     val rptSlots: Array[Array[Int]] = terms.indices.groupBy(terms(_))
       .valuesIterator.filter(_.length > 1).map(_.toArray).toArray
-    positionalHits(terms.map(Seq(_)), summedWv(stats.flatten, boost),
-        clause, kind) { s =>
+    positionalHits(terms.map(Seq(_)), w, clause, kind) { s =>
       if (s.contains(null)) 0f else SloppyMatch.freq(s, relArr, slop, rptSlots)
     }
   }
@@ -395,18 +423,13 @@ final class JoinScorer(reader: SearchReader) {
   /** Term-automaton hits (reference sandbox TermAutomatonQuery/Scorer):
     * one postings pass over the automaton's alphabet (one slot per
     * symbol), then a per-doc DFA walk (see
-    * [[TermAutomatonDfa.countMatches]]). Statistics blend every distinct
-    * alphabet term's idf (TermAutomatonWeight computeWeight over
-    * allTermStats); tf = counted accepting state entries. */
-  private def termAutomatonHits(taq: TermAutomatonQ,
-                                stats: Seq[Option[TermStats]],
-                                clause: Int, kind: Int,
-                                boost: Float): Dataset[ClauseHit] = {
+    * [[TermAutomatonDfa.countMatches]]); tf = counted accepting state
+    * entries. */
+  private def termAutomatonHits(taq: TermAutomatonQ, clause: Int, kind: Int,
+                                w: SimWeight): Dataset[ClauseHit] = {
     val dfa = TermAutomatonDfa.compile(taq)
-    if (dfa.terms.isEmpty || stats.forall(_.isEmpty))
-      return spark.emptyDataset[ClauseHit]
-    positionalHits(dfa.terms.toSeq.map(Seq(_)), summedWv(stats.flatten, boost),
-        clause, kind) { s =>
+    if (dfa.terms.isEmpty) return spark.emptyDataset[ClauseHit]
+    positionalHits(dfa.terms.toSeq.map(Seq(_)), w, clause, kind) { s =>
       val pairs = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
       var tid = 0
       while (tid < s.length) {
@@ -430,12 +453,11 @@ final class JoinScorer(reader: SearchReader) {
                                    expected: Seq[Float], nearRule: Boolean,
                                    stats: Seq[Option[TermStats]],
                                    clause: Int, kind: Int,
-                                   boost: Float): Dataset[ClauseHit] = {
+                                   w: SimWeight): Dataset[ClauseHit] = {
     if (stats.exists(_.isEmpty) || terms.isEmpty)
       return spark.emptyDataset[ClauseHit]
     val exp = expected.toArray
-    positionalHits(terms.map(Seq(_)), summedWv(stats.flatten, boost),
-        clause, kind) { s =>
+    positionalHits(terms.map(Seq(_)), w, clause, kind) { s =>
       if (s.contains(null)) 0f
       else JoinScorer.orderedSpanMatches(s, s.length, slop).count { legs =>
         val cand = legs.map(JoinScorer.leadPayload)
@@ -459,15 +481,14 @@ final class JoinScorer(reader: SearchReader) {
                                 inOrder: Boolean,
                                 stats: Seq[Seq[Option[TermStats]]],
                                 clause: Int, kind: Int,
-                                boost: Float): Dataset[ClauseHit] = {
+                                w: SimWeight): Dataset[ClauseHit] = {
     val presentSlots: Seq[Seq[String]] = slots.zip(stats).map { case (ts, st) =>
       ts.zip(st).collect { case (t, Some(_)) => t }.distinct
     }
     // a slot with no dictionary match can never occur -> no clause hits
     if (slots.isEmpty || presentSlots.exists(_.isEmpty))
       return spark.emptyDataset[ClauseHit]
-    positionalHits(presentSlots, summedWv(stats.flatten.flatten, boost),
-        clause, kind) { s =>
+    positionalHits(presentSlots, w, clause, kind) { s =>
       if (s.contains(null)) 0f
       else if (inOrder) JoinScorer.orderedSpanFreq(s, s.length, slop).toFloat
       else JoinScorer.unorderedSpanFreq(s, s.length, slop).toFloat
@@ -478,12 +499,8 @@ final class JoinScorer(reader: SearchReader) {
     * occurrences of any clause term, scored once with the summed idf. */
   private def spanOrHits(terms: Seq[String], stats: Seq[Option[TermStats]],
                          clause: Int, kind: Int,
-                         boost: Float): Dataset[ClauseHit] = {
+                         w: SimWeight): Dataset[ClauseHit] = {
     val present = terms.zip(stats).collect { case (t, Some(_)) => t }
-    if (present.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = summedWv(stats.flatten, boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(present.head)))
     reader.blocks(present.distinct).flatMap { b =>
       val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
       docs.indices.iterator.map(i => (docs(i), tfs(i), nrms(i)))
@@ -491,25 +508,22 @@ final class JoinScorer(reader: SearchReader) {
       var freq = 0
       var norm: Byte = 0
       it.foreach { case (_, tf, n) => freq += tf; norm = n }
-      ClauseHit(docId, clause, kind,
-        BM25.score(wv, freq.toFloat, cacheB.value, norm))
+      ClauseHit(docId, clause, kind, w.score(freq.toFloat, norm))
     }
   }
 
   /** Span difference (SpanNotQuery analog): include occurrences survive
     * unless an exclude occurrence lies within [p-pre, p+post]; freq =
-    * surviving count, weight from the include term only. An exclude equal
-    * to the include blocks every occurrence (its own position lies in the
-    * window), so it matches nothing, as the reference's SpanNotQuery. */
+    * surviving count. An exclude equal to the include blocks every
+    * occurrence (its own position lies in the window), so it matches
+    * nothing, as the reference's SpanNotQuery. */
   private def spanNotHits(include: String, exclude: String, pre: Int,
-                          post: Int, incStats: Option[TermStats],
-                          excPresent: Boolean, clause: Int, kind: Int,
-                          boost: Float): Dataset[ClauseHit] = {
-    if (incStats.isEmpty) return spark.emptyDataset[ClauseHit]
+                          post: Int, excPresent: Boolean, clause: Int,
+                          kind: Int, w: SimWeight): Dataset[ClauseHit] = {
     val slots =
       if (excPresent && exclude != include) Seq(Seq(include), Seq(exclude))
       else Seq(Seq(include))
-    positionalHits(slots, summedWv(incStats, boost), clause, kind) { s =>
+    positionalHits(slots, w, clause, kind) { s =>
       val incPos = s(0)
       val excPos =
         if (s.length > 1) s(1) else if (exclude == include) incPos else null
@@ -537,21 +551,19 @@ final class JoinScorer(reader: SearchReader) {
     * SpanWithinQuery.java, SpanContainingQuery.java — both new in the
     * 5.2 reference): ordered `big` spans are enumerated greedily
     * (minimal end per start, as NearSpansOrdered does); `within` counts
-    * little occurrences inside some big span (scored with little's idf),
-    * `containing` counts big spans holding at least one little
-    * occurrence (scored with the big terms' summed idf). */
+    * little occurrences inside some big span, `containing` counts big
+    * spans holding at least one little occurrence. */
   private def spanContainHits(little: String, big: Seq[String], slop: Int,
                               within: Boolean,
                               littleStats: Option[TermStats],
                               bigStats: Seq[Option[TermStats]],
                               clause: Int, kind: Int,
-                              boost: Float): Dataset[ClauseHit] = {
+                              w: SimWeight): Dataset[ClauseHit] = {
     if (littleStats.isEmpty || bigStats.exists(_.isEmpty) || big.isEmpty)
       return spark.emptyDataset[ClauseHit]
-    val wv = summedWv(if (within) littleStats else bigStats.flatten, boost)
     val nBig = big.length
     // slot 0 = little, slots 1..nBig = the big legs (a term may fill both)
-    positionalHits(Seq(little) +: big.map(Seq(_)), wv, clause, kind) { s =>
+    positionalHits(Seq(little) +: big.map(Seq(_)), w, clause, kind) { s =>
       if (s.contains(null)) 0f
       else {
         val lp = s(0)
@@ -571,15 +583,10 @@ final class JoinScorer(reader: SearchReader) {
 
   /** Span position range (SpanPositionRangeQuery; SpanFirstQuery is
     * start=0): occurrences at position in [start, end) survive; freq =
-    * surviving count, weight from the term's idf. The positions filter
-    * runs inside the postings decode — no extra pass. */
-  private def spanRangeHits(term: String, start: Int, end: Int,
-                            stats: Option[TermStats], clause: Int,
-                            kind: Int, boost: Float): Dataset[ClauseHit] = {
-    if (stats.isEmpty) return spark.emptyDataset[ClauseHit]
-    val wv = summedWv(stats, boost)
-    val cacheB = spark.sparkContext.broadcast(
-      reader.normCacheFor(IndexBuilder.fieldOfTerm(term)))
+    * surviving count. The positions filter runs inside the postings
+    * decode — no extra pass. */
+  private def spanRangeHits(term: String, start: Int, end: Int, clause: Int,
+                            kind: Int, w: SimWeight): Dataset[ClauseHit] = {
     val startPos = start
     val endPos = end
     reader.blocks(Seq(term)).flatMap { b =>
@@ -591,7 +598,7 @@ final class JoinScorer(reader: SearchReader) {
         while (j + sf < p.positions.length && p.positions(j + sf) < endPos) sf += 1
         if (sf == 0) Iterator.empty
         else Iterator.single(ClauseHit(p.docId, clause, kind,
-          BM25.score(wv, sf.toFloat, cacheB.value, p.norm)))
+          w.score(sf.toFloat, p.norm)))
       }
     }
   }
@@ -619,40 +626,31 @@ final class JoinScorer(reader: SearchReader) {
     val withIdx = q.clauses.zipWithIndex
     val leaves = withIdx.filter { case ((_, sub), _) => nestedBool(sub).isEmpty }
     val rewritten = rewrite(BoolQ(leaves.map(_._1), q.minShouldMatch))
-    val nestedFrames: Seq[Dataset[ClauseHit]] =
+    val weights = clauseWeights(rewritten.map(_._3).map {
+      case sc: Scored => (sc.weightStats, sc.boost)
+      case _ => (Nil, 1f)
+    })
+    val nestedFrames: Seq[(Int, Dataset[ClauseHit])] =
       withIdx.flatMap { case ((o, sub), i) =>
         nestedBool(sub).map { case (b, bst) =>
           val kind = kindOf(o)
-          scores(b).map(t => ClauseHit(t._1, i, kind, t._2 * bst))
+          i -> scores(b).map(t => ClauseHit(t._1, i, kind, t._2 * bst))
         }
       }
-    val frames = nestedFrames ++ rewritten.zip(leaves.map(_._2)).map { case ((o, _, rc), i) =>
-      val kind = kindOf(o)
-      rc match {
-        case ScoredTerm(t, st, b) => termHits(t, i, kind, st, b)
-        case ScoredSloppyPhrase(ts, rel, st, slop, b) =>
-          sloppyPhraseHits(ts, rel, st, slop, i, kind, b)
-        case ScoredMultiPhrase(ss, rel, st, b) =>
-          multiPhraseHits(ss, rel, st, i, kind, b)
-        case ScoredAutomaton(tq, st, b) =>
-          termAutomatonHits(tq, st, i, kind, b)
-        case ScoredSpanMulti(ss, slop, ord, st, b) =>
-          spanNearMultiHits(ss, slop, ord, st, i, kind, b)
-        case ScoredSpanOr(ts, st, b) => spanOrHits(ts, st, i, kind, b)
-        case ScoredSpanNot(inc, exc, pre, post, st, ep, b) =>
-          spanNotHits(inc, exc, pre, post, st, ep, i, kind, b)
-        case ScoredSpanRange(t, st0, end, st, b) =>
-          spanRangeHits(t, st0, end, st, i, kind, b)
-        case ScoredSpanPayCheck(ts, slop, nearRule, pays, st, b) =>
-          spanPayloadCheckHits(ts, slop, pays, nearRule, st, i, kind, b)
-        case ScoredSpanContain(l, bg, slop, w, lst, bst, b) =>
-          spanContainHits(l, bg, slop, w, lst, bst, i, kind, b)
-        case ConstSet(ts, b) => constHits(ts, i, kind, b)
-        case MatchAll(b) => matchAllHits(i, kind, b)
-      }
+    // a scored leaf none of whose terms is in the dictionary matches
+    // nothing: it gets no frame and no place in coord's maxOverlap
+    val leafFrames = rewritten.zip(leaves.map(_._2)).zip(weights).flatMap {
+      case (((o, _, rc), i), w) =>
+        val kind = kindOf(o)
+        (rc match {
+          case ConstSet(ts, b) => Some(constHits(ts, i, kind, b))
+          case MatchAll(b) => Some(matchAllHits(i, kind, b))
+          case sc: Scored => w.map(scoredHits(sc, i, kind, _))
+        }).map(i -> _)
     }
+    val frames = nestedFrames ++ leafFrames
     if (frames.isEmpty) return spark.emptyDataset[(Long, Float)]
-    val all = frames.reduce(_ union _)
+    val all = frames.map(_._2).reduce(_ union _)
     val nMust = q.clauses.count(c => c._1 == Occur.Must) +
       q.clauses.count(c => c._1 == Occur.Filter)
     val nShould = q.clauses.count(c => c._1 == Occur.Should)
@@ -661,6 +659,12 @@ final class JoinScorer(reader: SearchReader) {
       else if (nMust == 0 && nShould > 0) 1
       else 0
     val nClauses = q.clauses.length
+    val maxOverlap = frames.count { case (i, _) =>
+      val o = q.clauses(i)._1
+      o == Occur.Must || o == Occur.Should
+    }
+    val coords = Array.tabulate(maxOverlap + 1)(o =>
+      if (o == 0) 1f else sim.coord(o, maxOverlap))
     val matched = all.groupByKey(_.docId).mapGroups { (docId, it) =>
       val scoresByClause = new Array[Float](nClauses)
       java.util.Arrays.fill(scoresByClause, Float.NaN)
@@ -679,21 +683,46 @@ final class JoinScorer(reader: SearchReader) {
       if (vetoed || mustSeen < nMust || shouldSeen < effMsm)
         (docId, Float.NaN)
       else {
-        // sum scoring clauses (Must + Should) left-to-right in clause order
+        // sum scoring clauses (Must + Should) left-to-right in clause
+        // order, then scale by coord
         var s = 0f
+        var overlap = 0
         var i = 0
         while (i < nClauses) {
           val v = scoresByClause(i)
-          if (!java.lang.Float.isNaN(v) && kinds(i) != ClauseKind.Filter)
-            s += v
+          if (!java.lang.Float.isNaN(v) && kinds(i) != ClauseKind.Filter) {
+            s += v; overlap += 1
+          }
           i += 1
         }
-        (docId, s)
+        (docId, s * coords(overlap))
       }
     }.filter(t => !java.lang.Float.isNaN(t._2))
     // live-docs filter: tombstoned docs leave results immediately (stats
     // unchanged until compaction — reference LiveDocs semantics)
     reader.liveOnly(matched.toDF("docId", "score")).as[(Long, Float)]
+  }
+
+  /** Hits of a scored leaf clause under its normalized weight `w`. */
+  private def scoredHits(sc: Scored, i: Int, kind: Int,
+                         w: SimWeight): Dataset[ClauseHit] = sc match {
+    case ScoredTerm(t, _, _) => termHits(t, i, kind, w)
+    case ScoredSloppyPhrase(ts, rel, st, slop, _) =>
+      sloppyPhraseHits(ts, rel, st, slop, i, kind, w)
+    case ScoredMultiPhrase(ss, rel, st, _) =>
+      multiPhraseHits(ss, rel, st, i, kind, w)
+    case ScoredAutomaton(tq, _, _) => termAutomatonHits(tq, i, kind, w)
+    case ScoredSpanMulti(ss, slop, ord, st, _) =>
+      spanNearMultiHits(ss, slop, ord, st, i, kind, w)
+    case ScoredSpanOr(ts, st, _) => spanOrHits(ts, st, i, kind, w)
+    case ScoredSpanNot(inc, exc, pre, post, _, ep, _) =>
+      spanNotHits(inc, exc, pre, post, ep, i, kind, w)
+    case ScoredSpanRange(t, st0, end, _, _) =>
+      spanRangeHits(t, st0, end, i, kind, w)
+    case ScoredSpanPayCheck(ts, slop, nearRule, pays, st, _) =>
+      spanPayloadCheckHits(ts, slop, pays, nearRule, st, i, kind, w)
+    case ScoredSpanContain(l, bg, slop, within, lst, bst, _) =>
+      spanContainHits(l, bg, slop, within, lst, bst, i, kind, w)
   }
 
   /** Top-k (score desc, docId asc) — TakeOrderedAndProject. */
@@ -775,9 +804,9 @@ final class JoinScorer(reader: SearchReader) {
       (t, ti) <- toks.zipWithIndex
       ((prefix, boost), fi) <- fields.zipWithIndex
     } yield (prefix + t, ti * nf + fi, boost)
-    val stats = reader.termStats(fieldTerms.map(_._1).distinct)
-    val frames = fieldTerms.map { case (term, slot, boost) =>
-      termHits(term, slot, ClauseKind.Should, stats.get(term), boost)
+    val ws = termWeights(fieldTerms.map(ft => (ft._1, ft._3)))
+    val frames = fieldTerms.zip(ws).map { case ((term, slot, _), w) =>
+      w.fold(spark.emptyDataset[ClauseHit])(termHits(term, slot, ClauseKind.Should, _))
     }
     val nTerms = toks.length
     val tieV = tie
@@ -811,9 +840,8 @@ final class JoinScorer(reader: SearchReader) {
   /** Disjunction-max (reference search/DisjunctionMaxQuery.java): max of
     * clause scores + tieBreakerMultiplier x (sum of the others). */
   def topKDisMax(terms: Seq[String], k: Int, tiebreak: Float = 0f): DataFrame = {
-    val stats = reader.termStats(terms)
-    val frames = terms.zipWithIndex.map { case (t, i) =>
-      termHits(t, i, ClauseKind.Should, stats.get(t))
+    val frames = terms.zip(termWeights(terms.map(_ -> 1f))).zipWithIndex.map { case ((t, w), i) =>
+      w.fold(spark.emptyDataset[ClauseHit])(termHits(t, i, ClauseKind.Should, _))
     }
     val tie = tiebreak
     frames.reduce(_ union _)

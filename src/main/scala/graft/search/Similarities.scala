@@ -1,59 +1,195 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import graft.codec.SmallFloat
+import graft.index.{CollStats, TermStats}
 
-import graft.codec.{PostingsCodec, SmallFloat}
-import graft.index.SearchReader
-
-/** Randomness- and information-based similarities over the shared
-  * postings-scan plumbing (one scorer per reference class in
-  * search/similarities/):
+/** The one scoring contract of the join path (reference
+  * search/similarities/Similarity.java:121-247). [[JoinScorer]] takes a
+  * Similarity (BM25 by default) and scores every clause through it:
   *
+  *  1. `weight` (computeWeight): the clause's weight from its terms'
+  *     statistics and boost — every member term for phrases and spans;
+  *  2. `queryNorm` of the summed `valueForNormalization` over the query's
+  *     clause weights, handed back to each weight's `normalize`
+  *     (Weight.normalize: the norm folds into the clause weight, in the
+  *     reference's float order);
+  *  3. `SimWeight.score(freq, normByte)` per matching doc (SimScorer);
+  *  4. `coord(overlap, maxOverlap)` on each doc's clause-order sum
+  *     (BooleanWeight.coord).
+  *
+  * BM25 and the [[SimilarityBase]] family leave queryNorm and coord at
+  * identity (`x * 1f` is bit-exact); Classic TF-IDF and SweetSpot use
+  * both. The values live in [[Similarities]].
+  */
+trait Similarity extends Serializable {
+  /** `coll` is the collection (content-field) statistics; `normCache` the
+    * BM25 norm table of the clause's field (per-field avgdl). */
+  def weight(stats: Seq[TermStats], boost: Float, coll: CollStats,
+             normCache: Array[Float]): SimWeight
+  def queryNorm(sumOfSquaredWeights: Float): Float = 1f
+  /** Called with 1 <= overlap <= maxOverlap. */
+  def coord(overlap: Int, maxOverlap: Int): Float = 1f
+}
+
+/** A clause's weight; it ships to the executors inside the scoring
+  * closure. */
+trait SimWeight extends Serializable {
+  def valueForNormalization: Float = 1f
+  def normalize(queryNorm: Float): SimWeight = this
+  def score(freq: Float, norm: Byte): Float
+}
+
+/** ClassicSimilarity (TF-IDF), the reference 5.2 DEFAULT similarity
+  * (search/similarities/TFIDFSimilarity.java, DefaultSimilarity.java):
+  * tf = sqrt(freq), idf = 1 + ln(maxDoc/(df+1)) summed over the clause's
+  * terms, lengthNorm = byte315-decoded 1/sqrt(dl), queryNorm =
+  * 1/sqrt(sum of squared clause weights), coord = overlap/maxOverlap.
+  * Float op order mirrors the reference: queryWeight = idf * boost,
+  * normalize -> value = (queryWeight * queryNorm) * idf, score =
+  * tf * value * lengthNorm. */
+class ClassicSimilarity extends Similarity {
+  def tf(freq: Float): Float = math.sqrt(freq.toDouble).toFloat
+  def lengthNorm(norm: Byte): Float = SmallFloat.byte315ToFloat(norm)
+  def idf(df: Long, maxDoc: Long): Float =
+    (1.0 + math.log(maxDoc / (df + 1.0))).toFloat
+
+  private final class Weight(idf: Float, queryWeight: Float) extends SimWeight {
+    private val value = queryWeight * idf
+    override def valueForNormalization: Float = queryWeight * queryWeight
+    override def normalize(queryNorm: Float): SimWeight =
+      new Weight(idf, queryWeight * queryNorm)
+    def score(freq: Float, norm: Byte): Float = tf(freq) * value * lengthNorm(norm)
+  }
+
+  def weight(stats: Seq[TermStats], boost: Float, coll: CollStats,
+             normCache: Array[Float]): SimWeight = {
+    var idfSum = 0f
+    stats.foreach(ts => idfSum += idf(ts.df, coll.maxDoc))
+    new Weight(idfSum, idfSum * boost)
+  }
+  override def queryNorm(sumOfSquaredWeights: Float): Float =
+    (1.0 / math.sqrt(sumOfSquaredWeights.toDouble)).toFloat
+  override def coord(overlap: Int, maxOverlap: Int): Float =
+    overlap.toFloat / maxOverlap
+}
+
+/** SweetSpotSimilarity: Classic with [[SweetSpot.baselineTf]] as tf and
+  * the [[SweetSpot.computeLengthNorm]] plateau over the quantized dl
+  * decoded from the stored norm byte. */
+final class SweetSpotSimilarity(baseTf: Float, minTf: Float, plateauMin: Int,
+                                plateauMax: Int) extends ClassicSimilarity {
+  override def tf(freq: Float): Float = SweetSpot.baselineTf(freq, baseTf, minTf)
+  override def lengthNorm(norm: Byte): Float = SweetSpot.computeLengthNorm(
+    SmallFloat.Bm25NormTable(norm & 0xFF), plateauMin, plateauMax)
+}
+
+/** SimilarityBase (reference search/similarities/SimilarityBase.java): a
+  * per-term score of (freq, dl), dl the byte315-quantized field length
+  * (the table BM25 uses), built from that term's statistics. A clause over
+  * several terms sums its terms' scores in clause order
+  * (MultiSimilarity.MultiStats), times the boost. */
+abstract class SimilarityBase extends Similarity {
+  protected def termScore(ts: TermStats, coll: CollStats): (Float, Float) => Float
+
+  final def weight(stats: Seq[TermStats], boost: Float, coll: CollStats,
+                   normCache: Array[Float]): SimWeight = {
+    val fns = stats.map(termScore(_, coll)).toArray
+    (freq: Float, norm: Byte) => {
+      val dl = SmallFloat.Bm25NormTable(norm & 0xFF)
+      var s = fns(0)(freq, dl)
+      var i = 1
+      while (i < fns.length) { s += fns(i)(freq, dl); i += 1 }
+      boost * s
+    }
+  }
+}
+
+/** The similarity values [[JoinScorer]] takes, one per reference class in
+  * search/similarities/ (plus lucene/misc SweetSpotSimilarity):
+  *
+  *  - BM25 (the engine default) and Classic TF-IDF;
+  *  - SweetSpot: Classic with a baseline tf and a lengthNorm plateau;
+  *  - LM Dirichlet and LM Jelinek-Mercer (LMSimilarity family);
   *  - DFR GL2  = DFRSimilarity(BasicModelG, AfterEffectL, NormalizationH2)
-  *    (DFRSimilarity.java:108-112; Amati & van Rijsbergen, TOIS 2002)
+  *    (DFRSimilarity.java:108-112; Amati & van Rijsbergen, TOIS 2002);
   *  - IB SPL-D = IBSimilarity(DistributionSPL, LambdaDF, NormalizationH2)
-  *    (IBSimilarity.java:78-86; Clinchant & Gaussier, SIGIR 2010)
-  *  - LM Jelinek-Mercer (LMJelinekMercerSimilarity.java:55-62)
+  *    (IBSimilarity.java:78-86; Clinchant & Gaussier, SIGIR 2010).
   *
-  * All three consume (tf, quantized dl) per posting plus per-clause
-  * collection stats — exactly the SimilarityBase contract (score(stats,
-  * freq, docLen) with docLen the byte315-decoded norm). Clause scores sum
-  * in clause order (BooleanQuery disjunction), ties break by docId.
+  * The SimilarityBase values read the collection (content-field)
+  * statistics for every term: avgdl as a Double and collTokens =
+  * sumTotalTermFreq.
   */
 object Similarities {
 
   private val Log2 = math.log(2.0)
   @inline private def log2(x: Double): Double = math.log(x) / Log2
 
-  /** Per-clause scoring closure: built driver-side from term stats,
-    * applied executor-side to each (tf, dl). */
-  type ClauseScore = (Int, Float) => Float
+  /** Lucene BM25 (see [[BM25]]): the clause weight is idf summed over the
+    * clause's terms in order, times boost * (k1+1); each doc scores
+    * against the norm table of the clause's field. */
+  val bm25: Similarity = new Similarity {
+    def weight(stats: Seq[TermStats], boost: Float, coll: CollStats,
+               normCache: Array[Float]): SimWeight = {
+      var idfSum = 0f
+      stats.foreach(ts => idfSum += BM25.idf(ts.df, coll.maxDoc))
+      val wv = BM25.weightValue(idfSum, boost)
+      (freq: Float, norm: Byte) => BM25.score(wv, freq, normCache, norm)
+    }
+  }
+
+  val classic: Similarity = new ClassicSimilarity
+
+  /** SweetSpot with the default plateau steepness (0.5). */
+  def sweetSpot(baseTf: Float, minTf: Float, plateauMin: Int,
+                plateauMax: Int): Similarity =
+    new SweetSpotSimilarity(baseTf, minTf, plateauMin, plateauMax)
+
+  /** LM-Dirichlet (LMDirichletSimilarity.java:56-66, default mu=2000;
+    * P(t|C) = (ttf+1)/(collTokens+1), LMSimilarity.java:80-84):
+    * log(1 + tf/(mu * P(t|C))) + log(mu/(dl + mu)), clamped >= 0 — a doc
+    * whose clauses all clamp still matches, with score 0. */
+  def lmDirichlet(mu: Float = 2000f): Similarity = new SimilarityBase {
+    protected def termScore(ts: TermStats, coll: CollStats) = {
+      val muP = mu * ((ts.ttf + 1f) / (coll.sumTotalTermFreq + 1f))
+      (tf: Float, dl: Float) => {
+        val s = (math.log(1.0 + tf / muP.toDouble) +
+          math.log(mu / (dl + mu).toDouble)).toFloat
+        if (s > 0f) s else 0f
+      }
+    }
+  }
 
   /** DFR GL2: tfn = tf*log2(1 + avgdl/dl) (H2, c=1); lambda = F/(N+F)
     * with F = ttf+1; score = (log2(1+lambda) + tfn*log2((1+lambda)/
     * lambda)) / (tfn+1)  (BasicModelG.java:57-66, AfterEffectL.java:38,
     * NormalizationH2.java:57-60). */
-  def dfrGL2(df: Long, ttf: Long, maxDoc: Long, avgdl: Double): ClauseScore = {
-    val f = ttf + 1.0
-    val lambda = f / (maxDoc + f)
-    val g0 = log2(lambda + 1.0)
-    val gr = log2((1.0 + lambda) / lambda)
-    (tf: Int, dl: Float) => {
-      val tfn = (tf * log2(1.0 + avgdl / dl)).toFloat
-      ((g0 + tfn * gr) * (1.0f / (tfn + 1.0f))).toFloat
+  val dfrGL2: Similarity = new SimilarityBase {
+    protected def termScore(ts: TermStats, coll: CollStats) = {
+      val avgdl = coll.sumTotalTermFreq.toDouble / coll.maxDoc
+      val f = ts.ttf + 1.0
+      val lambda = f / (coll.maxDoc + f)
+      val g0 = log2(lambda + 1.0)
+      val gr = log2((1.0 + lambda) / lambda)
+      (tf: Float, dl: Float) => {
+        val tfn = (tf * log2(1.0 + avgdl / dl)).toFloat
+        ((g0 + tfn * gr) * (1.0f / (tfn + 1.0f))).toFloat
+      }
     }
   }
 
   /** IB SPL with df-lambda: lambda = (df+1)/(N+1); tfn as H2;
     * score = -ln((lambda^(tfn/(tfn+1)) - lambda)/(1-lambda))
     * (DistributionSPL.java:33-39, LambdaDF.java:33). */
-  def ibSplDf(df: Long, ttf: Long, maxDoc: Long, avgdl: Double): ClauseScore = {
-    val lambda0 = (df + 1.0f) / (maxDoc + 1.0f)
-    val lambda = if (lambda0 == 1f) 0.99f else lambda0
-    (tf: Int, dl: Float) => {
-      val tfn = (tf * log2(1.0 + avgdl / dl)).toFloat
-      (-math.log((math.pow(lambda, tfn / (tfn + 1.0)) - lambda) /
-        (1.0 - lambda))).toFloat
+  val ibSplDf: Similarity = new SimilarityBase {
+    protected def termScore(ts: TermStats, coll: CollStats) = {
+      val avgdl = coll.sumTotalTermFreq.toDouble / coll.maxDoc
+      val lambda0 = (ts.df + 1.0f) / (coll.maxDoc + 1.0f)
+      val lambda = if (lambda0 == 1f) 0.99f else lambda0
+      (tf: Float, dl: Float) => {
+        val tfn = (tf * log2(1.0 + avgdl / dl)).toFloat
+        (-math.log((math.pow(lambda, tfn / (tfn + 1.0)) - lambda) /
+          (1.0 - lambda))).toFloat
+      }
     }
   }
 
@@ -61,23 +197,24 @@ object Similarities {
     * suite's long-query setting): score = ln(1 + ((1-lambda)*tf/dl) /
     * (lambda*P(t|C))), P(t|C) = (ttf+1)/(collTokens+1)
     * (LMJelinekMercerSimilarity.java:55-62, LMSimilarity.java:80-84). */
-  def lmJelinekMercer(ttf: Long, collTokens: Long,
-                      lambda: Float = 0.7f): ClauseScore = {
-    val p = (ttf + 1.0f) / (collTokens + 1.0f)
-    (tf: Int, dl: Float) =>
-      math.log(1.0 + ((1 - lambda) * tf / dl) / (lambda * p)).toFloat
+  def lmJelinekMercer(lambda: Float = 0.7f): Similarity = new SimilarityBase {
+    protected def termScore(ts: TermStats, coll: CollStats) = {
+      val p = (ts.ttf + 1.0f) / (coll.sumTotalTermFreq + 1.0f)
+      (tf: Float, dl: Float) =>
+        math.log(1.0 + ((1 - lambda) * tf / dl) / (lambda * p)).toFloat
+    }
   }
 }
 
-/** SweetSpotSimilarity (reference lucene/misc/src/java/org/apache/
-  * lucene/misc/SweetSpotSimilarity.java:44-230): ClassicSimilarity with
-  * a flat "sweet spot" — lengthNorm is 1.0 on the plateau [min, max] and
-  * decays by `steep` outside it; tf is a baseline-floored sqrt or a
-  * hyperbolic saturation. Engine deviation (an improvement the stored-
-  * norm design buys): the reference bakes lengthNorm into the index at
-  * write time (re-index to tune the spot); here the plateau is applied
-  * at QUERY time to the quantized dl decoded from the stored norm byte,
-  * so the same index serves any sweet-spot setting. */
+/** SweetSpotSimilarity's functions (reference lucene/misc/src/java/org/
+  * apache/lucene/misc/SweetSpotSimilarity.java:44-230): lengthNorm is 1.0
+  * on the plateau [min, max] and decays by `steep` outside it; tf is a
+  * baseline-floored sqrt or a hyperbolic saturation. Engine deviation (an
+  * improvement the stored-norm design buys): the reference bakes
+  * lengthNorm into the index at write time (re-index to tune the spot);
+  * here [[SweetSpotSimilarity]] applies the plateau at QUERY time to the
+  * quantized dl decoded from the stored norm byte, so the same index
+  * serves any sweet-spot setting. */
 object SweetSpot {
 
   /** 1/sqrt(steep*(|n-min| + |n-max| - (max-min)) + 1): 1.0 inside the
@@ -106,53 +243,5 @@ object SweetSpot {
     if (freq == 0.0f) return 0.0f
     val x = (freq - xoffset).toDouble
     min + ((max - min) / 2.0f * (math.tanh(x * math.log(base)) + 1.0d)).toFloat
-  }
-}
-
-/** Disjunctive top-k under any per-clause (tf, dl) similarity: decode
-  * (docId, tf, norm) from the pruned block scan, score each clause with
-  * its closure, sum per doc in clause order (same NaN-slot combine the
-  * BM25 join path uses), TakeOrderedAndProject for the global top-k. */
-final class SimilarityScorer(reader: SearchReader,
-    mk: (Long, Long, Long, Long, Double) => Similarities.ClauseScore) {
-  private val spark = reader.spark
-  import spark.implicits._
-
-  def topK(terms: Seq[String], k: Int): DataFrame = {
-    val stats = reader.termStats(terms.distinct)
-    val present = terms.filter(stats.contains)
-    if (present.isEmpty)
-      return spark.emptyDataset[(Long, Float)].toDF("docId", "score")
-    val cs = reader.collStats
-    val avgdl = cs.sumTotalTermFreq.toDouble / cs.maxDoc
-    val fns: Array[Similarities.ClauseScore] = present.map { t =>
-      mk(stats(t).df, stats(t).ttf, cs.maxDoc, cs.sumTotalTermFreq, avgdl)
-    }.toArray
-    val tIdx = present.zipWithIndex.toMap
-    val n = present.length
-    val tIdxB = spark.sparkContext.broadcast(tIdx)
-    val fnsB = spark.sparkContext.broadcast(fns)
-    reader.blocks(present).flatMap { b =>
-      val i = tIdxB.value(b.term)
-      val fn = fnsB.value(i)
-      val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
-      (0 until docs.length).iterator.map { j =>
-        val dl = SmallFloat.Bm25NormTable(nrms(j) & 0xFF)
-        (docs(j), i, fn(tfs(j), dl))
-      }
-    }.groupByKey(_._1).mapGroups { (docId, it) =>
-      val byClause = new Array[Float](n)
-      java.util.Arrays.fill(byClause, Float.NaN)
-      it.foreach { case (_, i, v) => byClause(i) = v }
-      var s = 0f
-      var i = 0
-      while (i < n) {
-        if (!java.lang.Float.isNaN(byClause(i))) s += byClause(i)
-        i += 1
-      }
-      (docId, s)
-    }.toDF("docId", "score")
-      .transform(reader.liveOnly) // LiveDocs contract, same as JoinScorer
-      .orderBy($"score".desc, $"docId".asc).limit(k)
   }
 }

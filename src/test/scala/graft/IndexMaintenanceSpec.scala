@@ -151,12 +151,12 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val terms = Seq("import", "println")
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("docId").as[Long].collect().toSet
+    val q = BoolQ(terms.map(t => (Occur.Should, TermQ(t))))
     val got = Map(
-      "lmdirichlet" -> ids(new LMDirichletScorer(r).topK(terms, 100)),
-      "dfr" -> ids(new SimilarityScorer(r,
-        (df, ttf, maxDoc, _, avgdl) =>
-          Similarities.dfrGL2(df, ttf, maxDoc, avgdl)).topK(terms, 100)),
-      "classic" -> ids(new ClassicScorer(r).topK(terms, 100)),
+      "lmdirichlet" -> ids(new JoinScorer(r, Similarities.lmDirichlet())
+        .topK(q, 100)),
+      "dfr" -> ids(new JoinScorer(r, Similarities.dfrGL2).topK(q, 100)),
+      "classic" -> ids(new JoinScorer(r, Similarities.classic).topK(q, 100)),
       "dismax" -> ids(new JoinScorer(r).topKDisMax(terms, 100)))
     got.foreach { case (name, s) =>
       assert(s.nonEmpty, name)
@@ -362,10 +362,12 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   test("half-merge: a tiered merge that crashed before its done marker " +
     "stays invisible to compact, splitShard and compactTiered") {
+    // an append that crashed before its done marker stays invisible too,
+    // to every reader and maintenance call (multiPassSplit included)
     import org.apache.spark.sql.functions.lit
     val dir = SparkSuite.tmpDir("graft-half")
     build(dir)
-    val cfgT = cfg.copy(numDocParts = cfg.numDocParts + 2)
+    val cfgT = cfg.copy(numDocParts = cfg.numDocParts + 3)
     (0 until 2).foreach { k =>
       val in = CorpusGen.generate(spark, 40, seed = 200L + k).toDF()
         .withColumn("docPart", lit(cfg.numDocParts + k))
@@ -386,6 +388,20 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     copyTree(Paths.get(dir, "delta_0", "segments"), half.resolve("segments"))
     Files.writeString(half.resolve("replaces.txt"), "delta_0")
     assert(!IndexBuilder.subIndexDirs(dir).contains(half.toString))
+    // an append that crashed after its segments stage: 40 new docs on
+    // disk, no stats, postings or done marker
+    val crashed = IndexBuilder.append(spark,
+      CorpusGen.generate(spark, 40, seed = 202L).toDF()
+        .withColumn("docPart", lit(cfg.numDocParts + 2)),
+      dir, IndexBuilder.nextDeltaId(dir), cfgT)
+    new java.io.File(crashed).listFiles()
+      .filterNot(f => f.getName == "segments" || f.getName == "_lineage")
+      .foreach(f => deleteRec(f.toPath))
+    Paths.get(crashed, "_lineage").toFile.listFiles()
+      .filterNot(_.getName == "segments.json").foreach(f => Files.delete(f.toPath))
+    assert(!IndexBuilder.subIndexDirs(dir).contains(crashed))
+    assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).docmeta.count() == live)
 
     val out = SparkSuite.tmpDir("graft-half-compact")
     IndexBuilder.compact(spark, dir, out, cfgT)
@@ -400,8 +416,13 @@ class IndexMaintenanceSpec extends AnyFunSuite {
         .docmeta.count())
     assert(children.sum == live, children.mkString(","))
 
+    val parts = Seq("graft-half-p0", "graft-half-p1").map(SparkSuite.tmpDir)
+    IndexBuilder.multiPassSplit(spark, dir, parts, seq = true, cfgT)
+    assert(parts.map(d => new IndexReader(spark, d, cfg.numBuckets,
+      cacheData = false).docmeta.count()).sum == live)
+
     // both visible deltas fit one tier of size 1: the merge runs over
-    // them only and never reads the half-merge's (absent) markers
+    // them only and never reads the crashed dirs' (absent) markers
     assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
       .isDefined)
     assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,

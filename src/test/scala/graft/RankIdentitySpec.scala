@@ -368,6 +368,58 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(checked == 60)
   }
 
+  test("every similarity == a reference computed from the oracle's " +
+    "postings (Classic queryNorm + coord, SweetSpot, LM, DFR, IB)") {
+    val coll = CollStats(oracle.maxDoc, oracle.sttf)
+    assert(reader.collStats == coll)
+    // the similarity's per-posting score, summed per doc in clause order;
+    // Classic's queryNorm and coord are written out here
+    def expected(sim: Similarity, terms: Seq[String]): Seq[(Long, Int)] = {
+      val present = terms.filter(oracle.df(_) > 0)
+      val classic = sim.isInstanceOf[ClassicSimilarity]
+      val raw = present.map { t =>
+        val ttf = oracle.postings(t).values.map(_.length.toLong).sum
+        sim.weight(Seq(TermStats(t, 0, oracle.df(t), ttf, 0)), 1f, coll,
+          oracle.cache)
+      }
+      var sumSq = 0f
+      raw.foreach(w => sumSq += w.valueForNormalization)
+      val queryNorm =
+        if (classic) (1.0 / math.sqrt(sumSq.toDouble)).toFloat else 1f
+      val ws = raw.map(_.normalize(queryNorm))
+      present.flatMap(oracle.postings(_).keys).distinct.map { d =>
+        var s = 0f
+        var overlap = 0
+        present.zip(ws).foreach { case (t, w) =>
+          oracle.postings(t).get(d).foreach { ps =>
+            s += w.score(ps.length.toFloat, oracle.norm(d)); overlap += 1
+          }
+        }
+        d -> (if (classic) s * (overlap.toFloat / present.length) else s)
+      }.sortBy { case (d, s) => (-s, d) }.take(20)
+        .map { case (d, s) => (d, java.lang.Float.floatToIntBits(s)) }
+    }
+    val sims = Seq("classic" -> Similarities.classic,
+      "sweetspot" -> Similarities.sweetSpot(baseTf = 1.0f, minTf = 2.0f,
+        plateauMin = 60, plateauMax = 100),
+      "lmdirichlet" -> Similarities.lmDirichlet(),
+      "dfr" -> Similarities.dfrGL2, "ib" -> Similarities.ibSplDf,
+      "lmjm" -> Similarities.lmJelinekMercer())
+    def should(ts: Seq[String]) = BoolQ(ts.map(t => (Occur.Should, TermQ(t))))
+    val rng = new scala.util.Random(20261018L)
+    val pool = oracle.allTerms.filter(oracle.df(_) >= 3).toVector
+    val queries = Seq.fill(10)(rng.shuffle(pool).take(1 + rng.nextInt(4)))
+    for ((name, sim) <- sims; terms <- queries)
+      assert(bits(new JoinScorer(reader, sim).topK(should(terms), 20)) ==
+        expected(sim, terms), s"$name on $terms")
+    // a clause absent from the dictionary counts in neither queryNorm nor
+    // coord's maxOverlap
+    val absent = Seq("import", "absentzzz", "spark")
+    val got = bits(new JoinScorer(reader, Similarities.classic)
+      .topK(should(absent), 20))
+    assert(got.nonEmpty && got == expected(Similarities.classic, absent))
+  }
+
   test("randomized positional sweep == oracle (repeated-term phrases, " +
     "sloppy phrases, multi-phrases, span within/containing)") {
     // its own seed: the boolean sweep above keeps its draws

@@ -20,7 +20,10 @@ import graft.search.BM25
   * (MEMORY_AND_DISK), hash-partitioned on the term key, whose partitions
   * each hold a key -> blocks map; readers of the same postings files share
   * it. A warm query reads only the partitions holding its keys, with no
-  * Spark SQL planning or codegen on the way.
+  * Spark SQL planning or codegen on the way: WandScorer's chunk tasks
+  * each read those partitions straight from block storage through a
+  * narrow fan-out (one stage, no shuffle), and JoinScorer's Dataset scan
+  * (`blocks`) reads them in its first stage.
   * `cacheData = false` restores scan-per-query (the posture for a 100TB
   * index where only the hot working set should live in executor storage —
   * Spark evicts LRU).
@@ -158,6 +161,8 @@ final class IndexReader(val spark: SparkSession, val dir: String,
         1 + termStats(terms).values.map(_.df).sum / postingsPerTask).toInt.max(1)
     if (n == 1) slice(0, 1) else spark.sparkContext.union((0 until n).map(slice(_, n)))
   }
+
+  def postingsCached: Boolean = cacheData
 
   private def scanBlocks(k2t: Map[Long, String]): Dataset[PostingBlock] =
     // Column-level term reattachment (element_at over a literal map) keeps

@@ -40,11 +40,21 @@ trait SearchReader {
   /** The compressed blocks of `terms` (each distinct term once), as the
     * RDD the WAND scorer consumes; over a cached reader no Spark SQL plan
     * is built for it. A cached reader keeps all blocks of a term in one
-    * partition; for consumers that decode in the first stage it can split
-    * them, adding a task per `postingsPerTask` postings of the query's
-    * terms, up to defaultParallelism tasks in all. */
+    * partition, and the RDD holds only the cache partitions of the
+    * query's keys: WAND's chunk tasks each read all of them through a
+    * narrow fan-out, in the same stage (see [[postingsCached]]). An
+    * uncached reader's RDD is a parquet scan, which WAND shuffles to its
+    * chunks. For consumers that decode in the first stage a cached reader
+    * can split a term's blocks, adding a task per `postingsPerTask`
+    * postings of the query's terms, up to defaultParallelism tasks in
+    * all. */
   def blockRdd(terms: Seq[String],
                postingsPerTask: Long = Long.MaxValue): RDD[PostingBlock]
+
+  /** Whether [[blockRdd]] reads the in-memory postings cache (every
+    * sub-reader opened with `cacheData = true`), so that reading its
+    * partitions once per WAND chunk costs no parquet scan. */
+  def postingsCached: Boolean
 
   /** The same blocks as a Dataset, for the scorers that continue in
     * Spark SQL (JoinScorer, the similarity variants, SparkEntry). They
@@ -251,6 +261,8 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
       else b.map(x => x.copy(maxPartial = math.min(1f,
         x.maxPartial * (if (x.term.startsWith("path:")) fp else fc))))
     })
+
+  def postingsCached: Boolean = readers.forall(_.postingsCached)
 
   def docmeta: Dataset[DocMeta] =
     readers.map(_.docmeta).reduce(_ union _)

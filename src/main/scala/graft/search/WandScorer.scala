@@ -2,6 +2,8 @@ package graft.search
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.{Dependency, HashPartitioner, NarrowDependency, Partition, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 
@@ -16,17 +18,27 @@ import graft.index.{Ids, SearchReader}
   * Distribution model: the doc space is split into a BOUNDED grid of
   * query-time chunks — at most ~2x the runtime parallelism, each owning a
   * contiguous range of docParts (mirroring per-segment search in
-  * search/IndexSearcher.java:648-673) — and block rows go only to the
-  * chunks their (firstDoc, lastDoc) span overlaps. Because the chunk count
-  * is capped by CORES (not by numDocParts), a sparse term whose one block
-  * spans the whole doc space replicates to at most targetChunks rows: total
-  * shuffled rows are O(#blocks + #terms x #chunks), independent of
-  * numDocParts (which is ~2e5 at 100 TB). Each chunk task runs a WAND loop
-  * with a local k-heap, decoding a block only when the cursor enters it
-  * (skipping via (firstDoc, lastDoc) metadata) and skipping pivots whose
-  * summed upper bounds cannot beat the local threshold. Upper bounds are
-  * wv * maxPartial where maxPartial was computed at build time with the
-  * exact query-time float ops, so pruning is rank-safe (see PostingsCodec).
+  * search/IndexSearcher.java:648-673) — and each chunk task keeps only
+  * the blocks whose (firstDoc, lastDoc) span overlaps its chunk
+  * (`chunksOf`). Because the chunk count is capped by CORES (not by
+  * numDocParts), a sparse term whose one block spans the whole doc space
+  * is read by at most targetChunks tasks, independent of numDocParts
+  * (which is ~2e5 at 100 TB). How blocks reach the chunk tasks depends on
+  * the reader:
+  *  - cached postings (`SearchReader.postingsCached`): a narrow fan-out
+  *    in which every chunk task reads the query's few key partitions of
+  *    the in-memory cache directly. The query is ONE stage of numChunks
+  *    tasks with no shuffle, the way the reference searches each segment
+  *    where it lives;
+  *  - uncached postings: the parquet scan's block rows are shuffled to
+  *    the chunks they overlap — O(#blocks + #terms x #chunks) rows — so
+  *    the scan runs once instead of once per chunk.
+  * Each chunk task runs a WAND loop with a local k-heap, decoding a block
+  * only when the cursor enters it (skipping via (firstDoc, lastDoc)
+  * metadata) and skipping pivots whose summed upper bounds cannot beat
+  * the local threshold. Upper bounds are wv * maxPartial where maxPartial
+  * was computed at build time with the exact query-time float ops, so
+  * pruning is rank-safe (see PostingsCodec).
   * The chunk heaps (at most k x numChunks hits) are collected and merged
   * on the driver by (score desc, docId asc) == global top-k; the answer
   * is a local DataFrame, so a warm query plans no Spark SQL and compiles
@@ -39,6 +51,7 @@ final class WandScorer(reader: SearchReader) {
     * are float-identical to JoinScorer (tested property). */
   def topK(terms: Seq[String], k: Int, conjunctive: Boolean = false,
            minShouldMatch: Int = 0): DataFrame = {
+    if (k <= 0) return WandScorer.frame(sparkS, Seq.empty)
     val stats = reader.termStats(terms.distinct)
     val present = terms.filter(stats.contains)
     if (present.isEmpty || (conjunctive && present.length < terms.length))
@@ -69,43 +82,44 @@ final class WandScorer(reader: SearchReader) {
       sparkS.sparkContext.defaultParallelism)
     val numChunks =
       (math.max(1, reader.numDocPartsHint) + ppc - 1) / ppc
-    // Exactly ONE task per chunk: an explicit HashPartitioner over chunk
-    // ids 0..numChunks-1 is bijective, so the stage runs numChunks tight
-    // WAND loops — never the 200+ mostly-empty sort-based groupByKey
-    // partitions (or, with AQE coalescing, ONE serial task) the Dataset
-    // path produced. The shuffle payload is unchanged: O(#blocks of the
-    // query's terms + #terms x #chunks) block rows.
-    val chunkHeaps = reader.blockRdd(present)
-      .flatMap { b =>
-        WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).map(c => (c, b))
-      }
-      .partitionBy(new org.apache.spark.HashPartitioner(numChunks))
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
+    // Exactly ONE task per chunk; partition i of `byChunk` holds (at
+    // least) the blocks overlapping chunk i. A cached reader's blocks come
+    // through the narrow fan-out, so the query is one stage with no
+    // shuffle; an uncached reader's are shuffled to their chunks once
+    // (a fan-out would re-scan the parquet once per chunk). The explicit
+    // HashPartitioner over chunk ids 0..numChunks-1 is bijective, so
+    // partition index == chunk id on both inputs.
+    val blocks = reader.blockRdd(present)
+    val byChunk: RDD[PostingBlock] =
+      if (reader.postingsCached) new WandScorer.FanOutRDD(blocks, numChunks)
+      else blocks
+        .flatMap(b => WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).map(c => (c, b)))
+        .partitionBy(new HashPartitioner(numChunks))
+        .values
+    val chunkHeaps = byChunk
+      .mapPartitionsWithIndex { (chunk, it) =>
+        val byTerm = Array.fill(wvs.length)(
+          scala.collection.mutable.ArrayBuffer[PostingBlock]())
+        it.foreach { b =>
+          if (WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).contains(chunk))
+            termIdx(b.term).foreach(byTerm(_) += b)
+        }
+        val loDoc = (chunk.toLong * ppc) << Ids.DocIdShift
+        val hiDoc = ((chunk + 1).toLong * ppc) << Ids.DocIdShift
+        val cursors = (0 until wvs.length).flatMap { i =>
+          val blocks = WandScorer.disjointBlocks(
+            byTerm(i).sortBy(_.firstDoc).toArray, caches(i))
+          if (blocks.isEmpty) None
+          else Some(new WandScorer.Cursor(i, wvs(i), blocks, loDoc, hiDoc,
+            caches(i)))
+        }.toArray
+        if (cursors.length < msm) Iterator.empty
         else {
-          val byTerm = Array.fill(wvs.length)(
-            scala.collection.mutable.ArrayBuffer[PostingBlock]())
-          var chunk = -1
-          it.foreach { case (c, b) =>
-            chunk = c; termIdx(b.term).foreach(byTerm(_) += b)
-          }
-          val loDoc = (chunk.toLong * ppc) << Ids.DocIdShift
-          val hiDoc = ((chunk + 1).toLong * ppc) << Ids.DocIdShift
-          val cursors = (0 until wvs.length).flatMap { i =>
-            val blocks = WandScorer.disjointBlocks(
-              byTerm(i).sortBy(_.firstDoc).toArray, caches(i))
-            if (blocks.isEmpty) None
-            else Some(new WandScorer.Cursor(i, wvs(i), blocks, loDoc, hiDoc,
-              caches(i)))
-          }.toArray
-          if (cursors.length < msm) Iterator.empty
-          else {
-            val del = delSortedB.value
-            val deleted: Long => Boolean =
-              if (del.isEmpty) _ => false
-              else id => java.util.Arrays.binarySearch(del, id) >= 0
-            WandScorer.wand(cursors, wvs.length, msm, kk, deleted).iterator
-          }
+          val del = delSortedB.value
+          val deleted: Long => Boolean =
+            if (del.isEmpty) _ => false
+            else id => java.util.Arrays.binarySearch(del, id) >= 0
+          WandScorer.wand(cursors, wvs.length, msm, kk, deleted).iterator
         }
       }
       .collect()
@@ -134,8 +148,37 @@ object WandScorer {
 
   /** Chunks a block's (firstDoc, lastDoc) span overlaps — O(span/width)+1,
     * bounded by the chunk-count cap. */
-  def chunksOf(firstDoc: Long, lastDoc: Long, ppc: Int): Iterator[Int] =
-    (Ids.docPart(firstDoc) / ppc to Ids.docPart(lastDoc) / ppc).iterator
+  def chunksOf(firstDoc: Long, lastDoc: Long, ppc: Int): Range =
+    Ids.docPart(firstDoc) / ppc to Ids.docPart(lastDoc) / ppc
+
+  /** One partition per chunk, each reading EVERY partition of `prev` (a
+    * narrow dependency: the chunk tasks run in the stage that reads
+    * `prev`, with no shuffle). Over a cached reader `prev` is the pruned
+    * postings cache, so each chunk task reads the query's few key
+    * partitions from local block storage and keeps the blocks that
+    * overlap its chunk. Each child partition carries its parents'
+    * Partition objects: a pruned RDD cannot rebuild its partition list on
+    * an executor. On a multi-executor cluster every chunk task would
+    * fetch whole remote cache partitions (numChunks x the query's cache
+    * partitions); all current deployments are local[N]. */
+  private final class FanOutRDD(@transient private val prev: RDD[PostingBlock],
+                                numChunks: Int)
+      extends RDD[PostingBlock](prev.context, Nil) {
+    override protected def getPartitions: Array[Partition] = {
+      val parents = prev.partitions
+      Array.tabulate[Partition](numChunks)(new FanOutPartition(_, parents))
+    }
+    override def getDependencies: Seq[Dependency[_]] =
+      Seq(new NarrowDependency(prev) {
+        def getParents(id: Int): Seq[Int] = rdd.partitions.indices
+      })
+    override def compute(split: Partition, ctx: TaskContext): Iterator[PostingBlock] =
+      split.asInstanceOf[FanOutPartition].parents.iterator
+        .flatMap(firstParent[PostingBlock].iterator(_, ctx))
+  }
+
+  private final class FanOutPartition(val index: Int, val parents: Array[Partition])
+      extends Partition
 
   /** The Cursor walks one term's blocks SEQUENTIALLY, which requires
     * their docId spans to be disjoint. A MultiIndexReader after a TIERED

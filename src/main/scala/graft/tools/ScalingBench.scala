@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 import graft.index._
@@ -160,13 +161,29 @@ object ScalingBench {
     System.err.println("[scaling] builds: " +
       runs.map(r => f"${r._1}%.1f").mkString(" ") + f" -> min $buildSec%.1f s")
     val js = new JoinScorer(reader)
-    // Spark jobs (counted by job group) and generated classes compiled per
-    // warm query, averaged over every rep but the first, beside the latencies
-    val jobs = new ConcurrentHashMap[String, LongAdder]()
+    // Spark jobs, stages run and shuffle bytes written (counted by job
+    // group) and generated classes compiled per warm query, averaged over
+    // every rep but the first, beside the latencies. A stage whose output
+    // is already available (a cache fill's shuffle) is skipped and not
+    // counted.
+    val jobs, stageRuns, shuffleBytes = new ConcurrentHashMap[String, LongAdder]()
+    val stageGroup = new ConcurrentHashMap[Int, String]()
+    def add(m: ConcurrentHashMap[String, LongAdder], g: String, n: Long): Unit =
+      m.computeIfAbsent(g, _ => new LongAdder).add(n)
+    def group(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.computeIfAbsent(g, _ => new LongAdder).increment())
+        group(e.properties).foreach(add(jobs, _, 1))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        group(e.properties).foreach { g =>
+          stageGroup.put(e.stageInfo.stageId, g)
+          add(stageRuns, g, 1)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(stageGroup.remove(e.stageInfo.stageId)).foreach(g =>
+          Option(e.stageInfo.taskMetrics).foreach(m =>
+            add(shuffleBytes, g, m.shuffleWriteMetrics.bytesWritten)))
     })
     def timed(name: String)(query: => Unit): (String, (Double, Double, Double)) = {
       var compiles0 = 0L
@@ -193,8 +210,11 @@ object ScalingBench {
     val cacheMb = storage.map(_.memSize).sum / 1e6
     val cacheDiskMb = storage.map(_.diskSize).sum / 1e6
     val latJson = lat.map { case (q, (p50, p95, compiles)) =>
-      val perQuery = Option(jobs.get(q)).map(_.sum).getOrElse(0L).toDouble / (reps - 1)
-      f""""$q":{"p50":$p50%.1f,"p95":$p95%.1f,"jobs":$perQuery%.2f,"compiles":$compiles%.2f}"""
+      def perQuery(m: ConcurrentHashMap[String, LongAdder]): Double =
+        Option(m.get(q)).map(_.sum).getOrElse(0L).toDouble / (reps - 1)
+      f""""$q":{"p50":$p50%.1f,"p95":$p95%.1f,"jobs":${perQuery(jobs)}%.2f,""" +
+        f""""stages":${perQuery(stageRuns)}%.2f,"shuffle_kb":${perQuery(shuffleBytes) / 1024}%.1f,""" +
+        f""""compiles":$compiles%.2f}"""
     }.mkString(",")
     val stageJson = stages.toSeq.sortBy(_._1)
       .map { case (s, t) => f""""$s":$t%.2f""" }.mkString(",")

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.codec.PostingsCodec
 import graft.index._
 import graft.search._
 
@@ -476,11 +477,37 @@ class RankIdentitySpec extends AnyFunSuite {
       oracle.topK(BoolQ(Seq(Occur.Should -> TermQ("merge"))), 10))
   }
 
-  test("warm cached WAND query on new terms: no codegen, one job, " +
-    "first stage only over the key partitions it needs") {
-    import org.apache.spark.metrics.source.CodegenMetrics
+  /** Jobs, stages and shuffle bytes written by the Spark work `body`
+    * starts (counted once the listener bus has drained), beside its value. */
+  private case class SparkWork(jobs: Int, stages: Int, shuffleWrite: Long)
+  private def sparkWork[T](body: => T): (T, SparkWork) = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffle = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        Option(e.stageInfo.taskMetrics).foreach(m =>
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val v = try body finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (v, SparkWork(jobs.get, stages.get, shuffle.get))
+  }
+
+  test("warm cached WAND query on new terms: no codegen, one job, " +
+    "first stage only over the key partitions it needs") {
+    // ... and that first stage is the only one: the chunk tasks read the
+    // key partitions through the fan-out, with no shuffle
+    import org.apache.spark.metrics.source.CodegenMetrics
     // warm-up: fills the postings cache and compiles the result decoder
     wand.topK(Seq("import", "spark"), 10).as[(Long, Float)].collect()
     val used = Set("import", "spark", "return", "println", "merge", "dataset",
@@ -489,30 +516,91 @@ class RankIdentitySpec extends AnyFunSuite {
       .filter(t => !used(t) && oracle.df(t) >= 5 && t.matches("[a-z]+")).take(3)
     assert(fresh.size == 3)
     reader.termStats(fresh) // the dictionary memo is not under test
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.add((e.stageInfo.stageId, e.stageInfo.numTasks))
-    }
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val got = try wand.topK(fresh, 10).as[(Long, Float)].collect().toSeq
-    finally {
-      org.apache.spark.ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
+    val (got, work) = sparkWork(wand.topK(fresh, 10).as[(Long, Float)].collect().toSeq)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     assert(got == oracle.topK(BoolQ(fresh.map(t => (Occur.Should, TermQ(t): Query))), 10))
     assert(compiles == 0, s"$compiles classes compiled")
-    assert(jobs.size == 1, s"${jobs.size} Spark jobs")
+    assert(work.jobs == 1, s"${work.jobs} Spark jobs")
+    assert(work.stages == 1, s"${work.stages} stages: the chunk tasks must " +
+      "read the cache partitions in the stage that runs the WAND loop")
+    assert(work.shuffleWrite == 0L, s"${work.shuffleWrite} shuffle bytes written")
+    // the fan-out's parent: only the cache partitions holding the keys
     val keyParts = reader.blockRdd(fresh).getNumPartitions
-    assert(keyParts <= fresh.size)
-    val firstTasks = stages.toArray(Array.empty[(Int, Int)]).minBy(_._1)._2
-    assert(firstTasks <= keyParts,
-      s"first stage ran $firstTasks tasks for $keyParts key partitions")
+    assert(keyParts <= fresh.size, s"$keyParts cache partitions for ${fresh.size} keys")
+  }
+
+  test("top-0 is empty on both scorers, and WAND runs no Spark job for it") {
+    val terms = Seq("import", "spark")
+    val (w, work) = sparkWork(wand.topK(terms, 0).as[(Long, Float)].collect().toSeq)
+    assert(w.isEmpty)
+    assert(work.jobs == 0, s"${work.jobs} Spark jobs for k = 0")
+    assert(wand.topK(terms, 0, conjunctive = true).count() == 0)
+    assert(wand.topK(terms, -1).count() == 0)
+    assert(joiner.topK(BoolQ(terms.map(t => (Occur.Should, TermQ(t)))), 0).count() == 0)
+    assert(joiner.topK(BoolQ(terms.map(t => (Occur.Must, TermQ(t)))), 0).count() == 0)
+  }
+
+  test("WAND over the cached fan-out == WAND over the uncached exchange " +
+    "(float bits): duplicate-clause msm, a tombstoned top hit, a rare " +
+    "term whose one block spans every chunk") {
+    def agree(r: IndexReader, u: IndexReader, ts: Seq[String], k: Int,
+              msm: Int = 0): Seq[(Long, Int)] = {
+      assert(r.postingsCached && !u.postingsCached)
+      val c = bits(new WandScorer(r).topK(ts, k, minShouldMatch = msm))
+      assert(c == bits(new WandScorer(u).topK(ts, k, minShouldMatch = msm)),
+        s"cached and uncached WAND disagree on $ts (msm $msm)")
+      c
+    }
+    // msm = 2 over a duplicated clause
+    val dup = agree(reader, uncached, Seq("merge", "merge", "spark"), 10, msm = 2)
+    assert(dup.nonEmpty)
+    assert(dup.map(_._1) == oracle.topK(BoolQ(Seq((Occur.Should, TermQ("merge")),
+      (Occur.Should, TermQ("merge")), (Occur.Should, TermQ("spark"))),
+      minShouldMatch = 2), 10).map(_._1))
+
+    // the other two cases on an index of their own: built in one wave,
+    // so a rare term's one block spans the whole doc space, and then
+    // tombstoned
+    val d1 = SparkSuite.tmpDir("graft-index-1wave")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 800, seed = 42L, parts = 8)
+      .toDF(), d1, cfg.copy(waves = 1))
+    def readers(): (IndexReader, IndexReader) = (IndexReader(spark, d1, cfg),
+      new IndexReader(spark, d1, cfg.numBuckets, cacheData = false))
+    def spec(r: IndexReader, ts: Seq[String], k: Int): Seq[(Long, Int)] =
+      bits(new JoinScorer(r).topK(BoolQ(ts.map(t => (Occur.Should, TermQ(t)))), k))
+    val (r1, u1) = readers()
+
+    // a rare term with ONE block whose span covers every chunk, and with
+    // docs in every chunk: each chunk task must keep that block, or its
+    // docs go missing
+    val ppc = WandScorer.partsPerChunk(r1.numDocPartsHint,
+      spark.sparkContext.defaultParallelism)
+    val numChunks = (r1.numDocPartsHint + ppc - 1) / ppc
+    assert(numChunks > 1)
+    def chunkOf(docId: Long): Int = Ids.docPart(docId) / ppc
+    val rare = r1.termStatsDf.where($"df" >= numChunks && $"df" <= 64)
+      .orderBy($"term").as[TermStats].collect().iterator.find { t =>
+        val bs = r1.blockRdd(Seq(t.term)).collect()
+        bs.length == 1 && WandScorer.chunksOf(bs.head.firstDoc, bs.head.lastDoc,
+          ppc).size == numChunks &&
+          PostingsCodec.decode(bs.head).map(p => chunkOf(p.docId)).distinct.length ==
+            numChunks
+      }.get
+    val all = agree(r1, u1, Seq(rare.term), rare.df.toInt)
+    assert(all.size == rare.df)
+    assert(all.map(d => chunkOf(d._1)).distinct.size == numChunks)
+    assert(all == spec(r1, Seq(rare.term), rare.df.toInt))
+
+    // a top hit tombstoned: it leaves both readers' answers, and the rest
+    // keep their scores (statistics count deleted docs until compaction)
+    val ts = Seq("import", "spark")
+    val before = agree(r1, u1, ts, 11)
+    IndexBuilder.deleteDocs(spark, d1, Seq(before.head._1).toDF("docId"))
+    val (r2, u2) = readers()
+    val live = agree(r2, u2, ts, 10)
+    assert(live == before.tail)
+    assert(live == spec(r2, ts, 10))
   }
 
   test("a spread block fetch returns the same blocks over " +

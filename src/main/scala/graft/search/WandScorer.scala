@@ -85,8 +85,9 @@ final class WandScorer(reader: SearchReader) {
     // Exactly ONE task per chunk; partition i of `byChunk` holds (at
     // least) the blocks overlapping chunk i. A cached reader's blocks come
     // through the narrow fan-out, so the query is one stage with no
-    // shuffle; an uncached reader's are shuffled to their chunks once
-    // (a fan-out would re-scan the parquet once per chunk). The explicit
+    // shuffle; an uncached reader's are shuffled to their chunks once,
+    // since there a fan-out re-scans the parquet once per chunk (slower
+    // on perfbench's uncached ingest_serve; see SCALE.md). The explicit
     // HashPartitioner over chunk ids 0..numChunks-1 is bijective, so
     // partition index == chunk id on both inputs.
     val blocks = reader.blockRdd(present)
@@ -156,11 +157,15 @@ object WandScorer {
     * `prev`, with no shuffle). Over a cached reader `prev` is the pruned
     * postings cache, so each chunk task reads the query's few key
     * partitions from local block storage and keeps the blocks that
-    * overlap its chunk. Each child partition carries its parents'
-    * Partition objects: a pruned RDD cannot rebuild its partition list on
-    * an executor. On a multi-executor cluster every chunk task would
-    * fetch whole remote cache partitions (numChunks x the query's cache
-    * partitions); all current deployments are local[N]. */
+    * overlap its chunk. That is O(numChunks x #blocks of the query's
+    * terms) block reads per query, each with the term copy `blockRdd`
+    * makes, where the exchange read each block once: a hot term's blocks
+    * are walked numChunks times. Each child partition carries its
+    * parents' Partition objects: a pruned RDD cannot rebuild its
+    * partition list on an executor. On a multi-executor cluster every
+    * chunk task would fetch whole remote cache partitions (numChunks x
+    * the query's cache partitions); all current deployments are
+    * local[N]. */
   private final class FanOutRDD(@transient private val prev: RDD[PostingBlock],
                                 numChunks: Int)
       extends RDD[PostingBlock](prev.context, Nil) {

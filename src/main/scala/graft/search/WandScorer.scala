@@ -16,13 +16,17 @@ import graft.index.{Ids, SearchReader}
   * and the collector threshold [search/TopScoreDocCollector.java:71-79]).
   *
   * Distribution model: the doc space is split into a BOUNDED grid of
-  * query-time chunks — at most ~2x the runtime parallelism, each owning a
-  * contiguous range of docParts (mirroring per-segment search in
-  * search/IndexSearcher.java:648-673) — and each chunk task keeps only
-  * the blocks whose (firstDoc, lastDoc) span overlaps its chunk
-  * (`chunksOf`). Because the chunk count is capped by CORES (not by
+  * query-time chunks, each owning a contiguous range of docParts
+  * (mirroring per-segment search in search/IndexSearcher.java:648-673),
+  * and each chunk task keeps only the blocks whose (firstDoc, lastDoc)
+  * span overlaps its chunk (`chunksOf`). The grid is sized by the query:
+  * one chunk per [[WandScorer.PostingsPerChunk]] postings of its terms,
+  * capped at ~2x the runtime parallelism and at numDocParts
+  * (`partsPerChunk`). A small query is ONE task, as the reference searches
+  * a small leaf where it is; a query with millions of postings gets the
+  * full grid. Because the chunk count is capped by CORES (not by
   * numDocParts), a sparse term whose one block spans the whole doc space
-  * is read by at most targetChunks tasks, independent of numDocParts
+  * is read by at most 2x parallelism tasks, independent of numDocParts
   * (which is ~2e5 at 100 TB). How blocks reach the chunk tasks depends on
   * the reader:
   *  - cached postings (`SearchReader.postingsCached`): a narrow fan-out
@@ -33,7 +37,8 @@ import graft.index.{Ids, SearchReader}
   *  - uncached postings: the parquet scan's block rows are shuffled to
   *    the chunks they overlap — O(#blocks + #terms x #chunks) rows — so
   *    the scan runs once instead of once per chunk.
-  * Each chunk task runs a WAND loop with a local k-heap, decoding a block
+  * Each chunk task runs a WAND loop with a primitive local k-heap that
+  * allocates nothing per pivot, decoding a block
   * only when the cursor enters it (skipping via (firstDoc, lastDoc)
   * metadata) and skipping pivots whose summed upper bounds cannot beat
   * the local threshold. Upper bounds are wv * maxPartial where maxPartial
@@ -44,7 +49,10 @@ import graft.index.{Ids, SearchReader}
   * is a local DataFrame, so a warm query plans no Spark SQL and compiles
   * no code.
   */
-final class WandScorer(reader: SearchReader) {
+final class WandScorer private[graft] (reader: SearchReader,
+                                      postingsPerChunk: Long) {
+  def this(reader: SearchReader) = this(reader, WandScorer.PostingsPerChunk)
+
   private val sparkS = reader.spark
 
   /** Disjunctive (OR) or conjunctive (AND) term query. Scores and ranks
@@ -54,7 +62,8 @@ final class WandScorer(reader: SearchReader) {
     if (k <= 0) return WandScorer.frame(sparkS, Seq.empty)
     val stats = reader.termStats(terms.distinct)
     val present = terms.filter(stats.contains)
-    if (present.isEmpty || (conjunctive && present.length < terms.length))
+    if (present.isEmpty || (conjunctive && present.length < terms.length) ||
+      (!conjunctive && minShouldMatch > present.length))
       return WandScorer.frame(sparkS, Seq.empty)
     val maxDoc = reader.collStats.maxDoc
     // weights in clause order (clause order = position in `terms`)
@@ -79,7 +88,8 @@ final class WandScorer(reader: SearchReader) {
     val delSortedB = reader.deletedSortedBroadcast
 
     val ppc = WandScorer.partsPerChunk(reader.numDocPartsHint,
-      sparkS.sparkContext.defaultParallelism)
+      sparkS.sparkContext.defaultParallelism, stats.values.map(_.df).sum,
+      postingsPerChunk)
     val numChunks =
       (math.max(1, reader.numDocPartsHint) + ppc - 1) / ppc
     // Exactly ONE task per chunk; partition i of `byChunk` holds (at
@@ -138,12 +148,25 @@ object WandScorer {
   private def frame(spark: SparkSession, hits: Seq[(Long, Float)]): DataFrame =
     spark.createDataFrame(hits.map { case (d, s) => Row(d, s) }.asJava, HitSchema)
 
+  /** Postings of a query's terms that pay for one more chunk task. Below
+    * it a query runs as one task: an 8-task stage cost ~4-8 ms more than a
+    * 1-task one on a 4-vCPU host, more than a small query's whole WAND
+    * loop. [[SearchReader.SpreadPostings]] (2^18) is too coarse here: it
+    * gave q_wand3 at 500k docs (~1.2M postings, `ScalingBench level 4`,
+    * 4 vCPU) 5 chunks instead of 8 and raised its warm p50 from 157 to
+    * 244 ms. */
+  private[graft] final val PostingsPerChunk: Long = 1L << 16
+
   /** Chunk grid: contiguous docPart ranges of this width. The chunk COUNT
-    * is capped at ~2x parallelism so block fan-out never scales with
-    * numDocParts (the round-1 scale-killer: (lo to hi) per docPart). */
-  def partsPerChunk(numDocParts: Int, parallelism: Int): Int = {
+    * is one per `postingsPerChunk` of the query's `postings` (the sum of
+    * df over its distinct terms), capped at ~2x parallelism so block
+    * fan-out never scales with numDocParts (the round-1 scale-killer:
+    * (lo to hi) per docPart). */
+  private[graft] def partsPerChunk(numDocParts: Int, parallelism: Int,
+                                   postings: Long, postingsPerChunk: Long): Int = {
     val nParts = math.max(1, numDocParts)
-    val targetChunks = math.max(1, math.min(nParts, math.max(1, parallelism) * 2))
+    val targetChunks = math.min(1L + postings / postingsPerChunk,
+      math.min(nParts, math.max(1, parallelism) * 2).toLong).toInt
     (nParts + targetChunks - 1) / targetChunks
   }
 
@@ -286,86 +309,153 @@ object WandScorer {
     def score: Float = BM25.score(wv, tfs(pi).toFloat, cache, nrms(pi))
   }
 
+  /** Top-k hits in two primitive arrays: a binary heap whose root is the
+    * WORST kept hit (lower score, then higher docId), HitQueue.lessThan
+    * semantics (search/HitQueue.java:68-81). Grows on demand up to k. */
+  private final class HitHeap(k: Int) {
+    private var docs = new Array[Long](math.min(k, 64))
+    private var scores = new Array[Float](docs.length)
+    private var size = 0
+    def full: Boolean = size >= k
+    def worstScore: Float = scores(0)
+
+    private def worse(i: Int, j: Int): Boolean = {
+      val c = java.lang.Float.compare(scores(i), scores(j))
+      c < 0 || (c == 0 && docs(i) > docs(j))
+    }
+    private def swap(i: Int, j: Int): Unit = {
+      val d = docs(i); docs(i) = docs(j); docs(j) = d
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+    }
+    private def down(i0: Int): Unit = {
+      var i = i0
+      var l = 2 * i + 1
+      while (l < size) {
+        val c = if (l + 1 < size && worse(l + 1, l)) l + 1 else l
+        if (!worse(c, i)) l = size
+        else { swap(c, i); i = c; l = 2 * i + 1 }
+      }
+    }
+
+    /** Adds a hit while the heap holds fewer than k. */
+    def add(doc: Long, score: Float): Unit = {
+      if (size == docs.length) {
+        val cap = math.min(k.toLong, 2L * size).toInt
+        docs = java.util.Arrays.copyOf(docs, cap)
+        scores = java.util.Arrays.copyOf(scores, cap)
+      }
+      docs(size) = doc; scores(size) = score
+      var i = size
+      size += 1
+      while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    }
+
+    /** Replaces the worst kept hit. */
+    def replaceWorst(doc: Long, score: Float): Unit = {
+      docs(0) = doc; scores(0) = score
+      down(0)
+    }
+
+    /** Empties the heap into an array, best hit first. */
+    def drain(): Array[(Long, Float)] = {
+      val out = new Array[(Long, Float)](size)
+      while (size > 0) {
+        out(size - 1) = (docs(0), scores(0))
+        size -= 1
+        docs(0) = docs(size); scores(0) = scores(size)
+        down(0)
+      }
+      out
+    }
+  }
+
+  /** Moves cs(i) right into the run cs(i + 1 until n), which is sorted by
+    * (curDoc, clause). */
+  private def sink(cs: Array[Cursor], i: Int, n: Int): Unit = {
+    val c = cs(i)
+    var j = i
+    while (j + 1 < n && (cs(j + 1).curDoc < c.curDoc ||
+        (cs(j + 1).curDoc == c.curDoc && cs(j + 1).clause < c.clause))) {
+      cs(j) = cs(j + 1); j += 1
+    }
+    cs(j) = c
+  }
+
   /** WAND main loop with the reference collector's threshold semantics
     * (reject when score <= heap-min; docs arrive in docId order so earlier
-    * docIds win ties, as in TopScoreDocCollector.java:63-79). */
+    * docIds win ties, as in TopScoreDocCollector.java:63-79). The live
+    * cursors stay sorted by (curDoc, clause) in one array: after a step
+    * only the cursors it advanced are re-inserted, and exhausted ones
+    * (curDoc == Long.MaxValue) sort to the tail and are dropped, so upper
+    * bounds are summed in the same order on every step and no pivot step
+    * allocates. */
   private[search] def wand(cursors: Array[Cursor], nClauses: Int, msm: Int,
                            k: Int,
                            deleted: Long => Boolean = _ => false)
       : Array[(Long, Float)] = {
-    // heap.head must be the WORST kept hit (lowest score, then highest
-    // docId) — HitQueue.lessThan semantics (search/HitQueue.java:68-81).
-    // PriorityQueue dequeues its max, so rank "worse" as "greater".
-    val worstAsMax: Ordering[(Long, Float)] =
-      Ordering.by[(Long, Float), (Float, Long)](t => (t._2, -t._1)).reverse
-    val heap =
-      scala.collection.mutable.PriorityQueue.empty[(Long, Float)](worstAsMax)
-    def theta: Float =
-      if (heap.size >= k) heap.head._2 else Float.NegativeInfinity
-
-    var live = cursors.toList
+    val heap = new HitHeap(k)
+    val cs = cursors.clone()
+    var n = cs.length
+    // re-sorts cs(0 until n) after cs(0 until advanced) moved on
+    def resort(advanced: Int): Unit = {
+      var i = advanced - 1
+      while (i >= 0) { sink(cs, i, n); i -= 1 }
+      while (n > 0 && cs(n - 1).curDoc == Long.MaxValue) n -= 1
+    }
+    resort(n)
     val scoresBuf = new Array[Float](nClauses)
     var continue = true
     while (continue) {
-      live = live.filter(_.curDoc != Long.MaxValue)
-      if (live.length < msm) continue = false
+      if (n < msm) continue = false
       else {
-        val sorted = live.sortBy(_.curDoc).toArray
         // pivot: first index where cumulative ub can beat theta AND at
         // least msm cursors are aligned (conjunctive: last cursor)
+        val th = if (heap.full) heap.worstScore else Float.NegativeInfinity
         var acc = 0f
         var p = -1
-        val th = theta
         var i = 0
-        while (p < 0 && i < sorted.length) {
-          acc += sorted(i).termUb
+        while (p < 0 && i < n) {
+          acc += cs(i).termUb
           if (i + 1 >= msm && (acc > th || th == Float.NegativeInfinity)) p = i
           i += 1
         }
         if (p < 0) continue = false // no pivot can beat threshold
         else {
-          val pivotDoc = sorted(p).curDoc
-          if (sorted(0).curDoc == pivotDoc) {
+          val pivotDoc = cs(p).curDoc
+          if (cs(0).curDoc == pivotDoc) {
             // all [0..p] aligned: block-max refinement then full eval
             var blockAcc = 0f
-            var j = 0
-            while (j < sorted.length && sorted(j).curDoc == pivotDoc) {
-              blockAcc += sorted(j).blockUb; j += 1
+            var aligned = 0
+            while (aligned < n && cs(aligned).curDoc == pivotDoc) {
+              blockAcc += cs(aligned).blockUb; aligned += 1
             }
-            val aligned = j
-            if (heap.size >= k && blockAcc <= th) {
-              // block-level bound cannot beat threshold: skip this doc
-              var j2 = 0
-              while (j2 < aligned) { sorted(j2).next(); j2 += 1 }
-            } else if (aligned < msm || deleted(pivotDoc)) {
-              // tombstoned doc: deleted docs must be skipped BEFORE the
-              // heap so they never displace a live hit from the per-chunk
-              // top-k. (aligned < msm is unreachable here — pivot
-              // selection requires i+1 >= msm and sorted(0).curDoc ==
-              // pivotDoc forces cursors 0..p aligned — kept as a
-              // defensive guard on the pivot invariant)
-              var j2 = 0
-              while (j2 < aligned) { sorted(j2).next(); j2 += 1 }
-            } else {
+            // a block-level bound that cannot beat the threshold skips
+            // the doc; so does a tombstone, BEFORE the heap, so a deleted
+            // doc never displaces a live hit from the per-chunk top-k.
+            // (aligned < msm is unreachable here — pivot selection
+            // requires i+1 >= msm and cs(0).curDoc == pivotDoc forces
+            // cursors 0..p aligned — kept as a defensive guard on the
+            // pivot invariant)
+            if (!(heap.full && blockAcc <= th) && aligned >= msm &&
+                !deleted(pivotDoc)) {
               java.util.Arrays.fill(scoresBuf, Float.NaN)
-              var j2 = 0
-              while (j2 < aligned) {
-                scoresBuf(sorted(j2).clause) = sorted(j2).score
-                j2 += 1
-              }
+              var j = 0
+              while (j < aligned) { scoresBuf(cs(j).clause) = cs(j).score; j += 1 }
               val s = BM25.sumScores(scoresBuf)
-              if (heap.size < k) heap.enqueue((pivotDoc, s))
-              else if (s > theta) { heap.dequeue(); heap.enqueue((pivotDoc, s)) }
-              j2 = 0
-              while (j2 < aligned) { sorted(j2).next(); j2 += 1 }
+              if (!heap.full) heap.add(pivotDoc, s)
+              else if (s > heap.worstScore) heap.replaceWorst(pivotDoc, s)
             }
+            var j = 0
+            while (j < aligned) { cs(j).next(); j += 1 }
+            resort(aligned)
           } else {
             // advance the leading cursor up to the pivot
-            sorted(0).advanceTo(pivotDoc)
+            cs(0).advanceTo(pivotDoc)
+            resort(1)
           }
         }
       }
     }
-    heap.dequeueAll.toArray.reverse // best first (not required, cosmetic)
+    heap.drain()
   }
 }

@@ -348,9 +348,12 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // WAND agrees — this exercises BOTH multi-reader WAND soundness
     // fixes: the per-sub maxPartial bound rescale (SearchReader
     // .boundScale) and the overlapping-block merge (WandScorer
-    // .disjointBlocks) that tiered merges make necessary
-    assert(new WandScorer(rAfter).topK(Seq("import", "spark"), 20)
-      .as[(Long, Float)].collect().toSeq == before)
+    // .disjointBlocks) that tiered merges make necessary, on one chunk
+    // and on the full grid, where merged blocks span chunk boundaries
+    for (wand <- Seq(new WandScorer(rAfter),
+      new WandScorer(rAfter, postingsPerChunk = 1L)))
+      assert(wand.topK(Seq("import", "spark"), 20)
+        .as[(Long, Float)].collect().toSeq == before)
     CheckIndex.run(new IndexReader(spark, merged.get, cfg.numBuckets,
       cacheData = false)).collect()
       .foreach(c => assert(c.violations == 0L, s"merged check ${c.check}"))

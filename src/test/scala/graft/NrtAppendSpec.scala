@@ -71,10 +71,12 @@ class NrtAppendSpec extends AnyFunSuite {
     val exp = new JoinScorer(full).topK(qy, 25).as[(Long, Float)].collect().toSeq
     assert(got == exp, "append view must equal the from-scratch build")
 
-    // WAND over the union view agrees too
-    val wGot = new WandScorer(multi).topK(Seq("import", "spark", "merge"), 25)
-      .as[(Long, Float)].collect().toSeq
-    assert(wGot == exp)
+    // WAND over the union view agrees too, on one chunk and on the full
+    // grid
+    for (wand <- Seq(new WandScorer(multi),
+      new WandScorer(multi, postingsPerChunk = 1L)))
+      assert(wand.topK(Seq("import", "spark", "merge"), 25)
+        .as[(Long, Float)].collect().toSeq == exp)
     ids.unpersist(); all.unpersist()
   }
 

@@ -26,6 +26,10 @@ class RankIdentitySpec extends AnyFunSuite {
   private lazy val reader = IndexReader(spark, dir, cfg)
   private lazy val joiner = new JoinScorer(reader)
   private lazy val wand = new WandScorer(reader)
+  // every chunk the docParts allow (one per posting, capped at 2x
+  // parallelism): the test index is too small for the default grid to
+  // split a query, so this keeps the multi-chunk path under test
+  private lazy val wandGrid = new WandScorer(reader, postingsPerChunk = 1L)
   // the same index read without the postings cache: every answer must be
   // float-bit-identical to the cached reader's
   private lazy val uncached =
@@ -364,6 +368,10 @@ class RankIdentitySpec extends AnyFunSuite {
         assert(got == exp, s"WAND mismatch on $ts")
         assert(bits(new WandScorer(uncached).topK(ts, 15)) == bits(wand.topK(ts, 15)),
           s"cached and uncached WAND disagree on $ts")
+        assert(bits(wandGrid.topK(ts, 15)) == bits(wand.topK(ts, 15)),
+          s"one chunk and the full chunk grid disagree on $ts")
+        assert(bits(new WandScorer(uncached, postingsPerChunk = 1L).topK(ts, 15)) ==
+          bits(wand.topK(ts, 15)), s"uncached full-grid WAND disagrees on $ts")
       }
     }
     assert(checked == 60)
@@ -477,17 +485,21 @@ class RankIdentitySpec extends AnyFunSuite {
       oracle.topK(BoolQ(Seq(Occur.Should -> TermQ("merge"))), 10))
   }
 
-  /** Jobs, stages and shuffle bytes written by the Spark work `body`
-    * starts (counted once the listener bus has drained), beside its value. */
-  private case class SparkWork(jobs: Int, stages: Int, shuffleWrite: Long)
+  /** Jobs, stages, tasks and shuffle bytes written by the Spark work
+    * `body` starts (counted once the listener bus has drained), beside its
+    * value. */
+  private case class SparkWork(jobs: Int, stages: Int, tasks: Int,
+                               shuffleWrite: Long)
   private def sparkWork[T](body: => T): (T, SparkWork) = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
     val shuffle = new java.util.concurrent.atomic.AtomicLong()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         Option(e.stageInfo.taskMetrics).foreach(m =>
@@ -500,13 +512,14 @@ class RankIdentitySpec extends AnyFunSuite {
       org.apache.spark.ListenerDrain(sc)
       sc.removeSparkListener(listener)
     }
-    (v, SparkWork(jobs.get, stages.get, shuffle.get))
+    (v, SparkWork(jobs.get, stages.get, tasks.get, shuffle.get))
   }
 
   test("warm cached WAND query on new terms: no codegen, one job, " +
     "first stage only over the key partitions it needs") {
-    // ... and that first stage is the only one: the chunk tasks read the
-    // key partitions through the fan-out, with no shuffle
+    // ... and that first stage is the only one, of one task: a query this
+    // small is one chunk, which reads the key partitions through the
+    // fan-out, with no shuffle
     import org.apache.spark.metrics.source.CodegenMetrics
     // warm-up: fills the postings cache and compiles the result decoder
     wand.topK(Seq("import", "spark"), 10).as[(Long, Float)].collect()
@@ -524,6 +537,7 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(work.jobs == 1, s"${work.jobs} Spark jobs")
     assert(work.stages == 1, s"${work.stages} stages: the chunk tasks must " +
       "read the cache partitions in the stage that runs the WAND loop")
+    assert(work.tasks == 1, s"${work.tasks} tasks for a one-chunk query")
     assert(work.shuffleWrite == 0L, s"${work.shuffleWrite} shuffle bytes written")
     // the fan-out's parent: only the cache partitions holding the keys
     val keyParts = reader.blockRdd(fresh).getNumPartitions
@@ -541,15 +555,31 @@ class RankIdentitySpec extends AnyFunSuite {
     assert(joiner.topK(BoolQ(terms.map(t => (Occur.Must, TermQ(t)))), 0).count() == 0)
   }
 
+  test("msm above the present clauses is empty on both scorers, and WAND " +
+    "runs no Spark job for it") {
+    for (terms <- Seq(Seq("import", "spark"), Seq("import", "spark", "zzzabsent"))) {
+      val q = BoolQ(terms.map(t => (Occur.Should, TermQ(t): Query)), minShouldMatch = 3)
+      reader.termStats(terms) // the dictionary memo is not under test
+      val (w, work) = sparkWork(bits(wand.topK(terms, 10, minShouldMatch = 3)))
+      assert(work.jobs == 0, s"${work.jobs} Spark jobs for msm 3 over $terms")
+      assert(w.isEmpty && w == bits(joiner.topK(q, 10)), s"msm 3 over $terms")
+    }
+  }
+
   test("WAND over the cached fan-out == WAND over the uncached exchange " +
     "(float bits): duplicate-clause msm, a tombstoned top hit, a rare " +
     "term whose one block spans every chunk") {
+    // each query on both readers at both grids: one chunk per posting
+    // (every chunk the docParts allow) and the default (one chunk here)
     def agree(r: IndexReader, u: IndexReader, ts: Seq[String], k: Int,
               msm: Int = 0): Seq[(Long, Int)] = {
       assert(r.postingsCached && !u.postingsCached)
-      val c = bits(new WandScorer(r).topK(ts, k, minShouldMatch = msm))
-      assert(c == bits(new WandScorer(u).topK(ts, k, minShouldMatch = msm)),
+      def run(s: WandScorer) = bits(s.topK(ts, k, minShouldMatch = msm))
+      val c = run(new WandScorer(r, postingsPerChunk = 1L))
+      assert(c == run(new WandScorer(u, postingsPerChunk = 1L)),
         s"cached and uncached WAND disagree on $ts (msm $msm)")
+      assert(c == run(new WandScorer(r)) && c == run(new WandScorer(u)),
+        s"the full grid and the default grid disagree on $ts (msm $msm)")
       c
     }
     // msm = 2 over a duplicated clause
@@ -571,11 +601,11 @@ class RankIdentitySpec extends AnyFunSuite {
       bits(new JoinScorer(r).topK(BoolQ(ts.map(t => (Occur.Should, TermQ(t)))), k))
     val (r1, u1) = readers()
 
-    // a rare term with ONE block whose span covers every chunk, and with
-    // docs in every chunk: each chunk task must keep that block, or its
-    // docs go missing
+    // a rare term with ONE block whose span covers every chunk of the
+    // full grid, and with docs in every chunk: each chunk task must keep
+    // that block, or its docs go missing
     val ppc = WandScorer.partsPerChunk(r1.numDocPartsHint,
-      spark.sparkContext.defaultParallelism)
+      spark.sparkContext.defaultParallelism, Long.MaxValue, WandScorer.PostingsPerChunk)
     val numChunks = (r1.numDocPartsHint + ppc - 1) / ppc
     assert(numChunks > 1)
     def chunkOf(docId: Long): Int = Ids.docPart(docId) / ppc
@@ -587,6 +617,8 @@ class RankIdentitySpec extends AnyFunSuite {
           PostingsCodec.decode(bs.head).map(p => chunkOf(p.docId)).distinct.length ==
             numChunks
       }.get
+    assert(WandScorer.partsPerChunk(r1.numDocPartsHint,
+      spark.sparkContext.defaultParallelism, rare.df, 1L) == ppc)
     val all = agree(r1, u1, Seq(rare.term), rare.df.toInt)
     assert(all.size == rare.df)
     assert(all.map(d => chunkOf(d._1)).distinct.size == numChunks)

@@ -51,9 +51,11 @@ class SplitShardSpec extends AnyFunSuite {
     val got = new JoinScorer(multi).topK(qy, 25).as[(Long, Float)].collect().toSeq
     val exp = new JoinScorer(parent).topK(qy, 25).as[(Long, Float)].collect().toSeq
     assert(got == exp, "split union view must equal the parent")
-    val wGot = new WandScorer(multi).topK(Seq("import", "spark", "merge"), 25)
-      .as[(Long, Float)].collect().toSeq
-    assert(wGot == exp)
+    // WAND too, on one chunk and on the full grid (one chunk per docPart)
+    for (wand <- Seq(new WandScorer(multi),
+      new WandScorer(multi, postingsPerChunk = 1L)))
+      assert(wand.topK(Seq("import", "spark", "merge"), 25)
+        .as[(Long, Float)].collect().toSeq == exp)
 
     // each child is independently searchable (local stats, its docs only)
     val loHits = new JoinScorer(lo)

@@ -58,17 +58,35 @@ class WandScaleSpec extends AnyFunSuite {
     }
   }
 
+  private val Default = WandScorer.PostingsPerChunk
+
   test("chunk grid is bounded by parallelism, not numDocParts") {
+    // ... and sized by the query's postings
+    def chunks(numDocParts: Int, postings: Long): Int = {
+      val ppc = WandScorer.partsPerChunk(numDocParts, 32, postings, Default)
+      (numDocParts + ppc - 1) / ppc
+    }
     // 2e5 docParts (the SCALE.md cluster figure), 32-way parallelism
-    val ppc = WandScorer.partsPerChunk(200000, 32)
-    val chunks = (200000 + ppc - 1) / ppc
-    assert(chunks <= 64, s"chunk count $chunks exceeds 2x parallelism")
+    val big = 1L << 40
+    val ppc = WandScorer.partsPerChunk(200000, 32, big, Default)
+    assert(chunks(200000, big) <= 64 && chunks(200000, big) >= 32,
+      s"chunk count ${chunks(200000, big)} is not ~2x parallelism")
     // a rare-term block spanning the WHOLE doc space fans out to <= chunks
     val span = WandScorer.chunksOf(0L, Ids.docId(199999, 5L), ppc).size
     assert(span <= 64, s"full-span block replicated $span times")
+    // a query below PostingsPerChunk postings is one chunk
+    for (parts <- Seq(1, 8, 256, 200000); postings <- Seq(0L, 1L,
+      Default - 1))
+      assert(chunks(parts, postings) == 1, s"$parts docParts, $postings postings")
+    // the chunk count never rises as the query's postings fall
+    for (parts <- Seq(8, 256, 4096, 200000)) {
+      val counts = (0 to 40).map(e => chunks(parts, 1L << e))
+      assert(counts == counts.sorted, s"$parts docParts: $counts")
+      assert(counts.last == math.min(parts, 64))
+    }
     // degenerate inputs stay sane
-    assert(WandScorer.partsPerChunk(1, 32) == 1)
-    assert(WandScorer.chunksOf(0L, 0L, WandScorer.partsPerChunk(1, 32)).size == 1)
+    assert(WandScorer.partsPerChunk(1, 32, big, Default) == 1)
+    assert(WandScorer.chunksOf(0L, 0L, WandScorer.partsPerChunk(1, 32, big, Default)).size == 1)
   }
 
   test("numDocParts=4096 build: shuffled block rows O(#blocks), ranks correct") {
@@ -81,8 +99,9 @@ class WandScaleSpec extends AnyFunSuite {
     assert(reader.numDocPartsHint > 1000 && reader.numDocPartsHint <= 4096)
 
     val terms = Seq("import", "spark", "println")
+    // the full grid (the index is too small for the default to split)
     val ppc = WandScorer.partsPerChunk(reader.numDocPartsHint,
-      spark.sparkContext.defaultParallelism)
+      spark.sparkContext.defaultParallelism, Long.MaxValue, Default)
     val nBlocks = reader.blocks(terms).count()
     val replicated = reader.blocks(terms)
       .flatMap(b => WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).map(_ => 1))
@@ -95,20 +114,23 @@ class WandScaleSpec extends AnyFunSuite {
     assert(replicated < nBlocks * 400,
       s"fan-out $replicated suggests per-docPart replication returned")
 
-    // ranks still correct at this docPart granularity: WAND == join path
+    // ranks still correct at this docPart granularity, on one chunk and
+    // on the full grid: WAND == join path
     val joiner = new JoinScorer(reader)
-    val wand = new WandScorer(reader)
-    for (ts <- Seq(Seq("import"), Seq("import", "spark"), terms)) {
-      val exp = joiner.topK(BoolQ(ts.map(t => (Occur.Should, TermQ(t)))), 10)
+    for (wand <- Seq(new WandScorer(reader),
+      new WandScorer(reader, postingsPerChunk = 1L))) {
+      for (ts <- Seq(Seq("import"), Seq("import", "spark"), terms)) {
+        val exp = joiner.topK(BoolQ(ts.map(t => (Occur.Should, TermQ(t)))), 10)
+          .as[(Long, Float)].collect().toSeq
+        val got = wand.topK(ts, 10).as[(Long, Float)].collect().toSeq
+        assert(got == exp, s"WAND != join for $ts")
+      }
+      val expA = joiner.topK(BoolQ(Seq(Occur.Must -> TermQ("import"),
+        Occur.Must -> TermQ("spark"))), 10).as[(Long, Float)].collect().toSeq
+      val gotA = wand.topK(Seq("import", "spark"), 10, conjunctive = true)
         .as[(Long, Float)].collect().toSeq
-      val got = wand.topK(ts, 10).as[(Long, Float)].collect().toSeq
-      assert(got == exp, s"WAND != join for $ts")
+      assert(gotA == expA)
     }
-    val expA = joiner.topK(BoolQ(Seq(Occur.Must -> TermQ("import"),
-      Occur.Must -> TermQ("spark"))), 10).as[(Long, Float)].collect().toSeq
-    val gotA = wand.topK(Seq("import", "spark"), 10, conjunctive = true)
-      .as[(Long, Float)].collect().toSeq
-    assert(gotA == expA)
   }
 
   private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
@@ -161,6 +183,12 @@ class WandScaleSpec extends AnyFunSuite {
     assert(rc.boundScale.exists { case (c, p) => c != 1f || p != 1f },
       s"no sub-index needs a bound rescale: ${rc.boundScale}")
 
+    // WAND runs on both readers at the default grid (one chunk at this
+    // size) and at the full grid, where merged blocks span chunk
+    // boundaries and the tombstones fall in several chunks
+    val fullPpc = WandScorer.partsPerChunk(rc.numDocPartsHint,
+      spark.sparkContext.defaultParallelism, Long.MaxValue, Default)
+    assert((rc.numDocPartsHint + fullPpc - 1) / fullPpc > 1)
     val rng = new scala.util.Random(20261018L)
     val pool = Vector("import", "return", "spark", "println", "merge",
       "dataset", "val", "def", "id001", "absentzzz")
@@ -168,7 +196,9 @@ class WandScaleSpec extends AnyFunSuite {
       val ts = Seq.fill(1 + rng.nextInt(3))(pool(rng.nextInt(pool.length)))
       val conj = rng.nextBoolean()
       val w = bits(new WandScorer(rc).topK(ts, 15, conj))
-      assert(w == bits(new WandScorer(ru).topK(ts, 15, conj)), s"WAND $ts $conj")
+      for (r <- Seq(rc, ru); ppc <- Seq(Default, 1L))
+        assert(w == bits(new WandScorer(r, ppc).topK(ts, 15, conj)),
+          s"WAND $ts $conj (${r eq rc} cached, $ppc postings per chunk)")
       assert(!w.exists(h => deleted.contains(h._1)), s"deleted doc in $ts")
       val occ = if (conj) Occur.Must else Occur.Should
       val q = BoolQ(ts.map(t => (occ, TermQ(t): Query)) :+

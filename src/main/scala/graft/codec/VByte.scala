@@ -14,7 +14,6 @@ object VByte {
         val nb = new Array[Byte](math.max(buf.length * 2, len + n))
         System.arraycopy(buf, 0, nb, 0, len); buf = nb
       }
-    def writeByte(b: Byte): Unit = { ensure(1); buf(len) = b; len += 1 }
     def writeVInt(v0: Int): Unit = {
       var i = v0; ensure(5)
       while ((i & ~0x7F) != 0) { buf(len) = ((i & 0x7F) | 0x80).toByte; len += 1; i >>>= 7 }
@@ -85,8 +84,6 @@ object VByte {
   final class Reader(bytes: Array[Byte]) {
     private var p = 0
     def pos: Int = p
-    def hasMore: Boolean = p < bytes.length
-    def readByte(): Byte = { val b = bytes(p); p += 1; b }
     def readVInt(): Int = {
       var b = bytes(p); p += 1
       var i = b & 0x7F

@@ -66,7 +66,6 @@ object CompositeId {
     def includes(h: Int): Boolean = h >= min && h <= max
     def overlaps(o: HashRange): Boolean =
       includes(o.min) || includes(o.max) || o.includes(min)
-    def isSubsetOf(o: HashRange): Boolean = min >= o.min && max <= o.max
   }
   val fullRange: HashRange = HashRange(Int.MinValue, Int.MaxValue)
 

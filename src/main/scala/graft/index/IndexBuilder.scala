@@ -802,13 +802,8 @@ object IndexBuilder {
     import org.apache.spark.sql.functions.{col, max => fmax, struct}
     val r = MultiIndexReader.open(spark, baseDir, cfg.numBuckets,
       cacheData = false)
-    val dm = r.docmeta.toDF()
-    val liveRows = r.deletedDocs match {
-      case None => dm
-      case Some(d) => dm.join(d, Seq("docId"), "left_anti")
-    }
     // newest live version per key (max docId wins, as in realtimeGet)
-    val live = liveRows.groupBy(col("repo"), col("path"))
+    val live = r.liveOnly(r.docmeta.toDF()).groupBy(col("repo"), col("path"))
       .agg(fmax(struct(col("docId"), col("commit"))).as("v"))
       .select(col("repo"), col("path"), col("v.commit").as("liveCommit"))
     val joined = input.join(live, Seq("repo", "path"), "left")
@@ -834,26 +829,12 @@ object IndexBuilder {
     * callers' references stay valid; collection/term statistics are
     * recomputed over the SURVIVING docs only (post-merge reference
     * semantics — scores shift exactly as Lucene's do after a merge with
-    * deletes). Implementation: union the already-inverted segment rows
-    * (no re-analysis), anti-join tombstones, then run the standard
-    * stats/merge stages over the combined forward index. */
+    * deletes). One [[rewrite]] of every committed sub-index. */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               cfg: IndexConfig): String = {
-    import org.apache.spark.sql.functions.col
-    val dirs = subIndexDirs(baseDir)
-    val segs = dirs.map(d => spark.read.parquet(s"$d/segments"))
-      .reduce(_ unionByName _)
-    val dels = dirs
-      .filter(d => Files.exists(Paths.get(d, "deletes")))
-      .map(d => spark.read.parquet(s"$d/deletes").select(col("docId")))
-    val live =
-      if (dels.isEmpty) segs
-      else segs.join(dels.reduce(_ union _), Seq("docId"), "left_anti")
-    live.write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$outDir/segments")
-    writeMarker(outDir, "segments", Map())
-    // stage 1 is committed above, so build() runs only stats + merge
-    build(spark, spark.emptyDataFrame, outDir, cfg)
+    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = true)(
+      segs => Seq(outDir -> segs))
+    outDir
   }
 
   /** Shard split (SolrCloud SPLITSHARD — solr/core/src/java/org/apache/
@@ -861,37 +842,19 @@ object IndexBuilder {
     * lucene/misc/.../IndexSplitter posture): split one index into two
     * independently searchable children at a docId boundary. Like the
     * reference, the children's postings are REBUILT per sub-range — here
-    * by filtering the per-doc segment rows (a columnar scan, the cheap
-    * part) and re-running only the stats + merge stages per child; docIds
-    * are preserved, so a MultiIndexReader over both children is
-    * float/rank-identical to the parent (global stats come from the union
-    * — the same mechanism the NRT append view uses). Pending deletes
-    * follow their docs into the matching child. */
+    * by a [[rewrite]] that filters the per-doc segment rows of base +
+    * deltas (a columnar scan, the cheap part) and re-runs only the stats +
+    * merge stages per child; docIds are preserved, so a MultiIndexReader
+    * over both children is float/rank-identical to the parent (global
+    * stats come from the union — the same mechanism the NRT append view
+    * uses). Pending deletes follow their docs into the matching child. */
   def splitShard(spark: SparkSession, baseDir: String,
                  outLo: String, outHi: String, midDocId: Long,
                  cfg: IndexConfig): (String, String) = {
     import org.apache.spark.sql.functions.col
-    // whole-collection scope like compact(): union base + delta
-    // sub-indexes so appended docs and their tombstones follow the split
-    // (a bare baseDir read would silently drop every delta doc from both
-    // children and could resurrect delta-tombstoned docs)
-    val allDirs = subIndexDirs(baseDir)
-    val segs = allDirs.map(d => spark.read.parquet(s"$d/segments"))
-      .reduce(_ union _)
-    val delDirs = allDirs.filter(d => Files.exists(Paths.get(d, "deletes")))
-    val dels =
-      if (delDirs.isEmpty) None
-      else Some(delDirs.map(d => spark.read.parquet(s"$d/deletes"))
-        .reduce(_ union _).distinct())
-    Seq(outLo -> (col("docId") < midDocId),
-        outHi -> (col("docId") >= midDocId)).foreach { case (out, pred) =>
-      segs.where(pred).write.mode("overwrite")
-        .option("compression", "zstd").parquet(s"$out/segments")
-      writeMarker(out, "segments", Map())
-      dels.foreach(_.where(pred).write.mode("overwrite")
-        .parquet(s"$out/deletes"))
-      build(spark, spark.emptyDataFrame, out, cfg)
-    }
+    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = false)(segs =>
+      Seq(outLo -> segs.where(col("docId") < midDocId),
+        outHi -> segs.where(col("docId") >= midDocId)))
     (outLo, outHi)
   }
 
@@ -934,35 +897,65 @@ object IndexBuilder {
   }
 
   /** MultiPassIndexSplitter: materialize the N-way split as N child
-    * indexes (same per-doc filtered copy + child rebuild as splitShard,
-    * whole-collection scope incl. deltas; tombstones follow their docs
-    * via a semi-join). The source is read once per part, matching the
-    * reference's N-pass posture. */
+    * indexes (the same [[rewrite]] as splitShard, whole-collection scope
+    * incl. deltas, tombstones following their docs). The source is read
+    * once per part, matching the reference's N-pass posture. */
   def multiPassSplit(spark: SparkSession, baseDir: String,
                      outDirs: Seq[String], seq: Boolean,
                      cfg: IndexConfig): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    val allDirs = subIndexDirs(baseDir)
-    val segs = allDirs.map(d => spark.read.parquet(s"$d/segments"))
-      .reduce(_ union _)
-    val delDirs = allDirs.filter(d => Files.exists(Paths.get(d, "deletes")))
-    val dels =
-      if (delDirs.isEmpty) None
-      else Some(delDirs.map(d => spark.read.parquet(s"$d/deletes"))
-        .reduce(_ union _).distinct())
-    val asg = multiPassAssign(segs.select("docId"), outDirs.length, seq)
-      .cache()
-    outDirs.zipWithIndex.foreach { case (out, i) =>
-      val partDocs = asg.where(col("part") === i.toLong).select("docId")
-      segs.join(partDocs, "docId", "left_semi").write.mode("overwrite")
-        .option("compression", "zstd").parquet(s"$out/segments")
+    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = false) { segs =>
+      // materialized once, so the N parts see one ordinal assignment
+      val asg = multiPassAssign(segs.select("docId"), outDirs.length, seq)
+        .localCheckpoint()
+      outDirs.zipWithIndex.map { case (out, i) =>
+        out -> segs.join(asg.where(col("part") === i.toLong).select("docId"),
+          "docId", "left_semi")
+      }
+    }
+    outDirs
+  }
+
+  /** The one sub-index rewrite behind [[compact]], [[compactTiered]],
+    * [[splitShard]] and [[multiPassSplit]] (the reference's one
+    * SegmentMerger pass): union the `sources`' already-inverted segment
+    * rows once, read every committed sub-index's tombstones once, cut the
+    * rows into `children` (outDir, rows) and commit each child's segments
+    * stage before [[build]] runs the stats + merge stages. With `purge` (a
+    * merge) tombstoned docs are dropped and stats recomputed; the
+    * sources' tombstones for docs OUTSIDE them move into the child, as a
+    * tiered merge deletes its sources. Without it (a split) each
+    * tombstone follows its doc, so the children's summed stats are the
+    * parent's. A child's `deletes/` precedes its segments marker. */
+  private def rewrite(spark: SparkSession, baseDir: String,
+                      sources: Seq[String], cfg: IndexConfig, purge: Boolean)
+                     (children: DataFrame => Seq[(String, DataFrame)]): Unit = {
+    val committed = subIndexDirs(baseDir)
+    val delsOf: Map[String, DataFrame] = committed
+      .filter(d => Files.exists(Paths.get(d, "deletes")))
+      .map(d => d -> spark.read.parquet(s"$d/deletes").select("docId")).toMap
+    val allDels = delsOf.values.reduceOption(_ union _)
+    val segs = sources.map(d => spark.read.parquet(s"$d/segments"))
+      .reduce(_ unionByName _)
+    val rows =
+      if (purge) allDels.fold(segs)(segs.join(_, Seq("docId"), "left_anti"))
+      else segs
+    val outside =
+      if (!purge || committed.forall(sources.contains)) None
+      else sources.flatMap(delsOf.get).reduceOption(_ union _)
+        .map(_.join(segs.select("docId"), Seq("docId"), "left_anti"))
+    children(rows).foreach { case (out, kept) =>
+      kept.write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$out/segments")
+      val dels =
+        if (purge) outside
+        else allDels.map(_.join(spark.read.parquet(s"$out/segments")
+          .select("docId"), Seq("docId"), "left_semi"))
+      dels.map(_.distinct()).filterNot(_.isEmpty)
+        .foreach(_.write.mode("overwrite").parquet(s"$out/deletes"))
       writeMarker(out, "segments", Map())
-      dels.foreach(_.join(partDocs, "docId", "left_semi")
-        .write.mode("overwrite").parquet(s"$out/deletes"))
       build(spark, spark.emptyDataFrame, out, cfg)
     }
-    asg.unpersist()
-    outDirs
   }
 
   /** The committed sub-index directories of `baseDir`: the base, then
@@ -984,13 +977,18 @@ object IndexBuilder {
       .filter(f => f.isDirectory && f.getName.startsWith("delta_") &&
         stageDone(f.getAbsolutePath, "done"))
       .sortBy(f => f.getName.stripPrefix("delta_").toLong)
-    val replaced: Set[String] = deltas
-      .map(_.toPath.resolve("replaces.txt")).filter(Files.exists(_))
-      .flatMap(p => Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-        .map(_.trim).filter(_.nonEmpty))
-      .toSet
+    val replaced: Set[String] = deltas.flatMap(f => replacesOf(f.toPath)).toSet
     Seq(baseDir).filter(stageDone(_, "done")) ++
       deltas.filterNot(f => replaced.contains(f.getName)).map(_.getAbsolutePath)
+  }
+
+  /** The dir names a merged delta's replaces.txt lists (none without
+    * one). */
+  private def replacesOf(dir: java.nio.file.Path): Seq[String] = {
+    val p = dir.resolve("replaces.txt")
+    if (!Files.exists(p)) Nil
+    else Files.readAllLines(p).toArray(Array.empty[String]).toSeq
+      .map(_.trim).filter(_.nonEmpty)
   }
 
   /** Next free delta id: max over ALL delta_* names on disk (including
@@ -1010,12 +1008,15 @@ object IndexBuilder {
     * only that tier's smallest `maxMergeAtOnce` members — the base index
     * and every other delta stay byte-untouched (cold). The merged result
     * commits as a new delta whose replaces.txt + done marker atomically
-    * hide the sources (see [[subIndexDirs]]); tombstones covering merged
-    * docs are purged from the merged data exactly like [[compact]] (the
-    * tombstone FILES stay — they no-op once their docs are gone and a
-    * full compact clears them). Returns the merged dir, or None when no
-    * tier exceeds the threshold (the common steady-state call is free:
-    * one directory listing + one tiny collstats read per delta). */
+    * hide the sources (see [[subIndexDirs]]). It is one [[rewrite]]:
+    * tombstones covering merged docs are purged from the merged data
+    * exactly like [[compact]] (the tombstone FILES of the sub-indexes left
+    * in place stay — they no-op once their docs are gone and a full
+    * compact clears them), and the sources' tombstones for docs outside
+    * the merge move into the merged delta before it commits. Returns the
+    * merged dir, or None when no tier exceeds the threshold (the common
+    * steady-state call is free: one directory listing + one tiny
+    * collstats read per delta). */
   def compactTiered(spark: SparkSession, baseDir: String, cfg: IndexConfig,
                     segsPerTier: Int = 10, maxMergeAtOnce: Int = 10,
                     floorDocs: Long = 4096L): Option[String] =
@@ -1048,28 +1049,21 @@ object IndexBuilder {
         }
       group.map { srcs =>
         val out = s"$baseDir/delta_${nextDeltaId(baseDir)}"
-        val segs = srcs.map(d => spark.read.parquet(s"$d/segments"))
-          .reduce(_ unionByName _)
-        // tombstones from EVERY sub-index apply (deleteDocs writes to the
-        // base dir, but a delta dir may carry its own)
-        val dels = subIndexDirs(baseDir)
-          .filter(d => Files.exists(Paths.get(d, "deletes")))
-          .map(d => spark.read.parquet(s"$d/deletes")
-            .select(org.apache.spark.sql.functions.col("docId")))
-        val live =
-          if (dels.isEmpty) segs
-          else segs.join(dels.reduce(_ union _), Seq("docId"), "left_anti")
-        live.write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$out/segments")
-        writeMarker(out, "segments", Map())
-        // replaces.txt BEFORE build(): build's final "done" marker is the
-        // atomic visibility switch for both the merge and the hiding
-        Files.writeString(Paths.get(out, "replaces.txt"),
-          srcs.map(d => Paths.get(d).getFileName.toString).mkString("\n"))
-        build(spark, spark.emptyDataFrame, out, cfg)
-        // sources are invisible now — cleanup is safe and best-effort
-        // (a crash here just leaves dead files for the next call)
-        srcs.foreach(d => deleteRecursively(Paths.get(d)))
+        // what the merge hides: its sources, plus every dir a source still
+        // hides (left on disk by a crash before cleanup) — dropping that
+        // source must not bring them back
+        val hidden = srcs.map(Paths.get(_)).flatMap(d =>
+          d.getFileName.toString +:
+            replacesOf(d).filter(n => Files.exists(d.resolveSibling(n))))
+        // replaces.txt first: only the done marker the rewrite ends with
+        // makes the merge, and with it the hiding, visible
+        Files.createDirectories(Paths.get(out))
+        Files.writeString(Paths.get(out, "replaces.txt"), hidden.mkString("\n"))
+        rewrite(spark, baseDir, srcs, cfg, purge = true)(
+          segs => Seq(out -> segs))
+        // the hidden dirs are invisible now — cleanup is safe and
+        // best-effort (a crash here just leaves dead files)
+        hidden.foreach(n => deleteRecursively(Paths.get(baseDir, n)))
         out
       }
     }

@@ -16,11 +16,6 @@ import graft.codec.SmallFloat
   *    plain sum of clause scores [:289-293, Similarity.java:121-140]; we fix
   *    the (heap-order-dependent in the reference) summation order to
   *    query-clause order, left-to-right — the oracle uses the same rule.
-  *
-  * Double-mode mirrors the same formulas (including the SmallFloat norm
-  * quantization) entirely in Double so that an external ANSI-SQL oracle
-  * (DuckDB) can reproduce values to ~1e-15; used only by the SQL-checked
-  * queries, never by the rank-identity path.
   */
 object BM25 {
 
@@ -68,21 +63,8 @@ object BM25 {
     s
   }
 
-  // ---- double-precision mirror (SQL-oracle mode) ----
-
-  def idfD(docFreq: Long, maxDoc: Long): Double =
-    math.log(1d + (maxDoc - docFreq + 0.5d) / (docFreq + 0.5d))
-
-  def avgFieldLengthD(sumTotalTermFreq: Long, maxDoc: Long): Double =
-    if (sumTotalTermFreq <= 0) 1d else sumTotalTermFreq / maxDoc.toDouble
-
   /** Quantized decoded field length for a raw dl (norm byte round-trip,
     * widened to double; float->double is exact). */
   def quantizedDl(dl: Int): Double =
     SmallFloat.Bm25NormTable(SmallFloat.normByte(dl) & 0xFF).toDouble
-
-  def scoreD(idf: Double, tf: Long, dl: Int, avgdl: Double): Double = {
-    val cache = K1 * ((1d - B) + B * quantizedDl(dl) / avgdl)
-    idf * (K1 + 1d) * tf / (tf + cache)
-  }
 }

@@ -382,12 +382,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // crash after compactTiered wrote the merged segments and
     // replaces.txt, before build() committed the done marker
     val half = Paths.get(dir, s"delta_${IndexBuilder.nextDeltaId(dir)}")
-    def copyTree(src: Path, dst: Path): Unit =
-      Files.walk(src).sorted().forEach { p =>
-        val q = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(q)
-        else Files.copy(p, q)
-      }
     copyTree(Paths.get(dir, "delta_0", "segments"), half.resolve("segments"))
     Files.writeString(half.resolve("replaces.txt"), "delta_0")
     assert(!IndexBuilder.subIndexDirs(dir).contains(half.toString))
@@ -508,6 +502,119 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(IndexBuilder.deleteByQuery(spark, dir, cfg, q) > 0)
     assert(!Files.exists(Paths.get(dir, "write.lock")), "lock released")
   }
+
+  // ---- tiered compaction under tombstones, and its crash states ----
+
+  /** A small base plus three 40-doc deltas, tombstoned through three
+    * homes: the base dir (base, delta_0 and delta_2 docs), delta_0 (delta_1
+    * docs: inside a merge of delta_0 + delta_1) and delta_1 (base and
+    * delta_2 docs: outside that merge). Returns the dir, the config that
+    * covers every delta and the live docIds. */
+  private def tieredFixture(prefix: String): (String, IndexConfig, Set[Long]) = {
+    import org.apache.spark.sql.functions.lit
+    val dir = SparkSuite.tmpDir(prefix)
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
+    val cfgT = cfg.copy(numDocParts = cfg.numDocParts + 3)
+    (0 until 3).foreach { k =>
+      IndexBuilder.append(spark, CorpusGen.generate(spark, 40, seed = 300L + k)
+        .toDF().withColumn("docPart", lit(cfg.numDocParts + k)),
+        dir, k.toLong, cfgT)
+    }
+    val ids = MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).docmeta.select("docId").as[Long].collect().sorted.toSeq
+    def of(part: Int): Seq[Long] = ids.filter(Ids.docPart(_) == part)
+    val baseIds = ids.filter(Ids.docPart(_) < cfg.numDocParts)
+    val Seq(d0, d1, d2) = (0 until 3).map(k => of(cfg.numDocParts + k))
+    val viaBase = baseIds.take(3) ++ d0.take(2) ++ d2.take(2)
+    val viaD0 = d1.slice(2, 4)
+    val viaD1 = baseIds.slice(3, 6) ++ d2.slice(2, 4)
+    Seq(dir -> viaBase, s"$dir/delta_0" -> viaD0, s"$dir/delta_1" -> viaD1)
+      .foreach { case (home, picked) =>
+        IndexBuilder.deleteDocs(spark, home, picked.toDF("docId")) }
+    (dir, cfgT, ids.toSet -- viaBase -- viaD0 -- viaD1)
+  }
+
+  private def open(dir: String): SearchReader =
+    MultiIndexReader.open(spark, dir, cfg.numBuckets, cacheData = false)
+
+  /** Asserts a view holds each docId once and exactly `live` live. */
+  private def assertLive(r: SearchReader, live: Set[Long], clue: String): Unit = {
+    val all = r.docmeta.select("docId").as[Long].collect()
+    assert(all.length == all.distinct.length, s"$clue: duplicate docIds")
+    val got = r.liveOnly(r.docmeta.toDF()).select("docId").as[Long]
+      .collect().toSet
+    assert(got == live, s"$clue: resurrected ${(got -- live).take(5)}, " +
+      s"missing ${(live -- got).take(5)}")
+  }
+
+  test("compactTiered keeps a merged source's tombstones for docs outside " +
+    "the merge") {
+    val (dir, cfgT, live) = tieredFixture("graft-tier-del")
+    assertLive(open(dir), live, "before")
+    // segsPerTier 1, two at once: the two smallest, delta_0 and delta_1
+    val merged = IndexBuilder.compactTiered(spark, dir, cfgT,
+      segsPerTier = 1, maxMergeAtOnce = 2)
+    assert(merged.exists(_.endsWith("delta_3")), merged.toString)
+    assert(!Files.exists(Paths.get(dir, "delta_1")))
+    // delta_1's tombstones for base and delta_2 docs outlive delta_1
+    assertLive(open(dir), live, "after the merge")
+    // the docs tombstoned inside the merge are purged from its data
+    val mergedIds = new IndexReader(spark, merged.get, cfg.numBuckets,
+      cacheData = false).docmeta.select("docId").as[Long].collect().toSet
+    assert(mergedIds == live.filter(id =>
+      Seq(0, 1).map(_ + cfg.numDocParts).contains(Ids.docPart(id))))
+  }
+
+  test("compactTiered crash states: after the merged segments, after " +
+    "replaces.txt, after the done marker; each view stays exact and the " +
+    "next compactTiered completes") {
+    val (src, cfgT, live) = tieredFixture("graft-crash-src")
+    // a completed merge of delta_0 + delta_1 with its sources put back:
+    // a crash after the done marker, before the sources were deleted
+    val saved = SparkSuite.tmpDir("graft-crash-saved")
+    Seq("delta_0", "delta_1").foreach(d =>
+      copyTree(Paths.get(src, d), Paths.get(saved, d)))
+    assert(IndexBuilder.compactTiered(spark, src, cfgT, segsPerTier = 1,
+      maxMergeAtOnce = 2).exists(_.endsWith("delta_3")))
+    Seq("delta_0", "delta_1").foreach(d =>
+      copyTree(Paths.get(saved, d), Paths.get(src, d)))
+    // what of the merged delta_3 each crash leaves on disk
+    val states = Seq(
+      "after the merged segments" -> Set("replaces.txt", "segments"),
+      "after replaces.txt" -> Set("replaces.txt"),
+      "after the done marker" -> Paths.get(src, "delta_3").toFile.list().toSet)
+    for ((state, left) <- states) {
+      val dir = SparkSuite.tmpDir("graft-crash")
+      copyTree(Paths.get(src), Paths.get(dir))
+      Paths.get(dir, "delta_3").toFile.listFiles()
+        .filterNot(f => left(f.getName)).foreach(f => deleteRec(f.toPath))
+      assertLive(open(dir), live, s"$state: reader")
+
+      val out = SparkSuite.tmpDir("graft-crash-compact")
+      IndexBuilder.compact(spark, dir, out, cfgT)
+      assertLive(open(out), live, s"$state: compact")
+
+      val (lo, hi) = IndexBuilder.splitShard(spark, dir,
+        SparkSuite.tmpDir("graft-crash-lo"), SparkSuite.tmpDir("graft-crash-hi"),
+        4L << 40, cfgT)
+      assertLive(new MultiIndexReader(Seq(lo, hi).map(d =>
+        new IndexReader(spark, d, cfg.numBuckets, cacheData = false))), live,
+        s"$state: splitShard")
+
+      assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
+        .isDefined, s"$state: next compactTiered")
+      assertLive(open(dir), live, s"$state: after the next compactTiered")
+      assert(IndexBuilder.subIndexDirs(dir).size == 2,
+        s"$state: ${IndexBuilder.subIndexDirs(dir)}")
+    }
+  }
+
+  private def copyTree(src: Path, dst: Path): Unit =
+    Files.walk(src).sorted().forEach { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q)
+    }
 
   private def deleteRec(p: Path): Unit =
     if (Files.exists(p))

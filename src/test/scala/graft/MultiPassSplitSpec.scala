@@ -74,4 +74,12 @@ class MultiPassSplitSpec extends AnyFunSuite {
     assert(hits.nonEmpty)
     assert(hits.subsetOf(idsPerChild(1)))
   }
+
+  test("physical split of a base plus a delta with tombstones: union == " +
+    "parent live view, tombstones carried into the children") {
+    val b = SplitFixture.build("mps-del", cfg, 300, 60)
+    val outs = (0 until 3).map(i => SparkSuite.tmpDir(s"mps-del-$i"))
+    IndexBuilder.multiPassSplit(spark, b.dir, outs, seq = false, b.cfg)
+    SplitFixture.assertSplitMatches(b, outs)
+  }
 }

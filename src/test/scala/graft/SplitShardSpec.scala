@@ -63,4 +63,14 @@ class SplitShardSpec extends AnyFunSuite {
       .as[(Long, Float)].collect()
     assert(loHits.nonEmpty && loHits.forall(_._1 < mid))
   }
+
+  test("split of a base plus a delta with tombstones: union == parent " +
+    "live view, tombstones carried into the children") {
+    val b = SplitFixture.build("graft-split-del", cfg, 400, 60)
+    val mid = Ids.docId(2, 0L)
+    val (loDir, hiDir) = IndexBuilder.splitShard(spark, b.dir,
+      SparkSuite.tmpDir("graft-split-del-lo"),
+      SparkSuite.tmpDir("graft-split-del-hi"), mid, b.cfg)
+    SplitFixture.assertSplitMatches(b, Seq(loDir, hiDir))
+  }
 }

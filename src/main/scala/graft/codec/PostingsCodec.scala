@@ -38,68 +38,55 @@ final case class PostingBlock(
 /** One decoded posting. */
 final case class Posting(docId: Long, tf: Int, positions: Array[Int], norm: Byte)
 
-/** One pre-encoded posting as it rides the merge shuffle: `pb` =
-  * VInt(tf) ++ tf VInt position-deltas (graft.index.SegPosting layout). */
+/** One pre-encoded posting, the form a posting keeps from invert to
+  * block: `pb` = VInt(tf) ++ tf VInt position-deltas (the
+  * graft.index.SegPosting layout). */
 final case class PrePosting(docId: Long, norm: Byte, pb: Array[Byte])
 
+/** One writer, [[PostingsCodec.encodePre]], frames every block: the
+  * build's map and reduce sides and the WAND overlap repair, as the
+  * reference's Lucene50PostingsWriter serves both flush and merge
+  * (SegmentMerger.java:74-140, through FieldsConsumer.merge).
+  * [[PostingsCodec.encode]] is the `Posting` adapter, kept for callers
+  * that hold decoded postings. */
 object PostingsCodec {
 
   /** 128, the reference's postings block size / skip interval
     * (Lucene50PostingsFormat.java:398). */
   final val BlockSize = 128
 
-  /** Encode one term's postings (sorted by docId asc) into blocks.
-    * `cache` is the 256-entry BM25 norm cache k1*((1-b)+b*dl/avgdl)
-    * (BM25Similarity.java:200-212) used only for the maxPartial bound;
-    * pass null to skip (maxPartial = NaN).
-    */
+  /** The `Posting` adapter over [[encodePre]], kept for callers that
+    * hold decoded postings (tests, perfbench's codec probe): each
+    * posting's positions become its `pb` bytes, then the one writer
+    * frames the blocks. */
   def encode(term: String, postings: Iterator[Posting],
-             cache: Array[Float]): Iterator[PostingBlock] = {
-    val grouped = postings.grouped(BlockSize)
-    grouped.map { chunk =>
-      val docW = new VByte.Writer(chunk.size * 2)
-      val posW = new VByte.Writer(chunk.size * 2)
-      val nrm = new Array[Byte](chunk.size)
-      var prev = chunk.head.docId
-      val firstDoc = chunk.head.docId
-      var maxTf = 0
-      var sumTf = 0L
-      var maxPartial = Float.NegativeInfinity
-      var i = 0
-      while (i < chunk.size) {
-        val p = chunk(i)
-        val delta = p.docId - prev
-        prev = p.docId
-        if (p.tf == 1) docW.writeVLong((delta << 1) | 1L)
-        else { docW.writeVLong(delta << 1); docW.writeVInt(p.tf) }
-        nrm(i) = p.norm
-        var prevPos = 0
-        var j = 0
-        while (j < p.positions.length) {
-          posW.writeVInt(p.positions(j) - prevPos); prevPos = p.positions(j); j += 1
-        }
-        if (p.tf > maxTf) maxTf = p.tf
-        sumTf += p.tf
-        if (cache != null) {
-          val f = p.tf.toFloat
-          val partial = f / (f + cache(p.norm & 0xFF))
-          if (partial > maxPartial) maxPartial = partial
-        }
-        i += 1
-      }
-      PostingBlock(term, firstDoc, prev, chunk.size, maxTf, sumTf,
-        if (cache == null) Float.NaN else maxPartial,
-        docW.toBytes, nrm, posW.toBytes)
-    }
+             cache: Array[Float]): Iterator[PostingBlock] =
+    encodePre(term, postings.map(p =>
+      PrePosting(p.docId, p.norm, pb(p.positions, 0, p.positions.length))),
+      cache)
+
+  /** A posting's `pb` from ascending positions `positions[from, until)`:
+    * VInt(tf) ++ delta-VByte positions, sized exactly (two cheap passes
+    * beat a growable buffer + copy-out in the invert hot loop). */
+  private[graft] def pb(positions: Array[Int], from: Int, until: Int): Array[Byte] = {
+    val tf = until - from
+    var size = VByte.sizeVInt(tf)
+    var prev = 0
+    var k = from
+    while (k < until) { size += VByte.sizeVInt(positions(k) - prev); prev = positions(k); k += 1 }
+    val out = new Array[Byte](size)
+    var off = VByte.putVInt(out, 0, tf)
+    prev = 0
+    k = from
+    while (k < until) { off = VByte.putVInt(out, off, positions(k) - prev); prev = positions(k); k += 1 }
+    out
   }
 
-  /** Encode one term's PRE-ENCODED postings (sorted by docId asc) into
-    * blocks — the builder's hot path. Each posting's position deltas are
-    * already VByte bytes (SegPosting.pb = VInt(tf) ++ deltas), so block
-    * posBytes are assembled by raw byte concatenation; only the doc-gap
-    * stream is encoded here. Float ops for maxPartial are identical to
-    * [[encode]] (CodecSpec proves block-for-block equality of the paths).
-    */
+  /** Encode one term's pre-encoded postings (sorted by docId asc) into
+    * blocks. `pb`'s tf prefix goes to the doc stream; its position bytes
+    * are concatenated into posBytes verbatim. `cache` is the 256-entry BM25 norm cache
+    * k1*((1-b)+b*dl/avgdl) (BM25Similarity.java:200-212) used only for
+    * the maxPartial bound; pass null to skip it (maxPartial = NaN). */
   def encodePre(term: String, postings: Iterator[PrePosting],
                 cache: Array[Float]): Iterator[PostingBlock] = {
     val grouped = postings.grouped(BlockSize)
@@ -115,16 +102,8 @@ object PostingsCodec {
       var i = 0
       while (i < chunk.size) {
         val p = chunk(i)
-        // tf prefix of pb
-        var q = 0
-        var b = p.pb(q); q += 1
-        var tf = b & 0x7F
-        var shift = 7
-        while ((b & 0x80) != 0) {
-          b = p.pb(q); q += 1
-          tf |= (b & 0x7F) << shift
-          shift += 7
-        }
+        val tf = VByte.firstVInt(p.pb)
+        val q = VByte.sizeVInt(tf)
         val delta = p.docId - prev
         prev = p.docId
         if (tf == 1) docW.writeVLong((delta << 1) | 1L)
@@ -144,6 +123,35 @@ object PostingsCodec {
         if (cache == null) Float.NaN else maxPartial,
         docW.toBytes, nrm, posW.toBytes)
     }
+  }
+
+  /** Decode a block back to pre-encoded postings, the inverse of
+    * [[encodePre]]: each posting's position bytes are sliced out of
+    * posBytes and prefixed with VInt(tf), never decoded to ints. */
+  def decodePre(b: PostingBlock): Array[PrePosting] = {
+    val out = new Array[PrePosting](b.count)
+    val docR = new VByte.Reader(b.docBytes)
+    val pos = b.posBytes
+    var prev = b.firstDoc
+    var start = 0
+    var i = 0
+    while (i < b.count) {
+      val raw = docR.readVLong()
+      val tf = if ((raw & 1L) == 1L) 1 else docR.readVInt()
+      prev += (raw >>> 1)
+      // tf VInts end at the tf bytes without the continuation bit
+      var end = start
+      var n = 0
+      while (n < tf) { if ((pos(end) & 0x80) == 0) n += 1; end += 1 }
+      val q = VByte.sizeVInt(tf)
+      val bytes = new Array[Byte](q + end - start)
+      VByte.putVInt(bytes, 0, tf)
+      System.arraycopy(pos, start, bytes, q, end - start)
+      out(i) = PrePosting(prev, b.nrmBytes(i), bytes)
+      start = end
+      i += 1
+    }
+    out
   }
 
   /** Decode a block back to postings (with positions). */

@@ -34,35 +34,14 @@ object VByte {
   }
 
   /** The first VInt of a byte array (e.g. SegPosting.pb's tf prefix). */
-  def firstVInt(bytes: Array[Byte]): Int = {
-    var q = 0
-    var b = bytes(q); q += 1
-    var v = b & 0x7F
-    var shift = 7
-    while ((b & 0x80) != 0) {
-      b = bytes(q); q += 1
-      v |= (b & 0x7F) << shift
-      shift += 7
-    }
-    v
-  }
+  def firstVInt(bytes: Array[Byte]): Int = new Reader(bytes).readVInt()
 
   /** ALL VInts in `bytes` — e.g. a SegPosting.pb, which is VInt(tf)
     * followed by tf position deltas (term-vector decode path). */
   def allVInts(bytes: Array[Byte]): Array[Int] = {
     val out = new scala.collection.mutable.ArrayBuffer[Int](8)
-    var q = 0
-    while (q < bytes.length) {
-      var b = bytes(q); q += 1
-      var v = b & 0x7F
-      var shift = 7
-      while ((b & 0x80) != 0) {
-        b = bytes(q); q += 1
-        v |= (b & 0x7F) << shift
-        shift += 7
-      }
-      out += v
-    }
+    val r = new Reader(bytes)
+    while (r.pos < bytes.length) out += r.readVInt()
     out.toArray
   }
 

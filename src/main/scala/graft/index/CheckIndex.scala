@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.codec.{PostingBlock, PostingsCodec, SmallFloat}
+import graft.codec.{PostingsCodec, SmallFloat}
 
 /** Index validation job (reference:
   * lucene/core/src/java/org/apache/lucene/index/CheckIndex.java:704,1688-1696
@@ -36,19 +36,17 @@ object CheckIndex {
     val cacheB = spark.sparkContext.broadcast(reader.normCache)
     val pathCacheB = spark.sparkContext.broadcast(reader.normCacheFor("path"))
     val facts = spark.read.parquet(s"${reader.dir}/postings").drop("wave")
-      .select($"key", $"firstDoc", $"lastDoc", $"count", $"maxTf",
-        $"sumTf", $"maxPartial", $"docBytes", $"nrmBytes", $"posBytes")
-      .as[(Long, Long, Long, Int, Int, Long, Float, Array[Byte], Array[Byte], Array[Byte])]
-      .map { case (key, fd, ld, cnt, mtf, stf, mp, db, nb, pb) =>
-        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(
-          PostingBlock("", fd, ld, cnt, mtf, stf, mp, db, nb, pb))
+      .as[BlockRowK]
+      .map { row =>
+        val b = row.withTerm("")
+        val (docs, tfs, nrms) = PostingsCodec.decodeDocs(b)
         var sorted = true
         var maxTf = 0
         var sumTf = 0L
         var boundSafe = true
         // the bound must be checked with the block's FIELD cache (same
         // avgdl the scorer will use); field rides in the key's field bit
-        val c = if (TermKeys.isPath(key)) pathCacheB.value
+        val c = if (TermKeys.isPath(row.key)) pathCacheB.value
                 else cacheB.value
         var i = 0
         while (i < docs.length) {
@@ -58,13 +56,13 @@ object CheckIndex {
           // WAND safety: declared upper-bound factor must dominate the
           // true per-posting partial tf/(tf+norm) in the same float ops
           val partial = tfs(i).toFloat / (tfs(i).toFloat + c(nrms(i) & 0xFF))
-          if (partial > mp) boundSafe = false
+          if (partial > b.maxPartial) boundSafe = false
           i += 1
         }
         val inRange = docs.isEmpty ||
-          (docs.head == fd && docs.last == ld && docs.head >= fd && docs.last <= ld)
-        BlockFacts(key, fd, ld, cnt, docs.length, sumTf, maxTf, mtf, stf,
-          sorted, inRange, boundSafe)
+          (docs.head == b.firstDoc && docs.last == b.lastDoc)
+        BlockFacts(row.key, b.firstDoc, b.lastDoc, b.count, docs.length,
+          sumTf, maxTf, b.maxTf, b.sumTf, sorted, inRange, boundSafe)
       }.cache()
 
     // stored block metadata must equal the decoded truth — the term dict

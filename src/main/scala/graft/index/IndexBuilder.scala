@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.{Analyzer, StopSets}
-import graft.codec.{PostingBlock, Posting, PostingsCodec, PrePosting, SmallFloat}
+import graft.codec.{PostingsCodec, PrePosting, SmallFloat}
 import graft.search.BM25
 
 /** Batch inverted-index build: input table -> per-partition segments ->
@@ -96,16 +96,17 @@ object IndexBuilder {
   }
 
   /** Merge one reduce-side run of same-(key, salt) pre-blocks into a
-    * docId-ascending posting stream for the canonical re-encode. Map
-    * partitions are file-chunk bin-packs over docId-sorted segments
-    * files, so two partitions' spans are almost always disjoint: the fast
-    * path concatenates in firstDoc order. If bin-packing ever interleaves
-    * chunk ranges, the fallback decodes the run and merge-sorts by docId
-    * (each pre-block is individually ascending, so TimSort sees
-    * mostly-sorted input). Memory is bounded by one (key, salt) run —
-    * the same bound the round-4 reduce buffer had, but compressed. */
-  private[index] def mergeRuns(
-      run: scala.collection.Seq[BlockRowK]): Iterator[Posting] = {
+    * docId-ascending pre-encoded posting stream for the canonical
+    * re-block. Map partitions are file-chunk bin-packs over docId-sorted
+    * segments files, so two partitions' spans are almost always
+    * disjoint: the fast path concatenates in firstDoc order. If
+    * bin-packing ever interleaves chunk ranges, the fallback decodes the
+    * run and sorts by docId (each pre-block is individually ascending,
+    * so TimSort sees mostly-sorted input). Positions stay bytes
+    * throughout ([[PostingsCodec.decodePre]]). Memory is bounded by one
+    * (key, salt) run, compressed. */
+  private[graft] def mergeRuns(
+      run: scala.collection.Seq[BlockRowK]): Iterator[PrePosting] = {
     val sorted = run.sortBy(_.firstDoc)
     var disjoint = true
     var i = 1
@@ -113,9 +114,8 @@ object IndexBuilder {
       if (sorted(i - 1).lastDoc >= sorted(i).firstDoc) disjoint = false
       i += 1
     }
-    def dec(b: BlockRowK): Array[Posting] =
-      PostingsCodec.decode(PostingBlock("", b.firstDoc, b.lastDoc, b.count,
-        b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes))
+    def dec(b: BlockRowK): Array[PrePosting] =
+      PostingsCodec.decodePre(b.withTerm(""))
     if (disjoint) sorted.iterator.flatMap(b => dec(b).iterator)
     else sorted.toArray.flatMap(dec).sortBy(_.docId).iterator
   }
@@ -208,76 +208,52 @@ object IndexBuilder {
           terms1, positions1, compoundDict)
         (t, p, dl1)
       }
-    // group by term via an index sort ordered by (term, position) — the
-    // position tiebreak guarantees positions ascend within each term run
-    // even when synonym/compound injection emits tokens out of position
-    // order. Primitive int sort: the previous Integer[] boxing
-    // allocated ~nTok objects per doc, pure GC churn at 2M docs/build.
-    // nTok = emitted tokens INCLUDING synonym overlaps; dl = distinct
-    // positions (the norm length) — they differ only under synonyms.
-    val nTok = terms.length
-    val idx = new Array[Int](nTok)
-    var i = 0
-    while (i < nTok) { idx(i) = i; i += 1 }
-    sortIdxByTerm(idx, terms, positions, 0, nTok - 1)
     val postings = new scala.collection.mutable.ArrayBuffer[SegPosting](
-      math.min(nTok, 64))
-    i = 0
-    while (i < nTok) {
-      val t = terms(idx(i))
-      var j = i + 1
-      while (j < nTok && terms(idx(j)) == t) j += 1
-      // pb = VInt(tf) ++ delta-VByte positions, sized exactly (two cheap
-      // passes beat a growable buffer + copy-out in this hot loop)
-      val tf = j - i
-      var size = graft.codec.VByte.sizeVInt(tf)
-      var prevPos = 0
-      var k = i
-      while (k < j) {
-        val p = positions(idx(k))
-        size += graft.codec.VByte.sizeVInt(p - prevPos); prevPos = p; k += 1
-      }
-      val pb = new Array[Byte](size)
-      var off = graft.codec.VByte.putVInt(pb, 0, tf)
-      prevPos = 0
-      k = i
-      while (k < j) {
-        val p = positions(idx(k))
-        off = graft.codec.VByte.putVInt(pb, off, p - prevPos); prevPos = p; k += 1
-      }
+      math.min(terms.length, 64))
+    termRuns(terms, positions) { (t, pb) =>
       postings += SegPosting(t, pb)
       // rev field shares the content pb (same tf/positions; the doc's
       // content norm rides along at merge time), so the extra field is
       // pure posting volume, no re-encode
       if (reverseTokens) postings += SegPosting(revTerm(t), pb)
-      i = j
     }
     // path field: its own term space ("path:"-prefixed), positions and
     // (pdl, pnorm) independent of the content field's
     val ptoks = pathTokens(path)
     val pdl = ptoks.length
-    ptoks.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).foreach {
-      case (tok, occs) =>
-        postings += SegPosting(pathTerm(tok), pbOf(occs.map(_._2)))
+    termRuns(ptoks, Array.range(0, pdl)) { (t, pb) =>
+      postings += SegPosting(pathTerm(t), pb)
     }
     SegmentDoc(docId, docPart, repo, path, commit, lang, dl,
       SmallFloat.normByte(dl), pdl, SmallFloat.normByte(pdl),
       sha256Hex(content), postings.toArray)
   }
 
-  /** SegPosting.pb of an ascending positions array: VInt(tf) ++ deltas. */
-  private def pbOf(poss: Array[Int]): Array[Byte] = {
-    val tf = poss.length
-    var size = graft.codec.VByte.sizeVInt(tf)
-    var prev = 0
-    var k = 0
-    while (k < tf) { size += graft.codec.VByte.sizeVInt(poss(k) - prev); prev = poss(k); k += 1 }
-    val pb = new Array[Byte](size)
-    var off = graft.codec.VByte.putVInt(pb, 0, tf)
-    prev = 0
-    k = 0
-    while (k < tf) { off = graft.codec.VByte.putVInt(pb, off, poss(k) - prev); prev = poss(k); k += 1 }
-    pb
+  /** One doc's tokens grouped by term, in term order: `emit(term, pb)`
+    * once per distinct term, pb = [[PostingsCodec.pb]] of its ascending
+    * positions. The group-by is an index sort ordered by (term, position)
+    * — the position tiebreak guarantees positions ascend within each term
+    * run even when synonym/compound injection emits tokens out of
+    * position order. Primitive int sort: boxing would allocate ~nTok
+    * objects per doc, pure GC churn at 2M docs/build. */
+  private def termRuns(terms: Array[String], positions: Array[Int])
+                      (emit: (String, Array[Byte]) => Unit): Unit = {
+    val nTok = terms.length
+    val idx = new Array[Int](nTok)
+    var i = 0
+    while (i < nTok) { idx(i) = i; i += 1 }
+    sortIdxByTerm(idx, terms, positions, 0, nTok - 1)
+    val sorted = new Array[Int](nTok)
+    i = 0
+    while (i < nTok) { sorted(i) = positions(idx(i)); i += 1 }
+    i = 0
+    while (i < nTok) {
+      val t = terms(idx(i))
+      var j = i + 1
+      while (j < nTok && terms(idx(j)) == t) j += 1
+      emit(t, PostingsCodec.pb(sorted, i, j))
+      i = j
+    }
   }
 
   /** In-place quicksort of `idx[lo..hi]` ordered by (terms(i), i). The
@@ -290,7 +266,7 @@ object IndexBuilder {
     // tiebreak by POSITION, not emission index: synonym/compound injection
     // can emit a term at an earlier position than a later original token
     // (e.g. usa->"united states of america" then an original "america"),
-    // and the position-delta encoder below requires positions ascending
+    // and the position-delta encoder (PostingsCodec.pb) requires positions ascending
     // within each term run — an emission-index tiebreak would write a
     // negative delta whose VInt round-trips into an unsorted position
     // array that phrase/span matchers silently mis-handle.
@@ -538,7 +514,7 @@ object IndexBuilder {
         // payload itself: row count drops ~100x for frequent terms and the
         // bytes are the codec's, not the row format's. maxPartial is NOT
         // computed here (cache = null): the reduce side re-derives it
-        // during the canonical re-encode, so no float work is wasted on
+        // during the canonical re-block, so no float work is wasted on
         // blocks that get re-blocked anyway.
         val preBlocks = segments
           .where($"docPart" >= w * partsPerWave &&
@@ -559,16 +535,15 @@ object IndexBuilder {
                   .encodePre("", run.iterator.map { case (_, docId, pb, norm) =>
                     PrePosting(docId, norm, pb)
                   }, null)
-                  .map(b => BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
-                    b.maxTf, b.sumTf, b.maxPartial, b.docBytes, b.nrmBytes,
-                    b.posBytes))
+                  .map(BlockRowK.of(key, _))
               }
           }
         // ---- ONE exchange, now carrying compressed pre-blocks ----
         // Hot keys hash on the salt of firstDoc (valid: a pre-block never
         // spans a salt boundary, see above). Reduce groups consecutive
-        // same-(key, salt) runs and re-encodes them into the CANONICAL
-        // 128-posting block stream — byte-identical to the round-4 output,
+        // same-(key, salt) runs and re-blocks them into the CANONICAL
+        // 128-posting block stream through the same writer (encodePre),
+        // positions kept as bytes — byte-identical to the round-4 output,
         // so every reader/WAND/CheckIndex invariant is untouched. Map
         // partitions are file-chunk bin-packs, so two partitions' doc
         // ranges USUALLY don't interleave (segments files are docId-
@@ -588,13 +563,8 @@ object IndexBuilder {
               .flatMap { case (key, run) =>
                 val fieldCache = if (TermKeys.isPath(key)) pathCache else cache
                 PostingsCodec
-                  .encode("", IndexBuilder.mergeRuns(run), fieldCache)
-                  .map { b =>
-                    blockAcc.add(1)
-                    BlockRowK(key, b.firstDoc, b.lastDoc, b.count,
-                      b.maxTf, b.sumTf, b.maxPartial, b.docBytes,
-                      b.nrmBytes, b.posBytes)
-                  }
+                  .encodePre("", IndexBuilder.mergeRuns(run), fieldCache)
+                  .map { b => blockAcc.add(1); BlockRowK.of(key, b) }
               }
           }
         // zstd over snappy: ~20% fewer bytes through the (bandwidth-
@@ -1022,6 +992,15 @@ object IndexBuilder {
                     floorDocs: Long = 4096L): Option[String] =
     withWriteLock(baseDir) {
       import spark.implicits._
+      // a delta with replaces.txt but no done marker is a tiered merge
+      // that crashed (only this call writes replaces.txt, under this
+      // lock): nothing reads it, so drop it. A delta without replaces.txt
+      // may be an append in flight and is never touched.
+      Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("delta_") &&
+          Files.exists(f.toPath.resolve("replaces.txt")) &&
+          !stageDone(f.getAbsolutePath, "done"))
+        .foreach(f => deleteRecursively(f.toPath))
       val deltas = subIndexDirs(baseDir).filterNot(_ == baseDir) // base is always cold
       val group: Option[Seq[String]] =
         if (deltas.size <= segsPerTier) None

@@ -82,6 +82,14 @@ final case class BlockRowK(key: Long, firstDoc: Long,
       maxPartial, docBytes, nrmBytes, posBytes)
 }
 
+object BlockRowK {
+  /** The on-disk row of `b` under term key `key` (the inverse of
+    * [[BlockRowK.withTerm]]). */
+  def of(key: Long, b: graft.codec.PostingBlock): BlockRowK =
+    BlockRowK(key, b.firstDoc, b.lastDoc, b.count, b.maxTf, b.sumTf,
+      b.maxPartial, b.docBytes, b.nrmBytes, b.posBytes)
+}
+
 object Ids {
   /** docId = (docPart << DocIdShift) | indexWithinPartition — deterministic
     * for a fixed numDocParts regardless of runtime parallelism (docIds are

@@ -72,7 +72,7 @@ final class JoinScorer(reader: SearchReader,
         // SpanMultiTermQueryWrapper: expand each pattern leg against the
         // dictionary (TooManyClauses-guarded), then span-near over the
         // expanded slots
-        val slots = legs.map(expandLegTerms)
+        val slots = legs.map(expandPattern)
         val slotStats = slots.map { ts =>
           val st = reader.termStats(ts)
           ts.map(st.get)
@@ -110,12 +110,8 @@ final class JoinScorer(reader: SearchReader,
       case (o, tq: TermAutomatonQ, b) =>
         val ts = tq.transitions.map(_._3).distinct.sorted
         (o, tq, ScoredAutomaton(tq, ts.map(stats.get), b))
-      case (o, rq @ RegexpQ(pat), b) =>
-        (o, rq, ConstSet(reader.expandTerms(
-          $"term".rlike("^" + pat + "$") && fieldGuard(pat)).map(_.term), b))
-      case (o, pq @ PrefixQ(p), b) =>
-        (o, pq, ConstSet(reader.expandTerms(
-          $"term".startsWith(p) && fieldGuard(p)).map(_.term), b))
+      case (o, rq: RegexpQ, b) => (o, rq, ConstSet(expandPattern(rq), b))
+      case (o, pq: PrefixQ, b) => (o, pq, ConstSet(expandPattern(pq), b))
       case (o, wq @ WildcardQ(pat), b)
         if pat.length > 1 && pat.startsWith("*") &&
           !pat.substring(1).exists(c => c == '*' || c == '?') &&
@@ -128,12 +124,8 @@ final class JoinScorer(reader: SearchReader,
           $"term".startsWith("rev:" + pat.substring(1).reverse))
           .map(ts => ts.term.stripPrefix("rev:").reverse)
         (o, wq, ConstSet(terms, b))
-      case (o, wq @ WildcardQ(pat), b) =>
-        (o, wq, ConstSet(reader.expandTerms(
-          $"term".rlike("^" + wildcardRx(pat) + "$") && fieldGuard(pat))
-          .map(_.term), b))
-      case (o, fq @ FuzzyQ(t, e), b) =>
-        (o, fq, ConstSet(reader.fuzzyTerms(t, e).map(_.term), b))
+      case (o, wq: WildcardQ, b) => (o, wq, ConstSet(expandPattern(wq), b))
+      case (o, fq: FuzzyQ, b) => (o, fq, ConstSet(expandPattern(fq), b))
       case (o, rq @ RangeQ(lo, hi, incLo, incHi), b) =>
         val loP = if (incLo) $"term" >= lo else $"term" > lo
         val hiP = if (incHi) $"term" <= hi else $"term" < hi
@@ -161,8 +153,9 @@ final class JoinScorer(reader: SearchReader,
       case c => c.toString
     }
 
-  /** Expand one SpanNearMultiQ leg to its dictionary terms. */
-  private def expandLegTerms(q: Query): Seq[String] = q match {
+  /** Expand a term or multi-term pattern (a SpanNearMultiQ leg, or a
+    * const-set clause of [[rewrite]]) to its dictionary terms. */
+  private def expandPattern(q: Query): Seq[String] = q match {
     case TermQ(t) => Seq(t)
     case PrefixQ(p) =>
       reader.expandTerms($"term".startsWith(p) && fieldGuard(p)).map(_.term)

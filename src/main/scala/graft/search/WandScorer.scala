@@ -215,8 +215,8 @@ object WandScorer {
     * merged block's span can overlap a cold delta's block (the cursor
     * would then walk past the cold block's docs without visiting them —
     * caught by IndexMaintenanceSpec's tiered case). Here overlapping
-    * clusters are decoded, merge-sorted by docId, and re-encoded into
-    * proper disjoint blocks, chunk-locally and only for the clusters
+    * clusters are decoded to pre-encoded postings (positions stay
+    * bytes), sorted by docId, and re-blocked into proper disjoint blocks, chunk-locally and only for the clusters
     * that actually overlap (the common all-disjoint case returns the
     * input array untouched). Bounds are recomputed with the QUERY-side
     * cache, so they dominate the scores this query computes. */
@@ -236,9 +236,9 @@ object WandScorer {
     def flush(): Unit = {
       if (cluster.length == 1) out += cluster.head
       else if (cluster.nonEmpty) {
-        val merged = cluster.toArray.flatMap(PostingsCodec.decode)
+        val merged = cluster.toArray.flatMap(PostingsCodec.decodePre)
           .sortBy(_.docId)
-        out ++= PostingsCodec.encode(cluster.head.term, merged.iterator, cache)
+        out ++= PostingsCodec.encodePre(cluster.head.term, merged.iterator, cache)
       }
       cluster.clear()
     }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
 import graft.codec._
+import graft.index.{BlockRowK, IndexBuilder}
 import graft.search.BM25
 
 /** Deterministic property runner (scalatestplus bridge unavailable
@@ -132,25 +133,66 @@ class PostingsCodecSpec extends AnyFunSuite with MiniCheck {
     }
   }
 
-  test("encodePre(pre-encoded pb) == encode(decoded postings), block for block") {
+  private def sameBlock(a: PostingBlock, b: PostingBlock): Boolean =
+    a.term == b.term && a.firstDoc == b.firstDoc && a.lastDoc == b.lastDoc &&
+      a.count == b.count && a.maxTf == b.maxTf && a.sumTf == b.sumTf &&
+      // bit equality: a null-cache block's maxPartial is NaN
+      java.lang.Float.floatToRawIntBits(a.maxPartial) ==
+        java.lang.Float.floatToRawIntBits(b.maxPartial) &&
+      java.util.Arrays.equals(a.docBytes, b.docBytes) &&
+      java.util.Arrays.equals(a.nrmBytes, b.nrmBytes) &&
+      java.util.Arrays.equals(a.posBytes, b.posBytes)
+
+  /** A posting list, cut at random points into "map partition" runs; when
+    * `mix` holds, one run of >= 3 postings is dealt alternately into two
+    * runs whose docId spans interleave. */
+  private val genRuns: Gen[(List[Posting], List[List[Posting]], Boolean)] = for {
+    ps <- genPostingList
+    cuts <- Gen.listOf(Gen.chooseNum(1, math.max(1, ps.length - 1)))
+    mix <- Gen.oneOf(true, false)
+  } yield {
+    val bounds = (0 +: cuts.filter(_ < ps.length).distinct.sorted :+ ps.length)
+      .distinct
+    val runs = bounds.sliding(2).collect {
+      case Seq(a, b) if b > a => ps.slice(a, b)
+    }.toList
+    runs.indexWhere(_.length >= 3) match {
+      case k if mix && k >= 0 =>
+        val (even, odd) = runs(k).zipWithIndex.partition(_._2 % 2 == 0)
+        (ps, runs.patch(k, Seq(even.map(_._1), odd.map(_._1)), 1), true)
+      case _ => (ps, runs, false)
+    }
+  }
+
+  test("one writer: map-side pre-blocks merged by mergeRuns and re-blocked " +
+    "by encodePre == the whole list's blocks, byte for byte") {
+    var mixed = 0
+    forAll(genRuns) { case (ps, runs, mix) =>
+      if (mix) mixed += 1
+      val whole = PostingsCodec.encode("", ps.iterator, cache).toList
+      val pre = runs.flatMap(run => PostingsCodec.encodePre("",
+        run.iterator.map(p => PrePosting(p.docId, p.norm,
+          PostingsCodec.pb(p.positions, 0, p.tf))), null))
+      // the exchange delivers a run's pre-blocks in no particular order
+      val arrived = new scala.util.Random(ps.length).shuffle(pre)
+      val merged = PostingsCodec.encodePre("", IndexBuilder.mergeRuns(
+        arrived.map(BlockRowK.of(7L, _))), cache).toList
+      assert(merged.length == whole.length)
+      (merged zip whole).foreach { case (m, w) => assert(sameBlock(m, w)) }
+    }
+    assert(mixed > 0, "no sample ran mergeRuns' sort fallback")
+  }
+
+  test("encodePre(decodePre(b)) == b for every block, with and without " +
+    "the norm cache") {
     forAll(genPostingList) { ps =>
-      val pre = ps.map { p =>
-        val w = new VByte.Writer()
-        w.writeVInt(p.tf)
-        var prev = 0
-        p.positions.foreach { pos => w.writeVInt(pos - prev); prev = pos }
-        PrePosting(p.docId, p.norm, w.toBytes)
-      }
-      val a = PostingsCodec.encode("t", ps.iterator, cache).toList
-      val b = PostingsCodec.encodePre("t", pre.iterator, cache).toList
-      assert(a.length == b.length)
-      (a zip b).foreach { case (x, y) =>
-        assert(x.firstDoc == y.firstDoc && x.lastDoc == y.lastDoc &&
-          x.count == y.count && x.maxTf == y.maxTf && x.sumTf == y.sumTf &&
-          x.maxPartial == y.maxPartial)
-        assert(java.util.Arrays.equals(x.docBytes, y.docBytes))
-        assert(java.util.Arrays.equals(x.nrmBytes, y.nrmBytes))
-        assert(java.util.Arrays.equals(x.posBytes, y.posBytes))
+      for (c <- Seq(cache, null)) {
+        PostingsCodec.encode("t", ps.iterator, c).foreach { b =>
+          val pre = PostingsCodec.decodePre(b)
+          assert(pre.map(_.docId).toSeq == PostingsCodec.decode(b).map(_.docId).toSeq)
+          val again = PostingsCodec.encodePre("t", pre.iterator, c).toList
+          assert(again.length == 1 && sameBlock(again.head, b))
+        }
       }
     }
   }

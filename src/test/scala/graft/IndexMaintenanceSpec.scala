@@ -424,6 +424,10 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .isDefined)
     assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).docmeta.count() == live)
+    // it drops the crashed merge (replaces.txt, no done marker) and keeps
+    // the crashed append, which may still be in flight
+    assert(!Files.exists(half))
+    assert(Files.exists(Paths.get(crashed, "segments")))
   }
 
   test("optimistic concurrency: matching expectCommit applies, stale or " +
@@ -606,6 +610,11 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       assertLive(open(dir), live, s"$state: after the next compactTiered")
       assert(IndexBuilder.subIndexDirs(dir).size == 2,
         s"$state: ${IndexBuilder.subIndexDirs(dir)}")
+      // no crashed merge outlives it: every delta dir left on disk serves
+      val deltasOnDisk = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("delta_")).map(_.getAbsolutePath).toSet
+      assert(deltasOnDisk == IndexBuilder.subIndexDirs(dir).toSet - dir,
+        s"$state: ${deltasOnDisk.toSeq.sorted}")
     }
   }
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared session for Spark-backed suites (one JVM-wide session). */
@@ -16,6 +20,18 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val made = new ConcurrentLinkedQueue[Path]
+  Runtime.getRuntime.addShutdownHook(new Thread(() => made.forEach { dir =>
+    try Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
+  }))
+
+  /** A fresh temp dir, deleted with everything in it when the JVM exits. */
+  def tmpDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    made.add(dir)
+    dir.toString
+  }
 }

@@ -59,8 +59,21 @@ object SparkEntry {
   private val readers =
     new scala.collection.concurrent.TrieMap[(String, String), IndexReader]
 
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  Runtime.getRuntime.addShutdownHook(new Thread(() => tmpDirs.forEach(d =>
+    try IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d))
+    catch { case _: java.io.IOException => })))
+
+  /** A fresh temp dir, deleted with everything in it when the JVM exits:
+    * every fixture index of this object lives in one. */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    tmpDirs.add(d)
+    d
+  }
+
   def ftConfig(nParts: Int): IndexConfig = IndexConfig(
-    numDocParts = nParts, numBuckets = 16, waves = 1,
+    numDocParts = nParts, numBuckets = 16,
     hotDfThreshold = 300L, saltShift = 16, shufflePartitions = 32)
 
   /** documents -> input_hint shape, with the monotone docPart column.
@@ -94,8 +107,7 @@ object SparkEntry {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val maxId = maxDocId(spark, sfDir)
       val cfg = variant.change(ftConfig((maxId / DocsPerPart + 1).toInt))
-      val dir = java.nio.file.Files.createTempDirectory(
-        s"graft-${variant.name}").toString
+      val dir = tmpDir(s"graft-${variant.name}")
       IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
       IndexReader(spark, dir, cfg)
     })
@@ -110,7 +122,7 @@ object SparkEntry {
     * instead of sorting at query time. */
   def sortedDocsDir(s: SparkSession, sfDir: String): String =
     sortedDocsDirs.getOrElseUpdate(sfDir, {
-      val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+      val dir = tmpDir("graft-sorted")
       s.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "n_chars")
         .repartitionByRange(4, col("n_chars").desc, col("doc_id"))
@@ -228,11 +240,11 @@ object SparkEntry {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val maxId = maxDocId(spark, sfDir)
       val cfg = ftConfig((maxId / DocsPerPart + 1).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-del").toString
+      val dir = tmpDir("graft-del")
       IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
       IndexBuilder.deleteByQuery(spark, dir, cfg,
         BoolQ(Seq((Occur.Must, TermQ("dup")))))
-      val cdir = java.nio.file.Files.createTempDirectory("graft-cpt").toString
+      val cdir = tmpDir("graft-cpt")
       IndexBuilder.compact(spark, dir, cdir, cfg)
       (IndexReader(spark, dir, cfg), IndexReader(spark, cdir, cfg))
     })
@@ -252,7 +264,7 @@ object SparkEntry {
       // fresh docParts for the new versions: shift past the base grid
       val off = (maxId / DocsPerPart + 1) * DocsPerPart
       val cfg = ftConfig((2 * off / DocsPerPart).toInt)
-      val dir = java.nio.file.Files.createTempDirectory("graft-upd").toString
+      val dir = tmpDir("graft-upd")
       IndexBuilder.build(spark, docsAsInput(docs), dir, cfg)
       val upd = docs.where(col("text").contains("vector"))
         .withColumn("text", regexp_replace(col("text"), "vector", "vectorized"))
@@ -264,7 +276,7 @@ object SparkEntry {
         col("lang"),
         col("text").as("content"))
       IndexBuilder.updateDocs(spark, dir, updInput, cfg)
-      val cdir = java.nio.file.Files.createTempDirectory("graft-updc").toString
+      val cdir = tmpDir("graft-updc")
       IndexBuilder.compact(spark, dir, cdir, cfg)
       (MultiIndexReader.open(spark, dir, cfg.numBuckets, cacheData = false),
         IndexReader(spark, cdir, cfg))
@@ -297,7 +309,7 @@ object SparkEntry {
       val maxId = maxDocId(spark, sfDir)
       val baseParts = (maxId / DocsPerPart + 1).toInt
       val cfg = ftConfig(baseParts + 12)
-      val dir = java.nio.file.Files.createTempDirectory("graft-tier").toString
+      val dir = tmpDir("graft-tier")
       IndexBuilder.build(spark, docsAsInput(base), dir, cfg)
       (0 until 12).foreach { k =>
         val slice = docs.where(col("doc_id") % 2048 === k * 4 + 1)
@@ -313,7 +325,7 @@ object SparkEntry {
         require(IndexBuilder.compactTiered(spark, dir, cfg).isDefined,
           "tiered fixture must trigger a merge")
       }
-      val cdir = java.nio.file.Files.createTempDirectory("graft-tierc").toString
+      val cdir = tmpDir("graft-tierc")
       val tFull = sec(IndexBuilder.compact(spark, dir, cdir, cfg))
       (tPartial, tFull)
     })
@@ -333,7 +345,7 @@ object SparkEntry {
       val cut2 = 2 * cut1
       val nParts = (maxId / DocsPerPart + 1).toInt
       val cfg = ftConfig(nParts)
-      val dir = java.nio.file.Files.createTempDirectory("graft-nrt").toString
+      val dir = tmpDir("graft-nrt")
       IndexBuilder.build(spark,
         docsAsInput(docs.where(col("doc_id") < cut1)), dir, cfg)
       IndexBuilder.append(spark,
@@ -1763,7 +1775,7 @@ object SparkEntry {
         .flatMap { case (id, lang, text) =>
           Analyzer.analyze(text, Set.empty)
             .map(tp => (id, "1_tokenize", tp.position, tp.term)) ++
-            Analyzer.analyzeLang(text, lang)
+            Analyzer.analyze(text, graft.analysis.StopSets.forLang(lang))
               .map(tp => (id, "2_stop", tp.position, tp.term))
         }
         .toDF("doc_id", "stage", "pos", "term")
@@ -2234,7 +2246,8 @@ object SparkEntry {
         .select("doc_id", "lang", "text").as[(Long, String, String)]
         .flatMap { case (id, lang, text) =>
           var prev = -1
-          val toks = Analyzer.analyzeLang(text, lang).map { tp =>
+          val stops = graft.analysis.StopSets.forLang(lang)
+          val toks = Analyzer.analyze(text, stops).map { tp =>
             val inc = tp.position - prev; prev = tp.position
             graft.analysis.Token(tp.term, 0, 0, inc, "word")
           }
@@ -5677,8 +5690,7 @@ object SparkEntry {
           lit("en").as("lang"),
           col("content"))
       val cfg = ftConfig(2 * baseParts)
-      val ixDir = java.nio.file.Files.createTempDirectory("graft-dihd")
-        .toString
+      val ixDir = tmpDir("graft-dihd")
       IndexBuilder.build(s, asInput(latest(ev.where(col("ts") <= lit(cut))),
         0), ixDir, cfg)
       IndexBuilder.updateDocs(s,

@@ -70,54 +70,21 @@ object Analyzer {
 
   /** Full chain; returns (term, position) pairs in reading order.
     * Stopword matching happens AFTER lowercasing (StandardAnalyzer order).
-    */
+    * A boxing adapter over [[analyzeFlat]] for the query parsers. */
   def analyze(text: String, stopSet: Set[String],
               maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
       : Vector[TermPos] = {
-    val out = Vector.newBuilder[TermPos]
-    var pos = -1
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      pos += t.posInc
-      val term = lowerCase(t.term)
-      if (!stopSet.contains(term)) out += TermPos(term, pos)
-      i += 1
-    }
-    out.result()
+    val (terms, positions) = analyzeFlat(text, stopSet, maxTokenLength)
+    Vector.tabulate(terms.length)(i => TermPos(terms(i), positions(i)))
   }
 
-  /** Flat-array variant of [[analyze]] for the indexing hot path: same
-    * chain, but the result is (terms, positions) parallel arrays — no
-    * per-token TermPos boxing (2M docs x ~115 tokens makes that churn
-    * matter). Kept behaviorally identical by the shared-chain test. */
+  /** Flat-array form of the StandardAnalyzer chain for the indexing hot
+    * path: (terms, positions) parallel arrays, no per-token TermPos
+    * boxing (2M docs x ~115 tokens makes that churn matter). */
   def analyzeFlat(text: String, stopSet: Set[String],
                   maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : (Array[String], Array[Int]) = {
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
-    val terms = new Array[String](toks.length)
-    val positions = new Array[Int](toks.length)
-    var n = 0
-    var pos = -1
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      pos += t.posInc
-      val term = lowerCase(t.term)
-      if (!stopSet.contains(term)) {
-        terms(n) = term; positions(n) = pos; n += 1
-      }
-      i += 1
-    }
-    if (n == toks.length) (terms, positions)
-    else (java.util.Arrays.copyOf(terms, n),
-      java.util.Arrays.copyOf(positions, n))
-  }
-
-  /** Per-`lang` analysis (north star: lowercase + stopword per lang). */
-  def analyzeLang(text: String, lang: String): Vector[TermPos] =
-    analyze(text, StopSets.forLang(lang))
+      : (Array[String], Array[Int]) =
+    analyzeLightFlat(text, stopSet, identity, maxTokenLength)
 
   /** CJK bigram chain, HAN script (reference
     * analysis/common/src/java/org/apache/lucene/analysis/cjk/CJKBigramFilter.java:141-215,
@@ -221,61 +188,16 @@ object Analyzer {
     else s
   }
 
-  /** EnglishAnalyzer-equivalent chain (reference
-    * en/EnglishAnalyzer.java:101-116): StandardTokenizer ->
-    * EnglishPossessiveFilter -> LowerCaseFilter -> StopFilter ->
-    * PorterStemFilter. Stopwords are removed BEFORE stemming (so e.g.
-    * "this" never survives as "thi") and dropped tokens still contribute
-    * position gaps. */
-  def analyzeEnglish(text: String, stopSet: Set[String],
-                     maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : Vector[TermPos] = {
-    val out = Vector.newBuilder[TermPos]
-    var pos = -1
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      pos += t.posInc
-      val term = lowerCase(stripPossessive(t.term))
-      if (!stopSet.contains(term)) out += TermPos(PorterStemmer.stem(term), pos)
-      i += 1
-    }
-    out.result()
-  }
-
-  /** Flat-array variant of [[analyzeEnglish]] (indexing hot path, see
-    * [[analyzeFlat]]). */
-  def analyzeEnglishFlat(text: String, stopSet: Set[String],
-                         maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength,
-                         stem: String => String = PorterStemmer.stem)
-      : (Array[String], Array[Int]) = {
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
-    val terms = new Array[String](toks.length)
-    val positions = new Array[Int](toks.length)
-    var n = 0
-    var pos = -1
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      pos += t.posInc
-      val term = lowerCase(stripPossessive(t.term))
-      if (!stopSet.contains(term)) {
-        terms(n) = stem(term); positions(n) = pos; n += 1
-      }
-      i += 1
-    }
-    if (n == toks.length) (terms, positions)
-    else (java.util.Arrays.copyOf(terms, n),
-      java.util.Arrays.copyOf(positions, n))
-  }
-
-  /** Per-language light-stem chain (the reference's GermanAnalyzer /
-    * SpanishAnalyzer / ItalianAnalyzer / FrenchAnalyzer shape:
-    * StandardTokenizer -> LowerCaseFilter -> StopFilter(lang) ->
-    * <Lang>LightStemFilter — analysis/common/.../de/GermanAnalyzer.java).
-    * Stopwords are removed BEFORE stemming and dropped tokens still
-    * contribute position gaps, as in every reference chain. */
+  /** The one StandardTokenizer -> `pre` -> LowerCaseFilter ->
+    * StopFilter -> `stem` loop. With both transforms `identity` it is the
+    * StandardAnalyzer chain ([[analyzeFlat]]); with `pre` =
+    * [[stripPossessive]] and a Porter/KStem `stem` the EnglishAnalyzer
+    * chain (en/EnglishAnalyzer.java:101-116); with a light stemmer the
+    * GermanAnalyzer / SpanishAnalyzer / FrenchAnalyzer shape
+    * (analysis/common/.../de/GermanAnalyzer.java). Stopwords are removed
+    * BEFORE stemming (so "this" never survives as "thi") and dropped
+    * tokens still contribute position gaps, as in every reference
+    * chain. */
   def analyzeLightFlat(text: String, stopSet: Set[String],
                        stem: String => String,
                        maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength,
@@ -302,13 +224,6 @@ object Analyzer {
     else (java.util.Arrays.copyOf(terms, n),
       java.util.Arrays.copyOf(positions, n))
   }
-
-  /** Field length for norms = number of tokens emitted by the chain
-    * (overlaps/posInc==0 tokens never occur in this chain, so
-    * numOverlap = 0; reference: BM25Similarity.computeNorm,
-    * search/similarities/BM25Similarity.java:138-141).
-    */
-  def fieldLength(terms: Vector[TermPos]): Int = terms.length
 
   /** One compiled index-time synonym rule: LHS token sequence (matched
     * against CONSECUTIVE positions) -> RHS alternatives, each a token

@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analysis.{Analyzer, StopSets}
+import graft.analysis.Analyzers
 import graft.codec.{PostingsCodec, PrePosting, SmallFloat}
 import graft.search.BM25
 
@@ -26,10 +26,10 @@ import graft.search.BM25
   * firstDoc order IS the merged posting list (the docBase-concatenation
   * trick of codecs/FieldsConsumer.java:90-100).
   *
-  * The build is resumable: every stage (and every postings wave) writes a
-  * lineage JSON marker after its data commits; a re-run skips completed
-  * stages. docIds derive from a fixed hash-partitioning + canonical sort,
-  * never from runtime state, so resumed builds are byte-identical.
+  * The build is resumable: every stage writes a lineage JSON marker
+  * after its data commits; a re-run skips completed stages. docIds
+  * derive from a fixed hash-partitioning + canonical sort, never from
+  * runtime state, so resumed builds are byte-identical.
   */
 object IndexBuilder {
 
@@ -70,6 +70,15 @@ object IndexBuilder {
 
   def fieldOfTerm(term: String): String =
     if (term.startsWith("path:")) "path" else "content"
+
+  /** The dictionary `term`s a multi-term pattern may expand into, per
+    * field as in the reference's rewrite: a "path:" pattern only into
+    * path terms, any other pattern never into "path:" or "rev:" terms (a
+    * pattern need not anchor its field: fuzzy "pathlib" is 1 edit from
+    * "path:lib"). */
+  def fieldGuard(pattern: String): Column =
+    if (pattern.startsWith("path:")) col("term").startsWith("path:")
+    else !col("term").startsWith("path:") && !col("term").startsWith("rev:")
 
   /** Consecutive runs of a (key, docId)-sorted stream that share a key
     * and, for a hot key, a salt chunk (docId >> shift), as (key, run). A
@@ -120,94 +129,20 @@ object IndexBuilder {
     else sorted.toArray.flatMap(dec).sortBy(_.docId).iterator
   }
 
-  /** The configured chain as a flat (terms, positions) function.
-    * `noStops` drops stopword filtering — synonym rule compilation runs
-    * the chain WITHOUT stops (the reference's SynonymMap.Builder analyzes
-    * rule text with the index analyzer; rules are matched pre-StopFilter
-    * in the canonical chain order). */
+  /** The [[Analyzers]] chain `analyzer` run on one text. `noStops` drops
+    * stopword filtering, as synonym rule compilation does. */
   def chainFlat(analyzer: String, lang: String, content: String,
                 maxTokenLength: Int,
-                noStops: Boolean = false): (Array[String], Array[Int]) = {
-    @inline def stops(iso: String): Set[String] =
-      if (noStops) Set.empty else StopSets.forLang(iso)
-    analyzer match {
-      case "standard" =>
-        Analyzer.analyzeFlat(content, stops(lang), maxTokenLength)
-      case "english" =>
-        Analyzer.analyzeEnglishFlat(content, stops("en"), maxTokenLength)
-      case "kstem" => // EnglishAnalyzer shape with KStemFilter (Solr
-        // KStemFilterFactory) instead of PorterStemFilter
-        Analyzer.analyzeEnglishFlat(content, stops("en"),
-          maxTokenLength, stem = graft.analysis.KStem.stem)
-      case "cjk" =>
-        Analyzer.analyzeCjkFlat(content, Set.empty, maxTokenLength)
-      case "thai" => // dictionary BreakIterator segmentation (th has no
-        // word delimiters; reference th/ThaiAnalyzer.java:101)
-        graft.analysis.Thai.analyzeFlat(content, stops("th"))
-      case "smartcn" => // lexicon-DP Chinese word segmentation (reference
-        // smartcn/SmartChineseAnalyzer.java chain)
-        graft.analysis.SmartChinese.analyzeFlat(content,
-          if (noStops) Set.empty else graft.analysis.SmartChinese.stopSet)
-      case "japanese" => // lexicon-DP Japanese word segmentation over the
-        // kuromoji FST surface lexicon (reference ja/JapaneseAnalyzer
-        // chain minus the cost-table stages — see analysis/Japanese)
-        graft.analysis.Japanese.analyzeFlat(content,
-          if (noStops) Set.empty else graft.analysis.Japanese.stopSet)
-      case other =>
-        val (iso, stem) = graft.analysis.LightStemmers.byName(other)
-        // fr/it chains run ElisionFilter before lowercase, like the
-        // reference analyzers (no-op on apostrophe-free corpora); the ga
-        // chain adds IrishLowerCaseFilter and the HYPHENATIONS {h,n,t}
-        // stray-token stop set (ga/IrishAnalyzer.java:142-150)
-        val pre: String => String = other match {
-          case "french" => graft.analysis.MiscFilters.elision(_,
-            graft.analysis.MiscFilters.FrenchArticles)
-          case "italian" => graft.analysis.MiscFilters.elision(_,
-            graft.analysis.MiscFilters.ItalianArticles)
-          case "catalan" => graft.analysis.MiscFilters.elision(_,
-            graft.analysis.MiscFilters.CatalanArticles)
-          case "irish" => t => graft.analysis.MiscFilters.irishLowerCase(
-            graft.analysis.MiscFilters.elision(t,
-              graft.analysis.MiscFilters.IrishArticles))
-          case _ => identity
-        }
-        val stopSet =
-          if (other == "irish" && !noStops) stops(iso) ++ Set("h", "n", "t")
-          else stops(iso)
-        Analyzer.analyzeLightFlat(content, stopSet, stem,
-          maxTokenLength, pre = pre)
-    }
-  }
+                noStops: Boolean = false): (Array[String], Array[Int]) =
+    Analyzers.chain(analyzer, noStops, maxTokenLength)(lang, content)
 
   /** Analyze one document into a SegmentDoc (terms grouped in-memory per
-    * row — within-doc grouping needs no shuffle). `analyzer` selects the
-    * chain: "standard" = per-row-lang StandardAnalyzer; "english" = the
-    * EnglishAnalyzer chain (possessive strip + English stop set + Porter
-    * stem, reference en/EnglishAnalyzer.java:101-116); "german" /
-    * "spanish" / "italian" / "french" = that language's stop set + light
-    * stemmer (reference de/GermanAnalyzer.java etc.). */
+    * row — within-doc grouping needs no shuffle) through the build's
+    * compiled `chain`. */
   def invertDoc(docId: Long, docPart: Int, repo: String, path: String,
                 commit: String, lang: String, content: String,
-                maxTokenLength: Int, analyzer: String = "standard",
-                reverseTokens: Boolean = false,
-                synRules: Seq[Analyzer.SynRule] = Nil,
-                compoundDict: Set[String] = Set.empty): SegmentDoc = {
-    val (terms0, positions0) =
-      chainFlat(analyzer, lang, content, maxTokenLength)
-    // index-time synonym injection (posInc=0 overlaps); dl counts
-    // DISTINCT positions so injected tokens don't inflate the norm
-    val (terms1, positions1, dl1) =
-      if (synRules.isEmpty) (terms0, positions0, terms0.length)
-      else Analyzer.applySynonymsFlat(terms0, positions0, synRules)
-    // compound decomposition injects subwords at the compound's position
-    // under the same overlap contract
-    val (terms, positions, dl) =
-      if (compoundDict.isEmpty) (terms1, positions1, dl1)
-      else {
-        val (t, p, _) = graft.analysis.CompoundWords.applyFlat(
-          terms1, positions1, compoundDict)
-        (t, p, dl1)
-      }
+                chain: IndexChain): SegmentDoc = {
+    val (terms, positions, dl) = chain(lang, content)
     val postings = new scala.collection.mutable.ArrayBuffer[SegPosting](
       math.min(terms.length, 64))
     termRuns(terms, positions) { (t, pb) =>
@@ -215,7 +150,7 @@ object IndexBuilder {
       // rev field shares the content pb (same tf/positions; the doc's
       // content norm rides along at merge time), so the extra field is
       // pure posting volume, no re-encode
-      if (reverseTokens) postings += SegPosting(revTerm(t), pb)
+      if (chain.reverseTokens) postings += SegPosting(revTerm(t), pb)
     }
     // path field: its own term space ("path:"-prefixed), positions and
     // (pdl, pnorm) independent of the content field's
@@ -338,6 +273,15 @@ object IndexBuilder {
     r
   }
 
+  /** One metric of a stage's marker, read driver-side with no Spark job
+    * (None when the marker or the metric is absent). */
+  def markerValue(dir: String, stage: String, metric: String): Option[Long] = {
+    val p = markerPath(dir, stage)
+    if (!Files.exists(p)) None
+    else ("\"" + metric + "\":\\s*(\\d+)").r
+      .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
+  }
+
   def writeMarker(dir: String, stage: String, metrics: Map[String, Long]): Unit = {
     val p = markerPath(dir, stage)
     Files.createDirectories(p.getParent)
@@ -364,13 +308,7 @@ object IndexBuilder {
     // ---- stage 1: segments (invert; doc-partitioned forward index) ----
     val segPath = s"$dir/segments"
     if (!stageDone(dir, "segments")) timed("segments") {
-      val maxTok = cfg.maxTokenLength
-      val analyzerName = cfg.analyzer
-      val revTok = cfg.reverseTokens
-      val synRules = Analyzer.compileSynonyms(cfg.synonyms,
-        chainFlat(cfg.analyzer, "en", _, cfg.maxTokenLength,
-          noStops = true)._1)
-      val compDict = graft.analysis.CompoundWords.compileDict(cfg.compoundDict)
+      val chain = IndexChain.of(cfg)
       val nParts = cfg.numDocParts
       val parted = (
         if (input.columns.contains("docPart"))
@@ -395,8 +333,7 @@ object IndexBuilder {
                 s"docPart ${d.docPart} outside [0, $nParts)")
             if (d.docPart != cur) { cur = d.docPart; idx = 0L }
             val sd = invertDoc(Ids.docId(cur, idx), cur, d.repo, d.path,
-              d.commit, d.lang, d.content, maxTok, analyzerName, revTok,
-              synRules, compDict)
+              d.commit, d.lang, d.content, chain)
             idx += 1
             sd
           }
@@ -441,10 +378,10 @@ object IndexBuilder {
     // layout and skew, never results — IndexMaintenanceSpec proves both
     // extremes identical). Sample seed is fixed, the sampled frame is the
     // committed segments parquet, so resumes see the same hot set.
-    // LAZY: the sampled scan + driver collect runs only when a postings
-    // wave actually needs the hot set — an idempotent re-delivery of an
-    // already-completed build (every wave marker present) skips it
-    // entirely instead of re-scanning segments on every resume
+    // LAZY: the sampled scan + driver collect runs only when the postings
+    // stage actually needs the hot set — an idempotent re-delivery of an
+    // already-completed build skips it entirely instead of re-scanning
+    // segments on every resume
     lazy val hotTerms: Set[String] = timed("hotterms") {
       val hs =
         if (cfg.hotDfThreshold > collStats.maxDoc) Set.empty[String]
@@ -462,120 +399,113 @@ object IndexBuilder {
       hs
     }
 
-    // ---- stage 4: global merge -> compressed blocks, per wave ----
+    // ---- stage 4: global merge -> compressed blocks ----
     // per-field norm caches: the WAND bound (maxPartial) must be computed
     // with the same float ops AND the same field avgdl the query path uses
     val avgdl = BM25.avgFieldLength(collStats.sumTotalTermFreq, collStats.maxDoc)
     val cacheB = spark.sparkContext.broadcast(BM25.cache(avgdl))
     val pathCacheB = spark.sparkContext.broadcast(
       BM25.cache(BM25.avgFieldLength(pathSumTtf, collStats.maxDoc)))
-    var w = 0
-    while (w < cfg.waves) {
-      val stage = s"postings_wave_$w"
-      if (!stageDone(dir, stage)) timed(stage) {
-        val shift = cfg.saltShift
-        val waves = cfg.waves
-        val postAcc = spark.sparkContext.longAccumulator("graft.postings")
-        val blockAcc = spark.sparkContext.longAccumulator("graft.blocks")
-        // waves own CONTIGUOUS docPart ranges: block docId-spans must stay
-        // disjoint across waves (same invariant as salt chunks)
-        val partsPerWave = (cfg.numDocParts + waves - 1) / waves
-        // Shuffle key = (termKey, salt): hashing keys spreads the merge
-        // over ALL shuffle partitions at any parallelism, and salt still
-        // splits hot terms into disjoint docId-range chunks. The row is
-        // (key: Long, docId, pb, norm) — NO term string: the 63-bit
-        // TermKeys key (field bit included) replaces the var-length term
-        // bytes, cutting both the exchanged bytes and, more importantly,
-        // the sort cost — (key, docId) sorts on Spark's 8-byte radix
-        // prefix, where term strings fell back to byte-wise comparisons
-        // on every shared prefix ("path:", common stems). Term text is
-        // recovered ONLY in the dictionary stage (from the segments'
-        // vocabulary) and at read time (from the query's own terms) —
-        // the Lucene posture: postings files are keyed by term ord, the
-        // .tim dictionary owns the bytes. Key locality for reads comes
-        // from the within-partition (key, docId) sort: every file is
-        // key-sorted, so parquet row-group min/max stats prune term
-        // lookups (the BlockTree-seek analog). salt is a pure
-        // PARTITIONING expression (hot set tiny by construction:
-        // |hot| <= sumTtf/hotDfThreshold) — it steers the hash exchange
-        // but is NOT materialized into the shuffled row; the encoder
-        // re-derives it from (key, docId). tf rides inside pb (its VInt
-        // prefix).
-        val hotKeys: Set[Long] = hotTerms.map(TermKeys.of)
-        val hotKeySeq = hotKeys.toSeq
-        val hotB = spark.sparkContext.broadcast(hotKeys)
-        // ---- map side: LOCAL (key, docId) sort + pre-block encode ----
-        // Rounds 1-4 shuffled one Tungsten row PER POSTING: ~48 B of row
-        // framing (null bits, fixed slots, var-length offsets) around a
-        // ~4 B payload — 1558 B/doc on the wire. Now each map partition
-        // sorts locally (sortWithinPartitions = spillable
-        // UnsafeExternalSorter, NO exchange) and VByte-encodes 128-posting
-        // PRE-BLOCKS, so the exchange carries the compressed postings
-        // payload itself: row count drops ~100x for frequent terms and the
-        // bytes are the codec's, not the row format's. maxPartial is NOT
-        // computed here (cache = null): the reduce side re-derives it
-        // during the canonical re-block, so no float work is wasted on
-        // blocks that get re-blocked anyway.
-        val preBlocks = segments
-          .where($"docPart" >= w * partsPerWave &&
-            $"docPart" < (w + 1) * partsPerWave)
-          .select($"docId", explode($"postings").as("p"), $"norm", $"pnorm")
-          .select(TermKeys.column($"p.term").as("key"), $"docId",
-            $"p.pb".as("pb"),
-            // each posting carries ITS field's norm byte
-            when($"p.term".startsWith("path:"), $"pnorm").otherwise($"norm")
-              .as("norm"))
-          .sortWithinPartitions($"key", $"docId")
-          .as[(Long, Long, Array[Byte], Byte)]
-          .mapPartitions { it0 =>
-            IndexBuilder.saltRuns(it0, hotB.value, shift)(_._1, _._2)
-              .flatMap { case (key, run) =>
-                postAcc.add(run.length)
-                PostingsCodec
-                  .encodePre("", run.iterator.map { case (_, docId, pb, norm) =>
-                    PrePosting(docId, norm, pb)
-                  }, null)
-                  .map(BlockRowK.of(key, _))
-              }
-          }
-        // ---- ONE exchange, now carrying compressed pre-blocks ----
-        // Hot keys hash on the salt of firstDoc (valid: a pre-block never
-        // spans a salt boundary, see above). Reduce groups consecutive
-        // same-(key, salt) runs and re-blocks them into the CANONICAL
-        // 128-posting block stream through the same writer (encodePre),
-        // positions kept as bytes — byte-identical to the round-4 output,
-        // so every reader/WAND/CheckIndex invariant is untouched. Map
-        // partitions are file-chunk bin-packs, so two partitions' doc
-        // ranges USUALLY don't interleave (segments files are docId-
-        // sorted): the merge concatenates when spans are disjoint in
-        // firstDoc order and falls back to a decode-merge-sort otherwise.
-        val preSaltCol =
-          if (hotKeySeq.isEmpty) lit(0L)
-          else when($"key".isin(hotKeySeq: _*), shiftright($"firstDoc", shift))
-            .otherwise(0L)
-        val blocks = preBlocks
-          .repartition(cfg.shufflePartitions, $"key", preSaltCol)
-          .sortWithinPartitions($"key", $"firstDoc")
-          .mapPartitions { it0 =>
-            val cache = cacheB.value
-            val pathCache = pathCacheB.value
-            IndexBuilder.saltRuns(it0, hotB.value, shift)(_.key, _.firstDoc)
-              .flatMap { case (key, run) =>
-                val fieldCache = if (TermKeys.isPath(key)) pathCache else cache
-                PostingsCodec
-                  .encodePre("", IndexBuilder.mergeRuns(run), fieldCache)
-                  .map { b => blockAcc.add(1); BlockRowK.of(key, b) }
-              }
-          }
-        // zstd over snappy: ~20% fewer bytes through the (bandwidth-
-        // bound) storage/shuffle path for a CPU cost that the scaling
-        // bench shows is the better trade at high core counts
-        blocks.write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$dir/postings/wave=$w")
-        writeMarker(dir, stage,
-          Map("postings" -> postAcc.value, "blocks" -> blockAcc.value))
-      }
-      w += 1
+    // One pass over every doc. The stage and its directory keep their
+    // earlier names (`postings_wave_0`, `postings/wave=0`), so index dirs
+    // already on disk stay readable and resumable.
+    val postingsStage = "postings_wave_0"
+    if (!stageDone(dir, postingsStage)) timed(postingsStage) {
+      val shift = cfg.saltShift
+      val postAcc = spark.sparkContext.longAccumulator("graft.postings")
+      val blockAcc = spark.sparkContext.longAccumulator("graft.blocks")
+      // Shuffle key = (termKey, salt): hashing keys spreads the merge
+      // over ALL shuffle partitions at any parallelism, and salt still
+      // splits hot terms into disjoint docId-range chunks. The row is
+      // (key: Long, docId, pb, norm) — NO term string: the 63-bit
+      // TermKeys key (field bit included) replaces the var-length term
+      // bytes, cutting both the exchanged bytes and, more importantly,
+      // the sort cost — (key, docId) sorts on Spark's 8-byte radix
+      // prefix, where term strings fell back to byte-wise comparisons
+      // on every shared prefix ("path:", common stems). Term text is
+      // recovered ONLY in the dictionary stage (from the segments'
+      // vocabulary) and at read time (from the query's own terms) —
+      // the Lucene posture: postings files are keyed by term ord, the
+      // .tim dictionary owns the bytes. Key locality for reads comes
+      // from the within-partition (key, docId) sort: every file is
+      // key-sorted, so parquet row-group min/max stats prune term
+      // lookups (the BlockTree-seek analog). salt is a pure
+      // PARTITIONING expression (hot set tiny by construction:
+      // |hot| <= sumTtf/hotDfThreshold) — it steers the hash exchange
+      // but is NOT materialized into the shuffled row; the encoder
+      // re-derives it from (key, docId). tf rides inside pb (its VInt
+      // prefix).
+      val hotKeys: Set[Long] = hotTerms.map(TermKeys.of)
+      val hotKeySeq = hotKeys.toSeq
+      val hotB = spark.sparkContext.broadcast(hotKeys)
+      // ---- map side: LOCAL (key, docId) sort + pre-block encode ----
+      // Rounds 1-4 shuffled one Tungsten row PER POSTING: ~48 B of row
+      // framing (null bits, fixed slots, var-length offsets) around a
+      // ~4 B payload — 1558 B/doc on the wire. Now each map partition
+      // sorts locally (sortWithinPartitions = spillable
+      // UnsafeExternalSorter, NO exchange) and VByte-encodes 128-posting
+      // PRE-BLOCKS, so the exchange carries the compressed postings
+      // payload itself: row count drops ~100x for frequent terms and the
+      // bytes are the codec's, not the row format's. maxPartial is NOT
+      // computed here (cache = null): the reduce side re-derives it
+      // during the canonical re-block, so no float work is wasted on
+      // blocks that get re-blocked anyway.
+      val preBlocks = segments
+        .select($"docId", explode($"postings").as("p"), $"norm", $"pnorm")
+        .select(TermKeys.column($"p.term").as("key"), $"docId",
+          $"p.pb".as("pb"),
+          // each posting carries ITS field's norm byte
+          when($"p.term".startsWith("path:"), $"pnorm").otherwise($"norm")
+            .as("norm"))
+        .sortWithinPartitions($"key", $"docId")
+        .as[(Long, Long, Array[Byte], Byte)]
+        .mapPartitions { it0 =>
+          IndexBuilder.saltRuns(it0, hotB.value, shift)(_._1, _._2)
+            .flatMap { case (key, run) =>
+              postAcc.add(run.length)
+              PostingsCodec
+                .encodePre("", run.iterator.map { case (_, docId, pb, norm) =>
+                  PrePosting(docId, norm, pb)
+                }, null)
+                .map(BlockRowK.of(key, _))
+            }
+        }
+      // ---- ONE exchange, now carrying compressed pre-blocks ----
+      // Hot keys hash on the salt of firstDoc (valid: a pre-block never
+      // spans a salt boundary, see above). Reduce groups consecutive
+      // same-(key, salt) runs and re-blocks them into the CANONICAL
+      // 128-posting block stream through the same writer (encodePre),
+      // positions kept as bytes — byte-identical to the round-4 output,
+      // so every reader/WAND/CheckIndex invariant is untouched. Map
+      // partitions are file-chunk bin-packs, so two partitions' doc
+      // ranges USUALLY don't interleave (segments files are docId-
+      // sorted): the merge concatenates when spans are disjoint in
+      // firstDoc order and falls back to a decode-merge-sort otherwise.
+      val preSaltCol =
+        if (hotKeySeq.isEmpty) lit(0L)
+        else when($"key".isin(hotKeySeq: _*), shiftright($"firstDoc", shift))
+          .otherwise(0L)
+      val blocks = preBlocks
+        .repartition(cfg.shufflePartitions, $"key", preSaltCol)
+        .sortWithinPartitions($"key", $"firstDoc")
+        .mapPartitions { it0 =>
+          val cache = cacheB.value
+          val pathCache = pathCacheB.value
+          IndexBuilder.saltRuns(it0, hotB.value, shift)(_.key, _.firstDoc)
+            .flatMap { case (key, run) =>
+              val fieldCache = if (TermKeys.isPath(key)) pathCache else cache
+              PostingsCodec
+                .encodePre("", IndexBuilder.mergeRuns(run), fieldCache)
+                .map { b => blockAcc.add(1); BlockRowK.of(key, b) }
+            }
+        }
+      // zstd over snappy: ~20% fewer bytes through the (bandwidth-
+      // bound) storage/shuffle path for a CPU cost that the scaling
+      // bench shows is the better trade at high core counts
+      blocks.write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$dir/postings/wave=0")
+      writeMarker(dir, postingsStage,
+        Map("postings" -> postAcc.value, "blocks" -> blockAcc.value))
     }
 
     // ---- stage 5: term dictionary ----
@@ -638,7 +568,9 @@ object IndexBuilder {
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$dir/termstats")
       vocab.unpersist()
-      writeMarker(dir, "termstats", Map())
+      // readers check it: a lookup under another bucket count silently
+      // misses terms (IndexReader.termStats)
+      writeMarker(dir, "termstats", Map("numBuckets" -> nb.toLong))
     }
 
     if (!stageDone(dir, "done")) writeMarker(dir, "done", Map())
@@ -656,10 +588,18 @@ object IndexBuilder {
     * docBase concatenation again (codecs/FieldsConsumer.java:90-100).
     * Stage markers inside the delta dir make re-delivery of the same
     * batch idempotent (exactly-once sink semantics under foreachBatch
-    * retries). */
+    * retries). A delta id that a tiered merge took (its dir holds
+    * `replaces.txt`) or merged away (a committed delta's `replaces.txt`
+    * lists it) is no longer this batch's: building there would be a no-op
+    * or invisible, so the batch fails loudly instead of being lost. */
   def append(spark: SparkSession, input: DataFrame, baseDir: String,
              batchId: Long, cfg: IndexConfig): String = {
-    val dir = s"$baseDir/delta_$batchId"
+    val name = s"delta_$batchId"
+    val dir = s"$baseDir/$name"
+    if (Files.exists(Paths.get(dir, "replaces.txt")) ||
+        replacedDeltas(baseDir).contains(name))
+      throw new IllegalStateException(
+        s"cannot append batch $batchId: $dir is taken by a tiered merge")
     build(spark, input, dir, cfg)
     dir
   }
@@ -943,14 +883,25 @@ object IndexBuilder {
     // crash point shows duplicate or missing docs. Hidden dirs still
     // contribute their OWN replaces lists (a crash may leave a
     // replaced-but-not-yet-deleted dir that itself replaced others).
-    val deltas = Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("delta_") &&
-        stageDone(f.getAbsolutePath, "done"))
-      .sortBy(f => f.getName.stripPrefix("delta_").toLong)
-    val replaced: Set[String] = deltas.flatMap(f => replacesOf(f.toPath)).toSet
+    val replaced = replacedDeltas(baseDir)
     Seq(baseDir).filter(stageDone(_, "done")) ++
-      deltas.filterNot(f => replaced.contains(f.getName)).map(_.getAbsolutePath)
+      committedDeltas(baseDir).filterNot(f => replaced.contains(f.getName))
+        .map(_.getAbsolutePath)
   }
+
+  /** Every delta dir of `baseDir`, committed or not, in append order. */
+  private def deltaDirs(baseDir: String): Seq[java.io.File] =
+    Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("delta_"))
+      .sortBy(f => f.getName.stripPrefix("delta_").toLong)
+
+  /** Every delta dir of `baseDir` with a done marker, in append order. */
+  private def committedDeltas(baseDir: String): Seq[java.io.File] =
+    deltaDirs(baseDir).filter(f => stageDone(f.getAbsolutePath, "done"))
+
+  /** The delta dir names that committed tiered merges hide. */
+  private def replacedDeltas(baseDir: String): Set[String] =
+    committedDeltas(baseDir).flatMap(f => replacesOf(f.toPath)).toSet
 
   /** The dir names a merged delta's replaces.txt lists (none without
     * one). */
@@ -964,12 +915,9 @@ object IndexBuilder {
   /** Next free delta id: max over ALL delta_* names on disk (including
     * replaced-but-not-yet-cleaned ones) + 1 — a size-based id would
     * collide after a tiered compaction leaves holes in the numbering. */
-  def nextDeltaId(baseDir: String): Long = {
-    val ids = Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("delta_"))
-      .map(_.getName.stripPrefix("delta_").toLong)
-    if (ids.isEmpty) 0L else ids.max + 1L
-  }
+  def nextDeltaId(baseDir: String): Long =
+    deltaDirs(baseDir).lastOption
+      .fold(0L)(_.getName.stripPrefix("delta_").toLong + 1L)
 
   /** Tiered incremental compaction (reference
     * index/TieredMergePolicy.java:75-86: segsPerTier / maxMergeAtOnce /
@@ -996,9 +944,8 @@ object IndexBuilder {
       // that crashed (only this call writes replaces.txt, under this
       // lock): nothing reads it, so drop it. A delta without replaces.txt
       // may be an append in flight and is never touched.
-      Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("delta_") &&
-          Files.exists(f.toPath.resolve("replaces.txt")) &&
+      deltaDirs(baseDir)
+        .filter(f => Files.exists(f.toPath.resolve("replaces.txt")) &&
           !stageDone(f.getAbsolutePath, "done"))
         .foreach(f => deleteRecursively(f.toPath))
       val deltas = subIndexDirs(baseDir).filterNot(_ == baseDir) // base is always cold
@@ -1009,13 +956,9 @@ object IndexBuilder {
           // file read, the segments_N posture) — a Spark job per delta
           // would make the steady-state no-op call cost 1 job per
           // sub-index
-          val MaxDoc = """"maxDoc":\s*(\d+)""".r.unanchored
           val sized = deltas.map { d =>
-            d -> (Files.readString(markerPath(d, "collstats")) match {
-              case MaxDoc(n) => n.toLong
-              case _ => spark.read.parquet(s"$d/collstats").as[CollStats]
-                .head().maxDoc
-            })
+            d -> markerValue(d, "collstats", "maxDoc").getOrElse(
+              spark.read.parquet(s"$d/collstats").as[CollStats].head().maxDoc)
           }
           val byTier = sized.groupBy { case (_, n) =>
             math.floor(math.log10(math.max(n, floorDocs).toDouble)).toInt
@@ -1047,7 +990,7 @@ object IndexBuilder {
       }
     }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p))
       Option(p.toFile.listFiles()).toSeq.flatten
         .foreach(f => deleteRecursively(f.toPath))

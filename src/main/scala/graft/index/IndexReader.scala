@@ -83,10 +83,21 @@ final class IndexReader(val spark: SparkSession, val dir: String,
   private val statsMemo =
     new scala.collection.concurrent.TrieMap[String, Option[TermStats]]
 
+  /** The build's bucket count (termstats marker) must be this reader's:
+    * lookups filter on Buckets.of(term, numBuckets) and would silently
+    * miss terms. Checked once; markers without the field skip it. */
+  private lazy val bucketsChecked: Unit =
+    IndexBuilder.markerValue(dir, "termstats", "numBuckets").foreach { built =>
+      if (built != numBuckets) throw new IllegalArgumentException(
+        s"index $dir was built with numBuckets = $built but opened with " +
+          s"numBuckets = $numBuckets")
+    }
+
   def termStats(terms: Seq[String]): Map[String, TermStats] = {
     if (terms.isEmpty) return Map.empty
     val missing = terms.distinct.filterNot(statsMemo.contains)
     if (missing.nonEmpty) {
+      bucketsChecked
       val buckets = missing.map(t => Buckets.of(t, numBuckets)).distinct
       val found = termStatsCached
         .where($"bucket".isin(buckets: _*) && $"term".isin(missing: _*))

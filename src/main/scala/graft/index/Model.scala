@@ -1,5 +1,7 @@
 package graft.index
 
+import graft.analysis.{Analyzer, Analyzers, CompoundWords}
+
 /** Input row shape (BASELINE.json input_hint): an Iceberg/parquet table of
   * source-code files. */
 final case class DocInput(repo: String, path: String, commit: String,
@@ -105,11 +107,10 @@ object Ids {
 final case class IndexConfig(
     numDocParts: Int = 64,
     numBuckets: Int = 64,
-    waves: Int = 1,
     hotDfThreshold: Long = 50000L,
     saltShift: Int = 16,
-    maxTokenLength: Int = 255,
     shufflePartitions: Int = 32,
+    /** An [[Analyzers]] registry name. */
     analyzer: String = "standard",
     /** Also index each content token REVERSED under the "rev:" field
       * (Solr ReversedWildcardFilterFactory): leading-wildcard queries
@@ -130,13 +131,41 @@ final case class IndexConfig(
       * position (posInc=0, keepOrig) — single-constituent queries then
       * recall German/Dutch/Scandinavian compounds. */
     compoundDict: Seq[String] = Nil) {
-  require(numDocParts > 0 && numBuckets > 0 && waves > 0)
-  require(Set("standard", "english", "cjk", "kstem", "thai", "smartcn",
-    "japanese").contains(analyzer) ||
-    graft.analysis.LightStemmers.byName.contains(analyzer),
-    s"unknown analyzer '$analyzer' (standard | english | cjk | kstem | " +
-      "thai | smartcn | japanese | " +
-      graft.analysis.LightStemmers.byName.keys.toSeq.sorted.mkString(" | ") + ")")
+  require(numDocParts > 0 && numBuckets > 0)
+  Analyzers.check(analyzer)
+}
+
+/** The index-time analysis of one build, compiled once from its
+  * [[IndexConfig]] (the reference's one Analyzer value per field): the
+  * registry chain, the synonym rules compiled through that chain, the
+  * compound dictionary and the reverse flag. [[IndexBuilder.invertDoc]]
+  * runs it on every document. */
+final case class IndexChain(analyze: Analyzers.Chain,
+                            synRules: Seq[Analyzer.SynRule],
+                            compoundDict: Set[String],
+                            reverseTokens: Boolean) {
+  /** One doc's content (terms, positions, dl). Synonym and compound
+    * tokens are injected at their match's position (posInc=0 overlaps)
+    * and never inflate dl, the norm's field length. */
+  def apply(lang: String, content: String): (Array[String], Array[Int], Int) = {
+    val (terms0, positions0) = analyze(lang, content)
+    val (terms, positions, dl) =
+      Analyzer.applySynonymsFlat(terms0, positions0, synRules)
+    if (compoundDict.isEmpty) (terms, positions, dl)
+    else {
+      val (t, p, _) = CompoundWords.applyFlat(terms, positions, compoundDict)
+      (t, p, dl)
+    }
+  }
+}
+
+object IndexChain {
+  def of(cfg: IndexConfig): IndexChain = {
+    val noStops = Analyzers.chain(cfg.analyzer, noStops = true)
+    IndexChain(Analyzers.chain(cfg.analyzer),
+      Analyzer.compileSynonyms(cfg.synonyms, noStops("en", _)._1),
+      CompoundWords.compileDict(cfg.compoundDict), cfg.reverseTokens)
+  }
 }
 
 object Buckets {

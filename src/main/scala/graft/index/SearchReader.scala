@@ -136,17 +136,9 @@ trait SearchReader {
                  limit: Int = SearchReader.MaxClauseCount): Seq[TermStats] = {
     import org.apache.spark.sql.functions._
     val len = term.length
-    // Per-field rewrite (field named by the key prefix). Unlike the
-    // regex/wildcard rewrites, the pattern itself does NOT anchor the
-    // field here — levenshtein can cross it (e.g. content "pathlib" is 1
-    // edit from "path:lib") — so BOTH directions need an explicit guard,
-    // and content-field expansion must also skip the rev: dictionary.
-    val sameField =
-      if (term.startsWith("path:")) col("term").startsWith("path:")
-      else !col("term").startsWith("path:") && !col("term").startsWith("rev:")
     expandTerms(
       length(col("term")).between(len - maxEdits, len + maxEdits) &&
-        sameField && levenshtein(col("term"), lit(term)) <= maxEdits, limit)
+        IndexBuilder.fieldGuard(term) && levenshtein(col("term"), lit(term)) <= maxEdits, limit)
   }
 }
 

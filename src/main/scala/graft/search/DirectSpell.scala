@@ -2,7 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.functions._
 
-import graft.index.SearchReader
+import graft.index.{IndexBuilder, SearchReader}
 
 /** DirectSpellChecker — the automaton-based spell checker real Solr
   * deployments use (DirectSolrSpellChecker), ported from
@@ -90,7 +90,7 @@ object DirectSpell {
     assemble(term, scanCandidates(reader, term, p), numSug, minDf, p)
   }
 
-  /** ONE dictionary scan: same content field, length band +-maxEdits,
+  /** ONE dictionary scan: the term's own field, length band +-maxEdits,
     * shared prefix of max(minPrefix, 0) codepoints (the WEAKEST prefix any
     * ed-pass uses; pass-specific prefixes re-apply in assemble), OSA edit
     * distance <= maxEdits. */
@@ -99,15 +99,13 @@ object DirectSpell {
     val len = term.length
     val edUdf = udf((t: String) =>
       StringDistances.luceneLevenshteinEdits(term, t))
-    val sameField =
-      !col("term").startsWith("path:") && !col("term").startsWith("rev:")
     val prefLen = math.max(p.minPrefix, 0)
     val pref =
       if (prefLen > 0) col("term").startsWith(cpPrefix(term, prefLen))
       else lit(true)
     reader.expandTerms(
       length(col("term")).between(len - p.maxEdits, len + p.maxEdits) &&
-        sameField && pref && edUdf(col("term")) <= p.maxEdits)
+        IndexBuilder.fieldGuard(term) && pref && edUdf(col("term")) <= p.maxEdits)
       .map(ts => Candidate(ts.term,
         ts.df, StringDistances.luceneLevenshteinEdits(term, ts.term)))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
 import graft.index.{IndexBuilder, SearchReader, TermStats}
+import graft.index.IndexBuilder.fieldGuard
 
 /** A clause match for one doc: `score` is the clause's float
   * contribution (NaN for non-scoring Filter/MustNot presence rows). */
@@ -136,13 +137,6 @@ final class JoinScorer(reader: SearchReader,
         throw new IllegalArgumentException(s"cannot rewrite $other")
     }
   }
-
-  /** Multi-term rewrites are per-field, as in the reference: a content
-    * query must not expand into path-field dictionary entries and vice
-    * versa (the pattern names its field via the "path:" key prefix). */
-  private def fieldGuard(pattern: String) =
-    if (pattern.startsWith("path:")) lit(true)
-    else !$"term".startsWith("path:") && !$"term".startsWith("rev:")
 
   /** Wildcard pattern -> anchored-regex body (the WildcardQuery rewrite). */
   private def wildcardRx(pat: String): String =

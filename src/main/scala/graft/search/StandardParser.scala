@@ -244,10 +244,8 @@ object StandardParser {
       }
       // relationals (OpenRangeQueryNodeProcessor). Open bounds stay
       // INSIDE the field's term space: the path field's keyed prefix
-      // bounds its open ends ("path:" / "path:"+MaxTerm — the scorer's
-      // fieldGuard passes everything for path-prefixed patterns, so an
-      // unbounded end would leak other term spaces into the expansion);
-      // content open ends rely on fieldGuard's path:/rev: exclusion.
+      // bounds its open ends ("path:" / "path:"+MaxTerm); content open
+      // ends rely on the scorer's fieldGuard path:/rev: exclusion.
       tok match {
         case Relational(f, op, v) if !tok.startsWith("\"") =>
           val t = fieldTerm(f, v)

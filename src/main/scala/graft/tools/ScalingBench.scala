@@ -42,7 +42,7 @@ object ScalingBench {
   }
 
   def cfgFor(nDocs: Long): IndexConfig = IndexConfig(
-    numDocParts = 256, numBuckets = 32, waves = 1,
+    numDocParts = 256, numBuckets = 32,
     hotDfThreshold = nDocs / 2, saltShift = 13,
     // data-sized default; env knob for partition-granularity probes
     shufflePartitions =

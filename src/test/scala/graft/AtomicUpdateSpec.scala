@@ -102,7 +102,7 @@ class AtomicUpdateSpec extends AnyFunSuite {
   }
 
   test("corpus round-trip: merge stored fields, reindex, search sees it") {
-    val cfg = IndexConfig(numDocParts = 16, numBuckets = 4, waves = 1,
+    val cfg = IndexConfig(numDocParts = 16, numBuckets = 4,
       hotDfThreshold = 400L, saltShift = 6, shufflePartitions = 8)
     val input = CorpusGen.generate(spark, 200).toDF()
     val dir = SparkSuite.tmpDir("graft-atomic")

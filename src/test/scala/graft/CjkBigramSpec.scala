@@ -41,7 +41,8 @@ class CjkBigramSpec extends AnyFunSuite {
 
   test("indexing path: cjk analyzer wires through invertDoc") {
     val sd = graft.index.IndexBuilder.invertDoc(0L, 0, "r", "p", "c", "zh",
-      "検索一二三 engine", 255, analyzer = "cjk")
+      "検索一二三 engine",
+      graft.index.IndexChain.of(graft.index.IndexConfig(analyzer = "cjk")))
     val got = sd.postings.map(_.term).filterNot(_.startsWith("path:")).toSet
     // 検索 bigrams with the following Han chars: 検索|索一|一二|二三
     assert(got == Set("検索", "索一", "一二", "二三", "engine"))

@@ -116,7 +116,7 @@ class DirectSpellSpec extends AnyFunSuite {
     ).toDF("repo", "path", "commit", "lang", "content")
     val dir = SparkSuite.tmpDir("graft-dspell")
     IndexBuilder.build(spark, docs, dir,
-      IndexConfig(numDocParts = 2, numBuckets = 2, waves = 1,
+      IndexConfig(numDocParts = 2, numBuckets = 2,
         shufflePartitions = 4))
     new IndexReader(spark, dir, 2, cacheData = false)
   }

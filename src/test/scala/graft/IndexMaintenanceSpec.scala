@@ -14,7 +14,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private val cfg = IndexConfig(numDocParts = 8, numBuckets = 8, waves = 2,
+  private val cfg = IndexConfig(numDocParts = 8, numBuckets = 8,
     hotDfThreshold = 400L, saltShift = 6, shufflePartitions = 8)
 
   private lazy val input = CorpusGen.generate(spark, 800).toDF()
@@ -42,23 +42,65 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val rFull = build(full)
     val expect = topDocs(rFull)
 
-    // simulate a crash after termstats: wave-0 postings committed, wave-1
-    // not (its marker is missing) — resume must redo ONLY wave 1
+    // simulate a crash after collstats: segments and collstats committed,
+    // postings and termstats not (data and markers missing) — resume must
+    // redo ONLY those stages
     val part = SparkSuite.tmpDir("graft-part")
     IndexBuilder.build(spark, input, part, cfg)
-    deleteRec(Paths.get(s"$part/postings/wave=1"))
-    Files.deleteIfExists(IndexBuilder.markerPath(part, "postings_wave_1"))
-    Files.deleteIfExists(IndexBuilder.markerPath(part, "done"))
-    val segMtime = Files.getLastModifiedTime(
-      Paths.get(s"$part/_lineage/segments.json"))
+    deleteRec(Paths.get(s"$part/postings"))
+    deleteRec(Paths.get(s"$part/termstats"))
+    Seq("postings_wave_0", "termstats", "done").foreach(stage =>
+      Files.deleteIfExists(IndexBuilder.markerPath(part, stage)))
+    def mtimes() = Seq("segments", "collstats").map(stage =>
+      Files.getLastModifiedTime(IndexBuilder.markerPath(part, stage)))
+    val kept = mtimes()
 
     val rResumed = build(part) // resume
-    assert(Files.getLastModifiedTime(Paths.get(s"$part/_lineage/segments.json"))
-      == segMtime, "resume must not redo completed stages")
+    assert(mtimes() == kept, "resume must not redo completed stages")
+    assert(Seq("postings_wave_0", "termstats", "done")
+      .forall(IndexBuilder.stageDone(part, _)))
     assert(topDocs(rResumed) == expect,
       "resumed build must be result-identical to an uninterrupted one")
     CheckIndex.run(rResumed, Some(input)).collect()
       .foreach(c => assert(c.violations == 0L, s"check ${c.check}"))
+  }
+
+  test("append refuses a delta id that a tiered merge took or merged away") {
+    import org.apache.spark.sql.functions.lit
+    val dir = SparkSuite.tmpDir("graft-append-taken")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
+    val cfgA = cfg.copy(numDocParts = cfg.numDocParts + 4)
+    def batch(k: Int) = CorpusGen.generate(spark, 20, seed = 300L + k).toDF()
+      .withColumn("docPart", lit(cfg.numDocParts + k))
+    def maxDoc() = MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).collStats.maxDoc
+    (0 until 3).foreach(k => IndexBuilder.append(spark, batch(k), dir, k, cfgA))
+    // equal sizes tie on dir name: delta_0 and delta_1 merge into delta_3
+    assert(IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
+      maxMergeAtOnce = 2).contains(s"$dir/delta_3"))
+    assert(maxDoc() == 260)
+    // batch 3's dir is the merge's; batch 0's is hidden by it
+    for (k <- Seq(3, 0))
+      intercept[IllegalStateException](
+        IndexBuilder.append(spark, batch(k), dir, k, cfgA))
+    // a re-delivery of a batch whose delta is still its own is a no-op
+    IndexBuilder.append(spark, batch(2), dir, 2, cfgA)
+    assert(maxDoc() == 260)
+  }
+
+  test("a reader opened with another numBuckets than the build's fails " +
+    "before its first dictionary lookup") {
+    val dir = SparkSuite.tmpDir("graft-buckets")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
+    val e = intercept[IllegalArgumentException](
+      new IndexReader(spark, dir, 5, cacheData = false).termStats(Seq("import")))
+    assert(e.getMessage.contains(s"numBuckets = ${cfg.numBuckets}") &&
+      e.getMessage.contains("numBuckets = 5"))
+    assert(new IndexReader(spark, dir, cfg.numBuckets, cacheData = false)
+      .termStats(Seq("import")).contains("import"))
+    // a termstats marker written before the field existed skips the check
+    IndexBuilder.writeMarker(dir, "termstats", Map())
+    new IndexReader(spark, dir, 5, cacheData = false).termStats(Seq("import"))
   }
 
   test("salting invariance: everything-salted == nothing-salted build") {

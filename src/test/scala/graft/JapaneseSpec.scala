@@ -90,7 +90,7 @@ class JapaneseSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.index._
     import graft.search._
-    val cfg = IndexConfig(numDocParts = 2, numBuckets = 4, waves = 1,
+    val cfg = IndexConfig(numDocParts = 2, numBuckets = 4,
       shufflePartitions = 4, analyzer = "japanese")
     val docs = Seq(
       DocInput("r", "a.txt", "c1", "ja",

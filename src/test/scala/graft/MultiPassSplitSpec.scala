@@ -14,7 +14,7 @@ class MultiPassSplitSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8, waves = 1,
+  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8,
     hotDfThreshold = 1000L, saltShift = 6, shufflePartitions = 8)
 
   test("assignment: round-robin is ordinal mod parts, seq is capped ranges") {

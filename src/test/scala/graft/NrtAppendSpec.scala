@@ -20,7 +20,7 @@ class NrtAppendSpec extends AnyFunSuite {
   private val BaseParts = 4
   private val PartsPerBatch = 2
   private def cfg(nParts: Int) = IndexConfig(numDocParts = nParts,
-    numBuckets = 8, waves = 1, hotDfThreshold = 1000L, saltShift = 6,
+    numBuckets = 8, hotDfThreshold = 1000L, saltShift = 6,
     shufflePartitions = 8)
 
   test("streamed appends == from-scratch union build (scores and docIds)") {

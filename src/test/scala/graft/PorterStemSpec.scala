@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.analysis.{Analyzer, PorterStemmer, StopSets}
+import graft.analysis.{Analyzers, PorterStemmer}
 
 /** Porter stemmer vs Martin Porter's full public test vocabulary — the
   * same data the reference's TestPorterStemFilter asserts against
@@ -43,18 +43,18 @@ class PorterStemSpec extends AnyFunSuite {
 
   test("possessive filter strips 's variants before lowercasing") {
     for (apos <- Seq('\'', '’', '＇')) {
-      val ts = Analyzer.analyzeEnglish(s"John${apos}s code", Set.empty)
-      assert(ts.map(_.term) == Vector("john", "code"), s"apos=$apos")
+      val (ts, _) = Analyzers.chain("english", noStops = true)(
+        "en", s"John${apos}s code")
+      assert(ts.toSeq == Seq("john", "code"), s"apos=$apos")
     }
   }
 
   test("english chain: stop runs before stem (stopwords never stemmed in)") {
     // "this" stems to "thi" — if stemming ran before stop, "this" would
     // survive as "thi"; reference order removes it first
-    val ts = Analyzer.analyzeEnglish("this running matters",
-      StopSets.forLang("en"))
-    assert(ts.map(_.term) == Vector("run", "matter"))
+    val (ts, ps) = Analyzers.chain("english")("en", "this running matters")
+    assert(ts.toSeq == Seq("run", "matter"))
     // dropped stopword still leaves a position gap
-    assert(ts.map(_.position) == Vector(1, 2))
+    assert(ps.toSeq == Seq(1, 2))
   }
 }

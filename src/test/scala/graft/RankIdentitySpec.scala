@@ -14,7 +14,7 @@ class RankIdentitySpec extends AnyFunSuite {
   import SparkSuite.spark
   import spark.implicits._
 
-  private val cfg = IndexConfig(numDocParts = 8, numBuckets = 8, waves = 2,
+  private val cfg = IndexConfig(numDocParts = 8, numBuckets = 8,
     hotDfThreshold = 300, saltShift = 6, shufflePartitions = 8)
 
   private lazy val dir: String = {
@@ -589,12 +589,11 @@ class RankIdentitySpec extends AnyFunSuite {
       (Occur.Should, TermQ("merge")), (Occur.Should, TermQ("spark"))),
       minShouldMatch = 2), 10).map(_._1))
 
-    // the other two cases on an index of their own: built in one wave,
-    // so a rare term's one block spans the whole doc space, and then
-    // tombstoned
-    val d1 = SparkSuite.tmpDir("graft-index-1wave")
+    // the other two cases on an index of their own, since it gets
+    // tombstoned: a rare term's one block spans the whole doc space
+    val d1 = SparkSuite.tmpDir("graft-index-tomb")
     IndexBuilder.build(spark, CorpusGen.generate(spark, 800, seed = 42L, parts = 8)
-      .toDF(), d1, cfg.copy(waves = 1))
+      .toDF(), d1, cfg)
     def readers(): (IndexReader, IndexReader) = (IndexReader(spark, d1, cfg),
       new IndexReader(spark, d1, cfg.numBuckets, cacheData = false))
     def spec(r: IndexReader, ts: Seq[String], k: Int): Seq[(Long, Int)] =

@@ -13,7 +13,7 @@ class SnapshotSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8, waves = 1,
+  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8,
     hotDfThreshold = 400L, saltShift = 6, shufflePartitions = 8)
 
   private def topDocs(r: SearchReader): Seq[Long] =

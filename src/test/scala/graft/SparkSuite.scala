@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.SparkSession
 
 /** Shared session for Spark-backed suites (one JVM-wide session). */
@@ -21,17 +17,6 @@ object SparkSuite {
     s
   }
 
-  private val made = new ConcurrentLinkedQueue[Path]
-  Runtime.getRuntime.addShutdownHook(new Thread(() => made.forEach { dir =>
-    try Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
-  }))
-
   /** A fresh temp dir, deleted with everything in it when the JVM exits. */
-  def tmpDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    made.add(dir)
-    dir.toString
-  }
+  def tmpDir(prefix: String): String = SparkEntry.tmpDir(prefix)
 }

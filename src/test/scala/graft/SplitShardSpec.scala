@@ -14,7 +14,7 @@ class SplitShardSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8, waves = 1,
+  private val cfg = IndexConfig(numDocParts = 4, numBuckets = 8,
     hotDfThreshold = 1000L, saltShift = 6, shufflePartitions = 8)
 
   test("split children searched as one == parent; docs partition exactly") {

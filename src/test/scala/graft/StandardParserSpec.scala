@@ -157,8 +157,7 @@ class StandardParserSpec extends AnyFunSuite {
     val ge = p("content>=spark").clauses.head._2.asInstanceOf[RangeQ]
     assert(ge.lo == "spark" && ge.incLo)
     // path keeps its keyed term space — including on OPEN ends, where
-    // the prefix bounds the range inside the path dictionary (the
-    // scorer's fieldGuard passes everything for path: patterns)
+    // the prefix bounds the range inside the path dictionary
     assert(p("path=Main.scala").clauses ==
       Seq((S, TermQ("path:main.scala"))))
     val pGt = p("path>main").clauses.head._2.asInstanceOf[RangeQ]

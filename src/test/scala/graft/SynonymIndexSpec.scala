@@ -63,9 +63,10 @@ class SynonymIndexSpec extends AnyFunSuite {
     // ..]; the (term, position) sort in invertDoc must still produce an
     // ascending position array (a negative VInt delta round-trips, so the
     // bug would be silent and break phrase/span matching).
-    val rules = syn("usa" -> Seq("united states of america"))
+    val chain = IndexChain.of(IndexConfig(
+      synonyms = Seq("usa" -> Seq("united states of america"))))
     val sd = IndexBuilder.invertDoc(0L, 0, "r", "p.txt", "c", "en",
-      "usa america trip", 255, "standard", false, rules, Set.empty)
+      "usa america trip", chain)
     def positionsOf(term: String): Seq[Int] = {
       val sp = sd.postings.find(_.term == term).get
       val rd = new graft.codec.VByte.Reader(sp.pb)
@@ -85,7 +86,7 @@ class SynonymIndexSpec extends AnyFunSuite {
     // term 'run', and the injected RHS must be stemmed so stemmed query
     // terms reach it. (reference: SynonymMap.Builder analyzes rule text
     // with the chain analyzer, synonym/SynonymMap.java:184-199)
-    val cfgEn = IndexConfig(numDocParts = 2, numBuckets = 4, waves = 1,
+    val cfgEn = IndexConfig(numDocParts = 2, numBuckets = 4,
       shufflePartitions = 4, analyzer = "english",
       synonyms = Seq("running" -> Seq("sprinting")))
     val docs = Seq(
@@ -108,7 +109,7 @@ class SynonymIndexSpec extends AnyFunSuite {
 
   // ---- end-to-end over a built index ----
 
-  private val cfg = IndexConfig(numDocParts = 2, numBuckets = 4, waves = 1,
+  private val cfg = IndexConfig(numDocParts = 2, numBuckets = 4,
     shufflePartitions = 4,
     synonyms = Seq("fast" -> Seq("quick"), "hash agg" -> Seq("hashagg")))
 

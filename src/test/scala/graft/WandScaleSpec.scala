@@ -90,7 +90,7 @@ class WandScaleSpec extends AnyFunSuite {
   }
 
   test("numDocParts=4096 build: shuffled block rows O(#blocks), ranks correct") {
-    val cfg = IndexConfig(numDocParts = 4096, numBuckets = 8, waves = 1,
+    val cfg = IndexConfig(numDocParts = 4096, numBuckets = 8,
       hotDfThreshold = 100, saltShift = 4, shufflePartitions = 8)
     val dir = SparkSuite.tmpDir("graft-wand4096")
     val corpus = CorpusGen.generate(spark, 300, seed = 7L, parts = 8)
@@ -140,7 +140,7 @@ class WandScaleSpec extends AnyFunSuite {
   test("cached and uncached multi-readers agree after tiered compaction " +
     "with tombstones (bound rescale != 1)") {
     import org.apache.spark.sql.functions.lit
-    val cfg = IndexConfig(numDocParts = 8, numBuckets = 8, waves = 2,
+    val cfg = IndexConfig(numDocParts = 8, numBuckets = 8,
       hotDfThreshold = 400L, saltShift = 6, shufflePartitions = 8)
     val dir = SparkSuite.tmpDir("graft-wand-tier")
     IndexBuilder.build(spark, CorpusGen.generate(spark, 800).toDF(), dir, cfg)

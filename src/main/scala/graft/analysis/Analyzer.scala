@@ -71,20 +71,16 @@ object Analyzer {
   /** Full chain; returns (term, position) pairs in reading order.
     * Stopword matching happens AFTER lowercasing (StandardAnalyzer order).
     * A boxing adapter over [[analyzeFlat]] for the query parsers. */
-  def analyze(text: String, stopSet: Set[String],
-              maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : Vector[TermPos] = {
-    val (terms, positions) = analyzeFlat(text, stopSet, maxTokenLength)
+  def analyze(text: String, stopSet: Set[String]): Vector[TermPos] = {
+    val (terms, positions) = analyzeFlat(text, stopSet)
     Vector.tabulate(terms.length)(i => TermPos(terms(i), positions(i)))
   }
 
   /** Flat-array form of the StandardAnalyzer chain for the indexing hot
     * path: (terms, positions) parallel arrays, no per-token TermPos
     * boxing (2M docs x ~115 tokens makes that churn matter). */
-  def analyzeFlat(text: String, stopSet: Set[String],
-                  maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : (Array[String], Array[Int]) =
-    analyzeLightFlat(text, stopSet, identity, maxTokenLength)
+  def analyzeFlat(text: String, stopSet: Set[String]): (Array[String], Array[Int]) =
+    analyzeLightFlat(text, stopSet, identity)
 
   /** CJK bigram chain, HAN script (reference
     * analysis/common/src/java/org/apache/lucene/analysis/cjk/CJKBigramFilter.java:141-215,
@@ -94,10 +90,8 @@ object Analyzer {
     * ISOLATED ideograph stays a unigram (the reference emits the single
     * char when no bigram can be formed). Non-Han tokens (incl. hiragana /
     * katakana under the HAN-only flags) pass through and break the run. */
-  def analyzeCjk(text: String, stopSet: Set[String] = Set.empty,
-                 maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : Vector[TermPos] = {
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
+  def analyzeCjk(text: String, stopSet: Set[String] = Set.empty): Vector[TermPos] = {
+    val toks = StandardTokenizer.tokenize(text)
     val out = Vector.newBuilder[TermPos]
     var pos = -1
     var i = 0
@@ -133,10 +127,8 @@ object Analyzer {
   }
 
   /** Flat-array variant of [[analyzeCjk]] for the indexing path. */
-  def analyzeCjkFlat(text: String, stopSet: Set[String],
-                     maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : (Array[String], Array[Int]) = {
-    val v = analyzeCjk(text, stopSet, maxTokenLength)
+  def analyzeCjkFlat(text: String, stopSet: Set[String]): (Array[String], Array[Int]) = {
+    val v = analyzeCjk(text, stopSet)
     val terms = new Array[String](v.length)
     val positions = new Array[Int](v.length)
     var i = 0
@@ -199,11 +191,9 @@ object Analyzer {
     * tokens still contribute position gaps, as in every reference
     * chain. */
   def analyzeLightFlat(text: String, stopSet: Set[String],
-                       stem: String => String,
-                       maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength,
-                       pre: String => String = identity)
+                       stem: String => String, pre: String => String = identity)
       : (Array[String], Array[Int]) = {
-    val toks = StandardTokenizer.tokenize(text, maxTokenLength)
+    val toks = StandardTokenizer.tokenize(text)
     val terms = new Array[String](toks.length)
     val positions = new Array[Int](toks.length)
     var n = 0

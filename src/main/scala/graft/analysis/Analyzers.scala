@@ -12,24 +12,23 @@ object Analyzers {
     * "standard" chain reads `lang` (its stop set is per-row). */
   type Chain = (String, String) => (Array[String], Array[Int])
 
-  /** A registered chain, given (noStops, maxTokenLength). Synonym rule
-    * compilation runs the chain WITHOUT stops: the reference's
-    * SynonymMap.Builder analyzes rule text with the index analyzer, and
-    * rules match pre-StopFilter in the canonical chain order. */
-  private type Factory = (Boolean, Int) => Chain
+  /** A registered chain, given noStops. Synonym rule compilation runs
+    * the chain WITHOUT stops: the reference's SynonymMap.Builder analyzes
+    * rule text with the index analyzer, and rules match pre-StopFilter in
+    * the canonical chain order. Tokens are capped at
+    * StandardTokenizer.DefaultMaxTokenLength. */
+  private type Factory = Boolean => Chain
 
   private def stops(noStops: Boolean, set: => Set[String]): Set[String] =
     if (noStops) Set.empty else set
 
   /** name -> factory, in the order [[names]] lists them. */
   private val registry: Seq[(String, Factory)] = Seq[(String, Factory)](
-    "standard" -> { (noStops, maxTok) => (lang, text) =>
-      Analyzer.analyzeFlat(text, stops(noStops, StopSets.forLang(lang)), maxTok)
+    "standard" -> { noStops => (lang, text) =>
+      Analyzer.analyzeFlat(text, stops(noStops, StopSets.forLang(lang)))
     },
     "english" -> english(PorterStemmer.stem),
-    "cjk" -> { (_, maxTok) => (_, text) =>
-      Analyzer.analyzeCjkFlat(text, Set.empty, maxTok)
-    },
+    "cjk" -> { _ => (_, text) => Analyzer.analyzeCjkFlat(text, Set.empty) },
     // EnglishAnalyzer shape with KStemFilter (Solr KStemFilterFactory)
     // instead of PorterStemFilter
     "kstem" -> english(KStem.stem),
@@ -57,19 +56,17 @@ object Analyzers {
 
   /** The chain registered as `name`, resolved once: its stop set and
     * transforms are fixed here, not per document. */
-  def chain(name: String, noStops: Boolean = false,
-            maxTokenLength: Int = StandardTokenizer.DefaultMaxTokenLength)
-      : Chain = {
+  def chain(name: String, noStops: Boolean = false): Chain = {
     check(name)
-    byName(name)(noStops, maxTokenLength)
+    byName(name)(noStops)
   }
 
   /** A segmenting analyzer's chain: `analyze(text, stops)` under its own
-    * stop set. These chains ignore maxTokenLength. */
+    * stop set. */
   private def segmenting(
       stopSet: => Set[String],
       analyze: (String, Set[String]) => (Array[String], Array[Int])): Factory = {
-    (noStops, _) =>
+    noStops =>
       val s = stops(noStops, stopSet)
       (_, text) => analyze(text, s)
   }
@@ -77,9 +74,9 @@ object Analyzers {
   /** EnglishAnalyzer chain (en/EnglishAnalyzer.java:101-116):
     * EnglishPossessiveFilter -> LowerCaseFilter -> StopFilter(en) ->
     * `stem`. */
-  private def english(stem: String => String): Factory = { (noStops, maxTok) =>
+  private def english(stem: String => String): Factory = { noStops =>
     val s = stops(noStops, StopSets.forLang("en"))
-    (_, text) => Analyzer.analyzeLightFlat(text, s, stem, maxTok,
+    (_, text) => Analyzer.analyzeLightFlat(text, s, stem,
       pre = Analyzer.stripPossessive)
   }
 
@@ -88,7 +85,7 @@ object Analyzers {
     * the reference analyzers (no-op on apostrophe-free corpora); the ga
     * chain adds IrishLowerCaseFilter and the HYPHENATIONS {h,n,t}
     * stray-token stop set (ga/IrishAnalyzer.java:142-150). */
-  private def light(name: String): Factory = { (noStops, maxTok) =>
+  private def light(name: String): Factory = { noStops =>
     val (iso, stem) = LightStemmers.byName(name)
     val pre: String => String = name match {
       case "french" => MiscFilters.elision(_, MiscFilters.FrenchArticles)
@@ -100,6 +97,6 @@ object Analyzers {
     }
     val s = stops(noStops, StopSets.forLang(iso) ++
       (if (name == "irish") Set("h", "n", "t") else Set.empty[String]))
-    (_, text) => Analyzer.analyzeLightFlat(text, s, stem, maxTok, pre = pre)
+    (_, text) => Analyzer.analyzeLightFlat(text, s, stem, pre = pre)
   }
 }

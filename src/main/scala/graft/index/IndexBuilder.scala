@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analysis.Analyzers
+import graft.analysis.{Analyzers, StandardTokenizer}
 import graft.codec.{PostingsCodec, PrePosting, SmallFloat}
 import graft.search.BM25
 
@@ -130,11 +130,15 @@ object IndexBuilder {
   }
 
   /** The [[Analyzers]] chain `analyzer` run on one text. `noStops` drops
-    * stopword filtering, as synonym rule compilation does. */
+    * stopword filtering, as synonym rule compilation does. Every chain
+    * caps tokens at the default 255 chars, the only length accepted. */
   def chainFlat(analyzer: String, lang: String, content: String,
                 maxTokenLength: Int,
-                noStops: Boolean = false): (Array[String], Array[Int]) =
-    Analyzers.chain(analyzer, noStops, maxTokenLength)(lang, content)
+                noStops: Boolean = false): (Array[String], Array[Int]) = {
+    require(maxTokenLength == StandardTokenizer.DefaultMaxTokenLength,
+      s"maxTokenLength must be ${StandardTokenizer.DefaultMaxTokenLength}")
+    Analyzers.chain(analyzer, noStops)(lang, content)
+  }
 
   /** Analyze one document into a SegmentDoc (terms grouped in-memory per
     * row — within-doc grouping needs no shuffle) through the build's
@@ -588,19 +592,16 @@ object IndexBuilder {
     * docBase concatenation again (codecs/FieldsConsumer.java:90-100).
     * Stage markers inside the delta dir make re-delivery of the same
     * batch idempotent (exactly-once sink semantics under foreachBatch
-    * retries). A delta id that a tiered merge took (its dir holds
-    * `replaces.txt`) or merged away (a committed delta's `replaces.txt`
-    * lists it) is no longer this batch's: building there would be a no-op
-    * or invisible, so the batch fails loudly instead of being lost. */
+    * retries), and so does a committed tiered merge whose `replaces.txt`
+    * names the batch: the merge serves it, even after its dir is gone. */
   def append(spark: SparkSession, input: DataFrame, baseDir: String,
              batchId: Long, cfg: IndexConfig): String = {
     val name = s"delta_$batchId"
     val dir = s"$baseDir/$name"
-    if (Files.exists(Paths.get(dir, "replaces.txt")) ||
-        replacedDeltas(baseDir).contains(name))
-      throw new IllegalStateException(
-        s"cannot append batch $batchId: $dir is taken by a tiered merge")
-    build(spark, input, dir, cfg)
+    // a tiered merge written before merges had their own names
+    if (Files.exists(Paths.get(dir, "replaces.txt")))
+      throw new IllegalStateException(s"cannot append batch $batchId: $dir is a tiered merge")
+    if (!replacedDeltas(baseDir).contains(name)) build(spark, input, dir, cfg)
     dir
   }
 
@@ -889,11 +890,17 @@ object IndexBuilder {
         .map(_.getAbsolutePath)
   }
 
-  /** Every delta dir of `baseDir`, committed or not, in append order. */
+  /** A delta sub-index dir name: an append's `delta_<batchId>` or a
+    * tiered merge's `merge_<n>`, numbered apart so a merge never takes
+    * the id of a batch still to come. */
+  private val DeltaName = "(delta|merge)_(\\d+)".r
+
+  /** Every delta dir of `baseDir`, committed or not: the appends in id
+    * order, then the merges in id order. */
   private def deltaDirs(baseDir: String): Seq[java.io.File] =
     Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("delta_"))
-      .sortBy(f => f.getName.stripPrefix("delta_").toLong)
+      .filter(f => f.isDirectory && DeltaName.matches(f.getName))
+      .sortBy { f => val DeltaName(kind, id) = f.getName; (kind, id.toLong) }
 
   /** Every delta dir of `baseDir` with a done marker, in append order. */
   private def committedDeltas(baseDir: String): Seq[java.io.File] =
@@ -912,12 +919,14 @@ object IndexBuilder {
       .map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Next free delta id: max over ALL delta_* names on disk (including
-    * replaced-but-not-yet-cleaned ones) + 1 — a size-based id would
-    * collide after a tiered compaction leaves holes in the numbering. */
-  def nextDeltaId(baseDir: String): Long =
-    deltaDirs(baseDir).lastOption
-      .fold(0L)(_.getName.stripPrefix("delta_").toLong + 1L)
+  /** Next free append id: max over the delta_* names on disk or hidden
+    * by a committed merge (a re-delivery no-op there), + 1. */
+  def nextDeltaId(baseDir: String): Long = nextId(baseDir, "delta")
+
+  private def nextId(baseDir: String, kind: String): Long =
+    (deltaDirs(baseDir).map(_.getName) ++ replacedDeltas(baseDir)).collect {
+      case DeltaName(`kind`, id) => id.toLong + 1L
+    }.maxOption.getOrElse(0L)
 
   /** Tiered incremental compaction (reference
     * index/TieredMergePolicy.java:75-86: segsPerTier / maxMergeAtOnce /
@@ -925,16 +934,16 @@ object IndexBuilder {
     * some tier holds more than `segsPerTier` delta sub-indexes, and then
     * only that tier's smallest `maxMergeAtOnce` members — the base index
     * and every other delta stay byte-untouched (cold). The merged result
-    * commits as a new delta whose replaces.txt + done marker atomically
-    * hide the sources (see [[subIndexDirs]]). It is one [[rewrite]]:
-    * tombstones covering merged docs are purged from the merged data
-    * exactly like [[compact]] (the tombstone FILES of the sub-indexes left
-    * in place stay — they no-op once their docs are gone and a full
-    * compact clears them), and the sources' tombstones for docs outside
-    * the merge move into the merged delta before it commits. Returns the
-    * merged dir, or None when no tier exceeds the threshold (the common
-    * steady-state call is free: one directory listing + one tiny
-    * collstats read per delta). */
+    * commits as a new `merge_<n>` delta whose replaces.txt + done marker
+    * atomically hide the sources (see [[subIndexDirs]]). It is one
+    * [[rewrite]]: tombstones covering merged docs are purged from the
+    * merged data exactly like [[compact]] (the tombstone FILES of the
+    * sub-indexes left in place stay — they no-op once their docs are gone
+    * and a full compact clears them), and the sources' tombstones for
+    * docs outside the merge move into the merged delta before it commits.
+    * Returns the merged dir, or None when no tier exceeds the threshold
+    * (the common steady-state call is free: one directory listing + one
+    * tiny collstats read per delta). */
   def compactTiered(spark: SparkSession, baseDir: String, cfg: IndexConfig,
                     segsPerTier: Int = 10, maxMergeAtOnce: Int = 10,
                     floorDocs: Long = 4096L): Option[String] =
@@ -970,13 +979,12 @@ object IndexBuilder {
           }
         }
       group.map { srcs =>
-        val out = s"$baseDir/delta_${nextDeltaId(baseDir)}"
-        // what the merge hides: its sources, plus every dir a source still
-        // hides (left on disk by a crash before cleanup) — dropping that
-        // source must not bring them back
+        val out = s"$baseDir/merge_${nextId(baseDir, "merge")}"
+        // what the merge hides: its sources and every name they hide, gone
+        // or not — a dir a crash left must not come back, and a batch
+        // merged generations ago must stay a re-delivery no-op
         val hidden = srcs.map(Paths.get(_)).flatMap(d =>
-          d.getFileName.toString +:
-            replacesOf(d).filter(n => Files.exists(d.resolveSibling(n))))
+          d.getFileName.toString +: replacesOf(d))
         // replaces.txt first: only the done marker the rewrite ends with
         // makes the merge, and with it the hiding, visible
         Files.createDirectories(Paths.get(out))

@@ -157,6 +157,15 @@ class DirectSpellSpec extends AnyFunSuite {
     assert(out.map(_.string) == Seq("merge"))
   }
 
+  test("a path: term is corrected among path terms only") {
+    // the path field's dictionary is path:0001 .. path:0005, all at one
+    // edit from path:0009; content terms never qualify
+    val out = DirectSpell.suggestSimilar(reader, "path:0009", 5,
+      p = P.copy(maxQueryFrequency = 1000f))
+    assert(out.map(w => (w.string, w.freq)) ==
+      (1 to 5).map(i => (f"path:$i%04d", 1L)))
+  }
+
   test("minQueryLength and lowercasing") {
     assert(DirectSpell.suggestSimilar(reader, "mrg", 5).isEmpty)
     val out = DirectSpell.suggestSimilar(reader, "MREGE", 5,

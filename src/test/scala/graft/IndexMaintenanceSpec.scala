@@ -65,27 +65,44 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .foreach(c => assert(c.violations == 0L, s"check ${c.check}"))
   }
 
-  test("append refuses a delta id that a tiered merge took or merged away") {
+  test("tiered merges never take a batch id; a merged batch's re-delivery " +
+    "is a no-op through two generations of merges") {
     import org.apache.spark.sql.functions.lit
-    val dir = SparkSuite.tmpDir("graft-append-taken")
+    val dir = SparkSuite.tmpDir("graft-append-merged")
     IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
     val cfgA = cfg.copy(numDocParts = cfg.numDocParts + 4)
     def batch(k: Int) = CorpusGen.generate(spark, 20, seed = 300L + k).toDF()
       .withColumn("docPart", lit(cfg.numDocParts + k))
+    def append(k: Int) = IndexBuilder.append(spark, batch(k), dir, k, cfgA)
     def maxDoc() = MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).collStats.maxDoc
-    (0 until 3).foreach(k => IndexBuilder.append(spark, batch(k), dir, k, cfgA))
-    // equal sizes tie on dir name: delta_0 and delta_1 merge into delta_3
+    (0 until 3).foreach(append)
+    // equal sizes tie on dir name: delta_0 and delta_1 merge into merge_0
     assert(IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
-      maxMergeAtOnce = 2).contains(s"$dir/delta_3"))
+      maxMergeAtOnce = 2).contains(s"$dir/merge_0"))
     assert(maxDoc() == 260)
-    // batch 3's dir is the merge's; batch 0's is hidden by it
-    for (k <- Seq(3, 0))
-      intercept[IllegalStateException](
-        IndexBuilder.append(spark, batch(k), dir, k, cfgA))
-    // a re-delivery of a batch whose delta is still its own is a no-op
-    IndexBuilder.append(spark, batch(2), dir, 2, cfgA)
-    assert(maxDoc() == 260)
+    // the next batch gets its own delta, not the merge's
+    append(3)
+    assert(maxDoc() == 280)
+    // re-deliveries: batch 0 is merged away, batch 2 still has its delta
+    Seq(0, 2).foreach(append)
+    assert(maxDoc() == 280)
+    // a second generation folds merge_0 in and deletes it: merge_1 alone
+    // now names batch 0, whose re-delivery stays a no-op
+    assert(IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
+      maxMergeAtOnce = 3).contains(s"$dir/merge_1"))
+    assert(!Files.exists(Paths.get(dir, "merge_0")))
+    assert(IndexBuilder.subIndexDirs(dir) == Seq(dir, s"$dir/merge_1"))
+    Seq(0, 3).foreach(append)
+    assert(maxDoc() == 280)
+    assert(!Files.exists(Paths.get(dir, "delta_0")))
+    // every batch id up to 3 is taken, on disk or not
+    assert(IndexBuilder.nextDeltaId(dir) == 4L)
+    // a merge written when merges shared the delta_ names fails the
+    // batch that reaches its id instead of swallowing it
+    Files.createDirectories(Paths.get(dir, "delta_4"))
+    Files.writeString(Paths.get(dir, "delta_4", "replaces.txt"), "delta_2")
+    intercept[IllegalStateException](append(4))
   }
 
   test("a reader opened with another numBuckets than the build's fails " +
@@ -401,8 +418,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .foreach(c => assert(c.violations == 0L, s"merged check ${c.check}"))
     // steady state: nothing over threshold -> free no-op
     assert(IndexBuilder.compactTiered(spark, dir, cfgT).isEmpty)
-    // id allocation skips the numbering hole left by the merge
-    assert(IndexBuilder.nextDeltaId(dir) == 13L)
+    // id allocation skips the ids the merge hid: delta_10 and delta_11
+    // are gone from disk, and a re-delivery of either is a no-op
+    assert(IndexBuilder.nextDeltaId(dir) == 12L)
   }
 
   test("half-merge: a tiered merge that crashed before its done marker " +
@@ -423,7 +441,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(live == 880L)
     // crash after compactTiered wrote the merged segments and
     // replaces.txt, before build() committed the done marker
-    val half = Paths.get(dir, s"delta_${IndexBuilder.nextDeltaId(dir)}")
+    val half = Paths.get(dir, "merge_0")
     copyTree(Paths.get(dir, "delta_0", "segments"), half.resolve("segments"))
     Files.writeString(half.resolve("replaces.txt"), "delta_0")
     assert(!IndexBuilder.subIndexDirs(dir).contains(half.toString))
@@ -463,12 +481,14 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // both visible deltas fit one tier of size 1: the merge runs over
     // them only and never reads the crashed dirs' (absent) markers
     assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
-      .isDefined)
+      .contains(half.toString))
     assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).docmeta.count() == live)
-    // it drops the crashed merge (replaces.txt, no done marker) and keeps
-    // the crashed append, which may still be in flight
-    assert(!Files.exists(half))
+    // it drops the crashed merge (replaces.txt, no done marker), whose
+    // free id the new merge takes with its own replaces.txt, and keeps the
+    // crashed append, which may still be in flight
+    assert(Files.readAllLines(half.resolve("replaces.txt")).toArray.toSeq ==
+      Seq("delta_0", "delta_1"))
     assert(Files.exists(Paths.get(crashed, "segments")))
   }
 
@@ -600,7 +620,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // segsPerTier 1, two at once: the two smallest, delta_0 and delta_1
     val merged = IndexBuilder.compactTiered(spark, dir, cfgT,
       segsPerTier = 1, maxMergeAtOnce = 2)
-    assert(merged.exists(_.endsWith("delta_3")), merged.toString)
+    assert(merged.exists(_.endsWith("merge_0")), merged.toString)
     assert(!Files.exists(Paths.get(dir, "delta_1")))
     // delta_1's tombstones for base and delta_2 docs outlive delta_1
     assertLive(open(dir), live, "after the merge")
@@ -621,18 +641,18 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     Seq("delta_0", "delta_1").foreach(d =>
       copyTree(Paths.get(src, d), Paths.get(saved, d)))
     assert(IndexBuilder.compactTiered(spark, src, cfgT, segsPerTier = 1,
-      maxMergeAtOnce = 2).exists(_.endsWith("delta_3")))
+      maxMergeAtOnce = 2).exists(_.endsWith("merge_0")))
     Seq("delta_0", "delta_1").foreach(d =>
       copyTree(Paths.get(saved, d), Paths.get(src, d)))
-    // what of the merged delta_3 each crash leaves on disk
+    // what of the merged merge_0 each crash leaves on disk
     val states = Seq(
       "after the merged segments" -> Set("replaces.txt", "segments"),
       "after replaces.txt" -> Set("replaces.txt"),
-      "after the done marker" -> Paths.get(src, "delta_3").toFile.list().toSet)
+      "after the done marker" -> Paths.get(src, "merge_0").toFile.list().toSet)
     for ((state, left) <- states) {
       val dir = SparkSuite.tmpDir("graft-crash")
       copyTree(Paths.get(src), Paths.get(dir))
-      Paths.get(dir, "delta_3").toFile.listFiles()
+      Paths.get(dir, "merge_0").toFile.listFiles()
         .filterNot(f => left(f.getName)).foreach(f => deleteRec(f.toPath))
       assertLive(open(dir), live, s"$state: reader")
 
@@ -654,7 +674,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
         s"$state: ${IndexBuilder.subIndexDirs(dir)}")
       // no crashed merge outlives it: every delta dir left on disk serves
       val deltasOnDisk = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("delta_")).map(_.getAbsolutePath).toSet
+        .filter(f => f.getName.startsWith("delta_") ||
+          f.getName.startsWith("merge_")).map(_.getAbsolutePath).toSet
       assert(deltasOnDisk == IndexBuilder.subIndexDirs(dir).toSet - dir,
         s"$state: ${deltasOnDisk.toSeq.sorted}")
     }

@@ -289,6 +289,18 @@ class RankIdentitySpec extends AnyFunSuite {
       !t.term.startsWith("path:") && !t.term.startsWith("rev:")))
   }
 
+  test("path regexp expands only into path terms, even unanchored") {
+    // "^path:d000|import$" reads as (^path:d000)|(import$): the content
+    // term import matches the second branch, and the path-field guard
+    // keeps it out, so the alternation finds only the path:d000 docs
+    def docs(q: Query): Set[Long] =
+      joiner.scores(BoolQ(Seq(Occur.Should -> q))).map(_._1).collect().toSet
+    val d000 = docs(RegexpQ("path:d000"))
+    assert(d000.size == 100)
+    assert(!docs(TermQ("import")).subsetOf(d000))
+    assert(docs(RegexpQ("path:d000|import")) == d000)
+  }
+
   test("WAND path == oracle with DUPLICATE clauses (each occurrence scores)") {
     // duplicate SHOULD clauses each contribute a clause frame (Lucene
     // BooleanQuery keeps duplicates); a term->single-index map dropped

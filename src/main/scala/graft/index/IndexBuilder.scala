@@ -680,7 +680,7 @@ object IndexBuilder {
     * merges them away — reference pre-merge semantics. `input` rows must
     * use FRESH docParts (disjoint from every committed sub-index), since
     * new versions get new internal docIds exactly as in Lucene. Returns
-    * the delta dir. */
+    * the delta dir, `update_<n>`. */
   def updateDocs(spark: SparkSession, baseDir: String, input: DataFrame,
                  cfg: IndexConfig): String =
     withWriteLock(baseDir) { updateDocsLocked(spark, baseDir, input, cfg) }
@@ -695,8 +695,11 @@ object IndexBuilder {
         Seq("repo", "path"), "left_semi")
       .select(col("docId"))
     deleteDocsLocked(spark, baseDir, old)
-    // max-id+1, not count: tiered compaction leaves numbering holes
-    append(spark, input, baseDir, nextDeltaId(baseDir), cfg)
+    // its own counter, as merges have theirs: an update that took the
+    // next append id would make that stream batch a re-delivery no-op
+    val dir = s"$baseDir/update_${nextId(baseDir, "update")}"
+    build(spark, input, dir, cfg)
+    dir
   }
 
   /** Optimistic-concurrency update (Solr _version_ semantics,
@@ -890,13 +893,15 @@ object IndexBuilder {
         .map(_.getAbsolutePath)
   }
 
-  /** A delta sub-index dir name: an append's `delta_<batchId>` or a
-    * tiered merge's `merge_<n>`, numbered apart so a merge never takes
-    * the id of a batch still to come. */
-  private val DeltaName = "(delta|merge)_(\\d+)".r
+  /** A delta sub-index dir name: an append's `delta_<batchId>`, a
+    * tiered merge's `merge_<n>` or an update's `update_<n>`, each kind
+    * numbered apart so neither a merge nor an update takes the id of a
+    * batch still to come. (Updates written before they had their own name
+    * are `delta_<n>` dirs and read as appends.) */
+  private val DeltaName = "(delta|merge|update)_(\\d+)".r
 
   /** Every delta dir of `baseDir`, committed or not: the appends in id
-    * order, then the merges in id order. */
+    * order, then the merges, then the updates. */
   private def deltaDirs(baseDir: String): Seq[java.io.File] =
     Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && DeltaName.matches(f.getName))

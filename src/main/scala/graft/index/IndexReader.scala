@@ -158,12 +158,8 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     if (!cacheData) return scanBlocks(k2t).rdd
     val wanted = k2t.keySet.map(cache.part.getPartition)
     val pruned = PartitionPruningRDD.create(cache.byKey, wanted.contains)
-    // slice s of n: every n-th block of each key, from the s-th
     def slice(s: Int, n: Int): RDD[PostingBlock] =
-      pruned.flatMap(byKey => k2t.iterator.flatMap { case (key, term) =>
-        val bs = byKey.getOrElse(key, Array.empty[BlockRowK])
-        (s until bs.length by n).iterator.map(bs(_).withTerm(term))
-      })
+      pruned.flatMap(IndexReader.slice(k2t, s, n))
     // at most defaultParallelism tasks in all (term stats are memoized:
     // the scorer has already looked them up)
     val n =
@@ -191,6 +187,26 @@ object IndexReader {
   def apply(spark: SparkSession, dir: String,
             cfg: IndexConfig = IndexConfig()): IndexReader =
     new IndexReader(spark, dir, cfg.numBuckets)
+
+  /** The function [[IndexReader.blockRdd]] maps each pruned cache
+    * partition with: slice s of n, every n-th block of each key in
+    * `k2t`, from the s-th, with the key's term attached. */
+  private[graft] def slice(k2t: Map[Long, String], s: Int, n: Int)
+      : Map[Long, Array[BlockRowK]] => Iterator[PostingBlock] =
+    new Slice(k2t, s, n)
+
+  /** A named class, not a lambda: Spark's ClosureCleaner returns at once
+    * for it, where for a lambda it reads and parses the declaring class
+    * file on every query. */
+  private final class Slice(k2t: Map[Long, String], s: Int, n: Int)
+      extends (Map[Long, Array[BlockRowK]] => Iterator[PostingBlock])
+      with Serializable {
+    def apply(byKey: Map[Long, Array[BlockRowK]]): Iterator[PostingBlock] =
+      k2t.iterator.flatMap { case (key, term) =>
+        val bs = byKey.getOrElse(key, Array.empty[BlockRowK])
+        (s until bs.length by n).iterator.map(bs(_).withTerm(term))
+      }
+  }
 
   /** A filled postings cache: one map per partition from term key to that
     * key's blocks; a key lives in partition `part.getPartition(key)`. */

@@ -249,9 +249,7 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
                postingsPerTask: Long = Long.MaxValue): RDD[PostingBlock] =
     spark.sparkContext.union(readers.zip(boundScale).map { case (r, (fc, fp)) =>
       val b = r.blockRdd(terms, postingsPerTask)
-      if (fc == 1f && fp == 1f) b
-      else b.map(x => x.copy(maxPartial = math.min(1f,
-        x.maxPartial * (if (x.term.startsWith("path:")) fp else fc))))
+      if (fc == 1f && fp == 1f) b else b.map(new MultiIndexReader.ScaleBound(fc, fp))
     })
 
   def postingsCached: Boolean = readers.forall(_.postingsCached)
@@ -266,6 +264,16 @@ final class MultiIndexReader(val readers: Seq[IndexReader]) extends SearchReader
 }
 
 object MultiIndexReader {
+  /** A block with its [[MultiIndexReader.boundScale]] correction applied
+    * (`fc` for content terms, `fp` for path terms). A named class, not a
+    * lambda, so that Spark's ClosureCleaner reads no class file for it on
+    * each query. */
+  private final class ScaleBound(fc: Float, fp: Float)
+      extends (PostingBlock => PostingBlock) with Serializable {
+    def apply(x: PostingBlock): PostingBlock = x.copy(maxPartial = math.min(1f,
+      x.maxPartial * (if (x.term.startsWith("path:")) fp else fc)))
+  }
+
   /** Re-open a point-in-time view over a base index plus every committed
     * delta sub-index (the SearcherManager.maybeRefresh analog). */
   def open(spark: SparkSession, baseDir: String, numBuckets: Int,

@@ -3,6 +3,7 @@ package graft.search
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{Dependency, HashPartitioner, NarrowDependency, Partition, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
@@ -47,7 +48,10 @@ import graft.index.{Ids, SearchReader}
   * The chunk heaps (at most k x numChunks hits) are collected and merged
   * on the driver by (score desc, docId asc) == global top-k; the answer
   * is a local DataFrame, so a warm query plans no Spark SQL and compiles
-  * no code.
+  * no code. The job is submitted with `SparkContext.runJob` and every
+  * function it ships is a named class ([[WandScorer.ChunkTask]]), so a
+  * warm query also cleans no closure: Spark's ClosureCleaner reads and
+  * parses the declaring class file of every lambda on every job.
   */
 final class WandScorer private[graft] (reader: SearchReader,
                                       postingsPerChunk: Long) {
@@ -59,12 +63,28 @@ final class WandScorer private[graft] (reader: SearchReader,
     * are float-identical to JoinScorer (tested property). */
   def topK(terms: Seq[String], k: Int, conjunctive: Boolean = false,
            minShouldMatch: Int = 0): DataFrame = {
-    if (k <= 0) return WandScorer.frame(sparkS, Seq.empty)
+    val chunkHeaps = chunkJob(terms, k, conjunctive, minShouldMatch) match {
+      case None => Array.empty[(Long, Float)]
+      case Some((byChunk, task)) =>
+        sparkS.sparkContext.runJob(byChunk, task, 0 until byChunk.getNumPartitions)
+          .flatten
+    }
+    WandScorer.frame(sparkS, chunkHeaps.sortWith((a, b) =>
+      a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k).toSeq)
+  }
+
+  /** The query's one Spark job: partition i of the RDD holds (at least)
+    * the blocks overlapping chunk i, and the function runs the WAND loop
+    * over chunk i's blocks. None when the answer is empty without a job. */
+  private[graft] def chunkJob(terms: Seq[String], k: Int, conjunctive: Boolean,
+                              minShouldMatch: Int)
+      : Option[(RDD[PostingBlock], (TaskContext, Iterator[PostingBlock]) => Array[(Long, Float)])] = {
+    if (k <= 0) return None
     val stats = reader.termStats(terms.distinct)
     val present = terms.filter(stats.contains)
     if (present.isEmpty || (conjunctive && present.length < terms.length) ||
       (!conjunctive && minShouldMatch > present.length))
-      return WandScorer.frame(sparkS, Seq.empty)
+      return None
     val maxDoc = reader.collStats.maxDoc
     // weights in clause order (clause order = position in `terms`)
     val wvs: Array[Float] = present.map(t =>
@@ -76,7 +96,7 @@ final class WandScorer private[graft] (reader: SearchReader,
     val termIdx: Map[String, Seq[Int]] = present.zipWithIndex
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // per-clause norm cache (a clause's field decides its avgdl). These
-    // per-query arrays are a few KB total — they ride in the task closure
+    // per-query arrays are a few KB total — they ride in the task
     // directly; per-query sc.broadcast() calls were a measurable
     // driver-side fixed cost at interactive latency (round-4 q_wand3 @32
     // inversion). Tombstones stay a broadcast (can be MBs) but are built
@@ -84,58 +104,28 @@ final class WandScorer private[graft] (reader: SearchReader,
     val caches: Array[Array[Float]] = present.map(t =>
       reader.normCacheFor(graft.index.IndexBuilder.fieldOfTerm(t))).toArray
     val msm = if (conjunctive) present.length else math.max(minShouldMatch, 1)
-    val kk = k
-    val delSortedB = reader.deletedSortedBroadcast
 
     val ppc = WandScorer.partsPerChunk(reader.numDocPartsHint,
       sparkS.sparkContext.defaultParallelism, stats.values.map(_.df).sum,
       postingsPerChunk)
     val numChunks =
       (math.max(1, reader.numDocPartsHint) + ppc - 1) / ppc
-    // Exactly ONE task per chunk; partition i of `byChunk` holds (at
-    // least) the blocks overlapping chunk i. A cached reader's blocks come
-    // through the narrow fan-out, so the query is one stage with no
-    // shuffle; an uncached reader's are shuffled to their chunks once,
-    // since there a fan-out re-scans the parquet once per chunk (slower
-    // on perfbench's uncached ingest_serve; see SCALE.md). The explicit
-    // HashPartitioner over chunk ids 0..numChunks-1 is bijective, so
-    // partition index == chunk id on both inputs.
+    // Exactly ONE task per chunk. A cached reader's blocks come through
+    // the narrow fan-out, so the query is one stage with no shuffle; an
+    // uncached reader's are shuffled to their chunks once, since there a
+    // fan-out re-scans the parquet once per chunk (slower on perfbench's
+    // uncached ingest_serve; see SCALE.md). The explicit HashPartitioner
+    // over chunk ids 0..numChunks-1 is bijective, so partition index ==
+    // chunk id on both inputs.
     val blocks = reader.blockRdd(present)
     val byChunk: RDD[PostingBlock] =
       if (reader.postingsCached) new WandScorer.FanOutRDD(blocks, numChunks)
       else blocks
-        .flatMap(b => WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).map(c => (c, b)))
+        .flatMap(new WandScorer.ToChunks(ppc))
         .partitionBy(new HashPartitioner(numChunks))
-        .values
-    val chunkHeaps = byChunk
-      .mapPartitionsWithIndex { (chunk, it) =>
-        val byTerm = Array.fill(wvs.length)(
-          scala.collection.mutable.ArrayBuffer[PostingBlock]())
-        it.foreach { b =>
-          if (WandScorer.chunksOf(b.firstDoc, b.lastDoc, ppc).contains(chunk))
-            termIdx(b.term).foreach(byTerm(_) += b)
-        }
-        val loDoc = (chunk.toLong * ppc) << Ids.DocIdShift
-        val hiDoc = ((chunk + 1).toLong * ppc) << Ids.DocIdShift
-        val cursors = (0 until wvs.length).flatMap { i =>
-          val blocks = WandScorer.disjointBlocks(
-            byTerm(i).sortBy(_.firstDoc).toArray, caches(i))
-          if (blocks.isEmpty) None
-          else Some(new WandScorer.Cursor(i, wvs(i), blocks, loDoc, hiDoc,
-            caches(i)))
-        }.toArray
-        if (cursors.length < msm) Iterator.empty
-        else {
-          val del = delSortedB.value
-          val deleted: Long => Boolean =
-            if (del.isEmpty) _ => false
-            else id => java.util.Arrays.binarySearch(del, id) >= 0
-          WandScorer.wand(cursors, wvs.length, msm, kk, deleted).iterator
-        }
-      }
-      .collect()
-    WandScorer.frame(sparkS, chunkHeaps.sortWith((a, b) =>
-      a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k).toSeq)
+        .map(new WandScorer.BlockOf)
+    Some((byChunk, new WandScorer.ChunkTask(wvs, termIdx, caches, msm, k, ppc,
+      reader.deletedSortedBroadcast)))
   }
 }
 
@@ -174,6 +164,60 @@ object WandScorer {
     * bounded by the chunk-count cap. */
   def chunksOf(firstDoc: Long, lastDoc: Long, ppc: Int): Range =
     Ids.docPart(firstDoc) / ppc to Ids.docPart(lastDoc) / ppc
+
+  // The per-query functions below are named classes, not lambdas: Spark's
+  // ClosureCleaner returns at once for a non-lambda, where for a lambda it
+  // reads and parses the class file that declares it on every job.
+
+  /** The WAND loop over one chunk: the task's partition index is its
+    * chunk id. Keeps the blocks overlapping the chunk and returns the
+    * chunk's top-k hits. */
+  private[graft] final class ChunkTask(wvs: Array[Float],
+                                       termIdx: Map[String, Seq[Int]],
+                                       caches: Array[Array[Float]], msm: Int,
+                                       k: Int, ppc: Int,
+                                       delSortedB: Broadcast[Array[Long]])
+      extends ((TaskContext, Iterator[PostingBlock]) => Array[(Long, Float)])
+      with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[PostingBlock]): Array[(Long, Float)] = {
+      val chunk = ctx.partitionId()
+      val byTerm = Array.fill(wvs.length)(
+        scala.collection.mutable.ArrayBuffer[PostingBlock]())
+      it.foreach { b =>
+        if (chunksOf(b.firstDoc, b.lastDoc, ppc).contains(chunk))
+          termIdx(b.term).foreach(byTerm(_) += b)
+      }
+      val loDoc = (chunk.toLong * ppc) << Ids.DocIdShift
+      val hiDoc = ((chunk + 1).toLong * ppc) << Ids.DocIdShift
+      val cursors = (0 until wvs.length).flatMap { i =>
+        val blocks = disjointBlocks(byTerm(i).sortBy(_.firstDoc).toArray, caches(i))
+        if (blocks.isEmpty) None
+        else Some(new Cursor(i, wvs(i), blocks, loDoc, hiDoc, caches(i)))
+      }.toArray
+      if (cursors.length < msm) Array.empty
+      else {
+        val del = delSortedB.value
+        val deleted: Long => Boolean =
+          if (del.isEmpty) _ => false
+          else id => java.util.Arrays.binarySearch(del, id) >= 0
+        wand(cursors, wvs.length, msm, k, deleted)
+      }
+    }
+  }
+
+  /** The uncached exchange's map side: a block keyed by every chunk it
+    * overlaps. */
+  private final class ToChunks(ppc: Int)
+      extends (PostingBlock => Iterator[(Int, PostingBlock)]) with Serializable {
+    def apply(b: PostingBlock): Iterator[(Int, PostingBlock)] =
+      chunksOf(b.firstDoc, b.lastDoc, ppc).iterator.map(c => (c, b))
+  }
+
+  /** The uncached exchange's reduce side: the block without its chunk. */
+  private final class BlockOf extends (((Int, PostingBlock)) => PostingBlock)
+      with Serializable {
+    def apply(cb: (Int, PostingBlock)): PostingBlock = cb._2
+  }
 
   /** One partition per chunk, each reading EVERY partition of `prev` (a
     * narrow dependency: the chunk tasks run in the stage that reads

@@ -105,6 +105,28 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     intercept[IllegalStateException](append(4))
   }
 
+  test("an update never takes a batch id: the batch after it is indexed") {
+    import org.apache.spark.sql.functions.lit
+    val dir = SparkSuite.tmpDir("graft-append-updated")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
+    val cfgA = cfg.copy(numDocParts = cfg.numDocParts + 4)
+    def batch(k: Int) = CorpusGen.generate(spark, 20, seed = 300L + k).toDF()
+      .withColumn("docPart", lit(cfg.numDocParts + k))
+    def maxDoc() = MultiIndexReader.open(spark, dir, cfg.numBuckets,
+      cacheData = false).collStats.maxDoc
+    (0 until 2).foreach(k => IndexBuilder.append(spark, batch(k), dir, k, cfgA))
+    // 20 new keys: nothing to tombstone, 20 docs more
+    val upd = IndexBuilder.updateDocs(spark, dir, batch(3), cfgA)
+    assert(maxDoc() == 260)
+    IndexBuilder.append(spark, batch(2), dir, 2L, cfgA)
+    assert(maxDoc() == 280, "batch 2 was dropped")
+    assert(upd == s"$dir/update_0")
+    assert(IndexBuilder.subIndexDirs(dir).map(Paths.get(_).getFileName.toString) ==
+      Seq(Paths.get(dir).getFileName.toString, "delta_0", "delta_1", "delta_2",
+        "update_0"))
+    assert(IndexBuilder.nextDeltaId(dir) == 3L)
+  }
+
   test("a reader opened with another numBuckets than the build's fails " +
     "before its first dictionary lookup") {
     val dir = SparkSuite.tmpDir("graft-buckets")

@@ -554,6 +554,12 @@ class RankIdentitySpec extends AnyFunSuite {
     // the fan-out's parent: only the cache partitions holding the keys
     val keyParts = reader.blockRdd(fresh).getNumPartitions
     assert(keyParts <= fresh.size, s"$keyParts cache partitions for ${fresh.size} keys")
+    // and the job cleans no closure: the functions it ships are named
+    // classes, not lambdas
+    val (_, task) = wand.chunkJob(fresh, 10, conjunctive = false, minShouldMatch = 0).get
+    assert(!org.apache.spark.Indylambda(task), "the WAND chunk task is a lambda")
+    assert(!org.apache.spark.Indylambda(IndexReader.slice(Map.empty, 0, 1)),
+      "blockRdd's slice function is a lambda")
   }
 
   test("top-0 is empty on both scorers, and WAND runs no Spark job for it") {

@@ -1404,6 +1404,7 @@ object OracleQueries {
          |  ('block_invariants', CAST(0 AS BIGINT)),
          |  ('block_ranges_disjoint', CAST(0 AS BIGINT)),
          |  ('collstats_consistent', CAST(0 AS BIGINT)),
+         |  ('commit_files_exist', CAST(0 AS BIGINT)),
          |  ('docid_unique', CAST(0 AS BIGINT)),
          |  ('norm_matches_dl', CAST(0 AS BIGINT)),
          |  ('sha256_matches_source', CAST(0 AS BIGINT)),

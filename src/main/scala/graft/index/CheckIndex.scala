@@ -114,18 +114,24 @@ object CheckIndex {
         .count()
     }
 
+    // every dir and delete part-file the latest generation lists exists
+    val latest = Commit.latest(reader.pin.baseDir)
+    val exists = (p: String) => java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+    val commitBad = latest.subs.map(Commit.Pin(reader.pin.baseDir, latest, _))
+      .flatMap(p => p.dir +: p.deleteFiles).count(!exists(_)).toLong
+
     // every tombstone must reference a docId that exists SOMEWHERE in the
     // collection. Tombstones are collection-scoped: updateDocs writes a
     // delta-resident doc's tombstone into the BASE dir's deletes/, so the
-    // anti-join must run against the union of docmeta across base + delta
-    // sub-indexes, not this sub-index alone (else a healthy updated index
-    // is flagged corrupt)
-    val delBad = reader.deletedDocs.map { del =>
-      val collectionDocs = IndexBuilder.subIndexDirs(reader.dir)
+    // anti-join must run against the union of docmeta across every
+    // sub-index of the reader's generation, not this sub-index alone (else
+    // a healthy updated index is flagged corrupt)
+    val delFiles = reader.pin.deleteFiles.filter(exists)
+    val delBad = if (delFiles.isEmpty) None else Some {
+      val collectionDocs = reader.pin.gen.dirs(reader.pin.baseDir)
         .map(d => spark.read.parquet(s"$d/segments").select($"docId"))
-        .reduceOption(_ union _)
-        .getOrElse(dm.select($"docId"))
-      del.select($"docId").distinct()
+        .reduce(_ union _)
+      spark.read.parquet(delFiles: _*).select($"docId").distinct()
         .join(collectionDocs, Seq("docId"), "left_anti").count()
     }
 
@@ -135,7 +141,8 @@ object CheckIndex {
       CheckResult("termdict_vs_postings", statsBad),
       CheckResult("docid_unique", docidDup),
       CheckResult("norm_matches_dl", normBad),
-      CheckResult("collstats_consistent", collBad)) ++
+      CheckResult("collstats_consistent", collBad),
+      CheckResult("commit_files_exist", commitBad)) ++
       shaBad.map(n => CheckResult("sha256_matches_source", n)) ++
       delBad.map(n => CheckResult("deletes_reference_live_segment", n))
     facts.unpersist(); dm.unpersist()

@@ -27,9 +27,10 @@ import graft.search.BM25
   * trick of codecs/FieldsConsumer.java:90-100).
   *
   * The build is resumable: every stage writes a lineage JSON marker
-  * after its data commits; a re-run skips completed stages. docIds
-  * derive from a fixed hash-partitioning + canonical sort, never from
-  * runtime state, so resumed builds are byte-identical.
+  * after its data; a re-run skips completed stages, and docIds never
+  * depend on runtime state, so resumed builds are byte-identical. What a
+  * reader sees is decided only by the [[Commit]] generation a mutation
+  * publishes last.
   */
 object IndexBuilder {
 
@@ -105,15 +106,11 @@ object IndexBuilder {
   }
 
   /** Merge one reduce-side run of same-(key, salt) pre-blocks into a
-    * docId-ascending pre-encoded posting stream for the canonical
-    * re-block. Map partitions are file-chunk bin-packs over docId-sorted
-    * segments files, so two partitions' spans are almost always
-    * disjoint: the fast path concatenates in firstDoc order. If
-    * bin-packing ever interleaves chunk ranges, the fallback decodes the
-    * run and sorts by docId (each pre-block is individually ascending,
-    * so TimSort sees mostly-sorted input). Positions stay bytes
-    * throughout ([[PostingsCodec.decodePre]]). Memory is bounded by one
-    * (key, salt) run, compressed. */
+    * docId-ascending posting stream for the canonical re-block: spans are
+    * almost always disjoint (map partitions bin-pack docId-sorted files),
+    * so they concatenate in firstDoc order; otherwise the run is decoded
+    * and sorted by docId. Positions stay bytes
+    * ([[PostingsCodec.decodePre]]); memory is one compressed run. */
   private[graft] def mergeRuns(
       run: scala.collection.Seq[BlockRowK]): Iterator[PrePosting] = {
     val sorted = run.sortBy(_.firstDoc)
@@ -292,6 +289,7 @@ object IndexBuilder {
     val body = metrics.map { case (k, v) => s""""$k": $v""" }
       .mkString("{", ", ", s""", "stage": "$stage", "schemaVersion": 1}""")
     Files.writeString(p, body)
+    Commit.step(s"$dir marker $stage")
   }
 
   /** Full build. `input` must have columns repo, path, commit, lang,
@@ -304,9 +302,20 @@ object IndexBuilder {
     * pmod(hash(repo,path,commit), numDocParts) (Solr's murmur3 doc routing,
     * solr/solrj/.../CompositeIdRouter.java:55). Either way the assignment
     * is a pure function of the data — independent of runtime partitioning,
-    * so a resumed build is byte-identical. Returns the index directory. */
+    * so a resumed build is byte-identical. The build ends by publishing the
+    * index's first [[Commit]] generation. Returns the index directory. */
   def build(spark: SparkSession, input: DataFrame, dir: String,
             cfg: IndexConfig = IndexConfig()): String = {
+    stages(spark, input, dir, cfg)
+    withWriteLock(dir)(Commit.publish(dir)(g =>
+      if (g.subs.nonEmpty) None else Some(g.copy(subs = Seq(Commit.SubState("", Nil))))))
+    dir
+  }
+
+  /** The build's stages into `dir`, each skipped when its marker exists;
+    * publishes nothing. */
+  private def stages(spark: SparkSession, input: DataFrame, dir: String,
+                     cfg: IndexConfig): Unit = {
     import spark.implicits._
 
     // ---- stage 1: segments (invert; doc-partitioned forward index) ----
@@ -347,6 +356,7 @@ object IndexBuilder {
       segs.map { s => docsAcc.add(1); tokAcc.add(s.dl); s }
         .write.mode("overwrite").option("compression", "zstd")
         .parquet(segPath)
+      Commit.step(segPath)
       writeMarker(dir, "segments",
         Map("docs" -> docsAcc.value, "tokens" -> tokAcc.value))
     }
@@ -364,9 +374,11 @@ object IndexBuilder {
         coalesce(sum($"pdl"), lit(0L))).head()
       val cs = CollStats(row.getLong(0), row.getLong(1))
       Seq(cs).toDS().write.mode("overwrite").parquet(s"$dir/collstats")
+      Commit.step(s"$dir/collstats")
       Seq(FieldStats("content", row.getLong(1)),
         FieldStats("path", row.getLong(2))).toDS()
         .write.mode("overwrite").parquet(s"$dir/fieldstats")
+      Commit.step(s"$dir/fieldstats")
       writeMarker(dir, "collstats",
         Map("maxDoc" -> cs.maxDoc, "sumTotalTermFreq" -> cs.sumTotalTermFreq,
           "pathSumTtf" -> row.getLong(2)))
@@ -376,16 +388,11 @@ object IndexBuilder {
       .collect().find(_.field == "path").map(_.sumTtf).getOrElse(0L)
 
     // ---- hot terms for salting: sampled df estimate ----
-    // A term is hot when df >= hotDfThreshold; a deterministic doc sample
-    // sized so a threshold-df term is expected >= 500 times finds the hot
-    // set without exploding every posting (hot/not-hot affects only block
-    // layout and skew, never results — IndexMaintenanceSpec proves both
-    // extremes identical). Sample seed is fixed, the sampled frame is the
-    // committed segments parquet, so resumes see the same hot set.
-    // LAZY: the sampled scan + driver collect runs only when the postings
-    // stage actually needs the hot set — an idempotent re-delivery of an
-    // already-completed build skips it entirely instead of re-scanning
-    // segments on every resume
+    // A term is hot when df >= hotDfThreshold, estimated from a fixed-seed
+    // doc sample of the committed segments (so resumes see the same set)
+    // sized to see a threshold-df term >= 500 times. Hotness changes only
+    // block layout, never results. LAZY: only a postings stage that still
+    // has to run pays for the sample.
     lazy val hotTerms: Set[String] = timed("hotterms") {
       val hs =
         if (cfg.hotDfThreshold > collStats.maxDoc) Set.empty[String]
@@ -419,41 +426,25 @@ object IndexBuilder {
       val postAcc = spark.sparkContext.longAccumulator("graft.postings")
       val blockAcc = spark.sparkContext.longAccumulator("graft.blocks")
       // Shuffle key = (termKey, salt): hashing keys spreads the merge
-      // over ALL shuffle partitions at any parallelism, and salt still
-      // splits hot terms into disjoint docId-range chunks. The row is
-      // (key: Long, docId, pb, norm) — NO term string: the 63-bit
-      // TermKeys key (field bit included) replaces the var-length term
-      // bytes, cutting both the exchanged bytes and, more importantly,
-      // the sort cost — (key, docId) sorts on Spark's 8-byte radix
-      // prefix, where term strings fell back to byte-wise comparisons
-      // on every shared prefix ("path:", common stems). Term text is
-      // recovered ONLY in the dictionary stage (from the segments'
-      // vocabulary) and at read time (from the query's own terms) —
-      // the Lucene posture: postings files are keyed by term ord, the
-      // .tim dictionary owns the bytes. Key locality for reads comes
-      // from the within-partition (key, docId) sort: every file is
-      // key-sorted, so parquet row-group min/max stats prune term
-      // lookups (the BlockTree-seek analog). salt is a pure
-      // PARTITIONING expression (hot set tiny by construction:
-      // |hot| <= sumTtf/hotDfThreshold) — it steers the hash exchange
-      // but is NOT materialized into the shuffled row; the encoder
-      // re-derives it from (key, docId). tf rides inside pb (its VInt
-      // prefix).
+      // over ALL shuffle partitions, and salt splits hot terms into
+      // disjoint docId-range chunks. Rows carry the 63-bit TermKeys key,
+      // never the term string: (key, docId) sorts on Spark's 8-byte radix
+      // prefix, and term text comes back only in the dictionary stage and
+      // at read time (the Lucene posture: postings are keyed by term ord,
+      // the .tim dictionary owns the bytes). Every file is key-sorted, so
+      // parquet row-group stats prune term lookups (the BlockTree-seek
+      // analog). salt only steers the exchange (|hot| <=
+      // sumTtf/hotDfThreshold); the encoder re-derives it from (key,
+      // docId). tf rides inside pb (its VInt prefix).
       val hotKeys: Set[Long] = hotTerms.map(TermKeys.of)
       val hotKeySeq = hotKeys.toSeq
       val hotB = spark.sparkContext.broadcast(hotKeys)
       // ---- map side: LOCAL (key, docId) sort + pre-block encode ----
-      // Rounds 1-4 shuffled one Tungsten row PER POSTING: ~48 B of row
-      // framing (null bits, fixed slots, var-length offsets) around a
-      // ~4 B payload — 1558 B/doc on the wire. Now each map partition
-      // sorts locally (sortWithinPartitions = spillable
-      // UnsafeExternalSorter, NO exchange) and VByte-encodes 128-posting
-      // PRE-BLOCKS, so the exchange carries the compressed postings
-      // payload itself: row count drops ~100x for frequent terms and the
-      // bytes are the codec's, not the row format's. maxPartial is NOT
-      // computed here (cache = null): the reduce side re-derives it
-      // during the canonical re-block, so no float work is wasted on
-      // blocks that get re-blocked anyway.
+      // Each map partition sorts locally (spillable, no exchange) and
+      // encodes 128-posting PRE-BLOCKS, so the exchange carries the
+      // compressed payload rather than one ~48 B row per ~4 B posting.
+      // maxPartial is left to the reduce side's canonical re-block
+      // (cache = null).
       val preBlocks = segments
         .select($"docId", explode($"postings").as("p"), $"norm", $"pnorm")
         .select(TermKeys.column($"p.term").as("key"), $"docId",
@@ -474,17 +465,11 @@ object IndexBuilder {
                 .map(BlockRowK.of(key, _))
             }
         }
-      // ---- ONE exchange, now carrying compressed pre-blocks ----
-      // Hot keys hash on the salt of firstDoc (valid: a pre-block never
-      // spans a salt boundary, see above). Reduce groups consecutive
-      // same-(key, salt) runs and re-blocks them into the CANONICAL
-      // 128-posting block stream through the same writer (encodePre),
-      // positions kept as bytes — byte-identical to the round-4 output,
-      // so every reader/WAND/CheckIndex invariant is untouched. Map
-      // partitions are file-chunk bin-packs, so two partitions' doc
-      // ranges USUALLY don't interleave (segments files are docId-
-      // sorted): the merge concatenates when spans are disjoint in
-      // firstDoc order and falls back to a decode-merge-sort otherwise.
+      // ---- ONE exchange of compressed pre-blocks ----
+      // Hot keys hash on the salt of firstDoc (a pre-block never spans a
+      // salt boundary). Reduce re-blocks each same-(key, salt) run into
+      // the CANONICAL 128-posting block stream through the same writer
+      // (encodePre), positions kept as bytes ([[mergeRuns]]).
       val preSaltCol =
         if (hotKeySeq.isEmpty) lit(0L)
         else when($"key".isin(hotKeySeq: _*), shiftright($"firstDoc", shift))
@@ -508,36 +493,27 @@ object IndexBuilder {
       // bench shows is the better trade at high core counts
       blocks.write.mode("overwrite").option("compression", "zstd")
         .parquet(s"$dir/postings/wave=0")
+      Commit.step(s"$dir/postings")
       writeMarker(dir, postingsStage,
         Map("postings" -> postAcc.value, "blocks" -> blockAcc.value))
     }
 
     // ---- stage 5: term dictionary ----
     // Stats re-aggregated from block METADATA keyed by term key
-    // (~postings/128 input rows — never a second full posting shuffle);
-    // term STRINGS come from the segments' vocabulary (a column-pruned
-    // scan of just postings.term with map-side-combined distinct), joined
-    // back on the key. This is also where the 62-bit key space is
-    // audited: any two distinct terms sharing a key ABORT the build
-    // before the `done` marker — a collision would have interleaved two
-    // posting lists in the merge, so the index must never be served.
-    // (CheckIndex additionally cross-checks the dictionary against fully
-    // DECODED postings, so stored block metadata can't drift unnoticed.)
+    // (~postings/128 rows); term STRINGS come from the segments'
+    // vocabulary, joined back on the key. Two distinct terms sharing a
+    // 62-bit key ABORT the build before it commits: their posting lists
+    // were interleaved in the merge (CheckIndex re-checks decoded blocks).
     if (!stageDone(dir, "termstats")) timed("termstats") {
       val nb = cfg.numBuckets
       val keyAgg = spark.read.parquet(s"$dir/postings")
         .groupBy($"key")
         .agg(sum($"count").as("df"), sum($"sumTf").as("ttf"),
           max($"maxTf").as("maxTf"))
-      // Term strings come from the pruned postings.term column. Shape
-      // matters here: distinct() FIRST (HashAggregate with var-length
-      // grouping key and NO aggregation buffers — stays on the fast
-      // unsafe hash-map path, dedup happens map-side), THEN the
-      // vocab-sized key agg whose min/max(term) buffers force the slower
-      // ObjectHashAggregate — measured 2x faster than folding the
-      // min/max into the 10^8-row pass. min != max per key <=> two
-      // distinct terms share a 62-bit key. Cached so the clash probe and
-      // the dictionary join are two actions over one pass.
+      // distinct() FIRST (map-side dedup on the fast unsafe hash-map
+      // path), THEN the vocab-sized key agg whose min/max(term) buffers
+      // need ObjectHashAggregate: 2x faster than min/max in one pass.
+      // min != max per key <=> two terms share a key. Cached for 2 uses.
       val vocab = segments.select(explode($"postings.term").as("term"))
         .distinct()
         .groupBy(TermKeys.column($"term").as("key"))
@@ -555,22 +531,16 @@ object IndexBuilder {
         .as[(String, Long, Long, Int)]
         .map { case (t, df, ttf, mtf) =>
           TermStats(t, Buckets.of(t, nb), df, ttf, mtf) }
-        // co-locate each bucket into one task before the partitionBy
-        // write: without this every agg task writes a sliver of every
-        // bucket directory (tasks x buckets tiny files — file-create
-        // overhead was ~8% of the whole build and scaled at 0.94x);
-        // with it the stage emits exactly numBuckets files. The
-        // within-bucket TERM SORT makes each file's parquet row-group
-        // min/max stats monotone in term, so prefix/range dictionary
-        // expansions (PrefixQ/RangeQ/rev: leading wildcards) prune to
-        // the matching row groups instead of scanning the whole
-        // dictionary — the difference between O(matches) and O(vocab)
-        // IO at a 10^8-term dictionary.
+        // one task per bucket: exactly numBuckets files, not tasks x
+        // buckets slivers (file creates were ~8% of a build). TERM SORT makes
+        // row-group stats monotone in term, so prefix/range expansions
+        // read O(matches), not O(vocab).
         .repartition($"bucket")
         .sortWithinPartitions($"term")
         .as[TermStats]
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$dir/termstats")
+      Commit.step(s"$dir/termstats")
       vocab.unpersist()
       // readers check it: a lookup under another bucket count silently
       // misses terms (IndexReader.termStats)
@@ -578,41 +548,44 @@ object IndexBuilder {
     }
 
     if (!stageDone(dir, "done")) writeMarker(dir, "done", Map())
-    dir
   }
 
-  /** Append a delta batch as its own SUB-INDEX directory (the NRT
-    * soft-commit analog: each micro-batch becomes a new immutable segment
-    * set, made visible by re-opening a [[MultiIndexReader]] — reference
-    * DirectoryReader.open(IndexWriter), index/DirectoryReader.java:85).
+  /** Append a delta batch as its own SUB-INDEX directory `delta_<batchId>`
+    * (the NRT soft-commit analog: each micro-batch becomes a new immutable
+    * segment set, made visible by re-opening a [[MultiIndexReader]] —
+    * reference DirectoryReader.open(IndexWriter), index/DirectoryReader.java:85).
     *
     * `input` must carry a `docPart` column DISJOINT from the base index's
     * and every earlier delta's (callers offset by partsSoFar); that keeps
     * docIds globally unique so the union reader needs no remapping —
     * docBase concatenation again (codecs/FieldsConsumer.java:90-100).
-    * Stage markers inside the delta dir make re-delivery of the same
-    * batch idempotent (exactly-once sink semantics under foreachBatch
-    * retries), and so does a committed tiered merge whose `replaces.txt`
-    * names the batch: the merge serves it, even after its dir is gone. */
+    * The delta commits in the generation that records `batchId` as the
+    * last batch, so a re-delivery (`batchId <= lastBatch`) is a no-op even
+    * after a merge folded the delta away (exactly-once foreachBatch
+    * semantics), and a retry of an uncommitted batch resumes from its
+    * stage markers. Lock-free: it re-applies its edit when another writer
+    * publishes first. */
   def append(spark: SparkSession, input: DataFrame, baseDir: String,
              batchId: Long, cfg: IndexConfig): String = {
     val name = s"delta_$batchId"
     val dir = s"$baseDir/$name"
-    // a tiered merge written before merges had their own names
-    if (Files.exists(Paths.get(dir, "replaces.txt")))
-      throw new IllegalStateException(s"cannot append batch $batchId: $dir is a tiered merge")
-    if (!replacedDeltas(baseDir).contains(name)) build(spark, input, dir, cfg)
+    if (batchId > Commit.latest(baseDir).lastBatch) {
+      stages(spark, input, dir, cfg)
+      Commit.publish(baseDir)(g =>
+        if (batchId <= g.lastBatch) None
+        else Some(g.copy(lastBatch = batchId, subs = g.subs :+ Commit.SubState(name, Nil))))
+    }
     dir
   }
 
   /** Single-writer lock (reference IndexWriter write.lock,
     * index/IndexWriter.java + store/NativeFSLockFactory.java — here a
     * plain atomic-create marker, which is what a driver-coordinated
-    * batch pipeline needs): every MUTATING entry point (delete / update
-    * / versioned update) runs under it; a second concurrent writer fails
-    * fast instead of interleaving tombstone and delta commits. A crash
-    * can leave a stale lock — clear it with [[unlock]] (the
-    * IndexWriter.unlock analog) once no writer is running. */
+    * batch pipeline needs): every mutation but [[append]] publishes its
+    * generation under it; a second concurrent writer fails fast instead
+    * of interleaving its commits. A crash can leave a stale lock — clear
+    * it with [[unlock]] (the IndexWriter.unlock analog) once no writer is
+    * running. */
   def withWriteLock[T](dir: String)(f: => T): T = {
     val lock = Paths.get(dir, "write.lock")
     try Files.createFile(lock)
@@ -632,27 +605,45 @@ object IndexBuilder {
 
   /** Tombstone deletes (reference IndexWriter.deleteDocuments +
     * per-segment live-docs, index/IndexWriter.java / LiveDocsFormat):
-    * append the docIds to `dir/deletes`; readers opened afterwards
-    * anti-join them out of every result. Statistics intentionally keep
-    * counting deleted docs until [[compact]] purges them — exactly the
-    * reference's pre-merge semantics. Returns the number written. */
+    * write the docIds as new delete part-files of sub-index `dir` (a base
+    * index or one of its sub-indexes) and publish them through its base;
+    * readers opened afterwards anti-join them out of every result.
+    * Statistics intentionally keep counting deleted docs until [[compact]]
+    * purges them — exactly the reference's pre-merge semantics. Returns
+    * the number written. */
   def deleteDocs(spark: SparkSession, dir: String, docIds: DataFrame): Long =
-    withWriteLock(dir) { deleteDocsLocked(spark, dir, docIds) }
+    withWriteLock(Commit.pin(dir).baseDir) { tombstone(Commit.pin(dir), docIds) }
 
-  private def deleteDocsLocked(spark: SparkSession, dir: String,
-                               docIds: DataFrame): Long = {
+  private def tombstone(p: Commit.Pin, docIds: DataFrame): Long = {
+    val (n, files) = writeTombstones(p.dir, docIds)
+    if (files.nonEmpty) Commit.publish(p.baseDir)(g => Some(addDeletes(g, p.sub.rel, files)))
+    n
+  }
+
+  /** The delete part-files of sub-index `dir`, by name. */
+  private def deleteParts(dir: String): Seq[String] =
+    Option(Paths.get(dir, "deletes").toFile.list()).toSeq.flatten
+      .filter(_.endsWith(".parquet")).sorted
+
+  /** Write `docIds` as delete part-files of `dir`, unpublished; returns the
+    * count and the new part-files. */
+  private def writeTombstones(dir: String, docIds: DataFrame): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.col
-    // Materialize BEFORE the append: for delete-by-query the input plan
-    // scans this index's own deletes dir, and Spark's recache-by-path
-    // would re-evaluate the lazy plan against the post-write state (the
-    // just-written tombstones anti-join themselves out and the returned
-    // count under-reports) — same defense as updateDocsVersioned.
+    // Materialize BEFORE the write: the input plan may read this index's
+    // own tombstones, and Spark's recache-by-path would re-evaluate it
+    // against the post-write state (as in updateDocsVersioned).
     val ids = docIds.select(col("docId").cast("long").as("docId"))
       .localCheckpoint(true)
     val n = ids.count()
+    if (n == 0L) return (0L, Nil)
+    val before = deleteParts(dir).toSet
     ids.write.mode("append").parquet(s"$dir/deletes")
-    n
+    Commit.step(s"$dir/deletes")
+    (n, deleteParts(dir).filterNot(before))
   }
+
+  private def addDeletes(g: Commit.Manifest, rel: String, files: Seq[String]): Commit.Manifest =
+    g.copy(subs = g.subs.map(s => if (s.rel == rel) s.copy(deleteFiles = s.deleteFiles ++ files) else s))
 
   /** Delete-by-query (IndexWriter.deleteDocuments(Query)): every doc the
     * boolean query matches gets a tombstone. The reader must be a fresh
@@ -668,19 +659,18 @@ object IndexBuilder {
       cacheData = false)
     val matched = new graft.search.JoinScorer(r).scores(q)
       .map(_._1).toDF("docId")
-    deleteDocsLocked(spark, dir, matched)
+    tombstone(Commit.pin(dir), matched)
   }
 
   /** Atomic update (IndexWriter.updateDocument(Term, doc),
     * index/IndexWriter.java — Solr's atomic-update path resolves to the
     * same delete-by-term + add): tombstone every existing doc whose
-    * unique key (repo, path) appears in `input`, then commit the new
-    * versions as a delta sub-index. Old versions leave results at the
-    * next reader open but keep counting in statistics until [[compact]]
-    * merges them away — reference pre-merge semantics. `input` rows must
-    * use FRESH docParts (disjoint from every committed sub-index), since
-    * new versions get new internal docIds exactly as in Lucene. Returns
-    * the delta dir, `update_<n>`. */
+    * unique key (repo, path) appears in `input` and add the new versions
+    * as a delta sub-index, both in ONE generation: a reader sees every old
+    * version or every new one. Old versions keep counting in statistics
+    * until [[compact]] (reference pre-merge semantics). `input` rows must
+    * use FRESH docParts, as new versions get new docIds in Lucene too.
+    * Returns the delta dir, `update_<n>`, named after its generation n. */
   def updateDocs(spark: SparkSession, baseDir: String, input: DataFrame,
                  cfg: IndexConfig): String =
     withWriteLock(baseDir) { updateDocsLocked(spark, baseDir, input, cfg) }
@@ -694,12 +684,22 @@ object IndexBuilder {
       .join(input.select(col("repo"), col("path")).distinct(),
         Seq("repo", "path"), "left_semi")
       .select(col("docId"))
-    deleteDocsLocked(spark, baseDir, old)
-    // its own counter, as merges have theirs: an update that took the
-    // next append id would make that stream batch a re-delivery no-op
-    val dir = s"$baseDir/update_${nextId(baseDir, "update")}"
-    build(spark, input, dir, cfg)
+    val (_, dels) = writeTombstones(baseDir, old)
+    val name = s"update_${Commit.latest(baseDir).gen + 1}"
+    val dir = freshDir(baseDir, name)
+    stages(spark, input, dir, cfg)
+    Commit.publish(baseDir) { g =>
+      val tombstoned = addDeletes(g, "", dels)
+      Some(tombstoned.copy(subs = tombstoned.subs :+ Commit.SubState(name, Nil)))
+    }
     dir
+  }
+
+  /** `baseDir/name` for a locked writer's new sub-index: a dir of that
+    * name, past every published generation, is a crashed writer's. */
+  private def freshDir(baseDir: String, name: String): String = {
+    deleteRecursively(Paths.get(baseDir, name))
+    s"$baseDir/$name"
   }
 
   /** Optimistic-concurrency update (Solr _version_ semantics,
@@ -735,38 +735,27 @@ object IndexBuilder {
     (nOk, nConflict)
   }
 
-  /** Compact a base index + its appended deltas into one fresh index at
-    * `outDir`, PURGING tombstoned docs (the TieredMergePolicy merge
-    * analog, index/TieredMergePolicy.java — here a single full merge,
-    * which is what a batch pipeline wants: deltas accumulate between
-    * compactions, one shuffle folds them). docIds are preserved, so
-    * callers' references stay valid; collection/term statistics are
-    * recomputed over the SURVIVING docs only (post-merge reference
-    * semantics — scores shift exactly as Lucene's do after a merge with
-    * deletes). One [[rewrite]] of every committed sub-index. */
+  /** Compact a base index + its deltas into one fresh index at `outDir`,
+    * PURGING tombstoned docs (a full merge, index/TieredMergePolicy.java):
+    * docIds are preserved, statistics recomputed over the SURVIVING docs
+    * only (post-merge reference semantics). One [[rewrite]]. */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               cfg: IndexConfig): String = {
-    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = true)(
-      segs => Seq(outDir -> segs))
+    rewriteAll(spark, baseDir, cfg, purge = true)(segs => Seq(outDir -> segs))
     outDir
   }
 
-  /** Shard split (SolrCloud SPLITSHARD — solr/core/src/java/org/apache/
-    * solr/handler/admin/CollectionsHandler.java SPLITSHARD +
-    * lucene/misc/.../IndexSplitter posture): split one index into two
-    * independently searchable children at a docId boundary. Like the
-    * reference, the children's postings are REBUILT per sub-range — here
-    * by a [[rewrite]] that filters the per-doc segment rows of base +
-    * deltas (a columnar scan, the cheap part) and re-runs only the stats +
-    * merge stages per child; docIds are preserved, so a MultiIndexReader
-    * over both children is float/rank-identical to the parent (global
-    * stats come from the union — the same mechanism the NRT append view
-    * uses). Pending deletes follow their docs into the matching child. */
+  /** Shard split (SolrCloud SPLITSHARD, solr/core/src/java/org/apache/
+    * solr/handler/admin/CollectionsHandler.java): two independently
+    * searchable children at a docId boundary, each REBUILT by a [[rewrite]]
+    * of the per-doc segment rows. docIds are preserved, so a
+    * MultiIndexReader over both children is float/rank-identical to the
+    * parent; pending deletes follow their docs into the matching child. */
   def splitShard(spark: SparkSession, baseDir: String,
                  outLo: String, outHi: String, midDocId: Long,
                  cfg: IndexConfig): (String, String) = {
     import org.apache.spark.sql.functions.col
-    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = false)(segs =>
+    rewriteAll(spark, baseDir, cfg, purge = false)(segs =>
       Seq(outLo -> segs.where(col("docId") < midDocId),
         outHi -> segs.where(col("docId") >= midDocId)))
     (outLo, outHi)
@@ -777,15 +766,9 @@ object IndexBuilder {
     * order maps to a part — seq: part i covers ordinals
     * [i*partLen, (i+1)*partLen) with the LAST part absorbing the
     * remainder (partLen = maxDoc / numParts); round-robin (seq=false):
-    * part = j % numParts (the reference keeps doc j in part i when
-    * (j + numParts - i) % numParts == 0). Tombstoned docs keep their
-    * ordinal slot upstream of this call but survive in no part (the
-    * reference's FakeDeleteLeafIndexReader re-applies the original
-    * liveDocs on every undeleteAll).
-    *
-    * The global ordinal is computed scale-safe: sort the (docId) column
-    * and zipWithIndex per partition with partition offsets — a narrow
-    * single-column sort, never a one-task window. */
+    * part = j % numParts. Tombstoned docs keep their ordinal slot but
+    * survive in no part (the reference's FakeDeleteLeafIndexReader). The
+    * ordinal is a sorted zipWithIndex, never a one-task window. */
   def multiPassAssign(docIds: org.apache.spark.sql.DataFrame, numParts: Int,
                       seq: Boolean): org.apache.spark.sql.DataFrame = {
     require(numParts >= 2, "Invalid number of outputs.")
@@ -818,7 +801,7 @@ object IndexBuilder {
                      outDirs: Seq[String], seq: Boolean,
                      cfg: IndexConfig): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    rewrite(spark, baseDir, subIndexDirs(baseDir), cfg, purge = false) { segs =>
+    rewriteAll(spark, baseDir, cfg, purge = false) { segs =>
       // materialized once, so the N parts see one ordinal assignment
       val asg = multiPassAssign(segs.select("docId"), outDirs.length, seq)
         .localCheckpoint()
@@ -830,177 +813,117 @@ object IndexBuilder {
     outDirs
   }
 
+  /** [[rewrite]] of `baseDir`'s latest generation, held while it is read,
+    * into children that each publish as an index of their own. */
+  private def rewriteAll(spark: SparkSession, baseDir: String, cfg: IndexConfig,
+                         purge: Boolean)
+                        (children: DataFrame => Seq[(String, DataFrame)]): Unit = {
+    val g = Commit.latest(baseDir)
+    Commit.hold(baseDir, g)
+    rewrite(spark, baseDir, g, g.subs, cfg, purge)(children).foreach { out =>
+      val s = Commit.SubState("", deleteParts(out))
+      withWriteLock(out)(Commit.publish(out)(cur =>
+        if (cur.subs == Seq(s)) None else Some(Commit.Manifest(0L, g.lastBatch, Seq(s)))))
+    }
+  }
+
   /** The one sub-index rewrite behind [[compact]], [[compactTiered]],
     * [[splitShard]] and [[multiPassSplit]] (the reference's one
     * SegmentMerger pass): union the `sources`' already-inverted segment
-    * rows once, read every committed sub-index's tombstones once, cut the
-    * rows into `children` (outDir, rows) and commit each child's segments
-    * stage before [[build]] runs the stats + merge stages. With `purge` (a
-    * merge) tombstoned docs are dropped and stats recomputed; the
-    * sources' tombstones for docs OUTSIDE them move into the child, as a
-    * tiered merge deletes its sources. Without it (a split) each
-    * tombstone follows its doc, so the children's summed stats are the
-    * parent's. A child's `deletes/` precedes its segments marker. */
-  private def rewrite(spark: SparkSession, baseDir: String,
-                      sources: Seq[String], cfg: IndexConfig, purge: Boolean)
-                     (children: DataFrame => Seq[(String, DataFrame)]): Unit = {
-    val committed = subIndexDirs(baseDir)
-    val delsOf: Map[String, DataFrame] = committed
-      .filter(d => Files.exists(Paths.get(d, "deletes")))
-      .map(d => d -> spark.read.parquet(s"$d/deletes").select("docId")).toMap
+    * rows once, read the tombstones of generation `g` once, cut the rows
+    * into `children` (outDir, rows) and build each child from its
+    * segments; returns the children, unpublished. With `purge` (a merge)
+    * tombstoned docs are dropped and stats
+    * recomputed; the sources' tombstones for docs OUTSIDE them move into
+    * the child, as a tiered merge deletes its sources. Without it (a
+    * split) each tombstone follows its doc, so the children's summed stats
+    * are the parent's. A child's `deletes/` precedes its segments marker. */
+  private def rewrite(spark: SparkSession, baseDir: String, g: Commit.Manifest,
+                      sources: Seq[Commit.SubState], cfg: IndexConfig, purge: Boolean)
+                     (children: DataFrame => Seq[(String, DataFrame)]): Seq[String] = {
+    val delsOf: Map[String, DataFrame] = g.subs.filter(_.deleteFiles.nonEmpty)
+      .map(s => s.rel -> spark.read.parquet(Commit.Pin(baseDir, g, s).deleteFiles: _*)
+        .select("docId")).toMap
     val allDels = delsOf.values.reduceOption(_ union _)
-    val segs = sources.map(d => spark.read.parquet(s"$d/segments"))
+    val segs = sources.map(s => spark.read.parquet(s"${Commit.dirOf(baseDir, s.rel)}/segments"))
       .reduce(_ unionByName _)
     val rows =
       if (purge) allDels.fold(segs)(segs.join(_, Seq("docId"), "left_anti"))
       else segs
     val outside =
-      if (!purge || committed.forall(sources.contains)) None
-      else sources.flatMap(delsOf.get).reduceOption(_ union _)
+      if (!purge || g.subs.forall(sources.contains)) None
+      else sources.flatMap(s => delsOf.get(s.rel)).reduceOption(_ union _)
         .map(_.join(segs.select("docId"), Seq("docId"), "left_anti"))
-    children(rows).foreach { case (out, kept) =>
+    children(rows).map { case (out, kept) =>
       kept.write.mode("overwrite").option("compression", "zstd")
         .parquet(s"$out/segments")
+      Commit.step(s"$out/segments")
       val dels =
         if (purge) outside
         else allDels.map(_.join(spark.read.parquet(s"$out/segments")
           .select("docId"), Seq("docId"), "left_semi"))
-      dels.map(_.distinct()).filterNot(_.isEmpty)
-        .foreach(_.write.mode("overwrite").parquet(s"$out/deletes"))
+      dels.map(_.distinct()).filterNot(_.isEmpty).foreach { d =>
+        d.write.mode("overwrite").parquet(s"$out/deletes")
+        Commit.step(s"$out/deletes")
+      }
       writeMarker(out, "segments", Map())
-      build(spark, spark.emptyDataFrame, out, cfg)
+      stages(spark, spark.emptyDataFrame, out, cfg)
+      out
     }
   }
 
-  /** The committed sub-index directories of `baseDir`: the base, then
-    * the deltas in append order. Every reader and maintenance call sees
-    * exactly these. */
-  def subIndexDirs(baseDir: String): Seq[String] = {
-    // A sub-index is committed once its "done" marker exists: a build,
-    // append or merge that crashed before it is skipped here, so
-    // compact/splitShard never fold in docs no reader ever saw.
-    // Tiered-compaction visibility pivot: a committed merged delta hides
-    // the source deltas it replaced (replaces.txt, one dir name per
-    // line). The done marker is the single atomic switch: before it the
-    // sources serve and the half-built merge is skipped; after it the
-    // merge serves and the sources are dead files awaiting cleanup — no
-    // crash point shows duplicate or missing docs. Hidden dirs still
-    // contribute their OWN replaces lists (a crash may leave a
-    // replaced-but-not-yet-deleted dir that itself replaced others).
-    val replaced = replacedDeltas(baseDir)
-    Seq(baseDir).filter(stageDone(_, "done")) ++
-      committedDeltas(baseDir).filterNot(f => replaced.contains(f.getName))
-        .map(_.getAbsolutePath)
-  }
+  /** The sub-index directories of `baseDir`'s latest generation, base
+    * first. Every reader and maintenance call sees exactly these. */
+  def subIndexDirs(baseDir: String): Seq[String] =
+    Commit.latest(baseDir).dirs(baseDir)
 
-  /** A delta sub-index dir name: an append's `delta_<batchId>`, a
-    * tiered merge's `merge_<n>` or an update's `update_<n>`, each kind
-    * numbered apart so neither a merge nor an update takes the id of a
-    * batch still to come. (Updates written before they had their own name
-    * are `delta_<n>` dirs and read as appends.) */
-  private val DeltaName = "(delta|merge|update)_(\\d+)".r
-
-  /** Every delta dir of `baseDir`, committed or not: the appends in id
-    * order, then the merges, then the updates. */
-  private def deltaDirs(baseDir: String): Seq[java.io.File] =
-    Option(new java.io.File(baseDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && DeltaName.matches(f.getName))
-      .sortBy { f => val DeltaName(kind, id) = f.getName; (kind, id.toLong) }
-
-  /** Every delta dir of `baseDir` with a done marker, in append order. */
-  private def committedDeltas(baseDir: String): Seq[java.io.File] =
-    deltaDirs(baseDir).filter(f => stageDone(f.getAbsolutePath, "done"))
-
-  /** The delta dir names that committed tiered merges hide. */
-  private def replacedDeltas(baseDir: String): Set[String] =
-    committedDeltas(baseDir).flatMap(f => replacesOf(f.toPath)).toSet
-
-  /** The dir names a merged delta's replaces.txt lists (none without
-    * one). */
-  private def replacesOf(dir: java.nio.file.Path): Seq[String] = {
-    val p = dir.resolve("replaces.txt")
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p).toArray(Array.empty[String]).toSeq
-      .map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Next free append id: max over the delta_* names on disk or hidden
-    * by a committed merge (a re-delivery no-op there), + 1. */
-  def nextDeltaId(baseDir: String): Long = nextId(baseDir, "delta")
-
-  private def nextId(baseDir: String, kind: String): Long =
-    (deltaDirs(baseDir).map(_.getName) ++ replacedDeltas(baseDir)).collect {
-      case DeltaName(`kind`, id) => id.toLong + 1L
-    }.maxOption.getOrElse(0L)
+  /** The next stream batch id: the last committed batch + 1. */
+  def nextDeltaId(baseDir: String): Long = Commit.latest(baseDir).lastBatch + 1L
 
   /** Tiered incremental compaction (reference
     * index/TieredMergePolicy.java:75-86: segsPerTier / maxMergeAtOnce /
-    * floorSegmentBytes, sizes tiered on a log scale): merge ONLY when
-    * some tier holds more than `segsPerTier` delta sub-indexes, and then
-    * only that tier's smallest `maxMergeAtOnce` members — the base index
-    * and every other delta stay byte-untouched (cold). The merged result
-    * commits as a new `merge_<n>` delta whose replaces.txt + done marker
-    * atomically hide the sources (see [[subIndexDirs]]). It is one
-    * [[rewrite]]: tombstones covering merged docs are purged from the
-    * merged data exactly like [[compact]] (the tombstone FILES of the
-    * sub-indexes left in place stay — they no-op once their docs are gone
-    * and a full compact clears them), and the sources' tombstones for
-    * docs outside the merge move into the merged delta before it commits.
-    * Returns the merged dir, or None when no tier exceeds the threshold
-    * (the common steady-state call is free: one directory listing + one
-    * tiny collstats read per delta). */
+    * floorSegmentBytes, sizes tiered on a log scale): while some tier holds
+    * more than `segsPerTier` delta sub-indexes, merge its smallest
+    * `maxMergeAtOnce` members; the base and every other delta stay
+    * byte-untouched (cold). A merge after the first must fold at least 2
+    * sub-indexes, so the loop ends and `segsPerTier = 0` merges once. Each
+    * merge is one purging [[rewrite]] into `merge_<n>`, published in
+    * generation n in place of its sources. The call ends with one
+    * [[Commit.cleanup]], so a reader opened before a merge keeps its files.
+    * Returns the last merged dir, or None (then no Spark job ran). */
   def compactTiered(spark: SparkSession, baseDir: String, cfg: IndexConfig,
                     segsPerTier: Int = 10, maxMergeAtOnce: Int = 10,
                     floorDocs: Long = 4096L): Option[String] =
     withWriteLock(baseDir) {
-      import spark.implicits._
-      // a delta with replaces.txt but no done marker is a tiered merge
-      // that crashed (only this call writes replaces.txt, under this
-      // lock): nothing reads it, so drop it. A delta without replaces.txt
-      // may be an append in flight and is never touched.
-      deltaDirs(baseDir)
-        .filter(f => Files.exists(f.toPath.resolve("replaces.txt")) &&
-          !stageDone(f.getAbsolutePath, "done"))
-        .foreach(f => deleteRecursively(f.toPath))
-      val deltas = subIndexDirs(baseDir).filterNot(_ == baseDir) // base is always cold
-      val group: Option[Seq[String]] =
-        if (deltas.size <= segsPerTier) None
-        else {
-          // sizes come from the collstats lineage MARKER (a driver-side
-          // file read, the segments_N posture) — a Spark job per delta
-          // would make the steady-state no-op call cost 1 job per
-          // sub-index
-          val sized = deltas.map { d =>
-            d -> markerValue(d, "collstats", "maxDoc").getOrElse(
-              spark.read.parquet(s"$d/collstats").as[CollStats].head().maxDoc)
-          }
-          val byTier = sized.groupBy { case (_, n) =>
-            math.floor(math.log10(math.max(n, floorDocs).toDouble)).toInt
-          }
-          byTier.toSeq.sortBy(_._1).collectFirst {
-            case (_, members) if members.size > segsPerTier =>
-              members.sortBy { case (d, n) => (n, d) }
-                .take(maxMergeAtOnce).map(_._1)
-          }
-        }
-      group.map { srcs =>
-        val out = s"$baseDir/merge_${nextId(baseDir, "merge")}"
-        // what the merge hides: its sources and every name they hide, gone
-        // or not — a dir a crash left must not come back, and a batch
-        // merged generations ago must stay a re-delivery no-op
-        val hidden = srcs.map(Paths.get(_)).flatMap(d =>
-          d.getFileName.toString +: replacesOf(d))
-        // replaces.txt first: only the done marker the rewrite ends with
-        // makes the merge, and with it the hiding, visible
-        Files.createDirectories(Paths.get(out))
-        Files.writeString(Paths.get(out, "replaces.txt"), hidden.mkString("\n"))
-        rewrite(spark, baseDir, srcs, cfg, purge = true)(
-          segs => Seq(out -> segs))
-        // the hidden dirs are invisible now — cleanup is safe and
-        // best-effort (a crash here just leaves dead files)
-        hidden.foreach(n => deleteRecursively(Paths.get(baseDir, n)))
-        out
+      def pick(g: Commit.Manifest, first: Boolean): Option[Seq[Commit.SubState]] = {
+        val deltas = g.subs.filterNot(_.rel.isEmpty) // base is always cold
+        // sizes come from the collstats lineage MARKER, which every
+        // published sub-index has: a driver-side file read, no Spark job
+        val sized = deltas.map(s =>
+          s -> markerValue(Commit.dirOf(baseDir, s.rel), "collstats", "maxDoc").get)
+        sized.groupBy { case (_, n) =>
+          math.floor(math.log10(math.max(n, floorDocs).toDouble)).toInt
+        }.toSeq.sortBy(_._1).iterator.collect {
+          case (_, members) if members.size > segsPerTier =>
+            members.sortBy { case (s, n) => (n, s.rel) }.take(maxMergeAtOnce).map(_._1)
+        }.find(group => first || group.size >= 2)
       }
+      @scala.annotation.tailrec
+      def merge(g: Commit.Manifest, first: Boolean, last: Option[String]): Option[String] =
+        pick(g, first) match {
+          case None => last
+          case Some(srcs) =>
+            val name = s"merge_${g.gen + 1}"
+            val out = freshDir(baseDir, name)
+            rewrite(spark, baseDir, g, srcs, cfg, purge = true)(segs => Seq(out -> segs))
+            val rels = srcs.map(_.rel).toSet
+            merge(Commit.publish(baseDir)(cur => Some(cur.copy(subs =
+              cur.subs.filterNot(s => rels(s.rel)) :+ Commit.SubState(name, deleteParts(out))))),
+              first = false, Some(out))
+        }
+      val merged = merge(Commit.latest(baseDir), first = true, None)
+      Commit.cleanup(baseDir)
+      merged
     }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -12,27 +12,27 @@ import graft.search.BM25
 /** Point-in-time view over a built index directory (DirectoryReader analog,
   * lucene/core/src/java/org/apache/lucene/index/DirectoryReader.java:62).
   *
-  * Caching mirrors the reference's serving posture: Lucene keeps the term
-  * dictionary hot (FST in heap) and answers a warm query with a dictionary
-  * seek plus a postings read, compiling nothing. Here: term-stats lookups
+  * Caching mirrors the reference's serving posture (a warm query is a
+  * dictionary seek plus a postings read, compiling nothing): term stats
   * are memoized driver-side (the TermsEnum.seekExact cache), docmeta is a
-  * Spark-cached Dataset, and the postings are ONE persisted RDD
-  * (MEMORY_AND_DISK), hash-partitioned on the term key, whose partitions
-  * each hold a key -> blocks map; readers of the same postings files share
-  * it. A warm query reads only the partitions holding its keys, with no
-  * Spark SQL planning or codegen on the way: WandScorer's chunk tasks
-  * each read those partitions straight from block storage through a
-  * narrow fan-out (one stage, no shuffle), and JoinScorer's Dataset scan
-  * (`blocks`) reads them in its first stage.
-  * `cacheData = false` restores scan-per-query (the posture for a 100TB
-  * index where only the hot working set should live in executor storage —
-  * Spark evicts LRU).
+  * Spark-cached Dataset, and the postings are ONE persisted RDD,
+  * hash-partitioned on the term key, shared by the readers of the same
+  * postings files. A warm query reads only the partitions holding its
+  * keys, with no Spark SQL planning. `cacheData = false` restores
+  * scan-per-query (the posture for a 100TB index).
+  *
+  * The reader serves one [[Commit]] generation, read once at open (`pinned`
+  * when the caller already read it), and retains it: no cleanup deletes
+  * its files while the reader is reachable.
   */
 final class IndexReader(val spark: SparkSession, val dir: String,
                         val numBuckets: Int, val cacheData: Boolean = true,
-                        val pinnedDeleteFiles: Option[Seq[String]] = None)
+                        pinned: Option[Commit.Pin] = None)
     extends SearchReader {
   import spark.implicits._
+
+  val pin: Commit.Pin = pinned.getOrElse(Commit.pin(dir))
+  Commit.hold(pin.baseDir, pin.gen)
 
   /** Doc metadata = a column-pruned view over the segments parquet (the
     * postings column chunks are never read; parquet is columnar, so this
@@ -125,23 +125,14 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     * same postings files (see [[IndexReader.postingsCache]]). */
   private lazy val cache = IndexReader.postingsCache(spark, dir, postingsFiles)
 
-  /** Tombstones. Live readers scan the whole `deletes/` dir; a reader
-    * opened at a snapshot (SnapshotDeletionPolicy analog, see
-    * [[Snapshot]]) pins the exact delete part-files that existed at the
-    * commit point — later appends to `deletes/` stay invisible. */
-  override lazy val deletedDocs: Option[DataFrame] = {
-    val p = java.nio.file.Paths.get(dir, "deletes")
-    val files: Seq[String] = pinnedDeleteFiles match {
-      case Some(fs) => fs.map(f => p.resolve(f).toString)
-      case None =>
-        if (java.nio.file.Files.exists(p)) Seq(p.toString) else Nil
-    }
-    if (files.isEmpty) None
+  /** Tombstones: exactly the delete part-files the reader's generation
+    * lists, so deletes published after the open stay invisible. */
+  override lazy val deletedDocs: Option[DataFrame] =
+    if (pin.deleteFiles.isEmpty) None
     else {
-      val d = spark.read.parquet(files: _*).select($"docId")
+      val d = spark.read.parquet(pin.deleteFiles: _*).select($"docId")
       Some(if (cacheData) d.persist(StorageLevel.MEMORY_AND_DISK) else d)
     }
-  }
 
   /** Compressed blocks of the given terms, ready for
     * [[graft.codec.PostingsCodec.decode]]. The on-disk rows are keyed by
@@ -219,8 +210,9 @@ object IndexReader {
     * listing: the readers a MultiIndexReader refresh reopens over it reuse
     * its cache instead of filling another. Held weakly, as Spark holds its
     * persisted RDDs: a cache no reader holds is unpersisted by Spark's
-    * ContextCleaner. A directory that was rewritten or deleted has its
-    * cache unpersisted at the next fill, since no new reader can use it. */
+    * ContextCleaner. A directory that was rewritten, or that no latest
+    * generation lists any more, has its cache unpersisted at the next
+    * fill, since no new reader of the latest generation can use it. */
   private val postingsCaches = scala.collection.mutable
     .HashMap[Seq[String], java.lang.ref.WeakReference[PostingsCache]]()
 
@@ -231,8 +223,7 @@ object IndexReader {
       postingsCaches.filterInPlace { (fs, ref) =>
         val c = ref.get
         c != null && !c.byKey.context.isStopped && {
-          val stale = (c.dir == dir && fs != files) ||
-            !java.nio.file.Files.exists(java.nio.file.Paths.get(c.dir, "postings"))
+          val stale = (c.dir == dir && fs != files) || Commit.locate(c.dir).isEmpty
           if (stale) c.byKey.unpersist(blocking = false)
           !stale
         }

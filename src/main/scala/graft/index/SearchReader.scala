@@ -69,8 +69,10 @@ trait SearchReader {
     * .deleteDocuments): deleted docs vanish from RESULTS immediately, but
     * collection/term statistics keep counting them until a merge/compact
     * rewrites the segments (`IndexBuilder.compact`). Point-in-time like
-    * everything else on a reader: deletes applied after the reader was
-    * opened need a re-open. */
+    * everything else on a reader: it reads the delete part-files of the
+    * [[Commit]] generation it was opened at, so deletes published after
+    * the open stay invisible until a re-open, even when the reader's first
+    * query comes after them. */
   def deletedDocs: Option[org.apache.spark.sql.DataFrame] = None
 
   /** Apply the live-docs filter to any frame carrying a `docId` column:
@@ -84,14 +86,9 @@ trait SearchReader {
     }
 
   /** Sorted tombstone docIds as a broadcast, built ONCE per reader and
-    * reused by every WAND query against it (per-query broadcast creation
-    * plus the collect behind it was a measurable driver-side cost at
-    * interactive latencies — the round-4 q_wand3 @32 inversion). Bounded:
-    * 8M longs = 64 MB, comparable to a Lucene live-docs bitset on a
-    * 500M-doc segment. Deletes only accumulate BETWEEN compactions, so a
-    * sane compaction cadence never approaches this; past it, this refuses
-    * loudly rather than shipping an unbounded array to every executor
-    * (the join scorer stays correct at any delete count). */
+    * reused by every WAND query against it. Bounded: 8M longs = 64 MB,
+    * comparable to a Lucene live-docs bitset on a 500M-doc segment; past
+    * it this refuses loudly (the join scorer is correct at any count). */
   lazy val deletedSortedBroadcast
       : org.apache.spark.broadcast.Broadcast[Array[Long]] =
     spark.sparkContext.broadcast(deletedDocs match {
@@ -275,9 +272,15 @@ object MultiIndexReader {
   }
 
   /** Re-open a point-in-time view over a base index plus every committed
-    * delta sub-index (the SearcherManager.maybeRefresh analog). */
+    * delta sub-index: the latest [[Commit]] generation (the
+    * SearcherManager.maybeRefresh analog). */
   def open(spark: SparkSession, baseDir: String, numBuckets: Int,
            cacheData: Boolean = true): MultiIndexReader =
-    new MultiIndexReader(IndexBuilder.subIndexDirs(baseDir)
-      .map(d => new IndexReader(spark, d, numBuckets, cacheData)))
+    at(spark, baseDir, Commit.latest(baseDir), numBuckets, cacheData)
+
+  /** A view over generation `g` of `baseDir`. */
+  private[index] def at(spark: SparkSession, baseDir: String, g: Commit.Manifest,
+                        numBuckets: Int, cacheData: Boolean): MultiIndexReader =
+    new MultiIndexReader(g.subs.map(s => new IndexReader(spark,
+      Commit.dirOf(baseDir, s.rel), numBuckets, cacheData, Some(Commit.Pin(baseDir, g, s)))))
 }

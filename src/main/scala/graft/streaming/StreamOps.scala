@@ -103,8 +103,8 @@ object StreamOps {
     * [[graft.index.MultiIndexReader.open]] and see GLOBAL statistics over
     * base + deltas, so scores equal a from-scratch build. Batch docParts
     * are offset by basePartOffset + batchId * partsPerBatch, keeping docId
-    * spaces disjoint; delta stage markers make foreachBatch retries
-    * idempotent. Caller starts/stops the returned query. */
+    * spaces disjoint; the commit generation's last batch id makes
+    * foreachBatch retries idempotent. Caller starts/stops the returned query. */
   def indexAppendSink(docs: DataFrame, baseDir: String,
                       cfg: graft.index.IndexConfig, partsPerBatch: Int,
                       basePartOffset: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

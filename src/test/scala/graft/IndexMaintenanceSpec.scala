@@ -33,7 +33,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val dir = SparkSuite.tmpDir("graft-check")
     val r = build(dir)
     val res = CheckIndex.run(r, Some(input)).collect()
-    assert(res.length == 7)
+    assert(res.length == 8)
     res.foreach(c => assert(c.violations == 0L, s"check ${c.check}"))
   }
 
@@ -77,9 +77,11 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     def maxDoc() = MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).collStats.maxDoc
     (0 until 3).foreach(append)
-    // equal sizes tie on dir name: delta_0 and delta_1 merge into merge_0
-    assert(IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
-      maxMergeAtOnce = 2).contains(s"$dir/merge_0"))
+    // equal sizes tie on dir name: delta_0 and delta_1 merge
+    val first = IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
+      maxMergeAtOnce = 2)
+    assert(first.exists(_.startsWith(s"$dir/merge_")))
+    assert(IndexBuilder.subIndexDirs(dir) == Seq(dir, s"$dir/delta_2", first.get))
     assert(maxDoc() == 260)
     // the next batch gets its own delta, not the merge's
     append(3)
@@ -87,22 +89,16 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // re-deliveries: batch 0 is merged away, batch 2 still has its delta
     Seq(0, 2).foreach(append)
     assert(maxDoc() == 280)
-    // a second generation folds merge_0 in and deletes it: merge_1 alone
-    // now names batch 0, whose re-delivery stays a no-op
-    assert(IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
-      maxMergeAtOnce = 3).contains(s"$dir/merge_1"))
-    assert(!Files.exists(Paths.get(dir, "merge_0")))
-    assert(IndexBuilder.subIndexDirs(dir) == Seq(dir, s"$dir/merge_1"))
+    // a second merge folds the first one in: it alone now holds batch 0,
+    // whose re-delivery stays a no-op
+    val second = IndexBuilder.compactTiered(spark, dir, cfgA, segsPerTier = 2,
+      maxMergeAtOnce = 3)
+    assert(second.isDefined && second != first)
+    assert(IndexBuilder.subIndexDirs(dir) == Seq(dir, second.get))
     Seq(0, 3).foreach(append)
     assert(maxDoc() == 280)
-    assert(!Files.exists(Paths.get(dir, "delta_0")))
     // every batch id up to 3 is taken, on disk or not
     assert(IndexBuilder.nextDeltaId(dir) == 4L)
-    // a merge written when merges shared the delta_ names fails the
-    // batch that reaches its id instead of swallowing it
-    Files.createDirectories(Paths.get(dir, "delta_4"))
-    Files.writeString(Paths.get(dir, "delta_4", "replaces.txt"), "delta_2")
-    intercept[IllegalStateException](append(4))
   }
 
   test("an update never takes a batch id: the batch after it is indexed") {
@@ -120,10 +116,9 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(maxDoc() == 260)
     IndexBuilder.append(spark, batch(2), dir, 2L, cfgA)
     assert(maxDoc() == 280, "batch 2 was dropped")
-    assert(upd == s"$dir/update_0")
-    assert(IndexBuilder.subIndexDirs(dir).map(Paths.get(_).getFileName.toString) ==
-      Seq(Paths.get(dir).getFileName.toString, "delta_0", "delta_1", "delta_2",
-        "update_0"))
+    assert(upd.startsWith(s"$dir/update_"))
+    assert(IndexBuilder.subIndexDirs(dir) ==
+      Seq(dir, s"$dir/delta_0", s"$dir/delta_1", upd, s"$dir/delta_2"))
     assert(IndexBuilder.nextDeltaId(dir) == 3L)
   }
 
@@ -419,8 +414,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       visible.exists(_.endsWith("delta_9")))
     // cold files untouched, byte for byte
     assert(fileHashes(coldRoots) == coldBefore)
-    // merged sources physically gone
-    assert(!Files.exists(Paths.get(dir, "delta_0")))
+    // the merged sources left the generation (rBefore keeps their files)
+    assert(!visible.exists(_.endsWith("/delta_0")))
     // identical results (no deletes involved -> scores float-identical)
     val rAfter = MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false)
@@ -461,23 +456,19 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     val live = MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).docmeta.count()
     assert(live == 880L)
-    // crash after compactTiered wrote the merged segments and
-    // replaces.txt, before build() committed the done marker
-    val half = Paths.get(dir, "merge_0")
-    copyTree(Paths.get(dir, "delta_0", "segments"), half.resolve("segments"))
-    Files.writeString(half.resolve("replaces.txt"), "delta_0")
-    assert(!IndexBuilder.subIndexDirs(dir).contains(half.toString))
+    // a tiered merge that crashed after its segments marker
+    SparkSuite.crashAt(s => s.contains("/merge_") && s.endsWith("marker segments"))(
+      IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1))
+    val half = new java.io.File(dir).listFiles().map(_.getPath)
+      .find(_.contains("/merge_")).get
+    assert(!IndexBuilder.subIndexDirs(dir).contains(half))
     // an append that crashed after its segments stage: 40 new docs on
-    // disk, no stats, postings or done marker
-    val crashed = IndexBuilder.append(spark,
+    // disk, no stats, postings, done marker or commit
+    val crashed = s"$dir/delta_2"
+    SparkSuite.crashAt(_ == s"$crashed marker segments")(IndexBuilder.append(spark,
       CorpusGen.generate(spark, 40, seed = 202L).toDF()
         .withColumn("docPart", lit(cfg.numDocParts + 2)),
-      dir, IndexBuilder.nextDeltaId(dir), cfgT)
-    new java.io.File(crashed).listFiles()
-      .filterNot(f => f.getName == "segments" || f.getName == "_lineage")
-      .foreach(f => deleteRec(f.toPath))
-    Paths.get(crashed, "_lineage").toFile.listFiles()
-      .filterNot(_.getName == "segments.json").foreach(f => Files.delete(f.toPath))
+      dir, IndexBuilder.nextDeltaId(dir), cfgT))
     assert(!IndexBuilder.subIndexDirs(dir).contains(crashed))
     assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).docmeta.count() == live)
@@ -501,16 +492,13 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       cacheData = false).docmeta.count()).sum == live)
 
     // both visible deltas fit one tier of size 1: the merge runs over
-    // them only and never reads the crashed dirs' (absent) markers
+    // them only, in the crashed merge's dir (no generation took its name),
+    // and never reads the crashed append
     assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
-      .contains(half.toString))
+      .contains(half))
     assert(MultiIndexReader.open(spark, dir, cfg.numBuckets,
       cacheData = false).docmeta.count() == live)
-    // it drops the crashed merge (replaces.txt, no done marker), whose
-    // free id the new merge takes with its own replaces.txt, and keeps the
-    // crashed append, which may still be in flight
-    assert(Files.readAllLines(half.resolve("replaces.txt")).toArray.toSeq ==
-      Seq("delta_0", "delta_1"))
+    // the crashed append may still be in flight: its dir is kept
     assert(Files.exists(Paths.get(crashed, "segments")))
   }
 
@@ -639,11 +627,12 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     "the merge") {
     val (dir, cfgT, live) = tieredFixture("graft-tier-del")
     assertLive(open(dir), live, "before")
-    // segsPerTier 1, two at once: the two smallest, delta_0 and delta_1
+    // segsPerTier 2, two at once: the two smallest, delta_0 and delta_1
+    // (then delta_2 and the merge fit the tier)
     val merged = IndexBuilder.compactTiered(spark, dir, cfgT,
-      segsPerTier = 1, maxMergeAtOnce = 2)
-    assert(merged.exists(_.endsWith("merge_0")), merged.toString)
-    assert(!Files.exists(Paths.get(dir, "delta_1")))
+      segsPerTier = 2, maxMergeAtOnce = 2)
+    assert(merged.exists(_.startsWith(s"$dir/merge_")), merged.toString)
+    assert(!IndexBuilder.subIndexDirs(dir).contains(s"$dir/delta_1"))
     // delta_1's tombstones for base and delta_2 docs outlive delta_1
     assertLive(open(dir), live, "after the merge")
     // the docs tombstoned inside the merge are purged from its data
@@ -652,63 +641,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(mergedIds == live.filter(id =>
       Seq(0, 1).map(_ + cfg.numDocParts).contains(Ids.docPart(id))))
   }
-
-  test("compactTiered crash states: after the merged segments, after " +
-    "replaces.txt, after the done marker; each view stays exact and the " +
-    "next compactTiered completes") {
-    val (src, cfgT, live) = tieredFixture("graft-crash-src")
-    // a completed merge of delta_0 + delta_1 with its sources put back:
-    // a crash after the done marker, before the sources were deleted
-    val saved = SparkSuite.tmpDir("graft-crash-saved")
-    Seq("delta_0", "delta_1").foreach(d =>
-      copyTree(Paths.get(src, d), Paths.get(saved, d)))
-    assert(IndexBuilder.compactTiered(spark, src, cfgT, segsPerTier = 1,
-      maxMergeAtOnce = 2).exists(_.endsWith("merge_0")))
-    Seq("delta_0", "delta_1").foreach(d =>
-      copyTree(Paths.get(saved, d), Paths.get(src, d)))
-    // what of the merged merge_0 each crash leaves on disk
-    val states = Seq(
-      "after the merged segments" -> Set("replaces.txt", "segments"),
-      "after replaces.txt" -> Set("replaces.txt"),
-      "after the done marker" -> Paths.get(src, "merge_0").toFile.list().toSet)
-    for ((state, left) <- states) {
-      val dir = SparkSuite.tmpDir("graft-crash")
-      copyTree(Paths.get(src), Paths.get(dir))
-      Paths.get(dir, "merge_0").toFile.listFiles()
-        .filterNot(f => left(f.getName)).foreach(f => deleteRec(f.toPath))
-      assertLive(open(dir), live, s"$state: reader")
-
-      val out = SparkSuite.tmpDir("graft-crash-compact")
-      IndexBuilder.compact(spark, dir, out, cfgT)
-      assertLive(open(out), live, s"$state: compact")
-
-      val (lo, hi) = IndexBuilder.splitShard(spark, dir,
-        SparkSuite.tmpDir("graft-crash-lo"), SparkSuite.tmpDir("graft-crash-hi"),
-        4L << 40, cfgT)
-      assertLive(new MultiIndexReader(Seq(lo, hi).map(d =>
-        new IndexReader(spark, d, cfg.numBuckets, cacheData = false))), live,
-        s"$state: splitShard")
-
-      assert(IndexBuilder.compactTiered(spark, dir, cfgT, segsPerTier = 1)
-        .isDefined, s"$state: next compactTiered")
-      assertLive(open(dir), live, s"$state: after the next compactTiered")
-      assert(IndexBuilder.subIndexDirs(dir).size == 2,
-        s"$state: ${IndexBuilder.subIndexDirs(dir)}")
-      // no crashed merge outlives it: every delta dir left on disk serves
-      val deltasOnDisk = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("delta_") ||
-          f.getName.startsWith("merge_")).map(_.getAbsolutePath).toSet
-      assert(deltasOnDisk == IndexBuilder.subIndexDirs(dir).toSet - dir,
-        s"$state: ${deltasOnDisk.toSeq.sorted}")
-    }
-  }
-
-  private def copyTree(src: Path, dst: Path): Unit =
-    Files.walk(src).sorted().forEach { p =>
-      val q = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q)
-      else Files.copy(p, q)
-    }
 
   private def deleteRec(p: Path): Unit =
     if (Files.exists(p))

@@ -19,4 +19,12 @@ object SparkSuite {
 
   /** A fresh temp dir, deleted with everything in it when the JVM exits. */
   def tmpDir(prefix: String): String = SparkEntry.tmpDir(prefix)
+
+  /** Runs `body`, stopped by an exception right after the first mutation
+    * step (see [[graft.index.Commit.onStep]]) that `at` matches. */
+  def crashAt(at: String => Boolean)(body: => Any): Unit = {
+    graft.index.Commit.onStep = s => if (at(s)) throw new IllegalStateException(s"crash after $s")
+    try org.scalatest.Assertions.intercept[IllegalStateException](body)
+    finally graft.index.Commit.onStep = _ => ()
+  }
 }

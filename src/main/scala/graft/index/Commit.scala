@@ -82,7 +82,7 @@ object Commit {
     * returns None when there is nothing to commit; it may run more than
     * once, on a newer generation each time. Returns the latest generation
     * after the call. */
-  def publish(baseDir: String)(edit: Manifest => Option[Manifest]): Manifest = {
+  private[index] def publish(baseDir: String)(edit: Manifest => Option[Manifest]): Manifest = {
     val cur = find(baseDir).getOrElse(Manifest(0L, -1L, Nil))
     edit(cur) match {
       case None => cur
@@ -109,9 +109,9 @@ object Commit {
 
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  def json(m: Manifest): String = mapper.writeValueAsString(m)
+  private[index] def json(m: Manifest): String = mapper.writeValueAsString(m)
 
-  def read(p: Path): Manifest = mapper.readValue(Files.readString(p), classOf[Manifest])
+  private[index] def read(p: Path): Manifest = mapper.readValue(Files.readString(p), classOf[Manifest])
 
   /** Generations that reachable readers in this JVM hold, by base dir. Held
     * weakly, as IndexReader holds its postings caches: a reader that is no

@@ -31,7 +31,7 @@ final class IndexReader(val spark: SparkSession, val dir: String,
     extends SearchReader {
   import spark.implicits._
 
-  val pin: Commit.Pin = pinned.getOrElse(Commit.pin(dir))
+  private[index] val pin: Commit.Pin = pinned.getOrElse(Commit.pin(dir))
   Commit.hold(pin.baseDir, pin.gen)
 
   /** Doc metadata = a column-pruned view over the segments parquet (the

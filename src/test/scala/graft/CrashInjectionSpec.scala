@@ -28,8 +28,6 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Parts 0-1 base, 2-3 the fixture's deltas, 4-5 the mutations' docs. */
   private val cfgX = cfg.copy(numDocParts = 6)
 
-  private final class Crash extends RuntimeException("injected crash")
-
   /** The step hook of the calling thread: crash states run in parallel. */
   private val hook = new ThreadLocal[String => Unit] {
     override def initialValue(): String => Unit = _ => ()
@@ -42,8 +40,8 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def runTo(k: Int)(body: => Unit): Seq[String] = {
     val steps = Seq.newBuilder[String]
     var n = 0
-    hook.set { s => steps += s; n += 1; if (n == k) throw new Crash }
-    try body catch { case _: Crash => } finally hook.remove()
+    hook.set { s => steps += s; n += 1; if (n == k) throw new SparkSuite.Crash(s) }
+    try body catch { case _: SparkSuite.Crash => } finally hook.remove()
     steps.result()
   }
 
@@ -59,7 +57,7 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def docs(n: Int, seed: Long, part: Int): DataFrame =
     CorpusGen.generate(spark, n, seed, parts = 2).toDF().withColumn("docPart", lit(part))
 
-  private val baseInput = CorpusGen.generate(spark, 60, parts = 2).toDF()
+  private lazy val baseInput = CorpusGen.generate(spark, 60, parts = 2).toDF()
 
   /** 60 base docs and two 20-doc deltas whose keys repeat base keys,
     * tombstoned through the base and through delta_0 (a delta_1 doc). */

@@ -20,11 +20,14 @@ object SparkSuite {
   /** A fresh temp dir, deleted with everything in it when the JVM exits. */
   def tmpDir(prefix: String): String = SparkEntry.tmpDir(prefix)
 
-  /** Runs `body`, stopped by an exception right after the first mutation
+  /** The exception a test throws to stop a mutation after one step. */
+  final class Crash(step: String) extends RuntimeException(s"crash after $step")
+
+  /** Runs `body`, stopped by a [[Crash]] right after the first mutation
     * step (see [[graft.index.Commit.onStep]]) that `at` matches. */
   def crashAt(at: String => Boolean)(body: => Any): Unit = {
-    graft.index.Commit.onStep = s => if (at(s)) throw new IllegalStateException(s"crash after $s")
-    try org.scalatest.Assertions.intercept[IllegalStateException](body)
+    graft.index.Commit.onStep = s => if (at(s)) throw new Crash(s)
+    try org.scalatest.Assertions.intercept[Crash](body)
     finally graft.index.Commit.onStep = _ => ()
   }
 }

@@ -855,6 +855,9 @@ object IndexBuilder {
       else sources.flatMap(s => delsOf.get(s.rel)).reduceOption(_ union _)
         .map(_.join(segs.select("docId"), Seq("docId"), "left_anti"))
     children(rows).map { case (out, kept) =>
+      // every stage reruns on the new segments: a marker left by an earlier
+      // rewrite into `out` may stand for another source generation
+      deleteRecursively(Paths.get(out, "_lineage"))
       kept.write.mode("overwrite").option("compression", "zstd")
         .parquet(s"$out/segments")
       Commit.step(s"$out/segments")

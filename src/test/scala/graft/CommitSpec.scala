@@ -130,6 +130,16 @@ class CommitSpec extends AnyFunSuite {
     assert(missing() == 1L)
   }
 
+  test("compact into the same dir after a delete rebuilds every stage") {
+    val dir = base("graft-recompact", 50)
+    val out = IndexBuilder.compact(spark, dir, SparkSuite.tmpDir("graft-recompact-out"), cfg)
+    IndexBuilder.deleteDocs(spark, dir, Seq(Ids.docId(0, 1), Ids.docId(1, 2)).toDF("docId"))
+    IndexBuilder.compact(spark, dir, out, cfg)
+    val r = new IndexReader(spark, out, cfg.numBuckets, cacheData = false)
+    assert(r.collStats.maxDoc == 48L)
+    CheckIndex.run(r).collect().foreach(c => assert(c.violations == 0L, c.check))
+  }
+
   test("a dir without a commit generation fails to open, naming it") {
     val dir = SparkSuite.tmpDir("graft-no-commit")
     for (opening <- Seq(() => new IndexReader(spark, dir, cfg.numBuckets), () => open(dir))) {

@@ -64,10 +64,11 @@ object Commit {
     throw new IllegalStateException(s"$baseDir has no commit generation " +
       "(commits/gen_<n>.json): it is not an index, or its build never committed"))
 
-  /** Sub-index `dir` in its own latest generation (a base) or its parent's. */
-  def locate(dir: String): Option[Pin] = {
+  /** Sub-index `dir` in its own latest generation (a base) or its parent's;
+    * `latestOf` reads a base's latest generation. */
+  def locate(dir: String, latestOf: String => Option[Manifest] = find): Option[Pin] = {
     def in(base: String, rel: String): Option[Pin] =
-      find(base).flatMap(g => g.subs.find(_.rel == rel).map(Pin(base, g, _)))
+      latestOf(base).flatMap(g => g.subs.find(_.rel == rel).map(Pin(base, g, _)))
     val p = Paths.get(dir)
     in(dir, "").orElse(Option(p.getParent)
       .flatMap(b => in(b.toString, p.getFileName.toString)))
@@ -93,6 +94,18 @@ object Commit {
         else { step(s"publish $baseDir gen ${next.gen}"); next }
     }
   }
+
+  /** Publish `m` as the first generation of `baseDir`, under `m`'s own
+    * number: a locked writer names its new sub-index after the generation
+    * that will publish it, so every `merge_<n>`/`update_<n>` that `m`
+    * lists must stay at or below the latest generation. False when
+    * `baseDir` already has a generation. */
+  private[index] def adopt(baseDir: String, m: Manifest): Boolean =
+    find(baseDir).isEmpty && {
+      Files.createDirectories(commits(baseDir))
+      createOnce(genPath(baseDir, m.gen), json(m)) &&
+        { step(s"publish $baseDir gen ${m.gen}"); true }
+    }
 
   /** Create `p` holding `body`, atomically and only if `p` does not exist:
     * the body is written in full to a temp file that is then hard-linked

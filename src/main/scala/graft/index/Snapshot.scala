@@ -18,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   * holds a copy of the [[Commit]] record that was the latest when it was
   * taken, and [[Commit.cleanup]] deletes no file it lists (one small file,
   * no data copy). `backup` copies the listed files into a self-contained
-  * index dir whose `gen_1` is that record (the SnapShooter posture).
+  * index dir whose first generation is that record, under its own number
+  * (the SnapShooter posture).
   */
 object Snapshot {
   import Commit.Manifest
@@ -68,7 +69,8 @@ object Snapshot {
   /** Materialize the snapshot as a SELF-CONTAINED index at `destDir`
     * (ReplicationHandler backup): stage parquet + lineage markers of each
     * pinned sub-index and only the pinned delete part-files, then the
-    * snapshot's record as the destination's `gen_1`. "Restore" is just
+    * snapshot's record as the destination's first generation, numbered as
+    * in the source (see [[Commit.adopt]]). "Restore" is just
     * opening the result — `MultiIndexReader.open(destDir)` — or copying
     * it back over a fresh base dir. */
   def backup(baseDir: String, name: String, destDir: String): Unit = {
@@ -79,47 +81,78 @@ object Snapshot {
         .filter(Files.exists(_)).foreach(p => copyTree(p, to.resolve(from.relativize(p))))
       Commit.step(s"backup $destDir ${s.rel}")
     }
-    IndexBuilder.withWriteLock(destDir) {
-      Commit.publish(destDir)(g => if (g.subs.isEmpty) Some(m) else None)
-    }
+    IndexBuilder.withWriteLock(destDir)(Commit.adopt(destDir, m))
   }
 
   /** Follower catch-up sync (ReplicationHandler / solr/core/.../handler/
     * IndexFetcher.java:302-380 fetchLatestIndex, :731-775
     * downloadIndexFiles, :776-835 compareFile, :836-850 isIndexStale):
     * compare every master index file against the follower by (relative
-    * path, bytes) and copy ONLY missing files. A same-named file whose
-    * bytes differ marks the follower STALE: it is cleared and re-copied
-    * whole, as the reference re-downloads a stale index. Returns (copied,
-    * skipped, fullCopy). Driver-side file plumbing: the bytes never enter
-    * Spark. */
+    * path, size, checksum) and copy ONLY missing files. A same-named
+    * file whose bytes differ marks the follower STALE — the reference
+    * then abandons incremental fetch and downloads the complete index
+    * into a fresh directory before swapping it in; here the follower's
+    * index stages are cleared and re-copied whole. Returns
+    * (copied, skipped, fullCopy). Driver-side file plumbing by design —
+    * replication moves FILES, not rows; the bytes never enter Spark. */
   def sync(masterDir: String, followerDir: String): (Int, Int, Boolean) = {
+    def crc(p: Path): Long = {
+      // streamed: index part-files can be GBs — never whole-file in heap
+      val c = new java.util.zip.CRC32()
+      val in = Files.newInputStream(p)
+      try {
+        val buf = new Array[Byte](1 << 20)
+        var n = in.read(buf)
+        while (n >= 0) {
+          if (n > 0) c.update(buf, 0, n)
+          n = in.read(buf)
+        }
+      } finally in.close()
+      c.getValue
+    }
     def indexFiles(root: Path): Seq[Path] =
       if (!Files.exists(root)) Nil
       else Files.walk(root).iterator().asScala
-        .filter(p => Files.isRegularFile(p) && !root.relativize(p).toString.startsWith("snapshots"))
-        .toSeq
+        .filter(p => Files.isRegularFile(p))
+        .filter { p =>
+          val rel = root.relativize(p).toString
+          !rel.startsWith("snapshots")
+        }.toSeq
     val mRoot = Paths.get(masterDir)
     val fRoot = Paths.get(followerDir)
     val master = indexFiles(mRoot)
-    def follower(mp: Path): Path = fRoot.resolve(mRoot.relativize(mp))
-    // stale check (compareFile over same-named files), streamed: index
-    // part-files can be GBs — never whole-file in heap
+    // pass 1: stale check (compareFile over same-named files)
     val stale = master.exists { mp =>
-      val fp = follower(mp)
-      Files.exists(fp) && Files.mismatch(fp, mp) != -1L
+      val fp = fRoot.resolve(mRoot.relativize(mp))
+      Files.exists(fp) &&
+        (Files.size(fp) != Files.size(mp) || crc(fp) != crc(mp))
     }
-    // stale: clear the follower, so the master tree is copied whole
-    if (stale) indexFiles(fRoot).foreach(Files.delete)
-    val missing = master.filterNot(mp => Files.exists(follower(mp)))
-    missing.foreach { mp =>
-      Files.createDirectories(follower(mp).getParent)
-      Files.copy(mp, follower(mp))
+    if (stale) {
+      // full copy: clear follower stages, copy the master tree whole
+      indexFiles(fRoot).foreach(Files.delete)
+      master.foreach { mp =>
+        val fp = fRoot.resolve(mRoot.relativize(mp))
+        Files.createDirectories(fp.getParent)
+        Files.copy(mp, fp, StandardCopyOption.REPLACE_EXISTING)
+      }
+      (master.size, 0, true)
+    } else {
+      var copied = 0
+      var skipped = 0
+      master.foreach { mp =>
+        val fp = fRoot.resolve(mRoot.relativize(mp))
+        if (Files.exists(fp)) skipped += 1
+        else {
+          Files.createDirectories(fp.getParent)
+          Files.copy(mp, fp)
+          copied += 1
+        }
+      }
+      (copied, skipped, false)
     }
-    (missing.size, master.size - missing.size, stale)
   }
 
-  /** The snapshot names pinned under `baseDir`. */
+  /** List snapshot names pinned under `baseDir`. */
   def list(baseDir: String): Seq[String] = {
     val p = snapDir(baseDir)
     if (!Files.exists(p)) Nil

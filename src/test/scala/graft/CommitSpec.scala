@@ -140,6 +140,50 @@ class CommitSpec extends AnyFunSuite {
     CheckIndex.run(r).collect().foreach(c => assert(c.violations == 0L, c.check))
   }
 
+  test("writes on a restored backup keep every doc exactly once") {
+    val dir = base("graft-bk-src", 40)
+    // 10 new keys as update_2, published in generation 2
+    IndexBuilder.updateDocs(spark, dir, docs(10, 950L, 2), cfgX)
+    assert(IndexBuilder.subIndexDirs(dir).last == s"$dir/update_2")
+    Snapshot.create(spark, dir, "s")
+    val bk = SparkSuite.tmpDir("graft-bk-dest")
+    Snapshot.backup(dir, "s", bk)
+    def check(clue: String): Set[Long] = {
+      val r = open(bk)
+      val all = r.docmeta.select("docId").as[Long].collect()
+      assert(all.length == all.distinct.length, s"$clue: duplicate docIds")
+      live(r)
+    }
+    val was = check("backup")
+    assert(was.size == 50)
+    // new versions of 3 base keys and 3 update_2 keys
+    val dm = open(bk).docmeta.toDF()
+    val keys = dm.where(col("docPart") === 0).orderBy("docId").limit(3)
+      .unionByName(dm.where(col("docPart") === 2).orderBy("docId").limit(3))
+      .localCheckpoint()
+    val old = keys.select("docId").as[Long].collect().toSet
+    val input = keys.select(lit(3).as("docPart"), col("repo"), col("path"),
+      concat(lit("v2-"), col("commit")).as("commit"), col("lang"),
+      lit("import spark revised").as("content"))
+    IndexBuilder.updateDocs(spark, bk, input, cfgX)
+    val now = check("updateDocs")
+    assert(now == was -- old ++ (0 until 6).map(Ids.docId(3, _)))
+    IndexBuilder.compactTiered(spark, bk, cfgX, segsPerTier = 0)
+    assert(check("compactTiered") == now)
+  }
+
+  test("nextDeltaId skips a crashed batch's dir, which a later cleanup deletes") {
+    val dir = base("graft-next-id", 40)
+    SparkSuite.crashAt(_ == s"$dir/delta_0 marker segments")(IndexBuilder.append(
+      spark, docs(10, 960L, 2), dir, IndexBuilder.nextDeltaId(dir), cfgX))
+    assert(IndexBuilder.nextDeltaId(dir) == 1L)
+    IndexBuilder.append(spark, docs(10, 961L, 3), dir, 1L, cfgX)
+    assert(live(open(dir)).filter(Ids.docPart(_) >= 2) == (0 until 10).map(Ids.docId(3, _)).toSet)
+    // batch 1 committed, so the crashed batch 0 is no longer in flight
+    assert(IndexBuilder.compactTiered(spark, dir, cfgX).isEmpty)
+    assert(!Files.exists(Paths.get(dir, "delta_0")))
+  }
+
   test("a dir without a commit generation fails to open, naming it") {
     val dir = SparkSuite.tmpDir("graft-no-commit")
     for (opening <- Seq(() => new IndexReader(spark, dir, cfg.numBuckets), () => open(dir))) {

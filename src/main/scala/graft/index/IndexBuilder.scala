@@ -27,9 +27,10 @@ import graft.search.BM25
   * trick of codecs/FieldsConsumer.java:90-100).
   *
   * The build is resumable: every stage writes a lineage JSON marker
-  * after its data; a re-run skips completed stages, and docIds never
-  * depend on runtime state, so resumed builds are byte-identical. What a
-  * reader sees is decided only by the [[Commit]] generation a mutation
+  * after its data commits; a re-run skips completed stages. docIds
+  * derive from a fixed hash-partitioning + canonical sort, never from
+  * runtime state, so resumed builds are byte-identical. What a reader
+  * sees is decided only by the [[Commit]] generation a mutation
   * publishes last.
   */
 object IndexBuilder {
@@ -106,11 +107,15 @@ object IndexBuilder {
   }
 
   /** Merge one reduce-side run of same-(key, salt) pre-blocks into a
-    * docId-ascending posting stream for the canonical re-block: spans are
-    * almost always disjoint (map partitions bin-pack docId-sorted files),
-    * so they concatenate in firstDoc order; otherwise the run is decoded
-    * and sorted by docId. Positions stay bytes
-    * ([[PostingsCodec.decodePre]]); memory is one compressed run. */
+    * docId-ascending pre-encoded posting stream for the canonical
+    * re-block. Map partitions are file-chunk bin-packs over docId-sorted
+    * segments files, so two partitions' spans are almost always
+    * disjoint: the fast path concatenates in firstDoc order. If
+    * bin-packing ever interleaves chunk ranges, the fallback decodes the
+    * run and sorts by docId (each pre-block is individually ascending,
+    * so TimSort sees mostly-sorted input). Positions stay bytes
+    * throughout ([[PostingsCodec.decodePre]]). Memory is bounded by one
+    * (key, salt) run, compressed. */
   private[graft] def mergeRuns(
       run: scala.collection.Seq[BlockRowK]): Iterator[PrePosting] = {
     val sorted = run.sortBy(_.firstDoc)
@@ -388,11 +393,16 @@ object IndexBuilder {
       .collect().find(_.field == "path").map(_.sumTtf).getOrElse(0L)
 
     // ---- hot terms for salting: sampled df estimate ----
-    // A term is hot when df >= hotDfThreshold, estimated from a fixed-seed
-    // doc sample of the committed segments (so resumes see the same set)
-    // sized to see a threshold-df term >= 500 times. Hotness changes only
-    // block layout, never results. LAZY: only a postings stage that still
-    // has to run pays for the sample.
+    // A term is hot when df >= hotDfThreshold; a deterministic doc sample
+    // sized so a threshold-df term is expected >= 500 times finds the hot
+    // set without exploding every posting (hot/not-hot affects only block
+    // layout and skew, never results — IndexMaintenanceSpec proves both
+    // extremes identical). Sample seed is fixed, the sampled frame is the
+    // committed segments parquet, so resumes see the same hot set.
+    // LAZY: the sampled scan + driver collect runs only when the postings
+    // stage actually needs the hot set — an idempotent re-delivery of an
+    // already-completed build skips it entirely instead of re-scanning
+    // segments on every resume
     lazy val hotTerms: Set[String] = timed("hotterms") {
       val hs =
         if (cfg.hotDfThreshold > collStats.maxDoc) Set.empty[String]
@@ -426,25 +436,41 @@ object IndexBuilder {
       val postAcc = spark.sparkContext.longAccumulator("graft.postings")
       val blockAcc = spark.sparkContext.longAccumulator("graft.blocks")
       // Shuffle key = (termKey, salt): hashing keys spreads the merge
-      // over ALL shuffle partitions, and salt splits hot terms into
-      // disjoint docId-range chunks. Rows carry the 63-bit TermKeys key,
-      // never the term string: (key, docId) sorts on Spark's 8-byte radix
-      // prefix, and term text comes back only in the dictionary stage and
-      // at read time (the Lucene posture: postings are keyed by term ord,
-      // the .tim dictionary owns the bytes). Every file is key-sorted, so
-      // parquet row-group stats prune term lookups (the BlockTree-seek
-      // analog). salt only steers the exchange (|hot| <=
-      // sumTtf/hotDfThreshold); the encoder re-derives it from (key,
-      // docId). tf rides inside pb (its VInt prefix).
+      // over ALL shuffle partitions at any parallelism, and salt still
+      // splits hot terms into disjoint docId-range chunks. The row is
+      // (key: Long, docId, pb, norm) — NO term string: the 63-bit
+      // TermKeys key (field bit included) replaces the var-length term
+      // bytes, cutting both the exchanged bytes and, more importantly,
+      // the sort cost — (key, docId) sorts on Spark's 8-byte radix
+      // prefix, where term strings fell back to byte-wise comparisons
+      // on every shared prefix ("path:", common stems). Term text is
+      // recovered ONLY in the dictionary stage (from the segments'
+      // vocabulary) and at read time (from the query's own terms) —
+      // the Lucene posture: postings files are keyed by term ord, the
+      // .tim dictionary owns the bytes. Key locality for reads comes
+      // from the within-partition (key, docId) sort: every file is
+      // key-sorted, so parquet row-group min/max stats prune term
+      // lookups (the BlockTree-seek analog). salt is a pure
+      // PARTITIONING expression (hot set tiny by construction:
+      // |hot| <= sumTtf/hotDfThreshold) — it steers the hash exchange
+      // but is NOT materialized into the shuffled row; the encoder
+      // re-derives it from (key, docId). tf rides inside pb (its VInt
+      // prefix).
       val hotKeys: Set[Long] = hotTerms.map(TermKeys.of)
       val hotKeySeq = hotKeys.toSeq
       val hotB = spark.sparkContext.broadcast(hotKeys)
       // ---- map side: LOCAL (key, docId) sort + pre-block encode ----
-      // Each map partition sorts locally (spillable, no exchange) and
-      // encodes 128-posting PRE-BLOCKS, so the exchange carries the
-      // compressed payload rather than one ~48 B row per ~4 B posting.
-      // maxPartial is left to the reduce side's canonical re-block
-      // (cache = null).
+      // Rounds 1-4 shuffled one Tungsten row PER POSTING: ~48 B of row
+      // framing (null bits, fixed slots, var-length offsets) around a
+      // ~4 B payload — 1558 B/doc on the wire. Now each map partition
+      // sorts locally (sortWithinPartitions = spillable
+      // UnsafeExternalSorter, NO exchange) and VByte-encodes 128-posting
+      // PRE-BLOCKS, so the exchange carries the compressed postings
+      // payload itself: row count drops ~100x for frequent terms and the
+      // bytes are the codec's, not the row format's. maxPartial is NOT
+      // computed here (cache = null): the reduce side re-derives it
+      // during the canonical re-block, so no float work is wasted on
+      // blocks that get re-blocked anyway.
       val preBlocks = segments
         .select($"docId", explode($"postings").as("p"), $"norm", $"pnorm")
         .select(TermKeys.column($"p.term").as("key"), $"docId",
@@ -465,11 +491,17 @@ object IndexBuilder {
                 .map(BlockRowK.of(key, _))
             }
         }
-      // ---- ONE exchange of compressed pre-blocks ----
-      // Hot keys hash on the salt of firstDoc (a pre-block never spans a
-      // salt boundary). Reduce re-blocks each same-(key, salt) run into
-      // the CANONICAL 128-posting block stream through the same writer
-      // (encodePre), positions kept as bytes ([[mergeRuns]]).
+      // ---- ONE exchange, now carrying compressed pre-blocks ----
+      // Hot keys hash on the salt of firstDoc (valid: a pre-block never
+      // spans a salt boundary, see above). Reduce groups consecutive
+      // same-(key, salt) runs and re-blocks them into the CANONICAL
+      // 128-posting block stream through the same writer (encodePre),
+      // positions kept as bytes — byte-identical to the round-4 output,
+      // so every reader/WAND/CheckIndex invariant is untouched. Map
+      // partitions are file-chunk bin-packs, so two partitions' doc
+      // ranges USUALLY don't interleave (segments files are docId-
+      // sorted): the merge concatenates when spans are disjoint in
+      // firstDoc order and falls back to a decode-merge-sort otherwise.
       val preSaltCol =
         if (hotKeySeq.isEmpty) lit(0L)
         else when($"key".isin(hotKeySeq: _*), shiftright($"firstDoc", shift))
@@ -500,20 +532,30 @@ object IndexBuilder {
 
     // ---- stage 5: term dictionary ----
     // Stats re-aggregated from block METADATA keyed by term key
-    // (~postings/128 rows); term STRINGS come from the segments'
-    // vocabulary, joined back on the key. Two distinct terms sharing a
-    // 62-bit key ABORT the build before it commits: their posting lists
-    // were interleaved in the merge (CheckIndex re-checks decoded blocks).
+    // (~postings/128 input rows — never a second full posting shuffle);
+    // term STRINGS come from the segments' vocabulary (a column-pruned
+    // scan of just postings.term with map-side-combined distinct), joined
+    // back on the key. This is also where the 62-bit key space is
+    // audited: any two distinct terms sharing a key ABORT the build
+    // before the `done` marker — a collision would have interleaved two
+    // posting lists in the merge, so the index must never be served.
+    // (CheckIndex additionally cross-checks the dictionary against fully
+    // DECODED postings, so stored block metadata can't drift unnoticed.)
     if (!stageDone(dir, "termstats")) timed("termstats") {
       val nb = cfg.numBuckets
       val keyAgg = spark.read.parquet(s"$dir/postings")
         .groupBy($"key")
         .agg(sum($"count").as("df"), sum($"sumTf").as("ttf"),
           max($"maxTf").as("maxTf"))
-      // distinct() FIRST (map-side dedup on the fast unsafe hash-map
-      // path), THEN the vocab-sized key agg whose min/max(term) buffers
-      // need ObjectHashAggregate: 2x faster than min/max in one pass.
-      // min != max per key <=> two terms share a key. Cached for 2 uses.
+      // Term strings come from the pruned postings.term column. Shape
+      // matters here: distinct() FIRST (HashAggregate with var-length
+      // grouping key and NO aggregation buffers — stays on the fast
+      // unsafe hash-map path, dedup happens map-side), THEN the
+      // vocab-sized key agg whose min/max(term) buffers force the slower
+      // ObjectHashAggregate — measured 2x faster than folding the
+      // min/max into the 10^8-row pass. min != max per key <=> two
+      // distinct terms share a 62-bit key. Cached so the clash probe and
+      // the dictionary join are two actions over one pass.
       val vocab = segments.select(explode($"postings.term").as("term"))
         .distinct()
         .groupBy(TermKeys.column($"term").as("key"))
@@ -531,10 +573,17 @@ object IndexBuilder {
         .as[(String, Long, Long, Int)]
         .map { case (t, df, ttf, mtf) =>
           TermStats(t, Buckets.of(t, nb), df, ttf, mtf) }
-        // one task per bucket: exactly numBuckets files, not tasks x
-        // buckets slivers (file creates were ~8% of a build). TERM SORT makes
-        // row-group stats monotone in term, so prefix/range expansions
-        // read O(matches), not O(vocab).
+        // co-locate each bucket into one task before the partitionBy
+        // write: without this every agg task writes a sliver of every
+        // bucket directory (tasks x buckets tiny files — file-create
+        // overhead was ~8% of the whole build and scaled at 0.94x);
+        // with it the stage emits exactly numBuckets files. The
+        // within-bucket TERM SORT makes each file's parquet row-group
+        // min/max stats monotone in term, so prefix/range dictionary
+        // expansions (PrefixQ/RangeQ/rev: leading wildcards) prune to
+        // the matching row groups instead of scanning the whole
+        // dictionary — the difference between O(matches) and O(vocab)
+        // IO at a 10^8-term dictionary.
         .repartition($"bucket")
         .sortWithinPartitions($"term")
         .as[TermStats]
@@ -563,8 +612,9 @@ object IndexBuilder {
     * last batch, so a re-delivery (`batchId <= lastBatch`) is a no-op even
     * after a merge folded the delta away (exactly-once foreachBatch
     * semantics), and a retry of an uncommitted batch resumes from its
-    * stage markers. Lock-free: it re-applies its edit when another writer
-    * publishes first. */
+    * stage markers. So a batch id must always carry the same data: new
+    * data takes [[nextDeltaId]]. Lock-free: it re-applies its edit when
+    * another writer publishes first. */
   def append(spark: SparkSession, input: DataFrame, baseDir: String,
              batchId: Long, cfg: IndexConfig): String = {
     val name = s"delta_$batchId"
@@ -629,9 +679,11 @@ object IndexBuilder {
     * count and the new part-files. */
   private def writeTombstones(dir: String, docIds: DataFrame): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.col
-    // Materialize BEFORE the write: the input plan may read this index's
-    // own tombstones, and Spark's recache-by-path would re-evaluate it
-    // against the post-write state (as in updateDocsVersioned).
+    // Materialize BEFORE the append: for delete-by-query the input plan
+    // scans this index's own deletes dir, and Spark's recache-by-path
+    // would re-evaluate the lazy plan against the post-write state (the
+    // just-written tombstones anti-join themselves out and the returned
+    // count under-reports) — same defense as updateDocsVersioned.
     val ids = docIds.select(col("docId").cast("long").as("docId"))
       .localCheckpoint(true)
     val n = ids.count()
@@ -685,8 +737,8 @@ object IndexBuilder {
         Seq("repo", "path"), "left_semi")
       .select(col("docId"))
     val (_, dels) = writeTombstones(baseDir, old)
-    val name = s"update_${Commit.latest(baseDir).gen + 1}"
-    val dir = freshDir(baseDir, name)
+    val name = freshDir(baseDir, Commit.latest(baseDir), "update")
+    val dir = s"$baseDir/$name"
     stages(spark, input, dir, cfg)
     Commit.publish(baseDir) { g =>
       val tombstoned = addDeletes(g, "", dels)
@@ -695,11 +747,16 @@ object IndexBuilder {
     dir
   }
 
-  /** `baseDir/name` for a locked writer's new sub-index: a dir of that
-    * name, past every published generation, is a crashed writer's. */
-  private def freshDir(baseDir: String, name: String): String = {
+  /** The name `<kind>_<n>` of a locked writer's new sub-index of `baseDir`,
+    * after the generation n = g.gen + 1 that publishes it. No generation
+    * up to g lists it (a backup keeps its source's generation number for
+    * that), so a dir of that name is a crashed writer's and is cleared. */
+  private def freshDir(baseDir: String, g: Commit.Manifest, kind: String): String = {
+    val name = s"${kind}_${g.gen + 1}"
+    if (g.subs.exists(_.rel == name))
+      throw new IllegalStateException(s"$baseDir/$name is listed by generation ${g.gen}")
     deleteRecursively(Paths.get(baseDir, name))
-    s"$baseDir/$name"
+    name
   }
 
   /** Optimistic-concurrency update (Solr _version_ semantics,
@@ -735,22 +792,32 @@ object IndexBuilder {
     (nOk, nConflict)
   }
 
-  /** Compact a base index + its deltas into one fresh index at `outDir`,
-    * PURGING tombstoned docs (a full merge, index/TieredMergePolicy.java):
-    * docIds are preserved, statistics recomputed over the SURVIVING docs
-    * only (post-merge reference semantics). One [[rewrite]]. */
+  /** Compact a base index + its appended deltas into one fresh index at
+    * `outDir`, PURGING tombstoned docs (the TieredMergePolicy merge
+    * analog, index/TieredMergePolicy.java — here a single full merge,
+    * which is what a batch pipeline wants: deltas accumulate between
+    * compactions, one shuffle folds them). docIds are preserved, so
+    * callers' references stay valid; collection/term statistics are
+    * recomputed over the SURVIVING docs only (post-merge reference
+    * semantics — scores shift exactly as Lucene's do after a merge with
+    * deletes). One [[rewrite]] of every committed sub-index. */
   def compact(spark: SparkSession, baseDir: String, outDir: String,
               cfg: IndexConfig): String = {
     rewriteAll(spark, baseDir, cfg, purge = true)(segs => Seq(outDir -> segs))
     outDir
   }
 
-  /** Shard split (SolrCloud SPLITSHARD, solr/core/src/java/org/apache/
-    * solr/handler/admin/CollectionsHandler.java): two independently
-    * searchable children at a docId boundary, each REBUILT by a [[rewrite]]
-    * of the per-doc segment rows. docIds are preserved, so a
-    * MultiIndexReader over both children is float/rank-identical to the
-    * parent; pending deletes follow their docs into the matching child. */
+  /** Shard split (SolrCloud SPLITSHARD — solr/core/src/java/org/apache/
+    * solr/handler/admin/CollectionsHandler.java SPLITSHARD +
+    * lucene/misc/.../IndexSplitter posture): split one index into two
+    * independently searchable children at a docId boundary. Like the
+    * reference, the children's postings are REBUILT per sub-range — here
+    * by a [[rewrite]] that filters the per-doc segment rows of base +
+    * deltas (a columnar scan, the cheap part) and re-runs only the stats +
+    * merge stages per child; docIds are preserved, so a MultiIndexReader
+    * over both children is float/rank-identical to the parent (global
+    * stats come from the union — the same mechanism the NRT append view
+    * uses). Pending deletes follow their docs into the matching child. */
   def splitShard(spark: SparkSession, baseDir: String,
                  outLo: String, outHi: String, midDocId: Long,
                  cfg: IndexConfig): (String, String) = {
@@ -766,9 +833,15 @@ object IndexBuilder {
     * order maps to a part — seq: part i covers ordinals
     * [i*partLen, (i+1)*partLen) with the LAST part absorbing the
     * remainder (partLen = maxDoc / numParts); round-robin (seq=false):
-    * part = j % numParts. Tombstoned docs keep their ordinal slot but
-    * survive in no part (the reference's FakeDeleteLeafIndexReader). The
-    * ordinal is a sorted zipWithIndex, never a one-task window. */
+    * part = j % numParts (the reference keeps doc j in part i when
+    * (j + numParts - i) % numParts == 0). Tombstoned docs keep their
+    * ordinal slot upstream of this call but survive in no part (the
+    * reference's FakeDeleteLeafIndexReader re-applies the original
+    * liveDocs on every undeleteAll).
+    *
+    * The global ordinal is computed scale-safe: sort the (docId) column
+    * and zipWithIndex per partition with partition offsets — a narrow
+    * single-column sort, never a one-task window. */
   def multiPassAssign(docIds: org.apache.spark.sql.DataFrame, numParts: Int,
                       seq: Boolean): org.apache.spark.sql.DataFrame = {
     require(numParts >= 2, "Invalid number of outputs.")
@@ -880,8 +953,14 @@ object IndexBuilder {
   def subIndexDirs(baseDir: String): Seq[String] =
     Commit.latest(baseDir).dirs(baseDir)
 
-  /** The next stream batch id: the last committed batch + 1. */
-  def nextDeltaId(baseDir: String): Long = Commit.latest(baseDir).lastBatch + 1L
+  /** A fresh stream batch id: past the last committed batch and past every
+    * `delta_<b>` dir on disk. A dir past the last batch is a crashed or
+    * in-flight batch, which only its own re-delivery may resume. */
+  def nextDeltaId(baseDir: String): Long =
+    (Commit.latest(baseDir).lastBatch +: Option(new java.io.File(baseDir).list()).toSeq
+      .flatten.collect { case DeltaDir(b) => b.toLong }).max + 1L
+
+  private val DeltaDir = "delta_(\\d+)".r
 
   /** Tiered incremental compaction (reference
     * index/TieredMergePolicy.java:75-86: segsPerTier / maxMergeAtOnce /
@@ -916,8 +995,8 @@ object IndexBuilder {
         pick(g, first) match {
           case None => last
           case Some(srcs) =>
-            val name = s"merge_${g.gen + 1}"
-            val out = freshDir(baseDir, name)
+            val name = freshDir(baseDir, g, "merge")
+            val out = s"$baseDir/$name"
             rewrite(spark, baseDir, g, srcs, cfg, purge = true)(segs => Seq(out -> segs))
             val rels = srcs.map(_.rel).toSet
             merge(Commit.publish(baseDir)(cur => Some(cur.copy(subs =

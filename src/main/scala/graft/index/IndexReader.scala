@@ -12,14 +12,21 @@ import graft.search.BM25
 /** Point-in-time view over a built index directory (DirectoryReader analog,
   * lucene/core/src/java/org/apache/lucene/index/DirectoryReader.java:62).
   *
-  * Caching mirrors the reference's serving posture (a warm query is a
-  * dictionary seek plus a postings read, compiling nothing): term stats
+  * Caching mirrors the reference's serving posture: Lucene keeps the term
+  * dictionary hot (FST in heap) and answers a warm query with a dictionary
+  * seek plus a postings read, compiling nothing. Here: term-stats lookups
   * are memoized driver-side (the TermsEnum.seekExact cache), docmeta is a
-  * Spark-cached Dataset, and the postings are ONE persisted RDD,
-  * hash-partitioned on the term key, shared by the readers of the same
-  * postings files. A warm query reads only the partitions holding its
-  * keys, with no Spark SQL planning. `cacheData = false` restores
-  * scan-per-query (the posture for a 100TB index).
+  * Spark-cached Dataset, and the postings are ONE persisted RDD
+  * (MEMORY_AND_DISK), hash-partitioned on the term key, whose partitions
+  * each hold a key -> blocks map; readers of the same postings files share
+  * it. A warm query reads only the partitions holding its keys, with no
+  * Spark SQL planning or codegen on the way: WandScorer's chunk tasks
+  * each read those partitions straight from block storage through a
+  * narrow fan-out (one stage, no shuffle), and JoinScorer's Dataset scan
+  * (`blocks`) reads them in its first stage.
+  * `cacheData = false` restores scan-per-query (the posture for a 100TB
+  * index where only the hot working set should live in executor storage —
+  * Spark evicts LRU).
   *
   * The reader serves one [[Commit]] generation, read once at open (`pinned`
   * when the caller already read it), and retains it: no cleanup deletes
@@ -220,10 +227,13 @@ object IndexReader {
                             rows: Dataset[BlockRowK]): PostingsCache =
     postingsCaches.synchronized {
       val files = rows.inputFiles.toSeq.sorted
+      // each base's latest generation is read once per fill, not once per cache
+      val latest = scala.collection.mutable.HashMap[String, Option[Commit.Manifest]]()
       postingsCaches.filterInPlace { (fs, ref) =>
         val c = ref.get
         c != null && !c.byKey.context.isStopped && {
-          val stale = (c.dir == dir && fs != files) || Commit.locate(c.dir).isEmpty
+          val stale = (c.dir == dir && fs != files) ||
+            Commit.locate(c.dir, b => latest.getOrElseUpdate(b, Commit.find(b))).isEmpty
           if (stale) c.byKey.unpersist(blocking = false)
           !stale
         }

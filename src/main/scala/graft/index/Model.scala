@@ -62,12 +62,18 @@ final case class TermStats(term: String, bucket: Int, df: Long, ttf: Long,
   * maxDoc), not the max docId — our docIds are deterministic but sparse. */
 final case class CollStats(maxDoc: Long, sumTotalTermFreq: Long)
 
-/** ON-DISK block row: keyed by the 63-bit term key, NOT the term string,
-  * which exists only in the dictionary (termstats). Readers resolve query
-  * terms to keys driver-side ([[TermKeys.of]]) and reattach the string, so
-  * scorers get [[graft.codec.PostingBlock]]. The reference analog: postings
-  * keyed by term ORD into the .tip/.tim dictionary (lucene/core/src/java/
-  * org/apache/lucene/codecs/blocktree/BlockTreeTermsWriter.java:118-160). */
+/** ON-DISK block row: keyed by the 63-bit term key, NOT the term string.
+  * Term text exists only in the dictionary (termstats) — the merge
+  * shuffle and the postings files carry 8 fixed bytes per key where round
+  * 2 carried a var-length string, and the within-partition (key, docId)
+  * sort runs on Spark's 8-byte radix-sort prefix instead of byte-wise
+  * string comparisons. Readers resolve query terms to keys driver-side
+  * ([[TermKeys.of]]) and reattach the string, so the scorers get the
+  * in-memory block type [[graft.codec.PostingBlock]] ([[IndexReader.blocks]]).
+  * The reference analog: Lucene's postings files are keyed by term ORD
+  * into the .tip/.tim dictionary, never by repeated term bytes
+  * (lucene/core/src/java/org/apache/lucene/codecs/blocktree/
+  * BlockTreeTermsWriter.java:118-160). */
 final case class BlockRowK(key: Long, firstDoc: Long,
                            lastDoc: Long, count: Int, maxTf: Int,
                            sumTf: Long, maxPartial: Float,

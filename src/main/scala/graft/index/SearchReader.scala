@@ -86,9 +86,14 @@ trait SearchReader {
     }
 
   /** Sorted tombstone docIds as a broadcast, built ONCE per reader and
-    * reused by every WAND query against it. Bounded: 8M longs = 64 MB,
-    * comparable to a Lucene live-docs bitset on a 500M-doc segment; past
-    * it this refuses loudly (the join scorer is correct at any count). */
+    * reused by every WAND query against it (per-query broadcast creation
+    * plus the collect behind it was a measurable driver-side cost at
+    * interactive latencies — the round-4 q_wand3 @32 inversion). Bounded:
+    * 8M longs = 64 MB, comparable to a Lucene live-docs bitset on a
+    * 500M-doc segment. Deletes only accumulate BETWEEN compactions, so a
+    * sane compaction cadence never approaches this; past it, this refuses
+    * loudly rather than shipping an unbounded array to every executor
+    * (the join scorer stays correct at any delete count). */
   lazy val deletedSortedBroadcast
       : org.apache.spark.broadcast.Broadcast[Array[Long]] =
     spark.sparkContext.broadcast(deletedDocs match {

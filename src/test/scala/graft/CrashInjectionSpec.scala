@@ -13,7 +13,8 @@ import graft.index._
 
 /** Crash injection through [[Commit.onStep]]: each mutation is stopped
   * after each of its steps (every file write, stage marker and publish)
-  * on a fresh copy of a small index. Every crash leaves each index the
+  * on a fresh copy of a small index; a rewrite into new indexes only
+  * after the steps whose crash states differ. Every crash leaves each index the
   * mutation writes showing its state before the mutation or after it:
   * each doc once, nothing missing, nothing resurrected. For a mutation
   * that changes the index in place, compact and splitShard of the crashed
@@ -123,10 +124,13 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     * state shows the generation before or after). A mutation that is not
     * `idempotent` is called again
     * only when the crash came before its commit; `settled` then checks the
-    * copy further. */
+    * copy further. A mutation whose next call `reruns` every step (a
+    * rewrite into new indexes) is stopped only after its first step and
+    * right before and after each publish: every other crash state holds
+    * the same uncommitted files, which the next call rewrites. */
   private def crashEverywhere(name: String, src: => String, outputs: Seq[String],
                               was: Seq[Option[Set[Long]]], after: Seq[Set[Long]],
-                              idempotent: Boolean = true,
+                              idempotent: Boolean = true, reruns: Boolean = false,
                               settled: String => Unit = _ => ())
                              (mutate: String => Unit): Unit = {
     def views(dir: String, clue: String) =
@@ -136,7 +140,9 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val steps = names.size
     assert(views(clean, name) == after.map(Some(_)), s"$name: uncrashed")
     def publishes(k: Int) = names.lift(k - 1).exists(_.startsWith("publish"))
-    inParallel(1 to steps) { k =>
+    val ks = (1 to steps).filter(k =>
+      !reruns || k == 1 || publishes(k) || publishes(k + 1))
+    inParallel(ks) { k =>
       val dir = copy(src)
       assert(runTo(k)(mutate(dir)).size == k)
       val clue = s"$name crashed after step $k of $steps (${names(k - 1)})"
@@ -208,17 +214,18 @@ class CrashInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compact, splitShard and multiPassSplit: crashed children hold no commit") {
     val mid = Ids.docId(1, 0)
-    crashEverywhere("compact", fixture, Seq("out"), Seq(None), Seq(before)) { dir =>
+    crashEverywhere("compact", fixture, Seq("out"), Seq(None), Seq(before),
+      reruns = true) { dir =>
       IndexBuilder.compact(spark, dir, s"$dir/out", cfgX)
     }
     crashEverywhere("splitShard", fixture, Seq("lo", "hi"), Seq(None, None),
-      Seq(before.filter(_ < mid), before.filter(_ >= mid))) { dir =>
+      Seq(before.filter(_ < mid), before.filter(_ >= mid)), reruns = true) { dir =>
       IndexBuilder.splitShard(spark, dir, s"$dir/lo", s"$dir/hi", mid, cfgX)
     }
     // seq parts by docId ordinal over every doc, tombstoned or not
     val (p0, p1) = allIds.toSeq.sorted.splitAt(allIds.size / 2)
     crashEverywhere("multiPassSplit", fixture, Seq("p0", "p1"), Seq(None, None),
-      Seq(before.intersect(p0.toSet), before.intersect(p1.toSet))) { dir =>
+      Seq(before.intersect(p0.toSet), before.intersect(p1.toSet)), reruns = true) { dir =>
       IndexBuilder.multiPassSplit(spark, dir, Seq(s"$dir/p0", s"$dir/p1"), seq = true, cfgX)
     }
   }

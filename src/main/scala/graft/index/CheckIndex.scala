@@ -100,10 +100,9 @@ object CheckIndex {
     val normUdf = udf((dl: Int) => SmallFloat.normByte(dl))
     val normBad = dm.where($"norm" =!= normUdf($"dl")).count()
 
-    val cs = reader.collStats
-    val agg = dm.agg(count(lit(1)), coalesce(sum($"dl"), lit(0L))).head()
-    val collBad = (if (cs.maxDoc == agg.getLong(0)) 0L else 1L) +
-      (if (cs.sumTotalTermFreq == agg.getLong(1)) 0L else 1L)
+    // the collstats marker against the segments it describes
+    val collBad = IndexBuilder.collStatsOf(spark.read.parquet(s"${reader.dir}/segments"))
+      .count { case (m, v) => IndexBuilder.markerValue(reader.dir, "collstats", m) != Some(v) }.toLong
 
     // north rule: per-row content sha256 equality vs the source table
     val shaBad = source.map { src =>

@@ -268,16 +268,24 @@ object IndexBuilder {
   def lastStageTimes: Map[String, Double] = stageTimes.toMap
   def resetStageTimes(): Unit = stageTimes.clear()
 
-  /** Wall-time a build stage; one line per stage on stderr (the
-    * stage-level metrics the north rule's lineage markers carry). */
-  private def timed[T](stage: String)(body: => T): T = {
+  /** Wall-time a build stage (one line on stderr); returns the body's
+    * result and its wall time in ms. */
+  private def timed[T](stage: String)(body: => T): (T, Long) = {
     val t0 = System.nanoTime()
     val r = body
     val sec = (System.nanoTime() - t0) / 1e9
     stageTimes.put(stage, sec)
     System.err.println(f"[build] $stage%-16s $sec%6.2fs")
-    r
+    (r, math.round(sec * 1000))
   }
+
+  /** Run build stage `stage` of `dir` unless its marker exists, then write
+    * the marker: the metrics `body` returns plus its `wall_ms`. */
+  private def runStage(dir: String, stage: String)(body: => Map[String, Long]): Unit =
+    if (!stageDone(dir, stage)) {
+      val (metrics, ms) = timed(stage)(body)
+      writeMarker(dir, stage, metrics + ("wall_ms" -> ms))
+    }
 
   /** One metric of a stage's marker, read driver-side with no Spark job
     * (None when the marker or the metric is absent). */
@@ -287,6 +295,11 @@ object IndexBuilder {
     else ("\"" + metric + "\":\\s*(\\d+)").r
       .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
   }
+
+  /** [[markerValue]] of a metric the caller needs: absent, it fails naming both. */
+  def markerField(dir: String, stage: String, metric: String): Long =
+    markerValue(dir, stage, metric).getOrElse(throw new IllegalStateException(
+      s"index $dir: the $stage marker has no $metric"))
 
   def writeMarker(dir: String, stage: String, metrics: Map[String, Long]): Unit = {
     val p = markerPath(dir, stage)
@@ -325,7 +338,7 @@ object IndexBuilder {
 
     // ---- stage 1: segments (invert; doc-partitioned forward index) ----
     val segPath = s"$dir/segments"
-    if (!stageDone(dir, "segments")) timed("segments") {
+    runStage(dir, "segments") {
       val chain = IndexChain.of(cfg)
       val nParts = cfg.numDocParts
       val parted = (
@@ -362,8 +375,7 @@ object IndexBuilder {
         .write.mode("overwrite").option("compression", "zstd")
         .parquet(segPath)
       Commit.step(segPath)
-      writeMarker(dir, "segments",
-        Map("docs" -> docsAcc.value, "tokens" -> tokAcc.value))
+      Map("docs" -> docsAcc.value, "tokens" -> tokAcc.value)
     }
     lazy val segments = spark.read.parquet(segPath).as[SegmentDoc]
     // No separate docmeta stage: readers get docmeta by column-pruned
@@ -373,24 +385,9 @@ object IndexBuilder {
     // ---- stage 2: collection stats (one pruned int-column scan) ----
     // NOT taken from the segments accumulators: accumulator values can
     // double-count under task retries/speculation, and avgdl must be
-    // EXACT for rank identity.
-    if (!stageDone(dir, "collstats")) timed("collstats") {
-      val row = segments.agg(count(lit(1)), coalesce(sum($"dl"), lit(0L)),
-        coalesce(sum($"pdl"), lit(0L))).head()
-      val cs = CollStats(row.getLong(0), row.getLong(1))
-      Seq(cs).toDS().write.mode("overwrite").parquet(s"$dir/collstats")
-      Commit.step(s"$dir/collstats")
-      Seq(FieldStats("content", row.getLong(1)),
-        FieldStats("path", row.getLong(2))).toDS()
-        .write.mode("overwrite").parquet(s"$dir/fieldstats")
-      Commit.step(s"$dir/fieldstats")
-      writeMarker(dir, "collstats",
-        Map("maxDoc" -> cs.maxDoc, "sumTotalTermFreq" -> cs.sumTotalTermFreq,
-          "pathSumTtf" -> row.getLong(2)))
-    }
-    val collStats = spark.read.parquet(s"$dir/collstats").as[CollStats].head()
-    val pathSumTtf = spark.read.parquet(s"$dir/fieldstats").as[FieldStats]
-      .collect().find(_.field == "path").map(_.sumTtf).getOrElse(0L)
+    // EXACT for rank identity. Their only copy is the stage's marker.
+    runStage(dir, "collstats")(collStatsOf(segments.toDF()))
+    val stat = markerField(dir, "collstats", _: String)
 
     // ---- hot terms for salting: sampled df estimate ----
     // A term is hot when df >= hotDfThreshold; a deterministic doc sample
@@ -403,9 +400,9 @@ object IndexBuilder {
     // stage actually needs the hot set — an idempotent re-delivery of an
     // already-completed build skips it entirely instead of re-scanning
     // segments on every resume
-    lazy val hotTerms: Set[String] = timed("hotterms") {
-      val hs =
-        if (cfg.hotDfThreshold > collStats.maxDoc) Set.empty[String]
+    lazy val hotTerms: Set[String] = {
+      val (hs, ms) = timed("hotterms") {
+        if (cfg.hotDfThreshold > stat("maxDoc")) Set.empty[String]
         else {
           val f = math.min(1.0, 500.0 / cfg.hotDfThreshold)
           val sampled = if (f >= 1.0) segments else segments.sample(f, 42L)
@@ -415,23 +412,24 @@ object IndexBuilder {
             .where($"c" >= minC)
             .select("term").as[String].collect().toSet
         }
+      }
       if (!stageDone(dir, "hotterms"))
-        writeMarker(dir, "hotterms", Map("count" -> hs.size.toLong))
+        writeMarker(dir, "hotterms", Map("count" -> hs.size.toLong, "wall_ms" -> ms))
       hs
     }
 
     // ---- stage 4: global merge -> compressed blocks ----
     // per-field norm caches: the WAND bound (maxPartial) must be computed
     // with the same float ops AND the same field avgdl the query path uses
-    val avgdl = BM25.avgFieldLength(collStats.sumTotalTermFreq, collStats.maxDoc)
-    val cacheB = spark.sparkContext.broadcast(BM25.cache(avgdl))
+    val cacheB = spark.sparkContext.broadcast(
+      BM25.cache(BM25.avgFieldLength(stat("sumTotalTermFreq"), stat("maxDoc"))))
     val pathCacheB = spark.sparkContext.broadcast(
-      BM25.cache(BM25.avgFieldLength(pathSumTtf, collStats.maxDoc)))
+      BM25.cache(BM25.avgFieldLength(stat("pathSumTtf"), stat("maxDoc"))))
     // One pass over every doc. The stage and its directory keep their
     // earlier names (`postings_wave_0`, `postings/wave=0`), so index dirs
     // already on disk stay readable and resumable.
     val postingsStage = "postings_wave_0"
-    if (!stageDone(dir, postingsStage)) timed(postingsStage) {
+    runStage(dir, postingsStage) {
       val shift = cfg.saltShift
       val postAcc = spark.sparkContext.longAccumulator("graft.postings")
       val blockAcc = spark.sparkContext.longAccumulator("graft.blocks")
@@ -526,8 +524,7 @@ object IndexBuilder {
       blocks.write.mode("overwrite").option("compression", "zstd")
         .parquet(s"$dir/postings/wave=0")
       Commit.step(s"$dir/postings")
-      writeMarker(dir, postingsStage,
-        Map("postings" -> postAcc.value, "blocks" -> blockAcc.value))
+      Map("postings" -> postAcc.value, "blocks" -> blockAcc.value)
     }
 
     // ---- stage 5: term dictionary ----
@@ -536,12 +533,11 @@ object IndexBuilder {
     // term STRINGS come from the segments' vocabulary (a column-pruned
     // scan of just postings.term with map-side-combined distinct), joined
     // back on the key. This is also where the 62-bit key space is
-    // audited: any two distinct terms sharing a key ABORT the build
-    // before the `done` marker — a collision would have interleaved two
-    // posting lists in the merge, so the index must never be served.
+    // audited: any two distinct terms sharing a key fail the dictionary
+    // write ([[keyedTerms]]) before the `termstats` and `done` markers.
     // (CheckIndex additionally cross-checks the dictionary against fully
     // DECODED postings, so stored block metadata can't drift unnoticed.)
-    if (!stageDone(dir, "termstats")) timed("termstats") {
+    runStage(dir, "termstats") {
       val nb = cfg.numBuckets
       val keyAgg = spark.read.parquet(s"$dir/postings")
         .groupBy($"key")
@@ -553,22 +549,11 @@ object IndexBuilder {
       // unsafe hash-map path, dedup happens map-side), THEN the
       // vocab-sized key agg whose min/max(term) buffers force the slower
       // ObjectHashAggregate — measured 2x faster than folding the
-      // min/max into the 10^8-row pass. min != max per key <=> two
-      // distinct terms share a 62-bit key. Cached so the clash probe and
-      // the dictionary join are two actions over one pass.
+      // min/max into the 10^8-row pass.
       val vocab = segments.select(explode($"postings.term").as("term"))
         .distinct()
-        .groupBy(TermKeys.column($"term").as("key"))
-        .agg(min($"term").as("term"), max($"term").as("termHi"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val clash = vocab.where($"term" =!= $"termHi")
-        .select($"term", $"termHi").limit(1).collect()
-      if (clash.nonEmpty)
-        throw new IllegalStateException(
-          s"term-key collision: '${clash(0).getString(0)}' and " +
-            s"'${clash(0).getString(1)}' share one 62-bit key — the merged " +
-            "postings are poisoned; refusing to commit the index")
-      vocab.select($"key", $"term").join(keyAgg, Seq("key"))
+        .select(TermKeys.column($"term").as("key"), $"term")
+      keyedTerms(vocab).join(keyAgg, Seq("key"))
         .select($"term", $"df", $"ttf", $"maxTf")
         .as[(String, Long, Long, Int)]
         .map { case (t, df, ttf, mtf) =>
@@ -590,14 +575,34 @@ object IndexBuilder {
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$dir/termstats")
       Commit.step(s"$dir/termstats")
-      vocab.unpersist()
       // readers check it: a lookup under another bucket count silently
       // misses terms (IndexReader.termStats)
-      writeMarker(dir, "termstats", Map("numBuckets" -> nb.toLong))
+      Map("numBuckets" -> nb.toLong)
     }
 
     if (!stageDone(dir, "done")) writeMarker(dir, "done", Map())
   }
+
+  /** The collstats marker's metrics over segment rows: maxDoc, both
+    * fields' token counts and the docPart count (max docPart + 1). */
+  private[index] def collStatsOf(segments: DataFrame): Map[String, Long] = {
+    val row = segments.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)),
+      coalesce(sum(col("pdl")), lit(0L)), coalesce(max(col("docPart")) + 1, lit(0))).head()
+    Map("maxDoc" -> row.getLong(0), "sumTotalTermFreq" -> row.getLong(1),
+      "pathSumTtf" -> row.getLong(2), "docParts" -> row.getInt(3).toLong)
+  }
+
+  /** One (key, term) row per key of a vocabulary of distinct terms. Two
+    * terms on one key (min != max) fail the job, naming both: the merge
+    * interleaved their posting lists, so the index must never be served. */
+  private[graft] def keyedTerms(vocab: DataFrame): DataFrame =
+    vocab.groupBy(col("key"))
+      .agg(min(col("term")).as("term"), max(col("term")).as("termHi"))
+      .select(col("key"), when(col("term") === col("termHi"), col("term"))
+        .otherwise(raise_error(concat(lit("term-key collision: '"), col("term"),
+          lit("' and '"), col("termHi"), lit("' share one 62-bit key; the merged " +
+            "postings are poisoned, refusing to commit the index"))))
+        .as("term"))
 
   /** Append a delta batch as its own SUB-INDEX directory `delta_<batchId>`
     * (the NRT soft-commit analog: each micro-batch becomes a new immutable
@@ -982,7 +987,7 @@ object IndexBuilder {
         // sizes come from the collstats lineage MARKER, which every
         // published sub-index has: a driver-side file read, no Spark job
         val sized = deltas.map(s =>
-          s -> markerValue(Commit.dirOf(baseDir, s.rel), "collstats", "maxDoc").get)
+          s -> markerField(Commit.dirOf(baseDir, s.rel), "collstats", "maxDoc"))
         sized.groupBy { case (_, n) =>
           math.floor(math.log10(math.max(n, floorDocs).toDouble)).toInt
         }.toSeq.sortBy(_._1).iterator.collect {

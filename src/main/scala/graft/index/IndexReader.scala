@@ -28,6 +28,10 @@ import graft.search.BM25
   * index where only the hot working set should live in executor storage —
   * Spark evicts LRU).
   *
+  * Collection statistics live in the build's collstats lineage marker, as
+  * the reference's segment carries its own: the reader reads them on the
+  * driver, so opening it or asking for them starts no Spark job.
+  *
   * The reader serves one [[Commit]] generation, read once at open (`pinned`
   * when the caller already read it), and retains it: no cleanup deletes
   * its files while the reader is reachable.
@@ -55,27 +59,24 @@ final class IndexReader(val spark: SparkSession, val dir: String,
 
   def docmeta: Dataset[DocMeta] = docmetaDf
 
+  private val stat = IndexBuilder.markerField(dir, "collstats", _: String)
+
   lazy val collStats: CollStats =
-    spark.read.parquet(s"$dir/collstats").as[CollStats].head()
+    CollStats(stat("maxDoc"), stat("sumTotalTermFreq"))
 
   lazy val avgdl: Float =
     BM25.avgFieldLength(collStats.sumTotalTermFreq, collStats.maxDoc)
 
   lazy val normCache: Array[Float] = BM25.cache(avgdl)
 
-  private lazy val fieldStats: Map[String, Long] =
-    spark.read.parquet(s"$dir/fieldstats").as[FieldStats]
-      .collect().map(fs => fs.field -> fs.sumTtf).toMap
+  private lazy val pathSumTtf: Long = stat("pathSumTtf")
 
   def fieldSumTtf(field: String): Long =
     if (field == "content") collStats.sumTotalTermFreq
-    else fieldStats.getOrElse(field, 0L)
+    else if (field == "path") pathSumTtf else 0L
 
-  /** max(docPart)+1 over this index (one tiny cached-scan agg, memoized). */
-  lazy val numDocPartsHint: Int = {
-    val r = docmetaDf.agg(coalesce(max($"docPart"), lit(-1))).head().getInt(0)
-    math.max(1, r + 1)
-  }
+  /** max(docPart)+1 over this index. */
+  lazy val numDocPartsHint: Int = math.max(1, stat("docParts").toInt)
 
   private lazy val termStatsCached: Dataset[TermStats] = {
     val ts = spark.read.parquet(s"$dir/termstats").as[TermStats]

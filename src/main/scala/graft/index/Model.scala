@@ -39,12 +39,6 @@ final case class SegmentDoc(docId: Long, docPart: Int, repo: String,
                             sha256: String,
                             postings: Array[SegPosting])
 
-/** Per-field collection stats (field -> total token count; avgdl(field) =
-  * sumTtf / maxDoc — reference CollectionStatistics per field,
-  * search/IndexSearcher.java:836-847). The default `content` field's row
-  * duplicates collstats for convenience. */
-final case class FieldStats(field: String, sumTtf: Long)
-
 /** Columnar doc metadata (norms + stored-field keys; reference analogs:
   * norms lucene50/Lucene50NormsFormat.java, stored fields via join back to
   * the source table per SURVEY.md §2.1). */

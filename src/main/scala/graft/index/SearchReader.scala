@@ -15,7 +15,7 @@ trait SearchReader {
   def avgdl: Float
   def normCache: Array[Float]
 
-  /** Total token count of a field (fieldstats; "content" = collstats). */
+  /** Total token count of a field (0 for a field that has none). */
   def fieldSumTtf(field: String): Long
 
   /** Per-field avgdl / norm cache (reference per-field

@@ -52,7 +52,7 @@ object Snapshot {
     MultiIndexReader.at(spark, baseDir, read(baseDir, name), numBuckets, cacheData)
 
   private val IndexStages =
-    Seq("segments", "postings", "termstats", "collstats", "fieldstats", "_lineage")
+    Seq("segments", "postings", "termstats", "_lineage")
 
   /** Copy file or tree `src` to `dst`. */
   private def copyTree(src: Path, dst: Path): Unit = {

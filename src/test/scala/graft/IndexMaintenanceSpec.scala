@@ -61,8 +61,76 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .forall(IndexBuilder.stageDone(part, _)))
     assert(topDocs(rResumed) == expect,
       "resumed build must be result-identical to an uninterrupted one")
+    // maxPartial is computed from the marker's avgdl: the resumed merge
+    // must write the uninterrupted build's blocks
+    def blockRows(dir: String) = spark.read.parquet(s"$dir/postings")
+      .select("key", "firstDoc", "lastDoc", "count", "maxPartial")
+      .as[(Long, Long, Long, Int, Float)].collect().sorted.toSeq
+    assert(blockRows(part) == blockRows(full))
     CheckIndex.run(rResumed, Some(input)).collect()
       .foreach(c => assert(c.violations == 0L, s"check ${c.check}"))
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val v = try body finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (v, jobs.get)
+  }
+
+  test("collection stats come from the collstats marker: a reader open " +
+    "and its stats start no Spark job; every timed stage records wall_ms") {
+    import org.apache.spark.sql.functions._
+    val dir = SparkSuite.tmpDir("graft-collstats")
+    IndexBuilder.build(spark, input, dir, cfg)
+    val (stats, jobs) = jobsOf {
+      val r = new IndexReader(spark, dir, cfg.numBuckets, cacheData = false)
+      (r.collStats, r.fieldSumTtf("content"), r.fieldSumTtf("path"),
+        r.fieldSumTtf("rev"), r.numDocPartsHint)
+    }
+    assert(jobs == 0)
+    val row = spark.read.parquet(s"$dir/segments")
+      .agg(count(lit(1)), sum($"dl"), sum($"pdl"), max($"docPart")).head()
+    assert(stats == ((CollStats(row.getLong(0), row.getLong(1)), row.getLong(1),
+      row.getLong(2), 0L, row.getInt(3) + 1)))
+    Seq("segments", "collstats", "hotterms", "postings_wave_0", "termstats")
+      .foreach(st => assert(IndexBuilder.markerValue(dir, st, "wall_ms").isDefined, st))
+  }
+
+  test("a collstats marker without a field the reader or a resumed build " +
+    "needs fails loudly, naming the dir and the field") {
+    val dir = SparkSuite.tmpDir("graft-short-marker")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200).toDF(), dir, cfg)
+    val marker = IndexBuilder.markerPath(dir, "collstats")
+    def strip(metric: String): Unit = Files.writeString(marker,
+      Files.readString(marker).replaceAll("\"" + metric + "\":\\s*\\d+,\\s*", ""))
+    def fails(metric: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(dir) && e.getMessage.contains(metric), e.getMessage)
+    }
+    strip("pathSumTtf")
+    val r = new IndexReader(spark, dir, cfg.numBuckets, cacheData = false)
+    assert(r.collStats.maxDoc == 200L)
+    fails("pathSumTtf")(r.fieldSumTtf("path"))
+    strip("docParts")
+    fails("docParts")(new IndexReader(spark, dir, cfg.numBuckets,
+      cacheData = false).numDocPartsHint)
+    // a build resumed after collstats reads the marker before its merge
+    strip("maxDoc")
+    Seq("postings_wave_0", "termstats", "done").foreach(stage =>
+      Files.deleteIfExists(IndexBuilder.markerPath(dir, stage)))
+    fails("maxDoc")(IndexBuilder.build(spark, input, dir, cfg))
+    assert(!IndexBuilder.stageDone(dir, "postings_wave_0"))
   }
 
   test("tiered merges never take a batch id; a merged batch's re-delivery " +

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.TermKeys
+import graft.index.{Commit, IndexBuilder, IndexConfig, TermKeys}
 
 /** Driver-side TermKeys.of must agree bit-for-bit with the codegen'd
   * Column path the merge shuffle uses — a mismatch would make query
@@ -43,5 +44,37 @@ class TermKeysSpec extends AnyFunSuite {
       .distinct().collect()
     assert(vocab.length > 100)
     assert(vocab.map(TermKeys.of).distinct.length == vocab.length)
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("two terms on one key fail the dictionary rows, naming both") {
+    val vocab = Seq((7L, "alpha"), (7L, "beta"), (8L, "gamma")).toDF("key", "term")
+    val e = intercept[Exception](IndexBuilder.keyedTerms(vocab).collect())
+    assert(messages(e).contains("term-key collision: 'alpha' and 'beta'"), messages(e))
+    assert(IndexBuilder.keyedTerms(vocab.where($"term" =!= "beta"))
+      .as[(Long, String)].collect().toSet == Set(7L -> "alpha", 8L -> "gamma"))
+  }
+
+  test("a build whose vocabulary holds a key collision fails before the " +
+    "termstats marker, naming both terms") {
+    // two 64-letter terms with one XXH64 hash: after the first 32-byte
+    // stripe, each second-stripe lane is solved so both lane accumulators
+    // agree (a lane round is a bijection in its input word)
+    val a = "collisionprobeaaaaaaaaaaaaaaaaaadlajaswabeaaaazcamaasiaaaaapdwap"
+    val b = "xqiklffcddmveheeystxelluacmmwcfzaacauaalaaxndiaanaduaamkcnuaaara"
+    assert(a != b && TermKeys.of(a) == TermKeys.of(b))
+    val input = Seq(("r", "A.scala", s"import $a"), ("r", "B.scala", s"import $b"))
+      .toDF("path0", "path", "content")
+      .select($"path0".as("repo"), $"path", lit("c1").as("commit"),
+        lit("scala").as("lang"), $"content")
+    val dir = SparkSuite.tmpDir("graft-collision")
+    val e = intercept[Exception](IndexBuilder.build(spark, input, dir,
+      IndexConfig(numDocParts = 2, numBuckets = 2, shufflePartitions = 2)))
+    assert(messages(e).contains(a) && messages(e).contains(b), messages(e))
+    assert(IndexBuilder.stageDone(dir, "postings_wave_0"))
+    assert(!IndexBuilder.stageDone(dir, "termstats") && !IndexBuilder.stageDone(dir, "done"))
+    assert(Commit.find(dir).isEmpty)
   }
 }
